@@ -84,33 +84,45 @@ PER_LAYER = {
 }
 
 
-def _loop(w, ctx, seconds: float, start: int = 0) -> int:
-    end = time.perf_counter() + seconds
-    i = start
-    while time.perf_counter() < end:
+def _loop(w, ctx, seconds: float, every_kind: bool = False) -> None:
+    """Run ops 0, 1, 2, ... until ``seconds`` have passed.  With
+    ``every_kind`` go on until each of the workload's op kinds has a
+    timed sample too (for at most four times ``seconds``)."""
+    start = time.perf_counter()
+    i = 0
+    while True:
+        spent = time.perf_counter() - start
+        missing = (every_kind and spent < 4 * seconds
+                   and not set(w.kinds) <= {k for k, _ in w.samples})
+        if spent >= seconds and not missing:
+            return
         try:
             w.op(i)
         except Exception:  # a failed op is counted, the loop goes on
             ctx.error(f"{w.name} op {i}")
         i += 1
-    return i
 
 
-def _latency_ms(samples) -> float:
+def _latency_ms(samples, kinds=None) -> float:
+    if kinds is not None:
+        samples = [s for s in samples if s[0] in kinds]
     return 1e3 * harness.mean_of_kind_medians(samples) if samples else 0.0
 
 
 def _traced(w, ctx, seconds: float) -> dict:
-    """Half the time untraced, half traced (the difference is the
-    tracing overhead), then the single-layer probes."""
-    n = _loop(w, ctx, seconds / 2)
-    untraced = _latency_ms(w.samples)
+    """Half the time untraced, half traced, both over the same ops and
+    every op kind (the difference is the tracing overhead), then the
+    single-layer probes."""
+    _loop(w, ctx, seconds / 2, every_kind=True)
+    untraced = list(w.latency_samples())
     w.samples.clear()
     tr = ctx.tracer = Tracer(ctx.spark)
     try:
-        _loop(w, ctx, seconds / 2, start=n)
+        _loop(w, ctx, seconds / 2, every_kind=True)
+        traced = w.latency_samples()
+        shared = {k for k, _ in untraced} & {k for k, _ in traced}
         out = {name: 0.0 for name in PER_LAYER}
-        out["trace.overhead_ms"] = _latency_ms(w.samples) - untraced
+        out["trace.overhead_ms"] = _latency_ms(traced, shared) - _latency_ms(untraced, shared)
         w.layer_probes(out)
     finally:
         tr.close()
@@ -156,7 +168,7 @@ def run_one(name: str, seed: int, seconds: float, trace: bool, size: str = "full
             traced = []
             metrics = {
                 "setup_s": setup_s,
-                "latency_ms": _latency_ms(w.samples),
+                "latency_ms": _latency_ms(w.latency_samples()),
                 "work_per_s": w.work_per_s(),
                 "peak_rss_mb": harness.peak_rss_mb(spark),
             }

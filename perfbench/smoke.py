@@ -7,7 +7,8 @@ process with one Spark session:
 * every workload runs end to end and prints every end-to-end metric
   with its unit;
 * a deliberately corrupted expected answer shows up as failed ops;
-* the traced run emits a span for every layer.
+* the traced run emits a span for every layer, and a non-zero plan
+  and exec time for every op kind the workload runs.
 
     python3 perfbench/smoke.py
 
@@ -108,10 +109,15 @@ def check_corrupted_truth(spark) -> None:
 def check_traced(spark) -> None:
     seen: set[str] = set()
     for name in workloads.WORKLOADS:
-        # long enough for the traced half to reach every op kind
-        result, report = run.run_one(name, 3, 12, True, "tiny", spark=spark)
-        expect(result["correct"] and list(result["metrics"]) == list(run.PER_LAYER),
+        result, report = run.run_one(name, 3, 4, True, "tiny", spark=spark)
+        m = result["metrics"]
+        expect(result["correct"] and list(m) == list(run.PER_LAYER),
                f"{name}: traced run reports every per-layer metric")
+        kinds = workloads.WORKLOADS[name].kinds
+        zero = [k for k, v in m.items() if (".plan_ms." in k or ".exec_ms." in k)
+                and k.rsplit(".", 1)[1] in kinds and not v["value"] > 0]
+        expect(not zero, f"{name}: plan_ms/exec_ms of every op kind non-zero "
+                         f"(zero: {zero})")
         seen |= set(report["layers_traced"])
     expect(LAYERS <= seen, f"spans for every layer (missing: {sorted(LAYERS - seen)})")
 

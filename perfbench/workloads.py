@@ -66,6 +66,7 @@ class Ctx:
 
 class Workload:
     name = ""
+    kinds: tuple[str, ...] = ()  # every op kind the loop runs
 
     def __init__(self, ctx: Ctx):
         self.ctx = ctx
@@ -85,6 +86,10 @@ class Workload:
     def op(self, i: int) -> None:
         """Run op ``i``; append (kind, seconds) to ``self.samples``."""
         raise NotImplementedError
+
+    def latency_samples(self) -> list[tuple[str, float]]:
+        """The timed samples ``latency_ms`` is taken over."""
+        return self.samples
 
     def work_per_s(self) -> float:
         raise NotImplementedError
@@ -193,6 +198,7 @@ class CdxLookup(Workload):
     request is Zipf-skewed, the page uniform."""
 
     name = "cdx_lookup"
+    kinds = tuple(k for k, _ in gen.LOOKUP_MIX)
 
     def setup(self) -> None:
         from webarchive_indexing_spark.plans.pipeline import build_index
@@ -250,8 +256,7 @@ class CdxLookup(Workload):
         from webarchive_indexing_spark.sinks.zipnum import num_pages, read_zipnum
 
         c, tr = self.ctx, self.ctx.tracer
-        kinds = [k for k, _ in gen.LOOKUP_MIX]
-        _kind_medians(tr, "operators.cdx_query", kinds, out)
+        _kind_medians(tr, "operators.cdx_query", self.kinds, out)
         done = [r for r in self.requests if "n_rows" in r]
         idx_ms, read_ms, blocks, useful = [], [], [], []
         for req in done[-len(gen.LOOKUP_CYCLE):]:
@@ -351,6 +356,7 @@ class AnnServe(Workload):
     graph store, both built in set-up from seeded clustered vectors."""
 
     name = "ann_serve"
+    kinds = ANN_CYCLE
 
     def setup(self) -> None:
         from webarchive_indexing_spark.operators.graph_ann import write_knn_graph
@@ -445,6 +451,11 @@ class AnnServe(Workload):
     def op(self, i: int) -> None:
         self._probe(ANN_CYCLE[i % len(ANN_CYCLE)], i, timed=True)
 
+    def latency_samples(self) -> list[tuple[str, float]]:
+        # a batch's wall is the time of several queries: it drives
+        # work_per_s, not the per-request latency
+        return [s for s in self.samples if s[0] in ANN_SINGLE]
+
     def work_per_s(self) -> float:
         return self.batch_q / self.batch_s if self.batch_s else 0.0
 
@@ -461,8 +472,8 @@ class AnnServe(Workload):
             t0 = time.perf_counter()
             read_ivfpq_model(self.pq)
             out["sinks.ann_index.model_ms"] = 1e3 * (time.perf_counter() - t0)
-        pq_kinds = [k for k in ANN_SINGLE + ANN_BATCH if k.startswith("pq")]
-        g_kinds = [k for k in ANN_SINGLE + ANN_BATCH if k.startswith("graph")]
+        pq_kinds = [k for k in self.kinds if k.startswith("pq")]
+        g_kinds = [k for k in self.kinds if k.startswith("graph")]
         _kind_medians(tr, "sinks.ann_index", pq_kinds, out)
         _kind_medians(tr, "operators.graph_ann", g_kinds, out)
         for kind in pq_kinds:
