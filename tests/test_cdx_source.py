@@ -340,3 +340,59 @@ def test_any_lines_parser_never_raises(spark):
         assert len(rows) == len(lines)
 
     prop()
+
+
+def _column_form_any_lines(lines, keep=()):
+    """The Column-builder form of ``parse_cdx_any_lines`` (one
+    ``F.*`` call per sub-expression) — the reference the one-call SQL
+    projection must reproduce row for row."""
+    from webarchive_indexing_spark.sources.cdx import CDX_FIELDS, CDXJ_KEYS
+
+    v = F.col("value")
+    parts = F.split(v, " ")
+    is_j = F.try_element_at(parts, F.lit(3)).startswith("{")
+    props = F.from_json(
+        F.substring(v, F.instr(v, " {") + 1, F.length(v)), "map<string,string>"
+    )
+    jkeys = dict(CDXJ_KEYS)
+
+    def dash_null(c):
+        return F.when(c == "-", F.lit(None)).otherwise(c)
+
+    cols = [
+        dash_null(F.try_element_at(parts, F.lit(1))).alias("urlkey"),
+        dash_null(F.try_element_at(parts, F.lit(2))).alias("timestamp"),
+    ]
+    for i, (name, dtype) in enumerate(CDX_FIELDS[2:], start=3):
+        classic = dash_null(F.try_element_at(parts, F.lit(i)))
+        c = F.when(is_j, props.getItem(jkeys[name])).otherwise(classic)
+        cols.append(c.try_cast(dtype).alias(name))
+    return lines.select(*[F.col(k) for k in keep], *cols)
+
+
+def test_any_lines_sql_projection_matches_column_form(spark):
+    """The one-``selectExpr`` parse gives the Column-form rows and
+    schema on damaged lines: truncated, '-' keys, a malformed JSON
+    tail, non-numeric status (classic and CDXJ), an empty line."""
+    from webarchive_indexing_spark.sources.cdx import parse_cdx_any_lines
+
+    lines = [
+        "com,a)/ 20200101000000 http://a.com/ text/html 200 DIGA - - 10 100 a.warc.gz",
+        "com,a)/ 20200101000000 http://a.com/",  # truncated
+        "com,t)/",  # truncated to the key
+        "- - http://dash.com/ - - - - - - - -",  # '-' keys and fields
+        "com,b)/ 20200102000000 {\"url\": \"http://b.com/x y\", \"status\": \"301\"}",
+        "com,c)/ 20200103000000 {\"url\": \"http://c.com/\", \"status\"",  # bad JSON
+        "com,d)/ 20200104000000 http://d.com/ text/html abc DIGD - - x1 y2 d.warc.gz",
+        "com,e)/ 20200105000000 {\"status\": \"2xx\", \"length\": \"-5\"}",
+        "",
+    ]
+    df = spark.createDataFrame(
+        [(i, ln) for i, ln in enumerate(lines)], "page int, value string"
+    )
+    got = parse_cdx_any_lines(df, keep=["page"])
+    want = _column_form_any_lines(df, keep=["page"])
+    assert got.schema == want.schema
+    by_page = {r.page: tuple(r) for r in got.collect()}
+    assert by_page == {r.page: tuple(r) for r in want.collect()}
+    assert len(by_page) == len(lines)

@@ -708,9 +708,9 @@ def test_fast_latest_tail_probe_bounds_block_io(spark, tmp_path, monkeypatch):
     touched = []
     real = zp._read_blocks
 
-    def spy(spark_, out_dir, blocks, parser=None):
+    def spy(spark_, out_dir, blocks):
         touched.append(len(blocks))
-        return real(spark_, out_dir, blocks, parser)
+        return real(spark_, out_dir, blocks)
 
     monkeypatch.setattr(zp, "_read_blocks", spy)
     df = zp.read_zipnum_tail(spark, out, 6)
@@ -740,3 +740,139 @@ def test_fast_latest_tail_probe_bounds_block_io(spark, tmp_path, monkeypatch):
             spark, out, "https://example.com/", match_type="domain",
             page=0, fast_latest=True, limit=-3,
         )
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture
+def read_path(spark, monkeypatch):
+    """Force ``_lines_frame``'s choice: ``read_path("driver")`` makes
+    every block set small enough for the driver read,
+    ``read_path("distributed")`` makes every set of 2+ blocks take the
+    distributed read (the bound is the session's defaultParallelism)."""
+    sc_type = type(spark.sparkContext)
+
+    def force(path: str) -> None:
+        n = 10**9 if path == "driver" else 1
+        monkeypatch.setattr(sc_type, "defaultParallelism", property(lambda self: n))
+
+    return force
+
+
+@pytest.mark.parametrize("line_format", ["cdx", "cdxj"])
+def test_driver_read_equals_distributed_read(spark, cdx, read_path, line_format):
+    """A block set read on the driver (Arrow local relation) gives the
+    same typed rows as the distributed ranged read of the same range,
+    on a classic and a CDXJ cluster — and each path really ran."""
+    from webarchive_indexing_spark.sinks.zipnum import _prune, read_zipnum_pages
+
+    d = tempfile.mkdtemp(prefix=f"zipnum_paths_{line_format}_")
+    write_zipnum(cdx, d, shards=SHARDS, numlines=NUMLINES, line_format=line_format)
+    lo, hi = "org,example,src1", "org,example,src1~"
+    assert len(_prune(_load_idx(d), lo, hi)) >= 2
+
+    got = {}
+    for path in ("driver", "distributed"):
+        read_path(path)
+        df = read_zipnum(spark, d, key_lo=lo, key_hi=hi)
+        plan = _executed_plan(df)
+        assert ("LocalTableScan" in plan) == (path == "driver"), plan
+        assert ("ExistingRDD" in plan) == (path == "distributed"), plan
+        pages = read_zipnum_pages(spark, d, key_lo=lo, key_hi=hi, page_size=2)
+        got[path] = (
+            df.schema,
+            sorted(map(tuple, df.collect())),
+            pages.schema,
+            sorted(map(tuple, pages.collect())),
+        )
+    assert got["driver"] == got["distributed"]
+    assert got["driver"][1], "range read returned nothing"
+    want = cdx.filter((F.col("urlkey") >= lo) & (F.col("urlkey") < hi))
+    assert got["driver"][1] == sorted(map(tuple, want.collect()))
+
+
+def test_driver_read_replica_failover(spark, cdx, read_path):
+    """The driver read keeps ``cluster.loc`` failover: a missing
+    primary shard falls back to its replica; with both gone the read
+    raises."""
+    import shutil
+
+    from webarchive_indexing_spark.sinks.zipnum import _fs_for, _read_loc
+
+    d = tempfile.mkdtemp(prefix="zipnum_drv_primary_")
+    rep = tempfile.mkdtemp(prefix="zipnum_drv_replica_")
+    write_zipnum(cdx, d, shards=SHARDS, numlines=NUMLINES, replica_dirs=[rep])
+    fs, local = _fs_for(d)
+    names = sorted(_read_loc(fs, local))
+    for s in names:
+        shutil.copy(os.path.join(d, s), os.path.join(rep, s))
+    read_path("driver")
+    expected = sorted(map(tuple, read_zipnum(spark, d).collect()))
+    os.remove(os.path.join(d, names[0]))
+    df = read_zipnum(spark, d)
+    assert "LocalTableScan" in _executed_plan(df)
+    assert sorted(map(tuple, df.collect())) == expected
+
+    os.remove(os.path.join(rep, names[0]))
+    with pytest.raises(OSError):
+        read_zipnum(spark, d)
+
+
+def _prune_linear(blocks, lo, hi):
+    """The scan ``_prune`` replaced — the reference rule its bisection
+    must reproduce."""
+    out = []
+    for i, b in enumerate(blocks):
+        nxt = blocks[i + 1].urlkey if i + 1 < len(blocks) else None
+        if hi is not None and b.urlkey >= hi:
+            continue
+        if lo is not None and nxt is not None and nxt < lo:
+            continue
+        out.append(b)
+    return out
+
+
+def test_prune_bisection_equals_linear_rule():
+    """``_prune``'s two bisections keep exactly the blocks of the
+    linear intersect rule, on random sorted block lists (repeated
+    first keys included — one urlkey can span blocks) and ranges."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from webarchive_indexing_spark.sinks.zipnum import _Block, _prune
+
+    key = st.text(alphabet="abc~", max_size=3)
+
+    @settings(max_examples=300, deadline=None)
+    @given(st.lists(key, max_size=12), st.none() | key, st.none() | key)
+    def prop(keys, lo, hi):
+        blocks = [_Block(k, "", "cdx-00000.gz", i, 1) for i, k in enumerate(sorted(keys))]
+        assert _prune(blocks, lo, hi) == _prune_linear(blocks, lo, hi)
+
+    prop()
+
+
+def test_show_num_pages_runs_no_job(spark, cluster):
+    """showNumPages is answered from cluster.idx into an Arrow local
+    relation: collecting it starts no Spark job."""
+    from webarchive_indexing_spark.operators.cdx_query import (
+        _query_prune_range,
+        cdx_query_zipnum,
+    )
+    from webarchive_indexing_spark.sinks.zipnum import num_pages
+
+    d, _ = cluster
+    sc = spark.sparkContext
+    url = "https://src1.example.org/"
+    df = cdx_query_zipnum(spark, d, url, match_type="domain", show_num_pages=True)
+    sc.setJobGroup("show_num_pages_probe", "showNumPages")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("show_num_pages_probe") == []
+    _, _, lo, hi = _query_prune_range(url, "domain", {})
+    want = num_pages(d, key_lo=lo, key_hi=hi)
+    assert [tuple(r) for r in rows] == [(want,)] and want > 0

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.surt import surt_urlkey_py
 from .collapse import collapse as run_collapse
@@ -1463,6 +1464,7 @@ def cdx_query_zipnum(
     query, each costing ``page_size`` block reads regardless of
     index size."""
     from ..sinks.zipnum import (
+        local_frame,
         num_pages,
         read_zipnum,
         read_zipnum_page,
@@ -1492,7 +1494,10 @@ def cdx_query_zipnum(
         lo = rk[0] if lo is None else max(lo, rk[0])
     if show_num_pages:
         n = num_pages(cluster_dir, key_lo=lo, key_hi=hi, page_size=page_size)
-        return spark.createDataFrame([(n,)], "pages: int")
+        # an Arrow local relation: the one-row answer costs no job
+        return local_frame(
+            spark, [(n,)], T.StructType([T.StructField("pages", T.IntegerType())])
+        )
     if show_paged_index:
         return read_zipnum_paged_index(
             spark, cluster_dir, key_lo=lo, key_hi=hi, page_size=page_size

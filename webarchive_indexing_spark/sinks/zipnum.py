@@ -23,6 +23,22 @@ index a return value keeps the whole pipeline declarative).
 At 100 TB: one shuffle of the CDX lines, sized by ``shards``; the
 writer streams — O(numlines) memory per task; no driver collection.
 
+Serving cost model (the read side): a request bisects ``cluster.idx``
+for its block run, then reads those blocks with positioned ranged
+reads + gunzip (``_block_lines``).  Where the run is at most
+``defaultParallelism`` blocks — every single cdx-server lookup — the
+distributed read would run about one block per task and buy no
+parallelism, only the fixed start-up cost of a Python-worker job
+(~0.2-0.3 s per task on a 4-core host).  So those blocks are read on
+the driver and handed to Spark as an Arrow table (a
+``LocalTableScan``: no job until the caller's own action); longer
+runs keep the distributed ``mapPartitions`` read.  Metadata-sized
+frames (page counts, paged-index rows, tombstone lists, empty ranges)
+go through the same Arrow local relation — a list-of-tuples
+``createDataFrame`` would cost a Python-worker job of its own.  The
+typed parse is one ``selectExpr`` (``sources.cdx``), so planning a
+lookup is a few hundred py4j calls, not a few thousand.
+
 IO goes through ``pyarrow.fs`` resolved from the path URI, NOT bare
 ``open()``: executors have no JVM gateway, so Python-side object-store
 access is Arrow's C++ filesystems — ``file://``, ``s3://`` (ranged
@@ -33,6 +49,8 @@ libhdfs.  A scheme-less path means the local filesystem; ``s3a://``
 
 from __future__ import annotations
 
+import bisect
+import operator
 import posixpath
 from dataclasses import dataclass
 
@@ -57,6 +75,9 @@ def _fs_for(path: str):
 
 def _join(base: str, *parts: str) -> str:
     return posixpath.join(base.rstrip("/"), *parts)
+
+
+LINE_SCHEMA = T.StructType([T.StructField("value", T.StringType())])
 
 IDX_SCHEMA = T.StructType(
     [
@@ -318,18 +339,21 @@ def _load_idx(out_dir: str) -> list[_Block]:
 
 def _prune(blocks: list[_Block], lo: str | None, hi: str | None) -> list[_Block]:
     """Keep blocks whose key range [first_key_i, first_key_{i+1})
-    intersects [lo, hi) — the reader-side binary search (§3.3)."""
-    out = []
-    for i, b in enumerate(blocks):
-        nxt = blocks[i + 1].urlkey if i + 1 < len(blocks) else None
-        if hi is not None and b.urlkey >= hi:
-            continue
-        if lo is not None and nxt is not None and nxt < lo:
-            # note: '<' not '<=': a block whose successor STARTS at lo
-            # can still contain keys in [lo, nxt)
-            continue
-        out.append(b)
-    return out
+    intersects [lo, hi) — the reader-side binary search (§3.3).
+
+    ``blocks`` is in cluster.idx order (first keys non-decreasing), so
+    the kept blocks are one contiguous run: it ends before the first
+    block whose first key is ``>= hi`` and starts one block BEFORE the
+    first block whose first key is ``>= lo`` — '<' not '<=' on the
+    successor: a block whose successor STARTS at lo can still contain
+    keys in [lo, nxt).  Two bisections, O(log #blocks)."""
+    first_key = operator.attrgetter("urlkey")
+    start, end = 0, len(blocks)
+    if lo is not None:
+        start = max(bisect.bisect_left(blocks, lo, key=first_key) - 1, 0)
+    if hi is not None:
+        end = bisect.bisect_left(blocks, hi, key=first_key)
+    return blocks[start:end]
 
 
 def _line_writer(line_format: str):
@@ -346,49 +370,88 @@ def _line_writer(line_format: str):
     raise ValueError(f"unknown line_format {line_format!r}")
 
 
-def _read_blocks(
-    spark: SparkSession, out_dir: str, blocks: list[_Block], parser=None
-) -> DataFrame:
-    """Decompress exactly ``blocks`` (distributed ranged reads, one
-    task per block batch) → typed CDX DataFrame, unfiltered.
-    ``parser`` defaults to the mixed classic/CDXJ line parser, so
-    clusters in either (or both) formats read back typed."""
-    from ..sources.cdx import parse_cdx_any_lines
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """Driver-held rows → DataFrame through an Arrow table.  It plans
+    as a ``LocalTableScan`` and runs no job of its own; a
+    list-of-tuples ``createDataFrame`` instead plans an RDD scan whose
+    first action is a Python-worker job (~0.35 s for one row on a
+    4-core host)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    parser = parser or parse_cdx_any_lines
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _block_lines(items):
+    """The one block reader: work items ``(paths, offset, length[,
+    tag...])`` → ``(tag..., line)`` rows, one per decompressed line.
+
+    Runs on the driver for small block sets and inside
+    ``mapPartitions`` for large ones.  One open file per distinct
+    shard (blocks arrive key-sorted, so a batch usually touches 1-2
+    shards), positioned ``read_at`` instead of seek+read — on S3 each
+    read_at is exactly one ranged GET and the handle carries no cursor
+    state.  ``paths`` is the shard's replica list: first-available
+    failover."""
+    import gzip
+
+    handles: dict[tuple, object] = {}
+    try:
+        for paths, off, ln, *tag in items:
+            fh = handles.get(paths)
+            if fh is None:
+                fh = handles[paths] = _open_first_available(list(paths))
+            data = fh.read_at(ln, off)
+            for line in gzip.decompress(data).decode("utf-8").splitlines():
+                yield (*tag, line)
+    finally:
+        for fh in handles.values():
+            fh.close()
+
+
+def _lines_frame(spark: SparkSession, work: list[tuple], schema: T.StructType) -> DataFrame:
+    """Raw lines of the ``work`` items' blocks (``_block_lines``
+    rows) as a DataFrame of ``schema``.
+
+    At most ``defaultParallelism`` blocks are read right here on the
+    driver into an Arrow local relation: the distributed read would
+    run about one block per task, which buys no parallelism and costs
+    a Python-worker job.  The driver then holds at most
+    ``defaultParallelism`` decompressed blocks (``numlines`` lines
+    each).  Larger block sets are read by a distributed
+    ``mapPartitions`` over block batches."""
+    n_slots = max(1, spark.sparkContext.defaultParallelism)
+    if len(work) <= n_slots:
+        return local_frame(spark, list(_block_lines(work)), schema)
+    rdd = spark.sparkContext.parallelize(work, n_slots).mapPartitions(_block_lines)
+    return spark.createDataFrame(rdd, schema)
+
+
+def _block_work(out_dir: str, blocks: list[_Block]) -> list[tuple]:
+    """``_block_lines`` work items for ``blocks``: (replica paths,
+    offset, length), the paths from the cluster's ``cluster.loc``."""
     if not blocks:
-        return parser(
-            spark.createDataFrame([], T.StructType([T.StructField("value", T.StringType())]))
-        )
+        return []
     fs, local_dir = _fs_for(out_dir)
     loc = _read_loc(fs, local_dir)
-    work = [(tuple(loc[b.shard]), b.offset, b.length) for b in blocks]
+    return [(tuple(loc[b.shard]), b.offset, b.length) for b in blocks]
 
-    def read_block(items):
-        import gzip
 
-        # one open file per distinct shard per task (blocks arrive
-        # key-sorted, so a task usually touches 1-2 shards), positioned
-        # read_at instead of seek+read — on S3 each read_at is exactly
-        # one ranged GET and the handle carries no cursor state.
-        # `paths` is the shard's replica list: first-available failover.
-        handles: dict[tuple, object] = {}
-        try:
-            for paths, off, ln in items:
-                fh = handles.get(paths)
-                if fh is None:
-                    fh = handles[paths] = _open_first_available(list(paths))
-                data = fh.read_at(ln, off)
-                for line in gzip.decompress(data).decode("utf-8").splitlines():
-                    yield (line,)
-        finally:
-            for fh in handles.values():
-                fh.close()
+def _read_blocks(spark: SparkSession, out_dir: str, blocks: list[_Block]) -> DataFrame:
+    """Decompress exactly ``blocks`` (ranged reads; ``_lines_frame``
+    picks the driver or the distributed read) → typed CDX DataFrame,
+    unfiltered.  The mixed classic/CDXJ line parser types clusters in
+    either (or both) formats."""
+    from ..sources.cdx import parse_cdx_any_lines
 
-    n_slices = min(len(work), max(1, spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(work, n_slices).mapPartitions(read_block)
-    return parser(
-        spark.createDataFrame(rdd, T.StructType([T.StructField("value", T.StringType())]))
+    return parse_cdx_any_lines(
+        _lines_frame(spark, _block_work(out_dir, blocks), LINE_SCHEMA)
     )
 
 
@@ -492,17 +555,8 @@ def read_zipnum_paged_index(
     ]
     if page is not None:
         rows = [r for r in rows if r[0] == page]
-    schema = T.StructType(
-        [
-            T.StructField("page", T.IntegerType()),
-            T.StructField("urlkey", T.StringType()),
-            T.StructField("timestamp", T.StringType()),
-            T.StructField("shard", T.StringType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("length", T.LongType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    schema = T.StructType([T.StructField("page", T.IntegerType()), *IDX_SCHEMA])
+    return local_frame(spark, rows, schema)
 
 
 def read_zipnum_page(
@@ -563,49 +617,16 @@ def read_zipnum_pages(
     unchanged, only their numbering flips, so forward page ``p`` ==
     reverse page ``n_pages - 1 - p``."""
     blocks = _prune(_load_idx(out_dir), key_lo, key_hi)
-    page_field = T.StructField("page", T.IntegerType())
-    if not blocks:
-        empty = T.StructType([page_field, T.StructField("value", T.StringType())])
-        # same tail as the non-empty path (a no-op on zero rows, but
-        # keeping the branches symmetric prevents divergence if this
-        # branch is ever fed a non-empty placeholder — ADVICE r4)
-        return _range_filter(
-            _parse_with_page(spark.createDataFrame([], empty)), key_lo, key_hi
-        )
-    fs, local_dir = _fs_for(out_dir)
-    loc = _read_loc(fs, local_dir)
     last_page = (len(blocks) - 1) // page_size
+    # the page ordinal rides as the work item's tag, so it comes back
+    # as the leading column of every decompressed line
     work = [
-        (
-            (last_page - i // page_size) if reverse else i // page_size,
-            tuple(loc[b.shard]),
-            b.offset,
-            b.length,
-        )
-        for i, b in enumerate(blocks)
+        (*item, (last_page - i // page_size) if reverse else i // page_size)
+        for i, item in enumerate(_block_work(out_dir, blocks))
     ]
-
-    def read_block(items):
-        import gzip
-
-        handles: dict[tuple, object] = {}
-        try:
-            for page, paths, off, ln in items:
-                fh = handles.get(paths)
-                if fh is None:
-                    fh = handles[paths] = _open_first_available(list(paths))
-                data = fh.read_at(ln, off)
-                for line in gzip.decompress(data).decode("utf-8").splitlines():
-                    yield (page, line)
-        finally:
-            for fh in handles.values():
-                fh.close()
-
-    n_slices = min(len(work), max(1, spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(work, n_slices).mapPartitions(read_block)
-    schema = T.StructType([page_field, T.StructField("value", T.StringType())])
+    schema = T.StructType([T.StructField("page", T.IntegerType()), *LINE_SCHEMA])
     return _range_filter(
-        _parse_with_page(spark.createDataFrame(rdd, schema)), key_lo, key_hi
+        _parse_with_page(_lines_frame(spark, work, schema)), key_lo, key_hi
     )
 
 
@@ -885,33 +906,27 @@ def read_zipnum_epochs(
         e for e in list_epochs(out_dir, as_of_epoch) if _has_cluster(e)
     ]
     if not epochs:
-        return parse_cdx_lines(
-            spark.createDataFrame([], T.StructType([T.StructField("value", T.StringType())]))
-        )
-    # per-epoch block prune + RAW line read, ONE parse over the union:
-    # the typed-CDX parse expression costs ~0.3 s of driver plan
-    # construction per call (round-16 profiling), and building it per
-    # epoch per snapshot dominated the read's wall at fixture scale —
-    # the parsed rows are identical either way (same parser, applied
-    # after the union instead of inside each branch)
-    raws = [
-        _read_blocks(
-            spark, e, _prune(_load_idx(e), key_lo, key_hi),
-            parser=lambda df: df,
-        )
+        return parse_cdx_lines(local_frame(spark, [], LINE_SCHEMA))
+    # per-epoch block prune (the secondary indexes are per-epoch),
+    # then ONE line read over every epoch's surviving blocks and ONE
+    # parse, not one frame per epoch: the read is driver-side or one
+    # distributed stage by the blocks' total count (``_lines_frame``)
+    work = [
+        item
         for e in epochs
+        for item in _block_work(e, _prune(_load_idx(e), key_lo, key_hi))
     ]
-    lines = raws[0]
-    for df in raws[1:]:
-        lines = lines.unionByName(df)
+    lines = _lines_frame(spark, work, LINE_SCHEMA)
     out = _range_filter(parse_cdx_any_lines(lines), key_lo, key_hi)
     wild, exact = _read_tombstones(out_dir, as_of_epoch)
+    str_field = T.StructField("urlkey", T.StringType())
     if wild:
-        wdf = out.sparkSession.createDataFrame([(k,) for k in wild], "urlkey string")
+        wdf = local_frame(spark, [(k,) for k in wild], T.StructType([str_field]))
         out = out.join(F.broadcast(wdf), "urlkey", "left_anti")
     if exact:
-        edf = out.sparkSession.createDataFrame(
-            list(exact), "urlkey string, timestamp string"
+        edf = local_frame(
+            spark, exact,
+            T.StructType([str_field, T.StructField("timestamp", T.StringType())]),
         )
         out = out.join(F.broadcast(edf), ["urlkey", "timestamp"], "left_anti")
     return out

@@ -15,6 +15,8 @@ CDXJ (urlkey ts {json}) parses the JSON tail with ``from_json``.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -240,31 +242,49 @@ def parse_cdx_any_lines(
     The JSON tail may contain spaces, so it is cut at the first
     `` {`` rather than split positionally.  Same damage tolerance as
     both dedicated parsers (``try_element_at`` + ``try_cast`` +
-    ``from_json`` → NULL on malformed JSON)."""
-    v = F.col(column)
-    parts = F.split(v, " ")
-    third = F.try_element_at(parts, F.lit(3))
-    is_j = third.startswith("{")
-    props = F.from_json(
-        F.substring(v, F.instr(v, " {") + 1, F.length(v)), "map<string,string>"
+    ``from_json`` → NULL on malformed JSON).
+
+    The projection is ONE ``selectExpr`` over SQL strings built once
+    per column name (``_any_line_exprs``): every ``F.*``/``Column``
+    call also records its Python call site in the JVM, so the
+    Column-built form of these 11 expressions cost ~1000 py4j calls
+    per parse — the dominant driver cost of a cdx-server lookup."""
+    return lines.selectExpr(
+        *[_quote_ident(k) for k in (keep or [])], *_any_line_exprs(column)
+    )
+
+
+def _quote_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+@functools.lru_cache(maxsize=None)
+def _any_line_exprs(column: str) -> tuple[str, ...]:
+    """The SQL expressions of ``parse_cdx_any_lines`` over ``column``."""
+    v = _quote_ident(column)
+    parts = f"split({v}, ' ')"
+    is_j = f"startswith(try_element_at({parts}, 3), '{{')"
+    props = (
+        f"from_json(substring({v}, instr({v}, ' {{') + 1, length({v})), "
+        "'map<string,string>')"
     )
     jkeys = dict(CDXJ_KEYS)
 
-    def dash_null(c):
-        return F.when(c == "-", F.lit(None)).otherwise(c)
+    def dash_null(c: str) -> str:
+        return f"CASE WHEN {c} = '-' THEN NULL ELSE {c} END"
 
     # urlkey/timestamp get the same '-' -> NULL mapping as every other
     # field — the classic writer serializes NULL keys as '-', and the
     # roundtrip must give NULL back, not a literal dash
-    cols = [
-        dash_null(F.try_element_at(parts, F.lit(1))).alias("urlkey"),
-        dash_null(F.try_element_at(parts, F.lit(2))).alias("timestamp"),
+    exprs = [
+        f"{dash_null(f'try_element_at({parts}, {i})')} AS {_quote_ident(name)}"
+        for i, name in ((1, "urlkey"), (2, "timestamp"))
     ]
     for i, (name, dtype) in enumerate(CDX_FIELDS[2:], start=3):
-        classic = dash_null(F.try_element_at(parts, F.lit(i)))
-        c = F.when(is_j, props.getItem(jkeys[name])).otherwise(classic)
-        cols.append(c.try_cast(dtype).alias(name))
-    return lines.select(*[F.col(k) for k in (keep or [])], *cols)
+        classic = dash_null(f"try_element_at({parts}, {i})")
+        c = f"CASE WHEN {is_j} THEN {props}['{jkeys[name]}'] ELSE {classic} END"
+        exprs.append(f"try_cast({c} AS {dtype.simpleString()}) AS {_quote_ident(name)}")
+    return tuple(exprs)
 
 
 def parse_cdxj_lines(lines: DataFrame, column: str = "value") -> DataFrame:

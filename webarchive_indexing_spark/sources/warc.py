@@ -987,16 +987,16 @@ def _plan_split_ranges(
 def skip_existing(manifest: DataFrame, existing: DataFrame) -> DataFrame:
     """S7 --skip-existing [U indexwarcsjob.py ~L75-85]: one left-anti
     join of the manifest against the listing of already-produced
-    outputs (vs. the reference's per-file existence probe)."""
+    outputs (vs. the reference's per-file existence probe).
+
+    Both sides key on the basename with either suffix stripped, so
+    ``existing`` may list produced ``.cdx.gz`` outputs or the
+    ``.warc.gz`` inputs of an earlier batch."""
     key = F.regexp_replace(
-        F.element_at(F.split(F.col("path"), "/"), -1), r"\.warc\.gz$", ""
+        F.element_at(F.split(F.col("path"), "/"), -1), r"\.(?:warc|cdx)\.gz$", ""
     )
     mk = manifest.withColumn("__k", key)
-    ek = existing.select(
-        F.regexp_replace(
-            F.element_at(F.split(F.col("path"), "/"), -1), r"\.cdx\.gz$", ""
-        ).alias("__k")
-    )
+    ek = existing.select(key.alias("__k"))
     return mk.join(ek, "__k", "left_anti").drop("__k")
 
 
