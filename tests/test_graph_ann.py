@@ -120,11 +120,21 @@ def test_recall_pin_vs_brute_and_ivf(spark, sf_dir, store):
         for r in base.filter(F.col("vec_id").isin(qids)).collect()
     }
     beams: dict[int, set[int]] = {q: set() for q in qids}
+    batch_rows: dict[int, list[tuple]] = {q: [] for q in qids}
     for r in graph_beam_batch_topk(
         spark, store, [vmap[q] for q in qids], k=10, beam=10, hops=3,
         entries=(0, 150, 300, 450), exclude_ids=qids,
     ).collect():
         beams[qids[int(r.request_no)]].add(int(r.vec_id))
+        batch_rows[qids[int(r.request_no)]].append((r.vec_id, r.cos_sim))
+    # the single walk scores through its own projection: its rows must
+    # equal the batch walk's rows for the same request, in order
+    for q in qids:
+        single = graph_beam_topk(
+            spark, store, vmap[q], k=10, beam=10, hops=3,
+            entries=(0, 150, 300, 450), exclude_id=q,
+        ).collect()
+        assert [(r.vec_id, r.cos_sim) for r in single] == batch_rows[q], q
     beam_r, ivf_r = [], []
     for q in qids:
         brute = {
@@ -478,3 +488,139 @@ def test_versioned_publish_and_append(spark, sf_dir, tmp_path_factory):
         posixpath.join(root, v2, "vectors")
     ).count() == 500
     del post
+
+
+def _walk_rows(spark, root, qvs, qids, label_where):
+    """Single and batch walks over ``root`` — plain, exclusion and
+    filtered requests — as comparable row lists."""
+    from webarchive_indexing_spark.operators.graph_ann import (
+        graph_beam_batch_topk,
+    )
+
+    out = {}
+    for q in qids:
+        out[("single", q)] = graph_beam_topk(
+            spark, root, qvs[q], k=10, exclude_id=q
+        ).collect()
+        out[("single_where", q)] = graph_beam_topk(
+            spark, root, qvs[q], k=10, where=label_where
+        ).collect()
+    vecs = [qvs[q] for q in qids]
+    out["batch"] = graph_beam_batch_topk(
+        spark, root, vecs, k=10, exclude_ids=qids
+    ).collect()
+    out["batch_wheres"] = graph_beam_batch_topk(
+        spark, root, vecs, k=10,
+        wheres=[label_where, None] * (len(qids) // 2),
+    ).collect()
+    return {k: [tuple(r) for r in v] for k, v in out.items()}
+
+
+def test_driver_read_walks_equal_distributed_read(
+    spark, sf_dir, tmp_path_factory, monkeypatch
+):
+    """A frontier read on the driver (Arrow local relation) and the
+    frontier-pruned Spark scan it falls back to above one input split
+    must give the same rows, for single and batch walks with
+    exclusions and ``where``/``wheres``, on a plain store, after an
+    LSM append (several files per bucket) and with tombstones."""
+    from webarchive_indexing_spark.operators import graph_ann
+    from webarchive_indexing_spark.operators.graph_ann import (
+        append_knn_graph,
+        delete_from_knn_graph,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = str(tmp_path_factory.mktemp("driver_read_store"))
+    write_knn_graph(emb, out, k_neighbors=12, n_base=400, attrs=("label",))
+    qids = [77, 321]
+    qvs = {q: collect_query_vector(emb, q) for q in qids}
+    label = emb.filter(F.col("vec_id") == 321).first().label
+    where = f"label = {label}"
+
+    def both():
+        driver = _walk_rows(spark, out, qvs, qids, where)
+        with monkeypatch.context() as m:
+            m.setattr(graph_ann, "_driver_read_bytes", lambda _spark: 0)
+            distributed = _walk_rows(spark, out, qvs, qids, where)
+        assert driver == distributed
+        return driver
+
+    plain = both()
+    append_knn_graph(
+        emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 500)), out
+    )
+    appended = both()
+    assert appended != plain
+    dead = [r[0] for r in appended[("single", 77)][:3]]
+    delete_from_knn_graph(out, dead)
+    tombstoned = both()
+    assert not set(dead) & {r[0] for r in tombstoned[("single", 77)]}
+
+
+def test_graph_walk_runs_one_job(spark, sf_dir, store):
+    """Every hop of the walk reads its frontier on the driver and
+    scores it without a job: collecting a walk runs one Spark job, the
+    top-k over the visited set."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = collect_query_vector(emb, 77)
+    sc = spark.sparkContext
+    sc.setJobGroup("graph_walk_jobs", "graph_beam_topk")
+    try:
+        rows = graph_beam_topk(spark, store, qv, k=10, exclude_id=77).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 10
+    assert len(sc.statusTracker().getJobIdsForGroup("graph_walk_jobs")) <= 1
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_walks_refuse_non_finite_query(spark, sf_dir, store, bad):
+    from webarchive_indexing_spark.operators.graph_ann import (
+        graph_beam_batch_topk,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = collect_query_vector(emb, 77)
+    poisoned = qv[:5] + [bad] + qv[6:]
+    with pytest.raises(ValueError, match="query vector 0 has a non-finite"):
+        graph_beam_topk(spark, store, poisoned)
+    with pytest.raises(ValueError, match="query vector 1 has a non-finite"):
+        graph_beam_batch_topk(spark, store, [qv, poisoned])
+
+
+def test_store_scan_schema_equals_inferred_read_graph(spark, store):
+    """The walks' fallback scans take their schema from a parquet
+    footer; it must equal the inferring read's, bucket column
+    included."""
+    from webarchive_indexing_spark.sinks.ann_index import _store_scan
+
+    for sub in ("vectors", "graph"):
+        assert _store_scan(spark, store, sub).schema == (
+            spark.read.parquet(f"{store}/{sub}").schema
+        ), sub
+
+
+def test_spark_cosine6_sql_equals_column_form(spark, sf_dir):
+    """The walks score with the one-parse SQL text of
+    ``hround(cosine(v, q), 6)``; it must give the Column form's
+    doubles exactly."""
+    from webarchive_indexing_spark.operators.similarity import (
+        cosine,
+        lit_double_array,
+        spark_cosine6_sql,
+        sql_double_array,
+    )
+    from webarchive_indexing_spark.queries.helpers import hround
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = collect_query_vector(emb, 77)
+    want = emb.select(
+        "vec_id",
+        hround(cosine(F.col("embedding"), lit_double_array(qv)), 6).alias("s"),
+    )
+    got = emb.select(
+        "vec_id",
+        F.expr(spark_cosine6_sql("embedding", sql_double_array(qv))).alias("s"),
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

@@ -2154,3 +2154,60 @@ def test_sq_range_batch_equals_per_request_loop(spark, sf_dir):
             if row.request_no == i
         ]
         assert got_i == [(row.vec_id, row.cell, row.cos_sim) for row in one]
+
+
+def test_store_scan_schema_equals_inferred_read(spark, sf_dir):
+    """``_store_scan`` takes the data schema from one parquet footer
+    instead of a schema-inference job; for every subdirectory of the
+    flat, SQ and PQ (attrs + refine sidecar) stores it must give the
+    schema the inferring read gives, partition columns included."""
+    import tempfile
+
+    from webarchive_indexing_spark.sinks import ann_index
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    flat, sq, pq = (tempfile.mkdtemp(prefix=f"scan_{n}_") for n in ("flat", "sq", "pq"))
+    ann_index.write_ivf_index(emb, flat, n_cents=8, train_iters=2)
+    ann_index.write_ivfsq_index(emb, sq, n_cents=8, train_iters=2, attrs=["label"])
+    ann_index.write_ivfpq_index(
+        emb, pq, n_cells=8, n_sub=4, k_codes=8, train_iters=2,
+        attrs=["label"], refine="flat",
+    )
+    for store, sub in ((flat, "vectors"), (sq, "sq"), (pq, "codes"), (pq, "refine")):
+        got = ann_index._store_scan(spark, store, sub).schema
+        assert got == spark.read.parquet(f"{store}/{sub}").schema, (store, sub)
+    # an empty directory falls back to the plain read
+    empty = tempfile.mkdtemp(prefix="scan_empty_")
+    spark.range(0).write.mode("overwrite").parquet(f"{empty}/codes")
+    assert ann_index._store_scan(spark, empty, "codes").schema == (
+        spark.read.parquet(f"{empty}/codes").schema
+    )
+
+
+def test_refined_probe_where_matching_nothing_is_empty(spark, sf_dir):
+    """A ``where`` that matches no row leaves the refine stage no
+    candidate id: both the sidecar and the external-vectors refine
+    must return an empty frame (an empty id list is FALSE, never a
+    string-built ``IN ()``)."""
+    import tempfile
+
+    from webarchive_indexing_spark.operators.similarity import (
+        collect_query_vector,
+    )
+    from webarchive_indexing_spark.sinks.ann_index import (
+        ivfpq_refined_topk,
+        write_ivfpq_index,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = tempfile.mkdtemp(prefix="ivfpq_refine_none_")
+    write_ivfpq_index(
+        emb, out, n_cells=8, n_sub=4, k_codes=8, train_iters=2,
+        attrs=["label"], refine="flat",
+    )
+    qv = collect_query_vector(emb, 77)
+    nothing = "label < 0"
+    assert emb.filter(nothing).count() == 0
+    for src in (None, emb):
+        got = ivfpq_refined_topk(spark, out, src, qv, k=10, where=nothing)
+        assert got.collect() == []

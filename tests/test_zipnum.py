@@ -876,3 +876,19 @@ def test_show_num_pages_runs_no_job(spark, cluster):
     _, _, lo, hi = _query_prune_range(url, "domain", {})
     want = num_pages(d, key_lo=lo, key_hi=hi)
     assert [tuple(r) for r in rows] == [(want,)] and want > 0
+
+
+def test_arrow_frame_keeps_rows_after_empty_batch(spark):
+    """pyspark 4.1.2 drops every row after the first zero-length
+    record batch of an Arrow table; the one hand-off combines chunks,
+    so a table built from batches of 1, 0 and 2 rows keeps all 3."""
+    import pyarrow as pa
+
+    from webarchive_indexing_spark.sinks.zipnum import arrow_frame
+
+    schema = pa.schema([("a", pa.int64())])
+    table = pa.Table.from_batches(
+        [pa.record_batch([pa.array(v, pa.int64())], schema=schema)
+         for v in ([1], [], [2, 3])]
+    )
+    assert sorted(r.a for r in arrow_frame(spark, table).collect()) == [1, 2, 3]

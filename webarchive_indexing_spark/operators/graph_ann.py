@@ -43,14 +43,21 @@ fully relational and oracle-checkable:
 score) lives DRIVER-SIDE for the whole walk — bounded by the serving
 parameters (|entries| + H·B·degree, the HNSW cost shape), never by
 the corpus; exactly the candidate set ANY graph-ANN server holds in
-memory per request.  Beams are computed in Python (no job), so each
-hop costs exactly TWO bounded Spark actions: the frontier-pruned
-edge collect (≤ B·k_neighbors rows) and the pruned scoring collect
-(fresh ids only; scoring stays in Spark codegen so values are
-bit-identical to every other path).  A greedy graph walk is
-inherently sequential in hops; trading the previous "one static
-plan" unrolling for per-hop static pruning is what lets the scan
-read B buckets instead of broadcasting billions of edges.
+memory per request.  Beams are computed in Python, and each hop makes
+two bounded frontier reads: the beam's edges (≤ B·k_neighbors rows)
+and the fresh ids' vectors.  While a frontier's bucket files fit one
+input split (``spark.sql.files.maxPartitionBytes``), it is read on
+the driver with ``pyarrow.dataset`` and handed to Spark as an Arrow
+local relation: the scoring projection over it is evaluated by
+``ConvertToLocalRelation`` and collects without a Spark job.  A walk
+then runs one job — its result's top-k — where it used to run two per
+hop plus the schema inference of its two store reads.  A larger
+frontier reads through the same frontier-pruned Spark scans, one job
+per read.  Either way scoring is the same Spark expression over the
+same values, so rows are bit-identical to every other path.  A greedy
+graph walk is inherently sequential in hops; trading the previous
+"one static plan" unrolling for per-hop static pruning is what lets
+the scan read B buckets instead of broadcasting billions of edges.
 
 **LSM lifecycle** (round-14 — parity with the ZipNum / parquet-index
 / IVF stores): ``append_knn_graph`` adds vectors + their symmetrized
@@ -72,15 +79,25 @@ directory (hard-link clone for appends) and atomically swap the
 from __future__ import annotations
 
 import json
+import math
 import posixpath
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..queries.helpers import hround, sql_hround
-from .similarity import cosine, cosine_from_parts, sql_cosine, _dec_dot
+from .similarity import (
+    _dec_dot,
+    cosine,
+    cosine_from_parts,
+    spark_cosine6_sql,
+    sql_cosine,
+    sql_double_array,
+    sql_isin,
+)
 
 META = "_graph.json"
 
@@ -89,6 +106,14 @@ META = "_graph.json"
 #: vectors) — serving cost is per-FRONTIER buckets touched, so more
 #: buckets only sharpen the pruning
 N_BUCKETS = 16
+
+#: the walks' driver-held visited sets, handed to Spark for the top-k
+_VISITED = T.StructType(
+    [T.StructField("id", T.LongType()), T.StructField("s", T.DoubleType())]
+)
+_BATCH_VISITED = T.StructType(
+    [T.StructField("req", T.IntegerType()), *_VISITED.fields]
+)
 
 
 def grid_threshold_candidates(
@@ -966,14 +991,9 @@ def _pruned_edge_scan(
     if not ids:
         return graph.filter(F.lit(False))
     g = graph
-    # string-built IN lists, not Column.isin: isin() round-trips one
-    # py4j call PER literal (a 500-id frontier = 500 socket hops on
-    # the driver per hop — round-16 cProfile); one parsed expression
-    # yields the identical In predicate and pushdown
     if n_buckets is not None and "src_bucket" in graph.columns:
-        bks = ",".join(str(b) for b in sorted({i % n_buckets for i in ids}))
-        g = g.filter(F.expr(f"src_bucket IN ({bks})"))
-    return g.filter(F.expr(f"src IN ({','.join(str(i) for i in ids)})"))
+        g = g.filter(sql_isin("src_bucket", {i % n_buckets for i in ids}))
+    return g.filter(sql_isin("src", ids))
 
 
 def _pruned_vec_scan(
@@ -984,13 +1004,320 @@ def _pruned_vec_scan(
     if not uniq:
         return vecs.filter(F.lit(False))
     v = vecs
-    # same one-parse IN construction as _pruned_edge_scan (py4j cost)
     if n_buckets is not None and "id_bucket" in vecs.columns:
-        bks = ",".join(str(b) for b in sorted({i % n_buckets for i in uniq}))
-        v = v.filter(F.expr(f"id_bucket IN ({bks})"))
-    return v.filter(
-        F.expr(f"`{id_col}` IN ({','.join(str(i) for i in uniq)})")
+        v = v.filter(sql_isin("id_bucket", {i % n_buckets for i in uniq}))
+    return v.filter(sql_isin(id_col, uniq))
+
+
+#: the hive partition (bucket) column of each graph-store table
+_BUCKET_COL = {"vectors": "id_bucket", "graph": "src_bucket"}
+
+
+def _driver_read_bytes(spark: SparkSession) -> int:
+    """Largest pruned frontier, in parquet file bytes, that a walk
+    reads on the driver: one input split
+    (``spark.sql.files.maxPartitionBytes``), so the driver never holds
+    more than one task of the distributed read would."""
+    return int(
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
+
+
+class _Frontier:
+    """One walk's reads of frontier rows: the rows of store table
+    ``sub`` (``"vectors"`` or ``"graph"``) whose ``key`` is in a
+    beam-sized id list.
+
+    While the ids' bucket files total at most ``_driver_read_bytes``
+    they are read right here with ``pyarrow.dataset``, filtered on
+    ``key``.  Edge rows go straight to Python; rows Spark must score
+    or filter reach it as an Arrow local relation, whose projection
+    ``ConvertToLocalRelation`` evaluates in the JVM — collecting it
+    runs no job.  Larger frontiers read through the frontier-pruned
+    Spark scans (``_pruned_edge_scan`` / ``_pruned_vec_scan``), whose
+    readers are created on first use.  Callers see the same rows
+    either way."""
+
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int | None):
+        from ..sinks.zipnum import _fs_for
+
+        self.spark, self.root, self.n_buckets = spark, root, n_buckets
+        self.bound = _driver_read_bytes(spark)
+        self.fs, self.local = _fs_for(root)
+        self._listed: dict[str, list] = {}
+        self._scans: dict[str, DataFrame] = {}
+
+    def _files(self, sub: str, ids: list[int]) -> list:
+        from pyarrow import fs as pafs
+
+        from ..sinks.zipnum import _join
+
+        table_dir = _join(self.local, sub)
+        if self.n_buckets is None:
+            dirs = [table_dir]
+        else:
+            dirs = [
+                _join(table_dir, f"{_BUCKET_COL[sub]}={b}")
+                for b in sorted({i % self.n_buckets for i in ids})
+            ]
+        for d in dirs:
+            if d not in self._listed:
+                sel = pafs.FileSelector(
+                    d, allow_not_found=True, recursive=self.n_buckets is None
+                )
+                self._listed[d] = [
+                    i
+                    for i in self.fs.get_file_info(sel)
+                    if i.type == pafs.FileType.File
+                    and not posixpath.basename(i.path).startswith(("_", "."))
+                ]
+        return [f for d in dirs for f in self._listed[d]]
+
+    def _table(self, sub: str, key: str, ids: list[int], columns: tuple):
+        """(Arrow table, Spark schema or None) of the matching rows read
+        on the driver, or None when the frontier's files exceed the
+        bound (or there are none)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        from ..sinks.ann_index import _spark_schema
+
+        files = self._files(sub, ids)
+        if not files or sum(f.size for f in files) > self.bound:
+            return None
+        data = ds.dataset(
+            [f.path for f in files], format="parquet", filesystem=self.fs
+        )
+        table = data.to_table(
+            columns=list(columns),
+            filter=pc.field(key).isin(
+                pa.array(ids).cast(data.schema.field(key).type)
+            ),
+        )
+        spark_schema = _spark_schema(data.schema.metadata)
+        if spark_schema is None:
+            return table, None
+        return table, T.StructType([spark_schema[c] for c in columns])
+
+    def _scan(self, sub: str, key: str, ids: list[int], columns: tuple) -> DataFrame:
+        from ..sinks.ann_index import _store_scan
+
+        if sub not in self._scans:
+            self._scans[sub] = _store_scan(self.spark, self.root, sub)
+        if sub == "graph":
+            df = _pruned_edge_scan(self._scans[sub], ids, self.n_buckets)
+        else:
+            df = _pruned_vec_scan(self._scans[sub], ids, self.n_buckets, key)
+        return df.select(*columns)
+
+    def rows(self, sub: str, key: str, ids, columns: tuple) -> list[tuple]:
+        """The matching rows as Python tuples — no Spark at all on the
+        driver read."""
+        ids = sorted({int(i) for i in ids})
+        if not ids:
+            return []
+        got = self._table(sub, key, ids, columns)
+        if got is None:
+            return [tuple(r) for r in self._scan(sub, key, ids, columns).collect()]
+        table = got[0]
+        return list(zip(*(table.column(c).to_pylist() for c in columns)))
+
+    def frame(self, sub: str, key: str, ids, columns: tuple) -> DataFrame:
+        """The matching rows as a DataFrame."""
+        from ..sinks.zipnum import arrow_frame
+
+        ids = sorted({int(i) for i in ids})
+        got = self._table(sub, key, ids, columns) if ids else None
+        if got is None:
+            return self._scan(sub, key, ids, columns)
+        return arrow_frame(self.spark, *got)
+
+    def queried(
+        self, key: str, vec_col: str, pairs: list[tuple[int, int]],
+        queries: list[list[float]],
+    ) -> DataFrame:
+        """``(req, key, vec_col, __q)`` — one row per (request, id)
+        pair: the id's stored vector next to request ``req``'s query
+        vector, so every walk scores with one projection."""
+        import pyarrow as pa
+
+        from ..sinks.zipnum import arrow_frame
+
+        reqs_of: dict[int, list[int]] = {}
+        for req, i in pairs:
+            reqs_of.setdefault(int(i), []).append(int(req))
+        ids = sorted(reqs_of)
+        got = self._table("vectors", key, ids, (key, vec_col))
+        if got is None:
+            # per-request membership as one id → reqs map literal, the
+            # query as one array-of-arrays literal
+            fan_sql = "map(" + ",".join(
+                f"{i}L,array({','.join(str(r) for r in sorted(reqs_of[i]))})"
+                for i in ids
+            ) + ")"
+            qarr_sql = "array(" + ",".join(map(sql_double_array, queries)) + ")"
+            fanned = self._scan("vectors", key, ids, (key, vec_col)).select(
+                F.explode(F.element_at(F.expr(fan_sql), F.col(key))).alias("req"),
+                key,
+                vec_col,
+            )
+            return fanned.withColumn(
+                "__q", F.element_at(F.expr(qarr_sql), F.col("req") + 1)
+            )
+        table, schema = got
+        idx, reqs = [], []
+        for j, v in enumerate(table.column(key).to_pylist()):
+            for r in reqs_of[v]:
+                idx.append(j)
+                reqs.append(r)
+        table = table.take(pa.array(idx, pa.int64()))
+        table = table.add_column(0, "req", pa.array(reqs, pa.int32()))
+        table = table.append_column(
+            "__q",
+            pa.array([queries[r] for r in reqs], pa.list_(pa.float64())),
+        )
+        if schema is not None:
+            schema = T.StructType(
+                [
+                    T.StructField("req", T.IntegerType()),
+                    *schema.fields,
+                    T.StructField("__q", T.ArrayType(T.DoubleType())),
+                ]
+            )
+        return arrow_frame(self.spark, table, schema)
+
+
+def _require_finite(query_vecs: list[list[float]], op: str) -> None:
+    """A NaN or infinite query component has no cosine to rank by:
+    refuse it up front, naming the request."""
+    for n, qv in enumerate(query_vecs):
+        bad = [x for x in qv if not math.isfinite(float(x))]
+        if bad:
+            raise ValueError(
+                f"{op}: query vector {n} has a non-finite component "
+                f"({bad[0]!r})"
+            )
+
+
+def _beam_walk(
+    spark: SparkSession,
+    store: str,
+    query_vecs: list[list[float]],
+    *,
+    beam: int,
+    hops: int,
+    entries: tuple[int, ...] | None,
+    exclude_ids: list[int | None],
+    wheres: list[str | None],
+    op: str,
+) -> dict[tuple[int, int], float]:
+    """The beam walk behind ``graph_beam_topk`` (one request) and
+    ``graph_beam_batch_topk`` (N requests in lockstep): the visited
+    ``(request, id) → score`` map, tombstoned ids and ids failing the
+    request's ``where`` dropped.
+
+    The walk state lives DRIVER-SIDE for the whole walk (≤
+    N·(|entries| + H·B·degree) entries — serving parameters, not
+    corpus) and beams are pure Python.  A hop is one read of the
+    UNION of every request's beam edges (per-request membership is
+    restored in Python) and one scoring of the fresh (request, id)
+    pairs; both run no Spark job while the frontier fits one input
+    split (see ``_Frontier``).  Scoring stays IN SPARK — the
+    ``hround(cosine)`` expression every other path uses, over the same
+    values — so rows are bit-identical to the oracle's."""
+    from ..sinks.ann_index import read_ann_tombstones, resolve_store
+
+    _require_finite(query_vecs, op)
+    root = resolve_store(store)
+    meta = read_graph_meta(root)
+    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    tombs = read_ann_tombstones(root)
+    frontier = _Frontier(spark, root, meta.get("n_buckets"))
+    # the hop-invariant scoring projection, parsed once per walk
+    score_cols = [
+        F.col("req"),
+        F.col(id_col),
+        F.expr(spark_cosine6_sql(f"`{vec_col}`", "__q")).alias("s"),
+    ]
+
+    def score(pairs: list[tuple[int, int]]) -> list[tuple[int, int, float]]:
+        if not pairs:
+            return []
+        return [
+            (int(r[0]), int(r[1]), float(r[2]))
+            for r in frontier.queried(id_col, vec_col, pairs, query_vecs)
+            .select(*score_cols)
+            .collect()
+        ]
+
+    ent_ids = _resolve_entries(entries, meta, op)
+    reqs = range(len(query_vecs))
+    excl = [None if e is None else int(e) for e in exclude_ids]
+    seen: list[set[int]] = [
+        set(ent_ids) | ({excl[r]} if excl[r] is not None else set())
+        for r in reqs
+    ]
+    state: dict[tuple[int, int], float] = {
+        (req, i): s
+        for req, i, s in score(
+            [(r, e) for r in reqs for e in ent_ids if e != excl[r]]
+        )
+    }
+    for _ in range(hops):
+        per_req: dict[int, list[tuple[int, float]]] = {}
+        for (r, i), s in state.items():
+            per_req.setdefault(r, []).append((i, s))
+        beams = {
+            r: [i for i, _s in sorted(v, key=lambda t: (-t[1], t[0]))[:beam]]
+            for r, v in per_req.items()
+        }
+        if not beams:
+            break  # no entry point resolved to a stored vector
+        adj: dict[int, set[int]] = {}
+        for src, dst in frontier.rows(
+            "graph", "src", {i for b in beams.values() for i in b}, ("src", "dst")
+        ):
+            adj.setdefault(int(src), set()).add(int(dst))
+        fresh = sorted(
+            {
+                (r, d)
+                for r, b in beams.items()
+                for i in b
+                for d in adj.get(i, ())
+                if d not in seen[r]
+            }
+        )
+        if not fresh:
+            break
+        for r, d in fresh:
+            seen[r].add(d)
+        state.update(((r, i), s) for r, i, s in score(fresh))
+    state = {key: s for key, s in state.items() if key[1] not in tombs}
+    conds = sorted({wh for wh in wheres if wh is not None})
+    if conds and state:
+        # each distinct predicate evaluated once per visited id, over
+        # the attribute columns of the frontier read
+        attr_cols = [c for c in meta.get("attrs", []) if c != id_col]
+        visited_ids = {i for _, i in state}
+        rows = (
+            frontier.frame("vectors", id_col, visited_ids, (id_col, *attr_cols))
+            .select(
+                F.col(id_col),
+                *[F.expr(wh).alias(f"__w{j}") for j, wh in enumerate(conds)],
+            )
+            .collect()
+        )
+        passing = {
+            wh: {int(r[0]) for r in rows if r[j + 1] is True}
+            for j, wh in enumerate(conds)
+        }
+        state = {
+            (r, i): s
+            for (r, i), s in state.items()
+            if wheres[r] is None or i in passing[wheres[r]]
+        }
+    return state
 
 
 def graph_beam_topk(
@@ -1014,7 +1341,8 @@ def graph_beam_topk(
     so it is never re-joined (round-13 ADVICE).  ``entries=None``
     (the default since round 15) reads the store's PERSISTED entry
     points from the build recipe (``write_knn_graph``'s top-degree
-    hubs); an explicit tuple overrides them.
+    hubs); an explicit tuple overrides them.  A query vector with a
+    NaN or infinite component raises ``ValueError``.
 
     Tombstoned ids (``delete_from_knn_graph``) are excluded from the
     RESULT but remain navigable stepping stones — the graph-store
@@ -1025,90 +1353,19 @@ def graph_beam_topk(
     walk unfiltered (non-matching nodes remain navigable stepping
     stones, the standard graph-store semantics) and may return fewer
     than k rows when the predicate is very selective; raise ``beam``/
-    ``hops`` to widen the visited pool in that case."""
-    from ..sinks.ann_index import read_ann_tombstones, resolve_store
+    ``hops`` to widen the visited pool in that case.
 
-    root = resolve_store(store)
-    meta = read_graph_meta(root)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    nb = meta.get("n_buckets")
-    tombs = read_ann_tombstones(root)
-    vecs = spark.read.parquet(posixpath.join(root, "vectors"))
-    graph = spark.read.parquet(posixpath.join(root, "graph"))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    The walk is ``graph_beam_batch_topk``'s with one request, so the
+    rows equal that request's batch rows."""
+    from ..sinks.zipnum import local_frame
 
-    # the scoring projection is hop-invariant — build the expression
-    # tree ONCE per walk (cosine's decimal fold is ~100 py4j calls to
-    # construct; per-hop reconstruction was pure driver latency,
-    # round-16 cProfile) and reuse the Column across hops
-    score_cols = [
-        F.col(id_col).alias("id"),
-        hround(cosine(F.col(vec_col), qlit), 6).alias("s"),
-    ]
-
-    def score_ids(ids: list[int]) -> list[tuple[int, float]]:
-        # query norm is a constant; cosine() recomputes it per row
-        # inside codegen — candidate sets are beam-sized, so clarity
-        # wins over the micro-optimization here.  Scoring stays IN
-        # SPARK (identical codegen expression to every other path —
-        # no Python float re-derivation); the bounded rows come back
-        # to the driver-side walk state.
-        return [
-            (int(r.id), float(r.s))
-            for r in _pruned_vec_scan(vecs, ids, nb, id_col)
-            .select(*score_cols)
-            .collect()
-        ]
-
-    ent_ids = _resolve_entries(entries, meta, "graph_beam_topk")
-    seed = [e for e in ent_ids if e != exclude_id]
-    # The walk state — visited id → score — lives DRIVER-SIDE for the
-    # whole walk (round 15, matching the batch walk): it is bounded
-    # by |entries| + H·B·k_neighbors (serving parameters, not
-    # corpus), beams are then pure Python, and each hop costs exactly
-    # TWO bounded actions (pruned edge collect + pruned scoring
-    # collect) instead of beam-window collect + neighbor collect +
-    # eager re-checkpoint of the growing visited union.
-    seen: set[int] = set(seed)
-    if exclude_id is not None:
-        seen.add(int(exclude_id))
-    state: dict[int, float] = dict(score_ids(seed))
-    for _ in range(hops):
-        beam_ids = [
-            i
-            for i, _s in sorted(
-                state.items(), key=lambda t: (-t[1], t[0])
-            )[:beam]
-        ]
-        if not beam_ids:
-            break  # no entry point resolved to a stored vector
-        nbr = {
-            int(r.dst)
-            for r in _pruned_edge_scan(graph, beam_ids, nb)
-            .select("dst")
-            .distinct()
-            .collect()
-        }
-        fresh = sorted(nbr - seen)
-        if not fresh:
-            break
-        seen.update(fresh)
-        state.update(score_ids(fresh))
-    visited = spark.createDataFrame(
-        sorted(state.items()), "id bigint, s double"
+    state = _beam_walk(
+        spark, store, [query_vec], beam=beam, hops=hops, entries=entries,
+        exclude_ids=[exclude_id], wheres=[where], op="graph_beam_topk",
     )
-    if tombs:
-        visited = visited.filter(~F.col("id").isin(sorted(tombs)))
-    if where is not None:
-        attr_cols = [c for c in meta.get("attrs", []) if c != id_col]
-        attrs_df = _pruned_vec_scan(vecs, sorted(seen), nb, id_col).select(
-            F.col(id_col).alias("__aid"), *attr_cols
-        )
-        visited = (
-            visited.join(attrs_df, F.col("id") == F.col("__aid"))
-            .filter(F.expr(where))
-            .select("id", "s")
-        )
+    visited = local_frame(
+        spark, sorted((i, s) for (_r, i), s in state.items()), _VISITED
+    )
     return (
         visited.orderBy(F.col("s").desc(), F.col("id").asc())
         .limit(k)
@@ -1335,16 +1592,17 @@ def graph_beam_batch_topk(
 ) -> DataFrame:
     """BATCH beam-search serving: N query walks advance in lockstep
     (the batched-``search()`` amortization the rest of the ANN matrix
-    already has).  Per-request state (visited set, beam) rides a
-    ``request_no`` column; each hop pushes the UNION of every
-    request's beam ids into ONE pruned edge scan (the union-cells
-    trick from the IVF batch probes), with per-request membership
-    restored by a broadcast join of the (req, beam_id) pairs — so
-    request count changes the size of the pushed id list, not the
-    number of scans.  Query vectors travel as a broadcast (request_no,
-    qvec) table, so scoring is a plain join + cosine (no per-request
-    expression arms).  Returns ``(request_no, vec_id, cos_sim)``,
-    per-request top-k.
+    already has).  Per-request state (visited set, beam) is kept on
+    the driver; each hop reads the UNION of every request's beam ids
+    in ONE frontier read (the union-cells trick from the IVF batch
+    probes), with per-request membership restored in Python — so
+    request count changes the size of the id list, not the number of
+    reads.  Each fresh (request, id) pair's vector row carries its
+    request's query vector, so scoring is one projection (no
+    per-request expression arms).
+    Returns ``(request_no, vec_id, cos_sim)``, per-request top-k.  A
+    query vector with a NaN or infinite component raises
+    ``ValueError`` naming its position.
 
     ``wheres`` (one SQL predicate over the store's ``attrs`` columns
     per request, None = unfiltered) POST-filters each request's
@@ -1352,7 +1610,7 @@ def graph_beam_batch_topk(
     semantics as the single walk's ``where`` (non-matching nodes stay
     navigable stepping stones), batched like the IVF families'
     per-request ``wheres``."""
-    from ..sinks.ann_index import read_ann_tombstones, resolve_store
+    from ..sinks.zipnum import local_frame
 
     if not query_vecs:
         raise ValueError("graph_beam_batch_topk: no query vectors")
@@ -1365,172 +1623,18 @@ def graph_beam_batch_topk(
         raise ValueError(
             "graph_beam_batch_topk: wheres must align 1:1 with query_vecs"
         )
-    root = resolve_store(store)
-    meta = read_graph_meta(root)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    nb = meta.get("n_buckets")
-    tombs = read_ann_tombstones(root)
-    vecs = spark.read.parquet(posixpath.join(root, "vectors"))
-    graph = spark.read.parquet(posixpath.join(root, "graph"))
-    excl = (
-        [int(e) for e in exclude_ids]
-        if exclude_ids
-        else [-1] * len(query_vecs)
+    state = _beam_walk(
+        spark, store, query_vecs, beam=beam, hops=hops, entries=entries,
+        exclude_ids=exclude_ids or [None] * len(query_vecs),
+        wheres=wheres or [None] * len(query_vecs),
+        op="graph_beam_batch_topk",
     )
-    # the N query vectors as ONE string-built SQL array-of-arrays
-    # literal (round 16): the former broadcast (req, qvec) table cost
-    # every scoring action a BroadcastExchange build — a separate job
-    # plus ~0.2 s of fixed latency — for a value that never changes
-    # across the walk.  repr(float) round-trips the double bits, so
-    # element_at(qarr, req+1) feeds cosine() the identical array the
-    # broadcast column carried (hash-stable vs the oracle).
-    qarr_sql = "array(" + ",".join(
-        "array(" + ",".join(f"{float(x)!r}D" for x in qv) + ")"
-        for qv in query_vecs
-    ) + ")"
-    # hop-invariant scoring projection, built once per walk (the
-    # cosine decimal fold costs ~100 py4j round-trips to construct —
-    # round-16 cProfile; rebuilding it per scoring action was pure
-    # driver latency)
-    batch_score_cols = [
-        F.col("req").alias("req"),
-        F.col("id").alias("id"),
-        hround(
-            cosine(
-                F.col("__v"),
-                F.element_at(F.expr(qarr_sql), F.col("req") + 1),
-            ),
-            6,
-        ).alias("s"),
-    ]
-
-    def score_pairs(pairs: list[tuple[int, int]]) -> list[tuple]:
-        # pairs: (req, id) — serving-parameter-bounded (≤ N·B·degree);
-        # the vector scan is statically pruned to the union of ids.
-        # Scoring stays IN SPARK (the identical hround(cosine)
-        # codegen expression as every other path — no Python float
-        # re-derivation to drift from the oracle); the bounded result
-        # rows come back to the driver-side walk state.
-        #
-        # Per-request membership rides a string-built id→reqs MAP
-        # literal (one py4j call) exploded against the scan row — the
-        # former createDataFrame + TWO broadcast joins made every
-        # scoring action ~0.75 s of fixed latency (round-16 per-action
-        # profile); this shape is one job over the pruned scan, the
-        # same cost as the hop's edge collect.
-        reqs_of: dict[int, list[int]] = {}
-        for req, i in pairs:
-            reqs_of.setdefault(int(i), []).append(int(req))
-        req_map_sql = "map(" + ",".join(
-            f"{i}L,array({','.join(str(r) for r in sorted(rs))})"
-            for i, rs in sorted(reqs_of.items())
-        ) + ")"
-        vs = _pruned_vec_scan(
-            vecs, [i for _, i in pairs], nb, id_col
-        ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
-        return [
-            (int(r.req), int(r.id), float(r.s))
-            for r in vs.select(
-                "id",
-                "__v",
-                F.explode(
-                    F.element_at(F.expr(req_map_sql), F.col("id"))
-                ).alias("req"),
-            )
-            .select(*batch_score_cols)
-            .collect()
-        ]
-
-    ent_ids = _resolve_entries(entries, meta, "graph_beam_batch_topk")
-    # The walk state — visited (req, id) → score — lives DRIVER-SIDE
-    # for the whole walk (round 15; it is serving-parameter-bounded:
-    # ≤ N·(|entries| + H·B·degree) rows, the candidate set any batch
-    # ANN server holds per request group).  Beams are then pure
-    # Python (no Spark job), so each hop costs exactly TWO bounded
-    # actions: the frontier-pruned edge collect and the pruned
-    # scoring collect — vs the previous beam-window collect +
-    # neighbor collect + eager re-checkpoint of the growing visited
-    # union, which is where the round-14 batch probe regression
-    # lived.
-    seen: list[set[int]] = [
-        set(ent_ids) | {excl[i]} for i in range(len(query_vecs))
-    ]
-    seed = [
-        (req, e)
-        for req in range(len(query_vecs))
-        for e in ent_ids
-        if e != excl[req]
-    ]
-    state: dict[tuple[int, int], float] = {
-        (req, i): s for req, i, s in score_pairs(seed)
-    }
-    for _ in range(hops):
-        per_req: dict[int, list[tuple[int, float]]] = {}
-        for (r, i), s in state.items():
-            per_req.setdefault(r, []).append((i, s))
-        beam_pairs = [
-            (req, i)
-            for req in sorted(per_req)
-            for i, _s in sorted(
-                per_req[req], key=lambda t: (-t[1], t[0])
-            )[:beam]
-        ]
-        if not beam_pairs:
-            break  # no request resolved an entry point
-        beams: dict[int, list[int]] = {}
-        for req, i in beam_pairs:
-            beams.setdefault(req, []).append(i)
-        union_ids = sorted({i for _, i in beam_pairs})
-        # one pruned scan for the union frontier; per-request
-        # membership is restored in Python from the driver beams
-        adj: dict[int, set[int]] = {}
-        for r in (
-            _pruned_edge_scan(graph, union_ids, nb)
-            .select("src", "dst")
-            .distinct()
-            .collect()
-        ):
-            adj.setdefault(int(r.src), set()).add(int(r.dst))
-        fresh = sorted(
-            {
-                (req, d)
-                for req, bids in beams.items()
-                for b in bids
-                for d in adj.get(b, ())
-                if d not in seen[req]
-            }
-        )
-        if not fresh:
-            break
-        for req, d in fresh:
-            seen[req].add(d)
-        for req, i, s in score_pairs(fresh):
-            state[(req, i)] = s
-    visited = spark.createDataFrame(
+    visited = local_frame(
+        spark,
         [(req, i, s) for (req, i), s in sorted(state.items())],
-        "req int, id bigint, s double",
+        _BATCH_VISITED,
     )
     w = Window.partitionBy("req").orderBy(F.col("s").desc(), F.col("id").asc())
-    if tombs:
-        visited = visited.filter(~F.col("id").isin(sorted(tombs)))
-    if wheres is not None and any(wh is not None for wh in wheres):
-        attr_cols = [c for c in meta.get("attrs", []) if c != id_col]
-        all_seen = sorted(set().union(*seen))
-        attrs_df = _pruned_vec_scan(vecs, all_seen, nb, id_col).select(
-            F.col(id_col).alias("__aid"), *attr_cols
-        )
-        visited = visited.join(
-            attrs_df, F.col("id") == F.col("__aid")
-        ).drop("__aid")
-        cond = None
-        for i, wh in enumerate(wheres):
-            arm = (
-                F.col("req") == i
-                if wh is None
-                else (F.col("req") == i) & F.expr(wh)
-            )
-            cond = arm if cond is None else (cond | arm)
-        visited = visited.filter(cond).select("req", "id", "s")
     return (
         visited.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)

@@ -37,7 +37,22 @@ def lit_double_array(vals: list[float]) -> Column:
     calls and measured ~3 s of pure expression-construction time per
     PQ query build.  ``repr(float)`` round-trips the exact double bits
     through SQL parsing, so the literal is bit-identical."""
-    return F.expr("array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")")
+    return F.expr(sql_double_array(vals))
+
+
+def sql_double_array(vals: list[float]) -> str:
+    """SQL text of ``lit_double_array``'s literal; ``repr(float)``
+    round-trips the exact double bits."""
+    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
+
+
+def sql_isin(col: str, ids) -> Column:
+    """``col IN (ids)`` over integer ids as ONE parsed expression:
+    ``Column.isin`` costs one py4j round-trip per literal, and the
+    parsed form pushes down as the same ``In`` filter.  An empty list
+    is ``FALSE`` — ``IN ()`` does not parse."""
+    vals = ",".join(str(int(i)) for i in ids)
+    return F.expr(f"`{col}` IN ({vals})") if vals else F.lit(False)
 
 
 def collect_seed_vectors(
@@ -138,6 +153,28 @@ def cosine(a: Column, b: Column) -> Column:
     na = F.sqrt(_dec_dot(a, a).cast("double"))
     nb = F.sqrt(_dec_dot(b, b).cast("double"))
     return dot / (na * nb)
+
+
+def spark_cosine6_sql(a: str, b: str) -> str:
+    """Spark SQL text of ``hround(cosine(a, b), 6)`` over two array
+    columns: the same expression tree, so the same doubles, from one
+    parse.  Built from Columns it is ~540 py4j round-trips."""
+
+    def dot(x: str, y: str) -> str:
+        return (
+            f"aggregate(zip_with({x}, {y}, (l, r) -> "
+            f"CAST(CAST(l AS DOUBLE) * CAST(r AS DOUBLE) AS {DEC})), "
+            f"CAST(0 AS {DEC}), (acc, v) -> CAST(acc + v AS {DEC}))"
+        )
+
+    cos = (
+        f"CAST({dot(a, b)} AS DOUBLE) / (SQRT(CAST({dot(a, a)} AS DOUBLE)) "
+        f"* SQRT(CAST({dot(b, b)} AS DOUBLE)))"
+    )
+    return (
+        f"CAST(FLOOR(CAST(({cos}) AS DOUBLE) * 1000000.0D + 0.5D) AS DOUBLE)"
+        " / 1000000.0D"
+    )
 
 
 def sql_cosine(a: str, b: str, dim: int = 64) -> str:

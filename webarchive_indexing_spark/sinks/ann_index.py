@@ -27,11 +27,13 @@ O(corpus × nprobe / n_cents) scan bytes with zero shuffles.
 from __future__ import annotations
 
 import json
+import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .zipnum import _fs_for, _join
+from .zipnum import _fs_for, _join, local_frame
 
 _CENTROIDS = "centroids.json"
 _PQ_MODEL = "pq.json"
@@ -208,7 +210,9 @@ def _exclude_ids(
     if not tombs:
         return df
     if len(tombs) <= TOMBSTONE_ISIN_MAX:
-        return df.filter(~F.col(id_col).isin(sorted(tombs)))
+        from ..operators.similarity import sql_isin
+
+        return df.filter(~sql_isin(id_col, sorted(tombs)))
     import warnings
 
     warnings.warn(
@@ -218,10 +222,75 @@ def _exclude_ids(
         RuntimeWarning,
         stacklevel=3,
     )
-    ids = spark.createDataFrame(
-        [(int(i),) for i in sorted(tombs)], f"{id_col} bigint"
+    ids = local_frame(
+        spark,
+        [(int(i),) for i in sorted(tombs)],
+        T.StructType([T.StructField(id_col, T.LongType())]),
     )
     return df.join(F.broadcast(ids), on=id_col, how="left_anti")
+
+
+#: the footer key under which Spark's parquet writer records the row
+#: schema — the key Spark's own schema inference reads first
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(metadata: dict | None):
+    """The Spark data schema a parquet footer's key-value metadata
+    records, or None for a file Spark did not write."""
+    raw = (metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    return T.StructType.fromJson(json.loads(raw))
+
+
+def _first_data_file(fs, d: str) -> str | None:
+    """The first data file under ``d`` in path order, found one
+    directory level at a time (no recursive listing of the store).
+    Names starting with ``_`` or ``.`` are skipped, as Spark skips
+    them."""
+    from pyarrow import fs as pafs
+
+    infos = sorted(
+        (
+            i
+            for i in fs.get_file_info(pafs.FileSelector(d, allow_not_found=True))
+            if not posixpath.basename(i.path).startswith(("_", "."))
+        ),
+        key=lambda i: i.path,
+    )
+    for i in infos:
+        if i.type == pafs.FileType.File:
+            return i.path
+    for i in infos:
+        if i.type == pafs.FileType.Directory:
+            found = _first_data_file(fs, i.path)
+            if found is not None:
+                return found
+    return None
+
+
+def _store_scan(spark: SparkSession, store: str, sub: str) -> DataFrame:
+    """``spark.read.parquet`` of a store subdirectory with the data
+    schema read from one data file's footer on the driver.  Without a
+    schema the read runs a Spark job to infer it from the footers —
+    the one job every probe paid before its own action.  Partition
+    columns (``cell``, ``id_bucket``, …) stay inferred from the paths,
+    so the schema and the FileScan plan equal the plain read's.  A
+    file without Spark's schema key, or an empty directory, falls back
+    to the plain read."""
+    import pyarrow.parquet as pq
+
+    path = _join(store, sub)
+    fs, local = _fs_for(path)
+    first = _first_data_file(fs, local)
+    schema = (
+        None
+        if first is None
+        else _spark_schema(pq.read_metadata(first, filesystem=fs).metadata)
+    )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_ivf_index(
@@ -434,7 +503,7 @@ def _ivfsq_scored_frame(
     store = resolve_store(out_dir)
     cents = read_ivf_centroids(store)
     probe = ivf_probe_cells(cents, qv, nprobe)
-    df = spark.read.parquet(_join(store, "sq")).filter(
+    df = _store_scan(spark, store, "sq").filter(
         F.col("cell").isin(probe)
     )
     if exclude_id is not None:
@@ -660,7 +729,7 @@ def ivfsq_index_probe_batch_topk(
     probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
     union_cells = sorted({c for p in probes for c in p})
 
-    df = spark.read.parquet(_join(store, "sq")).filter(
+    df = _store_scan(spark, store, "sq").filter(
         F.col("cell").isin(union_cells)
     )
     if whs[0] is not None and all(w == whs[0] for w in whs):
@@ -754,7 +823,7 @@ def ivfsq_index_probe_batch_range(
     probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
     union_cells = sorted({c for p in probes for c in p})
 
-    df = spark.read.parquet(_join(store, "sq")).filter(
+    df = _store_scan(spark, store, "sq").filter(
         F.col("cell").isin(union_cells)
     )
     if whs[0] is not None and all(w == whs[0] for w in whs):
@@ -1477,7 +1546,7 @@ def _ivfpq_scored_frame(
         qv = _opq_rotate_query(_meta, qv)
     probe = sorted(cents, key=lambda c: (py_sqdist6(qv, cents[c]), c))[:nprobe]
     qd_sql = residual_query_tables(cents, cbooks, qv)
-    df = spark.read.parquet(_join(store, "codes")).filter(
+    df = _store_scan(spark, store, "codes").filter(
         F.col("cell").isin(probe)
     )
     if exclude_id is not None:
@@ -1604,7 +1673,7 @@ def ivfpq_index_probe_batch_topk(
             f"CASE WHEN {cond} THEN {adc} END)"
         )
 
-    df = spark.read.parquet(_join(store, "codes")).filter(
+    df = _store_scan(spark, store, "codes").filter(
         F.col("cell").isin(sorted(union_cells))
     )
     if scan_where is not None:
@@ -1691,7 +1760,7 @@ def ivfpq_index_probe_batch_range(
             f"CASE WHEN {cond} THEN {adc} END)"
         )
 
-    df = spark.read.parquet(_join(store, "codes")).filter(
+    df = _store_scan(spark, store, "codes").filter(
         F.col("cell").isin(sorted(union_cells))
     )
     if scan_where is not None:
@@ -1732,6 +1801,8 @@ def _refine_source(
     + a pushed-down id In filter; flat sidecars re-rank on the raw
     vectors, int8 on the dequantized ``q·scale/127`` (exact-IEEE,
     oracle twin).  ``store`` is an already-resolved version path."""
+    from ..operators.similarity import sql_isin
+
     kind = read_ivfpq_model(store)[2].get("refine")
     if not kind:
         raise ValueError(
@@ -1740,17 +1811,11 @@ def _refine_source(
             f"vectors_src explicitly"
         )
     side = (
-        spark.read.parquet(_join(store, "refine"))
+        _store_scan(spark, store, "refine")
         .filter(F.col("cell").isin(sorted(cells)))
-        # string-built IN, not Column.isin: isin() costs one py4j
-        # round-trip per literal and the candidate list is
-        # k·k_factor·N ids (round-16 beam-walk cProfile finding —
-        # same predicate, same PushedFilters)
-        .filter(
-            F.expr(
-                f"`{id_col}` IN ({','.join(str(int(i)) for i in sorted(ids))})"
-            )
-        )
+        # the candidate list is k·k_factor·N ids: one parsed IN, and
+        # FALSE when the probe returned no candidate
+        .filter(sql_isin(id_col, sorted(ids)))
     )
     if kind == "flat":
         vec = F.col(vec_col)
@@ -1785,7 +1850,7 @@ def ivfpq_refined_batch_topk(
     per-request top-k is one ``request_no`` window.  Per-request rows
     hash-match the one-at-a-time ``ivfpq_refined_topk`` loop: batching
     changes the job count (2 vs 2·N), never the answer."""
-    from ..operators.similarity import cosine, lit_double_array
+    from ..operators.similarity import cosine, lit_double_array, sql_isin
     from ..queries.helpers import hround
 
     # resolve the CURRENT pointer ONCE: the ADC probe and the refine
@@ -1813,12 +1878,7 @@ def ivfpq_refined_batch_topk(
     for i, qv in enumerate(query_vecs):
         ids_i = sorted(per_req.get(i, []))
         sim = hround(cosine(vec, lit_double_array(qv)), 6)
-        # one-parse IN (py4j cost — see _refine_source)
-        member = (
-            F.expr(f"`{id_col}` IN ({','.join(str(i) for i in ids_i)})")
-            if ids_i
-            else F.lit(False)
-        )
+        member = sql_isin(id_col, ids_i)
         entries.append(
             F.struct(
                 F.lit(i).alias("request_no"),
@@ -1890,7 +1950,7 @@ def ivfpq_refined_topk(
     over-fetch, so the re-rank only ever sees k·k_factor
     predicate-passing candidates — filtered refined top-k with
     recall intact."""
-    from ..operators.similarity import cosine, lit_double_array
+    from ..operators.similarity import cosine, lit_double_array, sql_isin
     from ..queries.helpers import hround
 
     # one pointer resolve pins probe + sidecar to the same version
@@ -1917,9 +1977,7 @@ def ivfpq_refined_topk(
             hround(cosine(vec, lit_double_array(qv_rot)), 6).alias("cos_sim"),
         )
     else:
-        out = vectors_src.filter(
-            F.expr(f"`{id_col}` IN ({','.join(str(int(i)) for i in ids)})")
-        ).select(
+        out = vectors_src.filter(sql_isin(id_col, ids)).select(
             F.col(id_col),
             hround(cosine(F.col(vec_col), lit_double_array(qv)), 6).alias(
                 "cos_sim"
@@ -1983,7 +2041,7 @@ def ivf_index_probe_batch_topk(
     probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
     union_cells = sorted({c for p in probes for c in p})
 
-    df = spark.read.parquet(_join(store, "vectors")).filter(
+    df = _store_scan(spark, store, "vectors").filter(
         F.col("cell").isin(union_cells)
     )
     if whs[0] is not None and all(w == whs[0] for w in whs):
@@ -2076,7 +2134,7 @@ def ivf_index_probe_batch_range(
     probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
     union_cells = sorted({c for p in probes for c in p})
 
-    df = spark.read.parquet(_join(store, "vectors")).filter(
+    df = _store_scan(spark, store, "vectors").filter(
         F.col("cell").isin(union_cells)
     )
     if whs[0] is not None and all(w == whs[0] for w in whs):
@@ -2208,7 +2266,7 @@ def _ivf_scored_frame(
     store = resolve_store(out_dir)
     cents = read_ivf_centroids(store)
     probe = ivf_probe_cells(cents, qv, nprobe, metric=metric)
-    df = spark.read.parquet(_join(store, "vectors")).filter(
+    df = _store_scan(spark, store, "vectors").filter(
         F.col("cell").isin(probe)
     )
     if exclude_id is not None:

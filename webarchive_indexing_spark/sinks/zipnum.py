@@ -371,7 +371,8 @@ def _line_writer(line_format: str):
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """Driver-held rows → DataFrame through an Arrow table.  It plans
+    """Driver-held rows → DataFrame through an Arrow table
+    (``arrow_frame``).  It plans
     as a ``LocalTableScan`` and runs no job of its own; a
     list-of-tuples ``createDataFrame`` instead plans an RDD scan whose
     first action is a Python-worker job (~0.35 s for one row on a
@@ -385,7 +386,20 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) ->
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+    return arrow_frame(spark, table, schema)
+
+
+def arrow_frame(spark: SparkSession, table, schema: T.StructType | None = None) -> DataFrame:
+    """The one Arrow hand-off: a driver-held ``pyarrow.Table`` →
+    DataFrame (a ``LocalTableScan``, no job of its own); ``schema``
+    defaults to the one Spark derives from the table's Arrow types.
+
+    The table is combined into a single chunk first.  On pyspark 4.1.2
+    ``createDataFrame(pa.Table)`` silently drops every row after the
+    first zero-length record batch — batches of 1, 0 and 2 rows give a
+    1-row frame — and a filtered ``pyarrow.dataset`` read produces such
+    empty batches whenever a file has no matching row."""
+    return spark.createDataFrame(table.combine_chunks(), schema)
 
 
 def _block_lines(items):
