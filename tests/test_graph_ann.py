@@ -520,7 +520,7 @@ def test_driver_read_walks_equal_distributed_read(
     spark, sf_dir, tmp_path_factory, monkeypatch
 ):
     """A frontier read on the driver (Arrow local relation) and the
-    frontier-pruned Spark scan it falls back to above one input split
+    frontier-pruned Spark scan it falls back to above its byte bound
     must give the same rows, for single and batch walks with
     exclusions and ``where``/``wheres``, on a plain store, after an
     LSM append (several files per bucket) and with tombstones."""
@@ -529,6 +529,7 @@ def test_driver_read_walks_equal_distributed_read(
         append_knn_graph,
         delete_from_knn_graph,
     )
+    from webarchive_indexing_spark.sinks.ann_index import _store_scan
 
     emb = load_table(spark, sf_dir, "embeddings")
     out = str(tmp_path_factory.mktemp("driver_read_store"))
@@ -547,6 +548,12 @@ def test_driver_read_walks_equal_distributed_read(
         return driver
 
     plain = both()
+    # the fallback scans take their schema from a parquet footer; it
+    # equals the inferring read's, bucket column included
+    for sub in ("vectors", "graph"):
+        assert _store_scan(spark, out, sub).schema == (
+            spark.read.parquet(f"{out}/{sub}").schema
+        ), sub
     append_knn_graph(
         emb.filter((F.col("vec_id") >= 400) & (F.col("vec_id") < 500)), out
     )
@@ -574,6 +581,34 @@ def test_graph_walk_runs_one_job(spark, sf_dir, store):
     assert len(sc.statusTracker().getJobIdsForGroup("graph_walk_jobs")) <= 1
 
 
+def test_frontier_in_empty_buckets_reads_nothing(spark, sf_dir, tmp_path_factory):
+    """A frontier whose bucket directories hold no file (more buckets
+    than ids) is read as no rows on the driver, typed from the table's
+    footer, with no Spark job; a walk entering there visits nothing."""
+    from webarchive_indexing_spark.operators.graph_ann import _Frontier
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    out = str(tmp_path_factory.mktemp("sparse_buckets_store"))
+    write_knn_graph(emb, out, k_neighbors=4, n_base=20, n_buckets=32)
+    front = _Frontier(spark, out, 32)
+    sc = spark.sparkContext
+    sc.setJobGroup("empty_bucket_jobs", "frontier reads")
+    try:
+        assert front.rows("graph", "src", [25, 57], ("src", "dst")) == []
+        frame = front.frame("vectors", "vec_id", [25], ("vec_id", "embedding"))
+        assert frame.collect() == []
+        walk = graph_beam_topk(
+            spark, out, collect_query_vector(emb, 3), entries=(25,)
+        ).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert walk == []
+    assert frame.schema == spark.read.parquet(f"{out}/vectors").select(
+        "vec_id", "embedding"
+    ).schema
+    assert len(sc.statusTracker().getJobIdsForGroup("empty_bucket_jobs")) <= 1
+
+
 @pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
 def test_walks_refuse_non_finite_query(spark, sf_dir, store, bad):
     from webarchive_indexing_spark.operators.graph_ann import (
@@ -587,18 +622,6 @@ def test_walks_refuse_non_finite_query(spark, sf_dir, store, bad):
         graph_beam_topk(spark, store, poisoned)
     with pytest.raises(ValueError, match="query vector 1 has a non-finite"):
         graph_beam_batch_topk(spark, store, [qv, poisoned])
-
-
-def test_store_scan_schema_equals_inferred_read_graph(spark, store):
-    """The walks' fallback scans take their schema from a parquet
-    footer; it must equal the inferring read's, bucket column
-    included."""
-    from webarchive_indexing_spark.sinks.ann_index import _store_scan
-
-    for sub in ("vectors", "graph"):
-        assert _store_scan(spark, store, sub).schema == (
-            spark.read.parquet(f"{store}/{sub}").schema
-        ), sub
 
 
 def test_spark_cosine6_sql_equals_column_form(spark, sf_dir):

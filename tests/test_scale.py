@@ -1756,6 +1756,7 @@ def test_ivfsq_store_smaller_and_recall_reasonable(spark, sf_dir):
         collect_query_vector,
         cosine_topk,
     )
+    from webarchive_indexing_spark.sinks import ann_index
     from webarchive_indexing_spark.sinks.ann_index import (
         ivfsq_index_probe_topk,
         write_ivf_index,
@@ -1779,6 +1780,12 @@ def test_ivfsq_store_smaller_and_recall_reasonable(spark, sf_dir):
         return total
 
     assert data_bytes(sq, "sq") < 0.6 * data_bytes(flat, "vectors")
+    # store scans take the data schema from one footer, not an
+    # inferring job; partition columns included, it is the same schema
+    for store, sub in ((flat, "vectors"), (sq, "sq")):
+        assert ann_index._store_scan(spark, store, sub).schema == (
+            spark.read.parquet(f"{store}/{sub}").schema
+        ), sub
 
     qv = collect_query_vector(emb, 123)
     got = {
@@ -2156,44 +2163,18 @@ def test_sq_range_batch_equals_per_request_loop(spark, sf_dir):
         assert got_i == [(row.vec_id, row.cell, row.cos_sim) for row in one]
 
 
-def test_store_scan_schema_equals_inferred_read(spark, sf_dir):
-    """``_store_scan`` takes the data schema from one parquet footer
-    instead of a schema-inference job; for every subdirectory of the
-    flat, SQ and PQ (attrs + refine sidecar) stores it must give the
-    schema the inferring read gives, partition columns included."""
-    import tempfile
-
-    from webarchive_indexing_spark.sinks import ann_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    flat, sq, pq = (tempfile.mkdtemp(prefix=f"scan_{n}_") for n in ("flat", "sq", "pq"))
-    ann_index.write_ivf_index(emb, flat, n_cents=8, train_iters=2)
-    ann_index.write_ivfsq_index(emb, sq, n_cents=8, train_iters=2, attrs=["label"])
-    ann_index.write_ivfpq_index(
-        emb, pq, n_cells=8, n_sub=4, k_codes=8, train_iters=2,
-        attrs=["label"], refine="flat",
-    )
-    for store, sub in ((flat, "vectors"), (sq, "sq"), (pq, "codes"), (pq, "refine")):
-        got = ann_index._store_scan(spark, store, sub).schema
-        assert got == spark.read.parquet(f"{store}/{sub}").schema, (store, sub)
-    # an empty directory falls back to the plain read
-    empty = tempfile.mkdtemp(prefix="scan_empty_")
-    spark.range(0).write.mode("overwrite").parquet(f"{empty}/codes")
-    assert ann_index._store_scan(spark, empty, "codes").schema == (
-        spark.read.parquet(f"{empty}/codes").schema
-    )
-
-
 def test_refined_probe_where_matching_nothing_is_empty(spark, sf_dir):
     """A ``where`` that matches no row leaves the refine stage no
     candidate id: both the sidecar and the external-vectors refine
     must return an empty frame (an empty id list is FALSE, never a
-    string-built ``IN ()``)."""
+    string-built ``IN ()``).  The same store checks the footer-schema
+    scans of its ``codes`` and ``refine`` directories."""
     import tempfile
 
     from webarchive_indexing_spark.operators.similarity import (
         collect_query_vector,
     )
+    from webarchive_indexing_spark.sinks import ann_index
     from webarchive_indexing_spark.sinks.ann_index import (
         ivfpq_refined_topk,
         write_ivfpq_index,
@@ -2211,3 +2192,11 @@ def test_refined_probe_where_matching_nothing_is_empty(spark, sf_dir):
     for src in (None, emb):
         got = ivfpq_refined_topk(spark, out, src, qv, k=10, where=nothing)
         assert got.collect() == []
+    # the footer-schema scans of the PQ store (attrs, refine sidecar),
+    # and of the one zero-row file Spark writes for an empty frame
+    empty = tempfile.mkdtemp(prefix="scan_empty_")
+    spark.range(0).write.mode("overwrite").parquet(f"{empty}/codes")
+    for store, sub in ((out, "codes"), (out, "refine"), (empty, "codes")):
+        assert ann_index._store_scan(spark, store, sub).schema == (
+            spark.read.parquet(f"{store}/{sub}").schema
+        ), (store, sub)
