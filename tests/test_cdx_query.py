@@ -1481,3 +1481,315 @@ def test_cdx_query_batch_parquet_epoch_store_honors_tombstones(
     assert sorted(map(tuple, by_req2[1])) == sorted(
         map(tuple, by_req[1])
     )  # the other request is untouched
+
+
+# --- the Column-built residual pipeline, kept as the parity reference ---
+#
+# ``cdx_query`` renders its residual pipeline as one SQL statement; the
+# functions below are the DataFrame/Column form it replaced, verbatim in
+# behaviour.  They live only here, as the reference the SQL form must
+# reproduce row for row.
+
+
+def _ref_filter_cond(f: str):
+    neg = f.startswith("!")
+    body = f[1:] if neg else f
+    if body.startswith("="):
+        field, val = body[1:].split(":", 1)
+        cond = F.col(field).cast("string") == val
+    elif body.startswith("~"):
+        field, sub = body[1:].split(":", 1)
+        cond = F.col(field).cast("string").contains(sub)
+    elif "~" in body.split(":")[0] or (":" not in body and "~" in body):
+        field, sub = body.split("~", 1)
+        cond = F.col(field).cast("string").contains(sub)
+    else:
+        field, pat = body.split(":", 1)
+        cond = F.col(field).cast("string").rlike(pat)
+    return ~cond if neg else cond
+
+
+def _ref_collapse(df, partition_by, order_by, collapse_key, *, keep="first",
+                  group_count_col=None, skip_count_col=None, skip_ts=None):
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(*partition_by).orderBy(*order_by)
+    adj = (F.lag if keep == "first" else F.lead)(collapse_key).over(w)
+    cond = adj.isNull() | (collapse_key != adj)
+    if group_count_col is None and skip_count_col is None:
+        return df.withColumn("__keep", cond).filter(F.col("__keep")).drop("__keep")
+    out = df.withColumn("__keep", cond)
+    drop = ["__keep"]
+    if group_count_col is not None:
+        prev = F.lag(collapse_key).over(w)
+        change = (prev.isNull() | (collapse_key != prev)).cast("bigint")
+        run_id = F.sum(change).over(w.rowsBetween(Window.unboundedPreceding, 0))
+        out = out.withColumn("__run", run_id)
+        cw = Window.partitionBy(*partition_by, "__run")
+        out = out.withColumn(group_count_col, F.count(F.lit(1)).over(cw))
+        drop.append("__run")
+    if skip_count_col is not None:
+        out = out.withColumn("__rn", F.row_number().over(w))
+        if skip_ts is not None:
+            out = out.withColumn("__pts", F.lag(skip_ts[0]).over(w))
+        out = out.filter(F.col("__keep"))
+        gap = F.col("__rn") - F.coalesce(F.lag("__rn").over(w), F.lit(0)) - 1
+        out = out.withColumn(skip_count_col, gap)
+        drop.append("__rn")
+        if skip_ts is not None:
+            out = out.withColumn(
+                skip_ts[1], F.when(F.col(skip_count_col) > 0, F.col("__pts"))
+            )
+            drop.append("__pts")
+        return out.drop(*drop)
+    return out.filter(F.col("__keep")).drop(*drop)
+
+
+def _ref_cdx_query(cdx, url, *, match_type=None, from_=None, to=None,
+                   filters=None, collapse=None, collapse_to_last=False,
+                   show_group_count=False, show_skip_count=False, closest=None,
+                   sort_reverse=False, fields=None, limit=None, offset=None,
+                   fuzzy=False, fuzzy_rules=None, resume_key=None, tiebreak=None, acl_rules=None,
+                   acl_default="allow", embargo=None, as_of=None):
+    from pyspark.sql.window import Window
+
+    from webarchive_indexing_spark.functions.surt import surt_urlkey_py
+    from webarchive_indexing_spark.operators.cdx_query import (
+        DEFAULT_FUZZY_RULES,
+        _key_range,
+        apply_acl,
+        fuzzy_retry_spec,
+        glob_to_like,
+        infer_match_type,
+    )
+
+    url, match_type = infer_match_type(url, match_type)
+    exact, lo, hi = _key_range(url, match_type)
+    fuzzy_pending = False
+    if exact is not None:
+        spec = fuzzy_retry_spec(exact, fuzzy_rules or DEFAULT_FUZZY_RULES) if fuzzy else None
+        if spec is not None and spec[0] == "prefix":
+            _, pre, echoes, _rule = spec
+            fcond = (F.col("urlkey") >= pre) & (F.col("urlkey") < pre + "~")
+            for e in echoes:
+                fcond = fcond & _ref_filter_cond(e)
+            df = cdx.filter((F.col("urlkey") == exact) | fcond)
+            fuzzy_pending = True
+        elif spec is not None and spec[0] == "key" and spec[1] != exact:
+            df = cdx.filter(F.col("urlkey").isin([exact, spec[1]]))
+            fuzzy_pending = True
+        else:
+            df = cdx.filter(F.col("urlkey") == exact)
+    else:
+        df = cdx.filter((F.col("urlkey") >= lo) & (F.col("urlkey") < hi))
+    if match_type == "glob":
+        df = df.filter(F.col("urlkey").like(glob_to_like(surt_urlkey_py(url))))
+    if acl_rules is not None or embargo is not None:
+        df = apply_acl(df, acl_rules or [], default=acl_default,
+                       embargo=embargo, as_of=as_of)
+    if resume_key is not None:
+        rk, rts = resume_key[0], resume_key[1]
+        after_ts = F.col("timestamp") > rts
+        if len(resume_key) == 3:
+            tb = F.coalesce(F.col(tiebreak), F.lit("-"))
+            after_ts = after_ts | ((F.col("timestamp") == rts) & (tb > resume_key[2]))
+        df = df.filter((F.col("urlkey") > rk) | ((F.col("urlkey") == rk) & after_ts))
+    if from_ is not None:
+        df = df.filter(F.col("timestamp") >= from_.ljust(14, "0"))
+    if to is not None:
+        df = df.filter(F.col("timestamp") <= to.ljust(14, "9"))
+    for f in filters or []:
+        df = df.filter(_ref_filter_cond(f))
+    if fuzzy_pending:
+        has_exact = F.max(F.when(F.col("urlkey") == exact, 1).otherwise(0)).over(
+            Window.partitionBy()
+        )
+        df = (
+            df.withColumn("__he", has_exact)
+            .filter((F.col("urlkey") == exact) | (F.col("__he") == 0))
+            .drop("__he")
+        )
+    if collapse:
+        keys = []
+        for spec in [collapse] if isinstance(collapse, str) else list(collapse):
+            field, _, width = spec.partition(":")
+            ck = F.col(field).cast("string")
+            if width:
+                ck = F.substring(ck, 1, int(width))
+            keys.append(ck)
+        df = _ref_collapse(
+            df, ["urlkey"], [F.col("timestamp").asc()],
+            keys[0] if len(keys) == 1 else F.struct(*keys),
+            keep="last" if collapse_to_last else "first",
+            group_count_col="groupcount" if show_group_count else None,
+            skip_count_col="skipcount" if show_skip_count else None,
+            skip_ts=("timestamp", "lastskiptimestamp") if show_skip_count else None,
+        )
+    if closest is not None:
+        dist = F.abs(F.col("timestamp").cast("bigint") - F.lit(int(closest.ljust(14, "0"))))
+        fwd = [dist.asc(), F.col("timestamp").asc()]
+        rev = [dist.desc(), F.col("timestamp").desc()]
+        for c in ("digest", "offset"):
+            if c in df.columns:
+                fwd.append(F.col(c).asc())
+                rev.append(F.col(c).desc())
+    elif sort_reverse:
+        fwd = [F.col("urlkey").asc(), F.col("timestamp").desc()]
+        rev = [F.col("urlkey").desc(), F.col("timestamp").asc()]
+    else:
+        fwd = [F.col("urlkey").asc(), F.col("timestamp").asc()]
+        rev = [F.col("urlkey").desc(), F.col("timestamp").desc()]
+    if tiebreak is not None and closest is None:
+        fwd.append(F.col(tiebreak).desc() if sort_reverse else F.col(tiebreak).asc())
+        rev.append(F.col(tiebreak).asc() if sort_reverse else F.col(tiebreak).desc())
+    if limit is not None and limit < 0:
+        df = df.orderBy(*rev).limit(-limit).orderBy(*fwd)
+    else:
+        df = df.orderBy(*fwd)
+        if offset is not None:
+            df = df.offset(offset)
+        if limit is not None:
+            df = df.limit(limit)
+    if fields:
+        df = df.select(*fields)
+    return df
+
+
+def _query_params():
+    """Hypothesis strategy over the ``cdx_query`` surface the SQL form
+    renders: url/match type (exact, fuzzy, prefix, domain, glob),
+    modifiers, ACL/embargo, continuation, collapse, ordering, paging
+    and projection."""
+    from hypothesis import strategies as st
+
+    urls = st.sampled_from([
+        ("https://src1.example.org/doc/101", "exact"),
+        ("https://src2.example.org/doc/205", "exact"),
+        ("https://src1.example.org/doc/101?_cb=77", "exact"),
+        ("https://src1.example.org/doc/1999", "exact"),
+        ("https://src3.example.org/doc/3?callback=jsonp12&a=1", "exact"),
+        ("https://src1.example.org/doc/1", "prefix"),
+        ("src3.example.org", "domain"),
+        ("https://src1.example.org/doc/1*1*", "glob"),
+    ])
+    filters = st.lists(st.sampled_from([
+        "status:200", "!status:200", "mime:text/.*", "~url:doc/1", "=status:404",
+        "!digest~A", "url:.*[0-9]{2}$", "url:it's", "!url:\\d\\d\\d",
+        "~filename:ü",
+    ]), max_size=2)
+    collapse = st.sampled_from(
+        [None, "urlkey", "digest", "timestamp:4", ["urlkey", "timestamp:6"]]
+    )
+    acl = st.sampled_from([
+        {},
+        {"acl_rules": [("org,example,src1)/doc/1", "block"),
+                       ("org,example,src1)/doc/10", "exclude")]},
+        {"embargo": {"before": "2015"}, "acl_rules": [("org,example,src3", "allow_ignore_embargo")]},
+        {"embargo": {"newer": {"days": 400}}, "as_of": "20170101"},
+    ])
+    order = st.sampled_from([
+        {}, {"sort_reverse": True}, {"closest": "20160601"}, {"tiebreak": "digest"},
+        {"resume_key": ("org,example,src1)/doc/1", "2015")},
+        {"resume_key": ("org,example,src1)/doc/10", "20160101000000", "-"),
+         "tiebreak": "digest"},
+    ])
+    paging = st.sampled_from([
+        {}, {"limit": 3}, {"limit": -2}, {"limit": 2, "offset": 1}, {"offset": 2},
+    ])
+    return st.tuples(
+        urls, st.booleans(), st.sampled_from([None, "2015", "201606"]),
+        st.sampled_from([None, "2016", "20170315"]), filters, collapse,
+        st.booleans(), st.booleans(), st.booleans(), acl, order, paging,
+        st.sampled_from([None, ["urlkey", "timestamp", "status"], ["digest"]]),
+        # the default rule table, or a param-echo rule (prefix retry
+        # over the host's docs, echoed filter on the url)
+        st.sampled_from([None, "echo"]),
+    )
+
+
+def _echo_rules():
+    from webarchive_indexing_spark.operators.cdx_query import FuzzyRule
+
+    return (FuzzyRule("echo", r"(doc)/1", replace=")/doc/", filters=("~url:{0}",)),)
+
+
+#: parameter sets every run checks, one per pipeline stage, on top of
+#: the drawn ones (same tuple layout as ``_query_params``)
+_STAGE_EXAMPLES = [
+    # collapse with group and skip counts
+    (("src3.example.org", "domain"), False, None, None, [], "timestamp:4",
+     False, True, True, {}, {}, {}, None, None),
+    # multi-field collapse to last, reversed, last-N
+    (("src3.example.org", "domain"), False, None, None, [], ["urlkey", "timestamp:6"],
+     True, True, False, {}, {"sort_reverse": True}, {"limit": -2}, None, None),
+    # param-echo fuzzy retry of a missing page
+    (("https://src1.example.org/doc/1999", "exact"), True, None, None, [], None,
+     False, False, False, {}, {}, {}, None, "echo"),
+    # key-rewrite fuzzy retry with modifiers, closest, offset paging
+    (("https://src1.example.org/doc/101?_cb=77", "exact"), True, "2015", None,
+     ["status:200"], None, False, False, False, {}, {"closest": "20160601"},
+     {"limit": 2, "offset": 1}, None, None),
+    # ACL verdicts, gap-free continuation, collapse, projection
+    (("https://src1.example.org/doc/1", "prefix"), False, None, "2017", ["~url:doc"],
+     "digest", False, False, True,
+     {"acl_rules": [("org,example,src1)/doc/1", "block"),
+                    ("org,example,src1)/doc/10", "exclude")]},
+     {"resume_key": ("org,example,src1)/doc/10", "20160101000000", "-"),
+      "tiebreak": "digest"},
+     {"limit": 3}, ["urlkey", "timestamp", "access", "skipcount"], None),
+]
+
+
+def test_sql_form_matches_column_form(spark, cdx):
+    """The one-statement SQL form of ``cdx_query`` returns the same
+    rows, in the same order, with the same columns, as the Column-built
+    pipeline it replaced, across the parameter surface."""
+    from hypothesis import HealthCheck, example, given, settings
+
+    def with_examples(fn):
+        for ex in _STAGE_EXAMPLES:
+            fn = example(ex)(fn)
+        return fn
+
+    @settings(max_examples=40, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(_query_params())
+    @with_examples
+    def prop(p):
+        ((url, mt), fuzzy, from_, to, filters, collapse, to_last, gc, sc,
+         acl, order, paging, fields, rules) = p
+        kw = dict(match_type=mt, from_=from_, to=to, filters=filters,
+                  collapse=collapse, collapse_to_last=to_last and bool(collapse),
+                  show_group_count=gc and bool(collapse),
+                  show_skip_count=sc and bool(collapse),
+                  fuzzy=fuzzy and mt == "exact", fields=fields,
+                  **acl, **order, **paging)
+        if rules is not None:
+            kw["fuzzy_rules"] = _echo_rules()
+        want = _ref_cdx_query(cdx, url, **kw)
+        got = cdx_query(cdx, url, **kw)
+        assert got.columns == want.columns
+        assert got.collect() == want.collect(), kw
+
+    prop()
+
+
+def test_sql_str_reads_back_unchanged(spark):
+    """Any string rendered by ``sql_str`` parses back to itself —
+    quotes, backslashes (including LIKE's ``\\%``/``\\_`` escapes),
+    control characters, non-ASCII and regex metacharacters as used in
+    ``filter=`` patterns."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from webarchive_indexing_spark.sqltext import sql_str
+
+    special = st.sampled_from(list("'\"\\%_{}[]()*+?.^$|\n\r\t\x00`;-/") + ["\\u0041", "''", "\\'"])
+    text = st.lists(st.text(max_size=4) | special, max_size=8).map("".join)
+
+    @settings(max_examples=150, deadline=None)
+    @given(text)
+    def prop(s):
+        assert spark.sql("SELECT " + sql_str(s) + " AS v").collect()[0].v == s
+
+    prop()

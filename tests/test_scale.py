@@ -6,6 +6,7 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -2200,3 +2201,22 @@ def test_refined_probe_where_matching_nothing_is_empty(spark, sf_dir):
         assert ann_index._store_scan(spark, store, sub).schema == (
             spark.read.parquet(f"{store}/{sub}").schema
         ), (store, sub)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_pq_probes_refuse_non_finite_query(spark, tmp_path, bad):
+    """A NaN/inf query component is refused up front with a
+    ``ValueError`` naming the request — before any store read, so no
+    store is needed — by the single PQ probe and its batch form."""
+    from webarchive_indexing_spark.sinks.ann_index import (
+        ivfpq_index_probe_batch_topk,
+        ivfpq_index_probe_topk,
+    )
+
+    qv = [0.125] * 64
+    poisoned = qv[:5] + [bad] + qv[6:]
+    store = str(tmp_path / "no_store")
+    with pytest.raises(ValueError, match="query vector 0 has a non-finite"):
+        ivfpq_index_probe_topk(spark, store, poisoned)
+    with pytest.raises(ValueError, match="query vector 1 has a non-finite"):
+        ivfpq_index_probe_batch_topk(spark, store, [qv, poisoned])

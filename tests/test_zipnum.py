@@ -7,6 +7,7 @@ from __future__ import annotations
 import gzip
 import os
 import tempfile
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -892,3 +893,68 @@ def test_arrow_frame_keeps_rows_after_empty_batch(spark):
          for v in ([1], [], [2, 3])]
     )
     assert sorted(r.a for r in arrow_frame(spark, table).collect()) == [1, 2, 3]
+
+
+class _Py4jCalls:
+    """Counts the driver→JVM round trips the calling thread makes while
+    the block runs, by wrapping the gateway client's ``send_command``.
+    py4j's finalizer thread sends the releases of dropped JVM handles
+    through the same client at arbitrary times; those are not counted."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.n = 0
+
+    def __enter__(self):
+        inner = self.inner = self.client.send_command
+        caller = threading.get_ident()
+
+        def send_command(*args, **kwargs):
+            if threading.get_ident() == caller:
+                self.n += 1
+            return inner(*args, **kwargs)
+
+        self.client.send_command = send_command
+        return self
+
+    def __exit__(self, *exc):
+        self.client.send_command = self.inner
+
+
+def test_driver_read_lookups_run_one_job(spark, cluster, read_path):
+    """Every cdx-server request shape of the benchmark, served from a
+    block set read on the driver, runs at most one Spark job with no
+    Exchange in its plan (the one-partition local relation satisfies
+    every sort and window above it), and planning one lookup costs a
+    bounded number of py4j calls (one parsed statement, not a run of
+    round trips per ``Column`` expression)."""
+    from webarchive_indexing_spark.operators.cdx_query import cdx_query_zipnum
+
+    d, _ = cluster
+    read_path("driver")
+    sc = spark.sparkContext
+    page = "https://src1.example.org/doc/101"
+    shapes = {
+        "exact": (page, {}),
+        "closest": (page, {"closest": "20160601", "limit": 1}),
+        "from_to": (page, {"from_": "2015", "to": "2017", "filters": ["status:200"]}),
+        "fuzzy": (page + "?_cb=123", {"fuzzy": True}),
+        "prefix": ("https://src1.example.org/doc/1", {"match_type": "prefix", "limit": 25}),
+        "domain": ("https://src1.example.org/", {"match_type": "domain", "collapse": "urlkey"}),
+        "page": ("https://src1.example.org/", {"match_type": "domain", "page": 0}),
+    }
+    for kind, (url, params) in shapes.items():
+        with _Py4jCalls(spark) as calls:
+            df = cdx_query_zipnum(spark, d, url, **params)
+        assert calls.n <= 80, (kind, calls.n)
+        group = f"one_job_probe_{kind}"
+        sc.setJobGroup(group, kind)
+        try:
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows, kind
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 1, (kind, jobs)
+        plan = _executed_plan(df)
+        assert "Exchange" not in plan, (kind, plan)

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.surt import surt_urlkey_py
-from .collapse import collapse as run_collapse
+from ..sqltext import select_with, sql_ident, sql_key_range, sql_lit, sql_over, sql_str
+from .collapse import collapse_sql
 
 
 def infer_match_type(url: str, match_type: str | None) -> tuple[str, str]:
@@ -113,11 +114,8 @@ def match_glob(cdx: DataFrame, url: str) -> DataFrame:
     codegen, no UDF) finishes the match."""
     key = surt_urlkey_py(url)
     pre = key.split("*", 1)[0]
-    return cdx.filter(
-        (F.col("urlkey") >= pre)
-        & (F.col("urlkey") < pre + "~")
-        & F.col("urlkey").like(glob_to_like(key))
-    )
+    like = _request_conds(glob_to_like(key), None, None, None)
+    return cdx.filter(" AND ".join([sql_key_range(pre, pre + "~"), *like]))
 
 
 class FuzzyRule:
@@ -283,7 +281,7 @@ def _echo_group(rule: FuzzyRule) -> int:
     default template family — ONE ``urlkey:{N}`` template per rule
     (candidate urlkey must regexp-match captured group N).  Returns
     the 1-based regex group index, or raises for templates only the
-    per-request path (``fuzzy_retry_spec`` + ``_filter_cond``) can
+    per-request path (``fuzzy_retry_spec`` + ``_filter_sql``) can
     express."""
     import re as _re
 
@@ -723,33 +721,48 @@ def sql_acl_access(
     return f"CASE {arms} ELSE {verdict(default)} END"
 
 
-def _filter_cond(f: str):
-    """One pywb filter= modifier [U pywb cdxobject] → boolean Column:
+def _filter_sql(f: str) -> str:
+    """One pywb filter= modifier [U pywb cdxobject] → SQL predicate:
     ``field:regex`` (regex search), ``~field:substr`` / ``field~substr``
     (contains), ``=field:value`` (exact field equality), each
-    invertible with a leading ``!``.  Shared by request filters and
-    fuzzy-rule param echoes."""
+    invertible with a leading ``!``.  Shared by request filters,
+    fuzzy-rule param echoes and the batch residual chain."""
     neg = f.startswith("!")
     body = f[1:] if neg else f
     if body.startswith("="):
         field, val = body[1:].split(":", 1)
-        cond = F.col(field).cast("string") == val
+        cond = f"CAST({sql_ident(field)} AS STRING) = {sql_str(val)}"
     elif body.startswith("~"):
         field, sub = body[1:].split(":", 1)
-        cond = F.col(field).cast("string").contains(sub)
+        cond = f"contains(CAST({sql_ident(field)} AS STRING), {sql_str(sub)})"
     elif "~" in body.split(":")[0] or (":" not in body and "~" in body):
         field, sub = body.split("~", 1)
-        cond = F.col(field).cast("string").contains(sub)
+        cond = f"contains(CAST({sql_ident(field)} AS STRING), {sql_str(sub)})"
     else:
         field, pat = body.split(":", 1)
-        cond = F.col(field).cast("string").rlike(pat)
-    return ~cond if neg else cond
+        cond = f"CAST({sql_ident(field)} AS STRING) RLIKE {sql_str(pat)}"
+    return f"(NOT ({cond}))" if neg else f"({cond})"
 
 
-def _apply_filters(df: DataFrame, filters: list[str]) -> DataFrame:
-    for f in filters:
-        df = df.filter(_filter_cond(f))
-    return df
+def _request_conds(
+    like: str | None,
+    from_: str | None,
+    to: str | None,
+    filters: list[str] | None,
+) -> list[str]:
+    """The per-request residual predicates (glob LIKE, from/to ts14
+    bounds, filter= modifiers) — the same text in ``cdx_query`` and in
+    each ``cdx_query_batch`` arm."""
+    ts = sql_ident("timestamp")
+    conds = []
+    if like is not None:
+        conds.append(f"{sql_ident('urlkey')} LIKE {sql_str(like)}")
+    if from_ is not None:
+        conds.append(f"{ts} >= {sql_str(from_.ljust(14, '0'))}")
+    if to is not None:
+        conds.append(f"{ts} <= {sql_str(to.ljust(14, '9'))}")
+    conds.extend(_filter_sql(f) for f in filters or [])
+    return conds
 
 
 def cdx_query(
@@ -780,6 +793,14 @@ def cdx_query(
 ) -> DataFrame:
     """The full cdx-server GET /index parameter surface over a typed
     CDX DataFrame (column ``timestamp`` = 14-digit string).
+
+    The whole residual pipeline — key predicate, access verdict,
+    continuation, modifiers, fuzzy retry, collapse, ordering, limit
+    and projection — is rendered as ONE Spark SQL statement over
+    ``cdx`` (``sqltext.sql_over``): planning a request costs a
+    constant handful of py4j calls instead of a run of call-site-
+    recorded round trips per ``Column`` expression.  Every literal goes
+    through ``sqltext.sql_str``.
 
     ``fuzzy=True`` (matchType=exact only — pywb semantics) falls back
     to the rule-stripped key when the exact key's FILTERED result is
@@ -813,7 +834,37 @@ def cdx_query(
     match_type always wins."""
     url, match_type = infer_match_type(url, match_type)
     exact, lo, hi = _key_range(url, match_type)
-    fuzzy_pending = False
+    if resume_key is not None:
+        if sort_reverse or closest is not None:
+            raise ValueError(
+                "resume_key pages the default (urlkey, timestamp) ascending "
+                "order; it cannot combine with sort_reverse or closest"
+            )
+        if len(resume_key) == 3 and tiebreak is None:
+            raise ValueError("a 3-tuple resume_key requires tiebreak=")
+    if limit is not None and limit < 0:
+        if offset is not None:
+            raise ValueError("offset= cannot combine with a negative limit")
+    elif offset is not None:
+        # IA cdx-server offset=N [B]: skip N rows of the sort order
+        # before limit.  Spark's TakeOrdered path allocates an
+        # (offset+limit)-sized top-k buffer PER PARTITION, so an
+        # unbounded offset is an executor OOM, not a slow query
+        # (measured: offset=1e9 kills the JVM) — offset is
+        # SHALLOW-paging sugar and is capped; deep paging must use
+        # resume_key, whose continuation predicate is sargable and
+        # prunes blocks instead of buffering skipped rows.
+        if offset < 0:
+            raise ValueError("offset= must be >= 0")
+        if offset + (limit or 0) > 100_000:
+            raise ValueError(
+                "offset+limit beyond 100k rows would buffer that many "
+                "rows per partition; page deeply with resume_key= "
+                "instead (sargable, block-pruning)"
+            )
+
+    uk, ts = sql_ident("urlkey"), sql_ident("timestamp")
+    fuzzy_exact = None  # the exact key, while a fuzzy retry is pending
     if exact is not None:
         spec = fuzzy_retry_spec(exact, fuzzy_rules) if fuzzy else None
         if spec is not None and spec[0] == "prefix":
@@ -821,175 +872,137 @@ def cdx_query(
             # truncated-prefix RANGE plus the echoed filters — both
             # sargable/codegen; exact rows bypass the echo
             _, pre, echoes, _rule = spec
-            fcond = (F.col("urlkey") >= pre) & (F.col("urlkey") < pre + "~")
-            for e in echoes:
-                fcond = fcond & _filter_cond(e)
-            df = cdx.filter((F.col("urlkey") == exact) | fcond)
-            fuzzy_pending = True
+            retry = " AND ".join([sql_key_range(pre, pre + "~"), *map(_filter_sql, echoes)])
+            key_pred = f"({uk} = {sql_str(exact)} OR ({retry}))"
+            fuzzy_exact = exact
         elif spec is not None and spec[0] == "key" and spec[1] != exact:
-            df = cdx.filter(F.col("urlkey").isin([exact, spec[1]]))
-            fuzzy_pending = True
+            key_pred = f"{uk} IN ({sql_str(exact)}, {sql_str(spec[1])})"
+            fuzzy_exact = exact
         else:
-            df = cdx.filter(F.col("urlkey") == exact)
+            key_pred = f"{uk} = {sql_str(exact)}"
     else:
-        df = cdx.filter((F.col("urlkey") >= lo) & (F.col("urlkey") < hi))
-    if match_type == "glob":
-        df = df.filter(F.col("urlkey").like(glob_to_like(surt_urlkey_py(url))))
+        key_pred = sql_key_range(lo, hi)
 
-    if acl_rules is not None or embargo is not None:
-        # access control FIRST [U pywb ACL]: excluded captures vanish
-        # before limit/collapse/fuzzy see them (they must not consume
-        # limit slots or suppress a fuzzy retry); blocked rows stay
-        # listed, tagged in the `access` column (playback returns 451).
-        # An embargo with no .aclj still runs the verdict projection
-        # (empty rule list → bare default + embargo compare).
-        df = apply_acl(
-            df,
-            acl_rules or [],
-            default=acl_default,
-            embargo=embargo,
-            as_of=as_of,
-        )
-
+    conds = []
     if resume_key is not None:
-        if sort_reverse or closest is not None:
-            raise ValueError(
-                "resume_key pages the default (urlkey, timestamp) ascending "
-                "order; it cannot combine with sort_reverse or closest"
-            )
-        rk, rts = resume_key[0], resume_key[1]
-        after_ts = F.col("timestamp") > rts
+        rk, rts = sql_lit(resume_key[0]), sql_lit(resume_key[1])
+        after_ts = f"{ts} > {rts}"
         if len(resume_key) == 3:
-            if tiebreak is None:
-                raise ValueError("a 3-tuple resume_key requires tiebreak=")
             # NULL tiebreaks print as '-' in the resume key (the CDX
             # null placeholder, sorting before every hex/alnum value);
             # coalesce the COLUMN to the same placeholder so the
             # strictly-after compare is total — a raw NULL > '-' is
             # SQL-NULL and would silently skip same-second rows whose
             # tiebreak is missing (e.g. damaged digests).
-            tb = F.coalesce(F.col(tiebreak), F.lit("-"))
-            after_ts = after_ts | (
-                (F.col("timestamp") == rts) & (tb > resume_key[2])
+            tb = f"coalesce({sql_ident(tiebreak)}, {sql_str('-')})"
+            after_ts = f"({after_ts} OR ({ts} = {rts} AND {tb} > {sql_lit(resume_key[2])}))"
+        conds.append(f"({uk} > {rk} OR ({uk} = {rk} AND {after_ts}))")
+    like = glob_to_like(surt_urlkey_py(url)) if match_type == "glob" else None
+    conds += _request_conds(like, from_, to, filters)
+
+    def statement(src: str) -> str:
+        cols = list(cdx.columns)
+        if acl_rules is not None or embargo is not None:
+            # access control FIRST [U pywb ACL]: excluded captures
+            # vanish before limit/collapse/fuzzy see them (they must
+            # not consume limit slots or suppress a fuzzy retry);
+            # blocked rows stay listed, tagged in the `access` column
+            # (playback returns 451).  An embargo with no .aclj still
+            # runs the verdict projection (empty rule list → bare
+            # default + embargo compare).
+            verdict = sql_acl_access(
+                "urlkey", acl_rules or [], default=acl_default,
+                embargo=embargo, as_of=as_of,
             )
-        df = df.filter(
-            (F.col("urlkey") > rk) | ((F.col("urlkey") == rk) & after_ts)
-        )
+            sel, cols = select_with(cols, {"access": verdict})
+            stmt = f"SELECT {sel} FROM {src} WHERE {key_pred}"
+            where = [f"`access` != {sql_str('exclude')}", *conds]
+            stmt = f"SELECT * FROM ({stmt}) WHERE {' AND '.join(where)}"
+        else:
+            stmt = f"SELECT * FROM {src} WHERE {' AND '.join([key_pred, *conds])}"
 
-    if from_ is not None:
-        df = df.filter(F.col("timestamp") >= from_.ljust(14, "0"))
-    if to is not None:
-        df = df.filter(F.col("timestamp") <= to.ljust(14, "9"))
-    if filters:
-        df = _apply_filters(df, filters)
+        if fuzzy_exact is not None:
+            # after the residual filters, so a fully-filtered-out exact
+            # window falls back to the fuzzy captures (pywb's empty-
+            # result-triggered retry), not just a missing exact key
+            x = sql_str(fuzzy_exact)
+            sel, _ = select_with(
+                cols, {"__he": f"max(CASE WHEN {uk} = {x} THEN 1 ELSE 0 END) OVER ()"}
+            )
+            stmt = (
+                f"SELECT {', '.join(map(sql_ident, cols))} FROM "
+                f"(SELECT {sel} FROM ({stmt})) WHERE {uk} = {x} OR `__he` = 0"
+            )
 
-    if fuzzy_pending:
-        # after the residual filters, so a fully-filtered-out exact
-        # window falls back to the fuzzy captures (pywb's empty-result
-        # -triggered retry), not just a missing exact key
-        from pyspark.sql.window import Window
+        if collapse:
+            # pywb/IA accept REPEATED collapse= params: a capture is
+            # skipped only when ALL collapse fields match the previous
+            # one.  All-match over N fields == equality of the N-field
+            # STRUCT, so multi-collapse stays the same single lag window.
+            keys = []
+            for spec in [collapse] if isinstance(collapse, str) else list(collapse):
+                field, _, width = spec.partition(":")
+                ck = f"CAST({sql_ident(field)} AS STRING)"
+                keys.append(f"substring({ck}, 1, {int(width)})" if width else ck)
+            stmt, cols = collapse_sql(
+                f"({stmt})",
+                cols,
+                partition_by=["urlkey"],
+                order_by=[f"{ts} ASC"],
+                collapse_key=keys[0] if len(keys) == 1 else f"struct({', '.join(keys)})",
+                # collapseToLast [U pywb query API]: represent each run
+                # by its LATEST capture instead of its first
+                keep="last" if collapse_to_last else "first",
+                # IA showGroupCount=true: annotate each kept row with
+                # its run size (same single shuffle — operators.collapse)
+                group_count_col="groupcount" if show_group_count else None,
+                # IA showSkipCount=true (+ lastskiptimestamp): captures
+                # skipped since the previous kept row, and when
+                skip_count_col="skipcount" if show_skip_count else None,
+                skip_ts=("timestamp", "lastskiptimestamp") if show_skip_count else None,
+            )
 
-        has_exact = F.max(
-            F.when(F.col("urlkey") == exact, 1).otherwise(0)
-        ).over(Window.partitionBy())
-        df = (
-            df.withColumn("__he", has_exact)
-            .filter((F.col("urlkey") == exact) | (F.col("__he") == 0))
-            .drop("__he")
-        )
+        # forward + reversed forms of whichever ordering is active, so
+        # limit=-N reverses the ACTUAL sort (closest included), not a
+        # hardcoded (urlkey, timestamp)
+        if closest is not None:
+            dist = f"abs(CAST({ts} AS BIGINT) - {int(closest.ljust(14, '0'))})"
+            fwd = [(dist, True), (ts, True)]
+            # same deterministic tail as the batch path's
+            # tiebreak_cols: at equal |Δts| + equal timestamp
+            # (same-second recrawls) the winner under a limit must not
+            # depend on scan order, and the one-at-a-time answer must
+            # match cdx_query_batch's rows
+            fwd += [(sql_ident(c), True) for c in ("digest", "offset") if c in cols]
+        else:
+            fwd = [(uk, True), (ts, not sort_reverse)]
+            if tiebreak is not None:
+                fwd.append((sql_ident(tiebreak), not sort_reverse))
 
-    if collapse:
-        # pywb/IA accept REPEATED collapse= params: a capture is
-        # skipped only when ALL collapse fields match the previous
-        # one.  All-match over N fields == equality of the N-field
-        # STRUCT, so multi-collapse stays the same single lag window.
-        specs = [collapse] if isinstance(collapse, str) else list(collapse)
-        keys = []
-        for spec in specs:
-            field, _, width = spec.partition(":")
-            ck = F.col(field).cast("string")
-            if width:
-                ck = F.substring(ck, 1, int(width))
-            keys.append(ck)
-        ckey = keys[0] if len(keys) == 1 else F.struct(*keys)
-        # collapseToLast [U pywb query API]: represent each run by its
-        # LATEST capture instead of its first — same window either way
-        df = run_collapse(
-            df,
-            partition_by=["urlkey"],
-            order_by=[F.col("timestamp").asc()],
-            collapse_key=ckey,
-            keep="last" if collapse_to_last else "first",
-            # IA showGroupCount=true: annotate each kept row with its
-            # run size (same single shuffle — see operators.collapse)
-            group_count_col="groupcount" if show_group_count else None,
-            # IA showSkipCount=true (+ lastskiptimestamp): captures
-            # skipped since the previous kept row, and when
-            skip_count_col="skipcount" if show_skip_count else None,
-            skip_ts=("timestamp", "lastskiptimestamp")
-            if show_skip_count
-            else None,
-        )
+        def order(reverse: bool = False) -> str:
+            return ", ".join(f"{e} {'ASC' if asc != reverse else 'DESC'}" for e, asc in fwd)
 
-    # forward + reversed forms of whichever ordering is active, so
-    # limit=-N reverses the ACTUAL sort (closest included), not a
-    # hardcoded (urlkey, timestamp)
-    if closest is not None:
-        target = int(closest.ljust(14, "0"))
-        dist = F.abs(F.col("timestamp").cast("bigint") - F.lit(target))
-        fwd = [dist.asc(), F.col("timestamp").asc()]
-        rev = [dist.desc(), F.col("timestamp").desc()]
-        # same deterministic tail as the batch path's tiebreak_cols:
-        # at equal |Δts| + equal timestamp (same-second recrawls) the
-        # winner under a limit must not depend on scan order, and the
-        # one-at-a-time answer must match cdx_query_batch's rows
-        for c in ("digest", "offset"):
-            if c in df.columns:
-                fwd.append(F.col(c).asc())
-                rev.append(F.col(c).desc())
-    elif sort_reverse:
-        fwd = [F.col("urlkey").asc(), F.col("timestamp").desc()]
-        rev = [F.col("urlkey").desc(), F.col("timestamp").asc()]
-    else:
-        fwd = [F.col("urlkey").asc(), F.col("timestamp").asc()]
-        rev = [F.col("urlkey").desc(), F.col("timestamp").desc()]
-    if tiebreak is not None and closest is None:
-        fwd.append(F.col(tiebreak).desc() if sort_reverse else F.col(tiebreak).asc())
-        rev.append(F.col(tiebreak).asc() if sort_reverse else F.col(tiebreak).desc())
-    if limit is not None and limit < 0:
-        # pywb limit=-N: the LAST N rows of the sort order.  Take N
-        # under the reversed ordering (TakeOrderedAndProject — still
-        # no full sort), then restore the requested order.  Applied
-        # BEFORE the field projection so the sort keys are still
-        # available even when fl= drops them.
-        if offset is not None:
-            raise ValueError("offset= cannot combine with a negative limit")
-        df = df.orderBy(*rev).limit(-limit).orderBy(*fwd)
-    else:
-        df = df.orderBy(*fwd)
-        if offset is not None:
-            # IA cdx-server offset=N [B]: skip N rows of the sort
-            # order before limit.  Spark's TakeOrdered path allocates
-            # an (offset+limit)-sized top-k buffer PER PARTITION, so
-            # an unbounded offset is an executor OOM, not a slow query
-            # (measured: offset=1e9 kills the JVM) — offset is
-            # SHALLOW-paging sugar and is capped; deep paging must use
-            # resume_key, whose continuation predicate is sargable and
-            # prunes blocks instead of buffering skipped rows.
-            if offset < 0:
-                raise ValueError("offset= must be >= 0")
-            if offset + (limit or 0) > 100_000:
-                raise ValueError(
-                    "offset+limit beyond 100k rows would buffer that many "
-                    "rows per partition; page deeply with resume_key= "
-                    "instead (sargable, block-pruning)"
-                )
-            df = df.offset(offset)
-        if limit is not None:
-            df = df.limit(limit)
-    if fields:
-        df = df.select(*fields)
-    return df
+        if limit is not None and limit < 0:
+            # pywb limit=-N: the LAST N rows of the sort order.  Take N
+            # under the reversed ordering (TakeOrderedAndProject — still
+            # no full sort), then restore the requested order.  Applied
+            # BEFORE the field projection so the sort keys are still
+            # available even when fl= drops them.
+            stmt = (
+                f"SELECT * FROM (SELECT * FROM ({stmt}) ORDER BY "
+                f"{order(reverse=True)} LIMIT {int(-limit)}) ORDER BY {order()}"
+            )
+        else:
+            stmt = f"SELECT * FROM ({stmt}) ORDER BY {order()}"
+            if limit is not None:
+                stmt += f" LIMIT {int(limit)}"
+            if offset is not None:
+                stmt += f" OFFSET {int(offset)}"
+        if fields:
+            stmt = f"SELECT {', '.join(map(sql_ident, fields))} FROM ({stmt})"
+        return stmt
+
+    return sql_over(cdx, statement)
 
 
 #: request-spec keys cdx_query_batch understands; anything else is a
@@ -1043,8 +1056,6 @@ def cdx_query_batch(
     Unsupported per-request knobs (collapse/sort_reverse/resume_key/
     fuzzy/fields) raise — their plans don't share a pass; batch
     serving is the bulk lookup surface, not the full grammar."""
-    import functools
-
     if not requests:
         raise ValueError("cdx_query_batch needs at least one request")
     specs = []
@@ -1060,14 +1071,9 @@ def cdx_query_batch(
         specs.append((i, req, lo, hi, like))
 
     # 1. union-of-ranges scan filter (sargable, pushes below the join)
-    scan = functools.reduce(
-        lambda a, b: a | b,
-        [
-            (F.col("urlkey") >= lo) & (F.col("urlkey") < hi)
-            for _, _, lo, hi, _ in specs
-        ],
+    df = cdx.filter(
+        " OR ".join(f"({sql_key_range(lo, hi)})" for _, _, lo, hi, _ in specs)
     )
-    df = cdx.filter(scan)
 
     # 2. broadcast range join tags request_no
     reqdf = cdx.sparkSession.createDataFrame(
@@ -1094,26 +1100,13 @@ def cdx_query_batch(
         (F.col("urlkey") >= F.col("__lo")) & (F.col("urlkey") < F.col("__hi")),
     )
 
-    # 3. per-request residual CASE chain (literal-compiled arms)
-    keep = None
+    # 3. per-request residual CASE chain (literal-compiled arms, the
+    # same predicate text cdx_query renders), parsed once
+    arms = []
     for i, req, _, _, like in specs:
-        conds = []
-        if like is not None:
-            conds.append(F.col("urlkey").like(like))
-        if req.get("from_") is not None:
-            conds.append(F.col("timestamp") >= req["from_"].ljust(14, "0"))
-        if req.get("to") is not None:
-            conds.append(F.col("timestamp") <= req["to"].ljust(14, "9"))
-        for f in req.get("filters") or []:
-            conds.append(_filter_cond(f))
-        arm = (
-            functools.reduce(lambda a, b: a & b, conds)
-            if conds
-            else F.lit(True)
-        )
-        branch = F.when(F.col("request_no") == i, arm)
-        keep = branch if keep is None else keep.when(F.col("request_no") == i, arm)
-    j = j.filter(keep)
+        conds = _request_conds(like, req.get("from_"), req.get("to"), req.get("filters"))
+        arms.append(f"WHEN `request_no` = {i} THEN {' AND '.join(conds) or 'TRUE'}")
+    j = j.filter(f"CASE {' '.join(arms)} END")
 
     # 4. per-request limit (skipped entirely when nobody asked).  The
     # order is request-conditional INSIDE one window: closest requests

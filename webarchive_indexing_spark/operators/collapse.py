@@ -8,20 +8,23 @@ key reappearing after a gap starts a new run and is kept again.
 
 Spark mapping: one ``lag`` window over the index order — a single
 shuffle on the partition key, no UDF, whole-stage codegen throughout.
+The stage is rendered as SQL text (``collapse_sql``) so that the
+cdx-server lookup can fold it into its one parsed statement;
+``collapse`` runs the same text over a DataFrame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import DataFrame
+
+from ..sqltext import select_with, sql_ident, sql_over
 
 
 def collapse(
     df: DataFrame,
     partition_by: list[str],
-    order_by: list[str | Column],
-    collapse_key: Column,
+    order_by: list[str],
+    collapse_key: str,
     *,
     keep: str = "first",
     group_count_col: str | None = None,
@@ -31,7 +34,8 @@ def collapse(
     """Keep the first (or last) row of each run of equal ``collapse_key``.
 
     ``partition_by`` scopes runs (cdx: the urlkey); ``order_by`` is
-    the index order within the partition (cdx: timestamp).
+    the index order within the partition as SQL sort items (cdx:
+    ``timestamp ASC``); ``collapse_key`` is a SQL expression.
 
     ``keep="first"`` (default): rows where the key differs from the
     PREVIOUS row's survive; the first row of each partition always
@@ -60,37 +64,87 @@ def collapse(
     SAME window.  The post-filter gap window re-uses the partition
     clustering, so these annotations are also shuffle-neutral.
     """
+    return sql_over(
+        df,
+        lambda src: collapse_sql(
+            src,
+            df.columns,
+            partition_by,
+            order_by,
+            collapse_key,
+            keep=keep,
+            group_count_col=group_count_col,
+            skip_count_col=skip_count_col,
+            skip_ts=skip_ts,
+        )[0],
+    )
+
+
+def collapse_sql(
+    src: str,
+    cols: list[str],
+    partition_by: list[str],
+    order_by: list[str],
+    collapse_key: str,
+    *,
+    keep: str = "first",
+    group_count_col: str | None = None,
+    skip_count_col: str | None = None,
+    skip_ts: tuple[str, str] | None = None,
+) -> tuple[str, list[str]]:
+    """``collapse`` as SQL over the relation ``src`` (a table name or a
+    parenthesised query) whose columns are ``cols``.  Returns the
+    statement and its columns: ``cols`` plus the requested annotation
+    columns, in the order ``collapse`` documents."""
     if keep not in ("first", "last"):
         raise ValueError(f"keep must be 'first' or 'last', got {keep!r}")
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    adj = (F.lag if keep == "first" else F.lead)(collapse_key).over(w)
-    cond = adj.isNull() | (collapse_key != adj)
-    if group_count_col is None and skip_count_col is None:
-        return df.withColumn("__keep", cond).filter(F.col("__keep")).drop("__keep")
-    out = df.withColumn("__keep", cond)
+    w = (
+        f"PARTITION BY {', '.join(map(sql_ident, partition_by))} "
+        f"ORDER BY {', '.join(order_by)}"
+    )
+    k = collapse_key
+
+    def changed(fn: str) -> str:
+        adj = f"{fn}({k}) OVER ({w})"
+        return f"({adj} IS NULL OR {k} != {adj})"
+
+    sel, out = select_with(cols, {"__keep": changed("lag" if keep == "first" else "lead")})
     drop = ["__keep"]
+    stmt = f"SELECT {sel} FROM {src}"
     if group_count_col is not None:
-        prev = F.lag(collapse_key).over(w)
-        change = (prev.isNull() | (collapse_key != prev)).cast("bigint")
-        run_id = F.sum(change).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        out = out.withColumn("__run", run_id)
-        cw = Window.partitionBy(*partition_by, "__run")
-        out = out.withColumn(group_count_col, F.count(F.lit(1)).over(cw))
+        run_id = (
+            f"sum(CAST({changed('lag')} AS BIGINT)) OVER "
+            f"({w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+        )
+        sel, out = select_with(out, {"__run": run_id})
+        stmt = f"SELECT {sel} FROM ({stmt})"
+        by_run = ", ".join(map(sql_ident, [*partition_by, "__run"]))
+        sel, out = select_with(
+            out, {group_count_col: f"count(1) OVER (PARTITION BY {by_run})"}
+        )
+        stmt = f"SELECT {sel} FROM ({stmt})"
         drop.append("__run")
     if skip_count_col is not None:
-        out = out.withColumn("__rn", F.row_number().over(w))
+        rn = {"__rn": f"row_number() OVER ({w})"}
         if skip_ts is not None:
-            out = out.withColumn("__pts", F.lag(skip_ts[0]).over(w))
-        out = out.filter(F.col("__keep"))
-        kw = Window.partitionBy(*partition_by).orderBy(*order_by)
-        gap = F.col("__rn") - F.coalesce(F.lag("__rn").over(kw), F.lit(0)) - 1
-        out = out.withColumn(skip_count_col, gap)
+            rn["__pts"] = f"lag({sql_ident(skip_ts[0])}) OVER ({w})"
+        sel, out = select_with(out, rn)
+        stmt = f"SELECT * FROM (SELECT {sel} FROM ({stmt})) WHERE `__keep`"
+        gap = f"`__rn` - coalesce(lag(`__rn`) OVER ({w}), 0) - 1"
+        sel, out = select_with(out, {skip_count_col: gap})
+        stmt = f"SELECT {sel} FROM ({stmt})"
         drop.append("__rn")
         if skip_ts is not None:
-            out = out.withColumn(
-                skip_ts[1],
-                F.when(F.col(skip_count_col) > 0, F.col("__pts")),
+            sel, out = select_with(
+                out,
+                {
+                    skip_ts[1]: f"CASE WHEN {sql_ident(skip_count_col)} > 0 "
+                    "THEN `__pts` END"
+                },
             )
+            stmt = f"SELECT {sel} FROM ({stmt})"
             drop.append("__pts")
-        return out.drop(*drop)
-    return out.filter(F.col("__keep")).drop(*drop)
+    else:
+        stmt = f"SELECT * FROM ({stmt}) WHERE `__keep`"
+    out = [c for c in out if c not in drop]
+    return f"SELECT {', '.join(map(sql_ident, out))} FROM ({stmt})", out

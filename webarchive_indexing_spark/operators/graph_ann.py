@@ -81,7 +81,6 @@ directory (hard-link clone for appends) and atomically swap the
 from __future__ import annotations
 
 import json
-import math
 import posixpath
 from collections.abc import Callable
 
@@ -95,6 +94,7 @@ from .similarity import (
     _dec_dot,
     cosine,
     cosine_from_parts,
+    require_finite,
     spark_cosine6_sql,
     sql_cosine,
     sql_double_array,
@@ -1213,18 +1213,6 @@ class _Frontier:
         return arrow_frame(self.spark, table, schema)
 
 
-def _require_finite(query_vecs: list[list[float]], op: str) -> None:
-    """A NaN or infinite query component has no cosine to rank by:
-    refuse it up front, naming the request."""
-    for n, qv in enumerate(query_vecs):
-        bad = [x for x in qv if not math.isfinite(float(x))]
-        if bad:
-            raise ValueError(
-                f"{op}: query vector {n} has a non-finite component "
-                f"({bad[0]!r})"
-            )
-
-
 def _beam_walk(
     spark: SparkSession,
     store: str,
@@ -1253,7 +1241,7 @@ def _beam_walk(
     over the same values — so rows are bit-identical to the oracle's."""
     from ..sinks.ann_index import read_ann_tombstones, resolve_store
 
-    _require_finite(query_vecs, op)
+    require_finite(query_vecs, op)
     root = resolve_store(store)
     meta = read_graph_meta(root)
     id_col, vec_col = meta["id_col"], meta["vec_col"]

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,6 +54,19 @@ def sql_isin(col: str, ids) -> Column:
     is ``FALSE`` — ``IN ()`` does not parse."""
     vals = ",".join(str(int(i)) for i in ids)
     return F.expr(f"`{col}` IN ({vals})") if vals else F.lit(False)
+
+
+def require_finite(query_vecs: list[list[float]], op: str) -> None:
+    """A NaN or infinite query component has no similarity or distance
+    to rank by (and no SQL literal): refuse it up front with a
+    ``ValueError`` naming the request."""
+    for n, qv in enumerate(query_vecs):
+        bad = [x for x in qv if not math.isfinite(float(x))]
+        if bad:
+            raise ValueError(
+                f"{op}: query vector {n} has a non-finite component "
+                f"({bad[0]!r})"
+            )
 
 
 def collect_seed_vectors(

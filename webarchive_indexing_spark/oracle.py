@@ -116,15 +116,19 @@ class CompareResult:
 
 def compare(name: str, spark_df: DataFrame, con, sql: str) -> CompareResult:
     # run the two engines CONCURRENTLY (round 16): the DuckDB oracle
-    # executes on a worker thread (DuckDB releases the GIL; only that
-    # one thread touches the connection) while Spark collects — the
-    # sequential form paid both walls per query, and the 272-query
-    # parity suite runs this once per registered query
+    # executes on a worker thread (DuckDB releases the GIL) while Spark
+    # collects — the sequential form paid both walls per query, and
+    # the 272-query parity suite runs this once per registered query.
+    # The worker queries through its own cursor (a connection to the
+    # same database, so the table views are visible): a DuckDB
+    # connection is not safe for concurrent use, and the caller's
+    # ``con`` stays free for the caller.
     from concurrent.futures import ThreadPoolExecutor
 
     def _oracle_side():
-        rel = con.sql(sql)
-        return rel.columns, rel.types, rel.fetchall()
+        with con.cursor() as cur:
+            rel = cur.sql(sql)
+            return rel.columns, rel.types, rel.fetchall()
 
     scols = sorted(spark_df.columns)
     with ThreadPoolExecutor(max_workers=1) as pool:

@@ -819,7 +819,7 @@ def cdx_collapse_digest(spark, sf_dir):
     content — the cdx-server's dedup view of revisits [B]."""
     c = derived_cdx(spark, sf_dir)
     kept = collapse(
-        c, partition_by=["urlkey"], order_by=[F.col("ts14").asc()], collapse_key=F.col("digest")
+        c, partition_by=["urlkey"], order_by=["`ts14` ASC"], collapse_key="`digest`"
     )
     return kept.groupBy("urlkey").agg(F.count(F.lit(1)).alias("n_kept"))
 
@@ -979,8 +979,8 @@ def cdx_collapse_timestamp(spark, sf_dir):
     kept = collapse(
         c,
         partition_by=["urlkey"],
-        order_by=[F.col("ts14").asc(), F.col("digest").asc()],
-        collapse_key=F.substring("ts14", 1, 10),
+        order_by=["`ts14` ASC", "`digest` ASC"],
+        collapse_key="substring(`ts14`, 1, 10)",
     )
     return kept.select("urlkey", "ts14", "digest")
 

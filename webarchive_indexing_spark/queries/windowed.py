@@ -87,8 +87,8 @@ def win_collapse_runs(spark, sf_dir):
     kept = collapse(
         ev,
         partition_by=["user_id"],
-        order_by=[F.col("ts").asc(), F.col("event_id").asc()],
-        collapse_key=F.col("day_key"),
+        order_by=["`ts` ASC", "`event_id` ASC"],
+        collapse_key="`day_key`",
     )
     return kept.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_kept"))
 

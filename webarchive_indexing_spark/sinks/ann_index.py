@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.similarity import require_finite
 from .zipnum import _fs_for, _join, local_frame
 
 _CENTROIDS = "centroids.json"
@@ -500,6 +501,7 @@ def _ivfsq_scored_frame(
     )
     from ..queries.helpers import hround
 
+    require_finite([qv], "ivfsq_index_probe")
     store = resolve_store(out_dir)
     cents = read_ivf_centroids(store)
     probe = ivf_probe_cells(cents, qv, nprobe)
@@ -718,6 +720,7 @@ def ivfsq_index_probe_batch_topk(
 
     if not query_vecs:
         raise ValueError("probe batch needs at least one query vector")
+    require_finite(query_vecs, "ivfsq_index_probe_batch_topk")
     excl = exclude_ids or [None] * len(query_vecs)
     if len(excl) != len(query_vecs):
         raise ValueError("exclude_ids must align with query_vecs")
@@ -810,6 +813,7 @@ def ivfsq_index_probe_batch_range(
 
     if not query_vecs:
         raise ValueError("probe batch needs at least one query vector")
+    require_finite(query_vecs, "ivfsq_index_probe_batch_range")
     if len(radii) != len(query_vecs):
         raise ValueError("radii must align with query_vecs")
     excl = exclude_ids or [None] * len(query_vecs)
@@ -1540,6 +1544,7 @@ def _ivfpq_scored_frame(
         residual_query_tables,
     )
 
+    require_finite([qv], "ivfpq_index_probe")
     store = _store or resolve_store(out_dir)
     cents, cbooks, _meta = _model or read_ivfpq_model(store)
     if not _rotated:
@@ -1640,6 +1645,7 @@ def ivfpq_index_probe_batch_topk(
 
     if not query_vecs:
         raise ValueError("probe batch needs at least one query vector")
+    require_finite(query_vecs, "ivfpq_index_probe_batch_topk")
     excl = exclude_ids or [None] * len(query_vecs)
     if len(excl) != len(query_vecs):
         raise ValueError("exclude_ids must align with query_vecs")
@@ -1726,6 +1732,7 @@ def ivfpq_index_probe_batch_range(
 
     if not query_vecs:
         raise ValueError("probe batch needs at least one query vector")
+    require_finite(query_vecs, "ivfpq_index_probe_batch_range")
     if len(radii) != len(query_vecs):
         raise ValueError("radii must align with query_vecs")
     excl = exclude_ids or [None] * len(query_vecs)
@@ -1853,6 +1860,7 @@ def ivfpq_refined_batch_topk(
     from ..operators.similarity import cosine, lit_double_array, sql_isin
     from ..queries.helpers import hround
 
+    require_finite(query_vecs, "ivfpq_refined_batch_topk")
     # resolve the CURRENT pointer ONCE: the ADC probe and the refine
     # sidecar must read the SAME version even if a swap lands mid-way
     store = resolve_store(out_dir)
@@ -1953,6 +1961,7 @@ def ivfpq_refined_topk(
     from ..operators.similarity import cosine, lit_double_array, sql_isin
     from ..queries.helpers import hround
 
+    require_finite([qv], "ivfpq_refined_topk")
     # one pointer resolve pins probe + sidecar to the same version
     store = resolve_store(out_dir)
     # an OPQ store's sidecar holds ROTATED vectors: rotate qv once
@@ -2030,6 +2039,7 @@ def ivf_index_probe_batch_topk(
 
     if not query_vecs:
         raise ValueError("probe batch needs at least one query vector")
+    require_finite(query_vecs, "ivf_index_probe_batch_topk")
     excl = exclude_ids or [None] * len(query_vecs)
     if len(excl) != len(query_vecs):
         raise ValueError("exclude_ids must align with query_vecs")
@@ -2121,6 +2131,7 @@ def ivf_index_probe_batch_range(
 
     if not query_vecs:
         raise ValueError("probe batch needs at least one query vector")
+    require_finite(query_vecs, "ivf_index_probe_batch_range")
     if len(radii) != len(query_vecs):
         raise ValueError("radii must align with query_vecs")
     excl = exclude_ids or [None] * len(query_vecs)
@@ -2263,6 +2274,7 @@ def _ivf_scored_frame(
 
     if metric not in _METRIC_COLS:
         raise ValueError(f"unknown metric {metric!r}")
+    require_finite([qv], "ivf_index_probe")
     store = resolve_store(out_dir)
     cents = read_ivf_centroids(store)
     probe = ivf_probe_cells(cents, qv, nprobe, metric=metric)

@@ -31,13 +31,17 @@ distributed read would run about one block per task and buy no
 parallelism, only the fixed start-up cost of a Python-worker job
 (~0.2-0.3 s per task on a 4-core host).  So those blocks are read on
 the driver and handed to Spark as an Arrow table (a
-``LocalTableScan``: no job until the caller's own action); longer
-runs keep the distributed ``mapPartitions`` read.  Metadata-sized
-frames (page counts, paged-index rows, tombstone lists, empty ranges)
-go through the same Arrow local relation — a list-of-tuples
-``createDataFrame`` would cost a Python-worker job of its own.  The
-typed parse is one ``selectExpr`` (``sources.cdx``), so planning a
-lookup is a few hundred py4j calls, not a few thousand.
+``LocalTableScan``: no job until the caller's own action), as one
+partition, so the lookup's sorts and windows plan no Exchange and it
+runs one single-task job; longer runs keep the distributed
+``mapPartitions`` read.  Metadata-sized frames (page counts,
+paged-index rows, tombstone lists, empty ranges) go through the same
+Arrow local relation — a list-of-tuples ``createDataFrame`` would
+cost a Python-worker job of its own.  The typed parse is one
+``selectExpr`` (``sources.cdx``), the key filter one parsed predicate
+and the lookup's residual pipeline one SQL statement
+(``operators.cdx_query``), so planning a lookup is about 50 py4j
+calls, not a few thousand.
 
 IO goes through ``pyarrow.fs`` resolved from the path URI, NOT bare
 ``open()``: executors have no JVM gateway, so Python-side object-store
@@ -52,6 +56,7 @@ from __future__ import annotations
 import bisect
 import operator
 import posixpath
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +64,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.cdx import parse_cdx_lines, to_cdx_lines
+from ..sqltext import sql_key_range
 
 
 def _fs_for(path: str):
@@ -429,22 +435,35 @@ def _block_lines(items):
             fh.close()
 
 
-def _lines_frame(spark: SparkSession, work: list[tuple], schema: T.StructType) -> DataFrame:
-    """Raw lines of the ``work`` items' blocks (``_block_lines``
-    rows) as a DataFrame of ``schema``.
+def _lines_frame(
+    spark: SparkSession,
+    work: list[tuple],
+    schema: T.StructType,
+    parse: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The ``work`` items' blocks as ``parse`` of their raw lines
+    (``_block_lines`` rows, a DataFrame of ``schema``).
 
     At most ``defaultParallelism`` blocks are read right here on the
     driver into an Arrow local relation: the distributed read would
     run about one block per task, which buys no parallelism and costs
     a Python-worker job.  The driver then holds at most
     ``defaultParallelism`` decompressed blocks (``numlines`` lines
-    each).  Larger block sets are read by a distributed
+    each).  The parsed local relation is returned as ONE partition
+    (``coalesce(1)``, no shuffle): every sort, window and global
+    aggregate a lookup puts above it is then satisfied by
+    ``SinglePartition`` and plans no Exchange, so the lookup runs one
+    single-task job.  The parse projection sits below the coalesce and
+    filters push through it, so the optimizer still folds the parse
+    and the key filter into the local relation (``ConvertToLocalRelation``)
+    and a lookup whose rows all fall outside its key range runs no job
+    at all.  Larger block sets are read by a distributed
     ``mapPartitions`` over block batches."""
     n_slots = max(1, spark.sparkContext.defaultParallelism)
     if len(work) <= n_slots:
-        return local_frame(spark, list(_block_lines(work)), schema)
+        return parse(local_frame(spark, list(_block_lines(work)), schema)).coalesce(1)
     rdd = spark.sparkContext.parallelize(work, n_slots).mapPartitions(_block_lines)
-    return spark.createDataFrame(rdd, schema)
+    return parse(spark.createDataFrame(rdd, schema))
 
 
 def _block_work(out_dir: str, blocks: list[_Block]) -> list[tuple]:
@@ -464,17 +483,17 @@ def _read_blocks(spark: SparkSession, out_dir: str, blocks: list[_Block]) -> Dat
     either (or both) formats."""
     from ..sources.cdx import parse_cdx_any_lines
 
-    return parse_cdx_any_lines(
-        _lines_frame(spark, _block_work(out_dir, blocks), LINE_SCHEMA)
+    return _lines_frame(
+        spark, _block_work(out_dir, blocks), LINE_SCHEMA, parse_cdx_any_lines
     )
 
 
 def _range_filter(df: DataFrame, key_lo: str | None, key_hi: str | None) -> DataFrame:
-    if key_lo is not None:
-        df = df.filter(F.col("urlkey") >= key_lo)
-    if key_hi is not None:
-        df = df.filter(F.col("urlkey") < key_hi)
-    return df
+    """The residual ``key_lo <= urlkey < key_hi`` as one parsed
+    predicate (the boundary blocks hold out-of-range lines)."""
+    if key_lo is None and key_hi is None:
+        return df
+    return df.filter(sql_key_range(key_lo, key_hi))
 
 
 def read_zipnum(
@@ -640,7 +659,7 @@ def read_zipnum_pages(
     ]
     schema = T.StructType([T.StructField("page", T.IntegerType()), *LINE_SCHEMA])
     return _range_filter(
-        _parse_with_page(_lines_frame(spark, work, schema)), key_lo, key_hi
+        _lines_frame(spark, work, schema, _parse_with_page), key_lo, key_hi
     )
 
 
@@ -930,8 +949,9 @@ def read_zipnum_epochs(
         for e in epochs
         for item in _block_work(e, _prune(_load_idx(e), key_lo, key_hi))
     ]
-    lines = _lines_frame(spark, work, LINE_SCHEMA)
-    out = _range_filter(parse_cdx_any_lines(lines), key_lo, key_hi)
+    out = _range_filter(
+        _lines_frame(spark, work, LINE_SCHEMA, parse_cdx_any_lines), key_lo, key_hi
+    )
     wild, exact = _read_tombstones(out_dir, as_of_epoch)
     str_field = T.StructField("urlkey", T.StringType())
     if wild:

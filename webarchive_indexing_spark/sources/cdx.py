@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sqltext import sql_ident
+
 CDX_FIELDS = [
     ("urlkey", T.StringType()),
     ("timestamp", T.StringType()),  # 14-digit, string-sortable
@@ -250,18 +252,14 @@ def parse_cdx_any_lines(
     Column-built form of these 11 expressions cost ~1000 py4j calls
     per parse — the dominant driver cost of a cdx-server lookup."""
     return lines.selectExpr(
-        *[_quote_ident(k) for k in (keep or [])], *_any_line_exprs(column)
+        *[sql_ident(k) for k in (keep or [])], *_any_line_exprs(column)
     )
-
-
-def _quote_ident(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 @functools.lru_cache(maxsize=None)
 def _any_line_exprs(column: str) -> tuple[str, ...]:
     """The SQL expressions of ``parse_cdx_any_lines`` over ``column``."""
-    v = _quote_ident(column)
+    v = sql_ident(column)
     parts = f"split({v}, ' ')"
     is_j = f"startswith(try_element_at({parts}, 3), '{{')"
     props = (
@@ -277,13 +275,13 @@ def _any_line_exprs(column: str) -> tuple[str, ...]:
     # field — the classic writer serializes NULL keys as '-', and the
     # roundtrip must give NULL back, not a literal dash
     exprs = [
-        f"{dash_null(f'try_element_at({parts}, {i})')} AS {_quote_ident(name)}"
+        f"{dash_null(f'try_element_at({parts}, {i})')} AS {sql_ident(name)}"
         for i, name in ((1, "urlkey"), (2, "timestamp"))
     ]
     for i, (name, dtype) in enumerate(CDX_FIELDS[2:], start=3):
         classic = dash_null(f"try_element_at({parts}, {i})")
         c = f"CASE WHEN {is_j} THEN {props}['{jkeys[name]}'] ELSE {classic} END"
-        exprs.append(f"try_cast({c} AS {dtype.simpleString()}) AS {_quote_ident(name)}")
+        exprs.append(f"try_cast({c} AS {dtype.simpleString()}) AS {sql_ident(name)}")
     return tuple(exprs)
 
 
