@@ -624,26 +624,27 @@ def test_walks_refuse_non_finite_query(spark, sf_dir, store, bad):
         graph_beam_batch_topk(spark, store, [qv, poisoned])
 
 
-def test_spark_cosine6_sql_equals_column_form(spark, sf_dir):
-    """The walks score with the one-parse SQL text of
-    ``hround(cosine(v, q), 6)``; it must give the Column form's
-    doubles exactly."""
-    from webarchive_indexing_spark.operators.similarity import (
-        cosine,
-        lit_double_array,
-        spark_cosine6_sql,
-        sql_double_array,
-    )
+@pytest.mark.parametrize("metric", ["cosine", "ip", "l2"])
+def test_spark_cosine6_sql_equals_column_form(spark, sf_dir, metric):
+    """The walks and the store probes score with one-parse SQL text of
+    ``hround(cosine(v, q), 6)``, ``dot6`` and ``sqdist6``; each must
+    give its Column form's doubles exactly."""
+    from webarchive_indexing_spark.operators import similarity as S
     from webarchive_indexing_spark.queries.helpers import hround
 
+    column, sql = {
+        "cosine": (lambda a, b: hround(S.cosine(a, b), 6), S.spark_cosine6_sql),
+        "ip": (S.dot6, S.spark_dot6_sql),
+        "l2": (S.sqdist6, S.spark_sqdist6_sql),
+    }[metric]
     emb = load_table(spark, sf_dir, "embeddings")
     qv = collect_query_vector(emb, 77)
     want = emb.select(
         "vec_id",
-        hround(cosine(F.col("embedding"), lit_double_array(qv)), 6).alias("s"),
+        column(F.col("embedding"), S.lit_double_array(qv)).alias("s"),
     )
     got = emb.select(
         "vec_id",
-        F.expr(spark_cosine6_sql("embedding", sql_double_array(qv))).alias("s"),
+        F.expr(sql("embedding", S.sql_double_array(qv))).alias("s"),
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

@@ -1303,37 +1303,49 @@ def test_ann_refined_batch_equals_per_request_loop(spark, sf_dir):
 
 
 def test_ivf_batch_probe_equals_per_request_loop(spark, sf_dir):
-    """The flat store's batch probe rows per request equal the
-    one-at-a-time probe verbatim — exact-cosine twin of the PQ batch
-    guarantee."""
+    """The flat and SQ8 stores' batch probe rows per request equal the
+    one-at-a-time probe verbatim — exact-cosine twins of the PQ batch
+    guarantee; the SQ8 batch also carries per-request ``wheres``."""
     import tempfile
 
     from webarchive_indexing_spark.sinks.ann_index import (
         ivf_index_probe_batch_topk,
         ivf_index_probe_topk,
+        ivfsq_index_probe_batch_topk,
+        ivfsq_index_probe_topk,
         write_ivf_index,
+        write_ivfsq_index,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="ivf_batchtw_")
-    write_ivf_index(emb, out, n_cents=8, train_iters=2)
+    flat = tempfile.mkdtemp(prefix="ivf_batchtw_")
+    write_ivf_index(emb, flat, n_cents=8, train_iters=2)
+    sq = tempfile.mkdtemp(prefix="ivfsq_batchtw_")
+    write_ivfsq_index(emb, sq, n_cents=8, train_iters=2, attrs=["label"])
     qids = [77, 123, 55, 321]
     vecs = {
         int(r.vec_id): [float(x) for x in r.embedding]
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     }
-    want = sorted(
-        (i, r.vec_id, r.cell, r.cos_sim)
-        for i, q in enumerate(qids)
-        for r in ivf_index_probe_topk(
-            spark, out, vecs[q], k=7, nprobe=3, exclude_id=q
-        ).collect()
+    cases = (
+        (flat, ivf_index_probe_topk, ivf_index_probe_batch_topk, [None] * 4),
+        (sq, ivfsq_index_probe_topk, ivfsq_index_probe_batch_topk,
+         ["label = 0", None, "label <> 1", None]),
     )
-    got = ivf_index_probe_batch_topk(
-        spark, out, [vecs[q] for q in qids], k=7, nprobe=3,
-        exclude_ids=qids,
-    )
-    assert sorted(map(tuple, got.collect())) == want
+    for out, single, batch, wheres in cases:
+        want = sorted(
+            (i, r.vec_id, r.cell, r.cos_sim)
+            for i, q in enumerate(qids)
+            for r in single(
+                spark, out, vecs[q], k=7, nprobe=3, exclude_id=q,
+                where=wheres[i],
+            ).collect()
+        )
+        got = batch(
+            spark, out, [vecs[q] for q in qids], k=7, nprobe=3,
+            exclude_ids=qids, wheres=wheres,
+        )
+        assert sorted(map(tuple, got.collect())) == want, out
 
 
 def test_versioned_ann_store_always_on(spark, sf_dir, monkeypatch):
@@ -2203,20 +2215,98 @@ def test_refined_probe_where_matching_nothing_is_empty(spark, sf_dir):
         ), (store, sub)
 
 
-@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
-def test_pq_probes_refuse_non_finite_query(spark, tmp_path, bad):
-    """A NaN/inf query component is refused up front with a
-    ``ValueError`` naming the request — before any store read, so no
-    store is needed — by the single PQ probe and its batch form."""
-    from webarchive_indexing_spark.sinks.ann_index import (
-        ivfpq_index_probe_batch_topk,
-        ivfpq_index_probe_topk,
-    )
+_NON_FINITE = [float("nan"), float("inf"), float("-inf")]
+
+
+@pytest.mark.parametrize(
+    "bad, part",
+    [pytest.param(b, "query", id=str(b)) for b in _NON_FINITE]
+    + [pytest.param(b, "radius", id=f"radius-{b}") for b in _NON_FINITE],
+)
+def test_pq_probes_refuse_non_finite_query(spark, tmp_path, bad, part):
+    """A NaN/inf query component, or range radius, is refused up front
+    with a ``ValueError`` naming the request — before any store read,
+    so no store is needed — by the single and batch PQ probes and, for
+    radii, the single and batch range probes of the PQ and flat
+    stores."""
+    from webarchive_indexing_spark.sinks import ann_index as A
 
     qv = [0.125] * 64
-    poisoned = qv[:5] + [bad] + qv[6:]
     store = str(tmp_path / "no_store")
-    with pytest.raises(ValueError, match="query vector 0 has a non-finite"):
-        ivfpq_index_probe_topk(spark, store, poisoned)
-    with pytest.raises(ValueError, match="query vector 1 has a non-finite"):
-        ivfpq_index_probe_batch_topk(spark, store, [qv, poisoned])
+    if part == "query":
+        poisoned = qv[:5] + [bad] + qv[6:]
+        with pytest.raises(ValueError, match="query vector 0 has a non-finite"):
+            A.ivfpq_index_probe_topk(spark, store, poisoned)
+        with pytest.raises(ValueError, match="query vector 1 has a non-finite"):
+            A.ivfpq_index_probe_batch_topk(spark, store, [qv, poisoned])
+        return
+    for single, batch in (
+        (A.ivfpq_index_probe_range, A.ivfpq_index_probe_batch_range),
+        (A.ivf_index_probe_range, A.ivf_index_probe_batch_range),
+    ):
+        with pytest.raises(ValueError, match="request 0 has a non-finite radius"):
+            single(spark, store, qv, bad)
+        with pytest.raises(ValueError, match="request 1 has a non-finite radius"):
+            batch(spark, store, [qv, qv], [0.5, bad])
+
+
+def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
+    """Every public probe form over the flat, SQ8 and PQ stores plans
+    through the one kernel: a bounded number of py4j calls while the
+    call runs (each request's score is parsed SQL text, not a
+    ``Column`` tree of hundreds of round trips), and no more Spark jobs
+    for the call plus its collect than the forms ran before they
+    shared it (batches of 4)."""
+    import tempfile
+
+    from webarchive_indexing_spark.sinks import ann_index as A
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    flat = tempfile.mkdtemp(prefix="ivf_calls_")
+    sq = tempfile.mkdtemp(prefix="ivfsq_calls_")
+    pq = tempfile.mkdtemp(prefix="ivfpq_calls_")
+    A.write_ivf_index(emb, flat, n_cents=8, train_iters=2)
+    A.write_ivfsq_index(emb, sq, n_cents=8, train_iters=2)
+    A.write_ivfpq_index(
+        emb, pq, n_cells=8, n_sub=4, k_codes=8, train_iters=2, refine="flat"
+    )
+    qids = [77, 123, 55, 321]
+    vecs = {
+        int(r.vec_id): [float(x) for x in r.embedding]
+        for r in emb.filter(F.col("vec_id").isin(qids)).collect()
+    }
+    qs = [vecs[q] for q in qids]
+    # form -> (call, py4j bound, jobs bound)
+    forms = {
+        "ivf_topk": (lambda: A.ivf_index_probe_topk(spark, flat, qs[0]), 180, 1),
+        "ivf_range": (lambda: A.ivf_index_probe_range(spark, flat, qs[0], 0.15), 180, 3),
+        "ivf_batch_topk": (lambda: A.ivf_index_probe_batch_topk(spark, flat, qs), 260, 2),
+        "ivf_batch_range": (
+            lambda: A.ivf_index_probe_batch_range(spark, flat, qs, [0.15] * 4), 260, 3),
+        "sq_topk": (lambda: A.ivfsq_index_probe_topk(spark, sq, qs[0]), 180, 1),
+        "sq_range": (lambda: A.ivfsq_index_probe_range(spark, sq, qs[0], 0.15), 180, 3),
+        "sq_batch_topk": (lambda: A.ivfsq_index_probe_batch_topk(spark, sq, qs), 260, 2),
+        "sq_batch_range": (
+            lambda: A.ivfsq_index_probe_batch_range(spark, sq, qs, [0.15] * 4), 260, 3),
+        "pq_topk": (lambda: A.ivfpq_index_probe_topk(spark, pq, qs[0]), 180, 1),
+        "pq_range": (lambda: A.ivfpq_index_probe_range(spark, pq, qs[0], 1.05), 180, 3),
+        "pq_batch_topk": (lambda: A.ivfpq_index_probe_batch_topk(spark, pq, qs), 260, 2),
+        "pq_batch_range": (
+            lambda: A.ivfpq_index_probe_batch_range(spark, pq, qs, [1.05] * 4), 260, 3),
+        "refined": (lambda: A.ivfpq_refined_topk(spark, pq, None, qs[0]), 400, 2),
+        "refined_batch": (lambda: A.ivfpq_refined_batch_topk(spark, pq, qs), 600, 4),
+    }
+    sc = spark.sparkContext
+    for name, (call, max_calls, max_jobs) in forms.items():
+        group = f"probe_form_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            with py4j_calls() as calls:
+                df = call()
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows, name
+        assert calls.n <= max_calls, (name, calls.n)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= max_jobs, (name, jobs)

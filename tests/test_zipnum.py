@@ -7,7 +7,6 @@ from __future__ import annotations
 import gzip
 import os
 import tempfile
-import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -895,33 +894,7 @@ def test_arrow_frame_keeps_rows_after_empty_batch(spark):
     assert sorted(r.a for r in arrow_frame(spark, table).collect()) == [1, 2, 3]
 
 
-class _Py4jCalls:
-    """Counts the driver→JVM round trips the calling thread makes while
-    the block runs, by wrapping the gateway client's ``send_command``.
-    py4j's finalizer thread sends the releases of dropped JVM handles
-    through the same client at arbitrary times; those are not counted."""
-
-    def __init__(self, spark):
-        self.client = spark.sparkContext._gateway._gateway_client
-        self.n = 0
-
-    def __enter__(self):
-        inner = self.inner = self.client.send_command
-        caller = threading.get_ident()
-
-        def send_command(*args, **kwargs):
-            if threading.get_ident() == caller:
-                self.n += 1
-            return inner(*args, **kwargs)
-
-        self.client.send_command = send_command
-        return self
-
-    def __exit__(self, *exc):
-        self.client.send_command = self.inner
-
-
-def test_driver_read_lookups_run_one_job(spark, cluster, read_path):
+def test_driver_read_lookups_run_one_job(spark, cluster, read_path, py4j_calls):
     """Every cdx-server request shape of the benchmark, served from a
     block set read on the driver, runs at most one Spark job with no
     Exchange in its plan (the one-partition local relation satisfies
@@ -944,7 +917,7 @@ def test_driver_read_lookups_run_one_job(spark, cluster, read_path):
         "page": ("https://src1.example.org/", {"match_type": "domain", "page": 0}),
     }
     for kind, (url, params) in shapes.items():
-        with _Py4jCalls(spark) as calls:
+        with py4j_calls() as calls:
             df = cdx_query_zipnum(spark, d, url, **params)
         assert calls.n <= 80, (kind, calls.n)
         group = f"one_job_probe_{kind}"

@@ -47,13 +47,18 @@ def sql_double_array(vals: list[float]) -> str:
     return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
 
 
-def sql_isin(col: str, ids) -> Column:
-    """``col IN (ids)`` over integer ids as ONE parsed expression:
-    ``Column.isin`` costs one py4j round-trip per literal, and the
-    parsed form pushes down as the same ``In`` filter.  An empty list
-    is ``FALSE`` — ``IN ()`` does not parse."""
+def sql_in(col: str, ids) -> str:
+    """SQL text of ``col IN (ids)`` over integer ids.  An empty list is
+    ``FALSE`` — ``IN ()`` does not parse."""
     vals = ",".join(str(int(i)) for i in ids)
-    return F.expr(f"`{col}` IN ({vals})") if vals else F.lit(False)
+    return f"`{col}` IN ({vals})" if vals else "FALSE"
+
+
+def sql_isin(col: str, ids) -> Column:
+    """``col IN (ids)`` as ONE parsed expression: ``Column.isin`` costs
+    one py4j round-trip per literal, and the parsed form pushes down
+    as the same ``In`` filter."""
+    return F.expr(sql_in(col, ids))
 
 
 def require_finite(query_vecs: list[list[float]], op: str) -> None:
@@ -169,25 +174,45 @@ def cosine(a: Column, b: Column) -> Column:
     return dot / (na * nb)
 
 
+def _spark_dec_dot(a: str, b: str) -> str:
+    """Spark SQL text of ``_dec_dot(a, b)``."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (l, r) -> "
+        f"CAST(CAST(l AS DOUBLE) * CAST(r AS DOUBLE) AS {DEC})), "
+        f"CAST(0 AS {DEC}), (acc, v) -> CAST(acc + v AS {DEC}))"
+    )
+
+
+def _spark_hround6(x: str) -> str:
+    """Spark SQL text of ``hround(x, 6)``."""
+    return (
+        f"CAST(FLOOR(CAST(({x}) AS DOUBLE) * 1000000.0D + 0.5D) AS DOUBLE)"
+        " / 1000000.0D"
+    )
+
+
 def spark_cosine6_sql(a: str, b: str) -> str:
     """Spark SQL text of ``hround(cosine(a, b), 6)`` over two array
     columns: the same expression tree, so the same doubles, from one
     parse.  Built from Columns it is ~540 py4j round-trips."""
-
-    def dot(x: str, y: str) -> str:
-        return (
-            f"aggregate(zip_with({x}, {y}, (l, r) -> "
-            f"CAST(CAST(l AS DOUBLE) * CAST(r AS DOUBLE) AS {DEC})), "
-            f"CAST(0 AS {DEC}), (acc, v) -> CAST(acc + v AS {DEC}))"
-        )
-
-    cos = (
-        f"CAST({dot(a, b)} AS DOUBLE) / (SQRT(CAST({dot(a, a)} AS DOUBLE)) "
-        f"* SQRT(CAST({dot(b, b)} AS DOUBLE)))"
+    return _spark_hround6(
+        f"CAST({_spark_dec_dot(a, b)} AS DOUBLE) / "
+        f"(SQRT(CAST({_spark_dec_dot(a, a)} AS DOUBLE)) "
+        f"* SQRT(CAST({_spark_dec_dot(b, b)} AS DOUBLE)))"
     )
-    return (
-        f"CAST(FLOOR(CAST(({cos}) AS DOUBLE) * 1000000.0D + 0.5D) AS DOUBLE)"
-        " / 1000000.0D"
+
+
+def spark_dot6_sql(a: str, b: str) -> str:
+    """Spark SQL text of ``dot6(a, b)`` (same tree, same doubles)."""
+    return _spark_hround6(f"CAST({_spark_dec_dot(a, b)} AS DOUBLE)")
+
+
+def spark_sqdist6_sql(a: str, b: str) -> str:
+    """Spark SQL text of ``sqdist6(a, b)`` (same tree, same doubles)."""
+    d = "(CAST(l AS DOUBLE) - CAST(r AS DOUBLE))"
+    return _spark_hround6(
+        f"aggregate(zip_with({a}, {b}, (l, r) -> {d} * {d}), 0.0D, "
+        f"(acc, v) -> acc + v)"
     )
 
 

@@ -27,13 +27,28 @@ O(corpus × nprobe / n_cents) scan bytes with zero shuffles.
 from __future__ import annotations
 
 import json
+import math
 import posixpath
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.similarity import require_finite
+from ..operators.similarity import (
+    ivf_probe_cells,
+    py_sqdist6,
+    require_finite,
+    residual_adc_expr,
+    residual_query_tables,
+    spark_cosine6_sql,
+    spark_dot6_sql,
+    spark_sqdist6_sql,
+    sql_double_array,
+    sql_in,
+)
+from ..sqltext import sql_ident
 from .zipnum import _fs_for, _join, local_frame
 
 _CENTROIDS = "centroids.json"
@@ -211,9 +226,7 @@ def _exclude_ids(
     if not tombs:
         return df
     if len(tombs) <= TOMBSTONE_ISIN_MAX:
-        from ..operators.similarity import sql_isin
-
-        return df.filter(~sql_isin(id_col, sorted(tombs)))
+        return df.filter(f"NOT {sql_in(id_col, sorted(tombs))}")
     import warnings
 
     warnings.warn(
@@ -433,9 +446,7 @@ def append_ivfsq_index(
     fixed = {id_col, "cell", "scale", "q"}
     attrs = [
         c
-        for c in embeddings.sparkSession.read.parquet(
-            _join(store, "sq")
-        ).schema.names
+        for c in _store_scan(embeddings.sparkSession, store, "sq").schema.names
         if c not in fixed
     ]
     (
@@ -450,107 +461,6 @@ def append_ivfsq_index(
         .write.partitionBy("cell")
         .mode("append")
         .parquet(_join(store, "sq"))
-    )
-
-
-def ivfsq_index_probe_topk(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    exclude_id: int | None = None,
-    where: str | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k from the SQ8 store: partition pruning to the nprobe
-    ``cell=`` directories (FAISS inverted-list skip), map-side
-    dequantize ``q·scale/127`` + 6dp cosine against the inlined query
-    literal, TakeOrderedAndProject — zero shuffles, ~4× fewer scan
-    bytes than the flat store at a small recall cost.  Tombstones
-    (root-level) and the CURRENT pointer behave exactly like the
-    sibling probes (one resolve per request); ``where`` filters on
-    stored attribute columns (``write_ivfsq_index(attrs=...)``)
-    BEFORE top-k, pushed into the pruned scan."""
-    out = _ivfsq_scored_frame(
-        spark, out_dir, qv, nprobe=nprobe, exclude_id=exclude_id,
-        where=where, id_col=id_col,
-    )
-    return out.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
-
-
-def _ivfsq_scored_frame(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    *,
-    nprobe: int,
-    exclude_id: int | None,
-    where: str | None,
-    id_col: str,
-) -> DataFrame:
-    """Shared SQ8 probe body: pruned ``cell=`` scan → tombstone/attr
-    filters → dequantized 6dp cosine.  Both the top-k probe and the
-    range probe rank THIS frame, so the two serving modes can never
-    score a vector differently."""
-    from ..operators.similarity import (
-        cosine,
-        ivf_probe_cells,
-        lit_double_array,
-    )
-    from ..queries.helpers import hround
-
-    require_finite([qv], "ivfsq_index_probe")
-    store = resolve_store(out_dir)
-    cents = read_ivf_centroids(store)
-    probe = ivf_probe_cells(cents, qv, nprobe)
-    df = _store_scan(spark, store, "sq").filter(
-        F.col("cell").isin(probe)
-    )
-    if exclude_id is not None:
-        df = df.filter(F.col(id_col) != exclude_id)
-    if where is not None:
-        df = df.filter(where)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    deq = F.transform(
-        F.col("q"),
-        lambda v: v.cast("double") * F.col("scale") / F.lit(127.0),
-    )
-    return df.select(
-        F.col(id_col),
-        F.col("cell"),
-        hround(cosine(deq, lit_double_array(qv)), 6).alias("cos_sim"),
-    )
-
-
-def ivfsq_index_probe_range(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    radius: float,
-    *,
-    nprobe: int = 2,
-    exclude_id: int | None = None,
-    where: str | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """RANGE search over the SQ8 store (FAISS
-    ``IndexIVFScalarQuantizer.range_search`` semantics): every stored
-    vector in the probed cells whose DEQUANTIZED cosine similarity is
-    ``>= radius`` — no k, the result size is data-dependent.  Same
-    pruned scan / tombstone / ``where`` path as the top-k probe (one
-    shared scored frame); the radius cut applies to the 6dp-rounded
-    score so Spark and the DuckDB twin agree at the boundary.  FAISS
-    returns range hits unordered; we order by (sim DESC, id) for
-    determinism.  Plan: pruned FileScan → map-side score → filter →
-    sort, zero joins, one final ordering exchange."""
-    out = _ivfsq_scored_frame(
-        spark, out_dir, qv, nprobe=nprobe, exclude_id=exclude_id,
-        where=where, id_col=id_col,
-    )
-    return out.filter(F.col("cos_sim") >= radius).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
     )
 
 
@@ -687,192 +597,6 @@ def stream_append_batch(
     _record_applied_batch(path, _applied_batches(path) | {key})
     _publish_store_version(root, name)
     return True
-
-
-def ivfsq_index_probe_batch_topk(
-    spark: SparkSession,
-    out_dir: str,
-    query_vecs: list[list[float]],
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    exclude_ids: list[int | None] | None = None,
-    wheres: list[str | None] | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Batch serving over the SQ8 store — completes the batch parity
-    across all three payload layouts (flat / SQ8 / PQ): one ``sq``
-    scan pruned to the UNION of the requests' probe cells, per-row
-    dequantize ``q·scale/127`` ONCE (shared by every request's arm),
-    per-request 6dp cosine against the inlined query literal (struct
-    fan-out, NULL = not this request's cell / filtered), per-request
-    top-k via one ``request_no`` window — the plan's only Exchange.
-    ``wheres`` carries per-request attribute predicates exactly like
-    the flat batch (uniform predicate pushes scan-side).  Each
-    request's rows hash-match its one-at-a-time
-    ``ivfsq_index_probe_topk``."""
-    from ..operators.similarity import (
-        cosine,
-        ivf_probe_cells,
-        lit_double_array,
-    )
-    from ..queries.helpers import hround
-
-    if not query_vecs:
-        raise ValueError("probe batch needs at least one query vector")
-    require_finite(query_vecs, "ivfsq_index_probe_batch_topk")
-    excl = exclude_ids or [None] * len(query_vecs)
-    if len(excl) != len(query_vecs):
-        raise ValueError("exclude_ids must align with query_vecs")
-    whs = wheres or [None] * len(query_vecs)
-    if len(whs) != len(query_vecs):
-        raise ValueError("wheres must align with query_vecs")
-    store = resolve_store(out_dir)
-    cents = read_ivf_centroids(store)
-    probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
-    union_cells = sorted({c for p in probes for c in p})
-
-    df = _store_scan(spark, store, "sq").filter(
-        F.col("cell").isin(union_cells)
-    )
-    if whs[0] is not None and all(w == whs[0] for w in whs):
-        df = df.filter(whs[0])
-        whs = [None] * len(query_vecs)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    deq = F.transform(
-        F.col("q"),
-        lambda v: v.cast("double") * F.col("scale") / F.lit(127.0),
-    )
-    df = df.withColumn("__deq", deq)
-    entries = []
-    for i, qv in enumerate(query_vecs):
-        member = F.col("cell").isin(sorted(probes[i]))
-        if excl[i] is not None:
-            member = member & (F.col(id_col) != int(excl[i]))
-        if whs[i] is not None:
-            member = member & F.expr(whs[i])
-        sim = hround(cosine(F.col("__deq"), lit_double_array(qv)), 6)
-        entries.append(
-            F.struct(
-                F.lit(i).alias("request_no"),
-                F.when(member, sim).alias("cos_sim"),
-            )
-        )
-    hits = (
-        df.select(
-            F.col(id_col),
-            F.col("cell"),
-            F.explode(F.array(*entries)).alias("e"),
-        )
-        .select(
-            F.col("e.request_no").alias("request_no"),
-            F.col(id_col),
-            F.col("cell"),
-            F.col("e.cos_sim").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("request_no").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("request_no", id_col, "cell", "cos_sim")
-    )
-
-
-def ivfsq_index_probe_batch_range(
-    spark: SparkSession,
-    out_dir: str,
-    query_vecs: list[list[float]],
-    radii: list[float],
-    *,
-    nprobe: int = 2,
-    exclude_ids: list[int | None] | None = None,
-    wheres: list[str | None] | None = None,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Batch RANGE serving over the SQ8 store — the last cell of the
-    layout × mode serving matrix (flat/SQ8/PQ, single/batch,
-    top-k/range): one union-pruned ``sq`` scan, per-row dequantize
-    ONCE shared by every request's arm, per-request radius floors on
-    the dequantized 6dp cosine applied map-side in the struct arms —
-    no window (range needs no per-request top-k), one output-ordering
-    exchange, ~4× fewer scan bytes than the flat batch.  Each
-    request's rows hash-match its one-at-a-time
-    ``ivfsq_index_probe_range``."""
-    from ..operators.similarity import (
-        cosine,
-        ivf_probe_cells,
-        lit_double_array,
-    )
-    from ..queries.helpers import hround
-
-    if not query_vecs:
-        raise ValueError("probe batch needs at least one query vector")
-    require_finite(query_vecs, "ivfsq_index_probe_batch_range")
-    if len(radii) != len(query_vecs):
-        raise ValueError("radii must align with query_vecs")
-    excl = exclude_ids or [None] * len(query_vecs)
-    if len(excl) != len(query_vecs):
-        raise ValueError("exclude_ids must align with query_vecs")
-    whs = wheres or [None] * len(query_vecs)
-    if len(whs) != len(query_vecs):
-        raise ValueError("wheres must align with query_vecs")
-    store = resolve_store(out_dir)
-    cents = read_ivf_centroids(store)
-    probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
-    union_cells = sorted({c for p in probes for c in p})
-
-    df = _store_scan(spark, store, "sq").filter(
-        F.col("cell").isin(union_cells)
-    )
-    if whs[0] is not None and all(w == whs[0] for w in whs):
-        df = df.filter(whs[0])
-        whs = [None] * len(query_vecs)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    deq = F.transform(
-        F.col("q"),
-        lambda v: v.cast("double") * F.col("scale") / F.lit(127.0),
-    )
-    df = df.withColumn("__deq", deq)
-    entries = []
-    for i, qv in enumerate(query_vecs):
-        member = F.col("cell").isin(sorted(probes[i]))
-        if excl[i] is not None:
-            member = member & (F.col(id_col) != int(excl[i]))
-        if whs[i] is not None:
-            member = member & F.expr(whs[i])
-        sim = hround(cosine(F.col("__deq"), lit_double_array(qv)), 6)
-        member = member & (sim >= F.lit(float(radii[i])))
-        entries.append(
-            F.struct(
-                F.lit(i).alias("request_no"),
-                F.when(member, sim).alias("cos_sim"),
-            )
-        )
-    return (
-        df.select(
-            F.col(id_col),
-            F.col("cell"),
-            F.explode(F.array(*entries)).alias("e"),
-        )
-        .select(
-            F.col("e.request_no").alias("request_no"),
-            F.col(id_col),
-            F.col("cell"),
-            F.col("e.cos_sim").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-        .orderBy(
-            F.col("request_no").asc(),
-            F.col("cos_sim").desc(),
-            F.col(id_col).asc(),
-        )
-    )
 
 
 def write_ivf_index_versioned(
@@ -1481,6 +1205,489 @@ def _opq_rotate_query(meta: dict, qv: list[float]) -> list[float]:
     return py_rotate(qv, u, householder_k(u))
 
 
+def read_ivf_centroids(out_dir: str) -> dict[int, list[float]]:
+    fs, local = _fs_for(resolve_store(out_dir))
+    with fs.open_input_stream(
+        _join(local, _CENTROIDS), compression=None
+    ) as fh:
+        raw = json.loads(fh.read().decode())
+    return {int(c): v for c, v in raw.items()}
+
+
+# ---------------------------------------------------------------------------
+# Probes: one kernel for every layout (flat, SQ8, PQ), single and batch,
+# top-k and range, with or without the refine stage
+# ---------------------------------------------------------------------------
+
+#: the symmetric-SQ payload's dequantized vector ``q·scale/127``
+#: (exact-IEEE, the oracle twin) — the SQ8 store and the int8 refine
+#: sidecar store the same ``_int8_frame`` form
+_DEQ = "transform(q, v -> CAST(v AS DOUBLE) * scale / 127.0D)"
+
+#: flat-store metric → (score column, descending?, score SQL).  FAISS
+#: METRIC_* parity on the query side: cosine and inner product rank
+#: descending, squared L2 ascending.
+_METRICS = {
+    "cosine": ("cos_sim", True, spark_cosine6_sql),
+    "ip": ("dot", True, spark_dot6_sql),
+    "l2": ("sq_dist", False, spark_sqdist6_sql),
+}
+
+
+class _Layout(NamedTuple):
+    """What one store layout supplies to the probe kernel, bound to the
+    model it read; scan, fan-out and select are the kernel's."""
+
+    sub: str  # payload subdirectory
+    score: tuple[str, bool]  # score column, descending?
+    cells: Callable[[list[float], int], list[int]]  # driver-side ranking
+    sql: Callable[[list[float]], str]  # a query's score as SQL text
+    rotate: Callable[[list[float]], list[float]] = lambda q: q
+    prep: str | None = None  # payload vector, projected once as __v
+    meta: dict | None = None  # pq.json
+
+
+def _layout(store: str, kind: str, metric: str, vec_col: str) -> _Layout:
+    """Read ``store``'s model once and bind the ``kind`` layout to it.
+    The flat store serves any ``metric`` from whole vectors: its
+    coarse assignment stays the build-time cosine argmax, and recall
+    under another metric degrades with nprobe like any IVF probe."""
+    if kind == "pq":
+        cents, cbooks, meta = read_ivfpq_model(store)
+        return _Layout(
+            "codes",
+            ("approx_dist", False),
+            lambda q, n: sorted(cents, key=lambda c: (py_sqdist6(q, cents[c]), c))[:n],
+            lambda q: residual_adc_expr(residual_query_tables(cents, cbooks, q)),
+            rotate=lambda q: _opq_rotate_query(meta, q),
+            meta=meta,
+        )
+    cents = read_ivf_centroids(store)
+
+    def cells(q: list[float], n: int) -> list[int]:
+        return ivf_probe_cells(cents, q, n, metric=metric)
+
+    if kind == "sq":
+        return _Layout(
+            "sq",
+            ("cos_sim", True),
+            cells,
+            lambda q: spark_cosine6_sql("__v", sql_double_array(q)),
+            prep=_DEQ,
+        )
+    name, desc, score = _METRICS[metric]
+    vec = sql_ident(vec_col)
+    return _Layout(
+        "vectors", (name, desc), cells,
+        lambda q: score(vec, sql_double_array(q)),
+    )
+
+
+def _pruned(
+    df: DataFrame, scan: list[str], conds: list[list[str]]
+) -> tuple[DataFrame, list[list[str]]]:
+    """Filter ``df`` once by the ``scan`` conditions plus every
+    condition all requests share (pushed into the pruned FileScan);
+    returns the frame and the conditions each request still carries."""
+    shared = [c for c in conds[0] if all(c in ci for ci in conds)]
+    df = df.filter(" AND ".join(dict.fromkeys(scan + shared)))
+    return df, [[c for c in ci if c not in shared] for ci in conds]
+
+
+def _rank(
+    df: DataFrame,
+    own: list[list[str]],
+    scores: list[str],
+    score: tuple[str, bool],
+    keep: list[str],
+    *,
+    batch: bool,
+    k: int | None = None,
+    radii: list[float] | None = None,
+    prep: str | None = None,
+) -> DataFrame:
+    """Score each request as SQL text and select.  One request is a
+    plain projection; several fan each row out to the requests whose
+    own conditions it meets (``inline(filter(array(named_struct…)))``,
+    map-side).  Top-k is ``orderBy + limit`` (TakeOrderedAndProject)
+    for one request and one ``request_no`` ``row_number`` window for
+    several; range cuts each request at its radius and orders
+    (request_no, score, id)."""
+    name, desc = score
+    if prep is not None:
+        df = df.selectExpr("*", f"{prep} AS __v")
+    cols = [sql_ident(c) for c in keep]
+    out = (["request_no"] if batch else []) + keep + [name]
+    if len(scores) == 1:
+        hits = df.selectExpr(
+            *(["0 AS request_no"] if batch else []), *cols,
+            f"{scores[0]} AS {name}",
+        )
+    else:
+        arms = ",".join(
+            f"named_struct('request_no', {i}, '{name}', "
+            + (f"CASE WHEN {' AND '.join(c)} THEN {s} END)" if c else f"{s})")
+            for i, (c, s) in enumerate(zip(own, scores))
+        )
+        hits = df.selectExpr(
+            *cols, f"inline(filter(array({arms}), s -> s.{name} IS NOT NULL))"
+        ).select(*out)
+    order = [name, keep[0]]
+    if radii is None and len(scores) == 1:
+        return hits.orderBy(order, ascending=[not desc, True]).limit(k)
+    if radii is None:
+        rank = f"{name} {'DESC' if desc else 'ASC'}, {cols[0]}"
+        return (
+            hits.selectExpr(
+                "*",
+                f"row_number() OVER (PARTITION BY request_no ORDER BY {rank}) AS __rn",
+            )
+            .filter(f"__rn <= {int(k)}")
+            .select(*out)
+        )
+    if len(radii) == 1:
+        bound = f"{float(radii[0])!r}D"
+    else:
+        bound = "CASE request_no " + " ".join(
+            f"WHEN {i} THEN {float(r)!r}D" for i, r in enumerate(radii)
+        ) + " END"
+    order = (["request_no"] if batch else []) + order
+    return hits.filter(f"{name} {'>=' if desc else '<='} {bound}").orderBy(
+        order, ascending=[True] * (len(order) - 2) + [not desc, True]
+    )
+
+
+def _refine(
+    spark: SparkSession,
+    store: str,
+    kind: str | None,
+    cand: DataFrame,
+    qvs: list[list[float]],
+    src: DataFrame | None,
+    *,
+    k: int,
+    batch: bool,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The refine step over collected ADC candidates: ONE scan of the
+    store's refine sidecar pruned to the candidates' cells plus a
+    pushed-down id ``IN`` (or of ``src``, an external vector frame, by
+    id), re-ranked by exact 6dp cosine — on the raw vectors for a flat
+    sidecar, on ``q·scale/127`` for int8 — through the kernel's
+    select."""
+    per: list[list[int]] = [[] for _ in qvs]
+    cells: set[int] = set()
+    for r in cand.collect():
+        per[r["request_no"]].append(int(r[id_col]))
+        cells.add(int(r["cell"]))
+    scan = [sql_in(id_col, sorted({i for p in per for i in p}))]
+    prep = None
+    if src is None:
+        src = _store_scan(spark, store, "refine")
+        scan.insert(0, sql_in("cell", sorted(cells)))
+        prep = _DEQ if kind == "int8" else None
+    vec = "__v" if prep else sql_ident(vec_col)
+    df, own = _pruned(src, scan, [[sql_in(id_col, sorted(p))] for p in per])
+    return _rank(
+        df, own, [spark_cosine6_sql(vec, sql_double_array(q)) for q in qvs],
+        ("cos_sim", True), [id_col], batch=batch, k=k, prep=prep,
+    )
+
+
+def _probe(
+    spark: SparkSession,
+    out_dir: str,
+    kind: str,
+    qvs: list[list[float]],
+    *,
+    op: str,
+    batch: bool,
+    nprobe: int,
+    k: int | None = None,
+    radii: list[float] | None = None,
+    exclude_ids: list[int | None] | None = None,
+    wheres: list[str | None] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    metric: str = "cosine",
+    refine: tuple[int, DataFrame | None] | None = None,
+) -> DataFrame:
+    """The probe kernel behind every public probe (generate candidates
+    → verify → select; only the select step differs between top-k
+    ``k`` and range ``radii``).
+
+    1. Validate once: a non-empty batch, aligned per-request lists,
+       finite query vectors and radii (a ``ValueError`` naming the
+       request).
+    2. Resolve ``CURRENT`` once and read the model once, so model and
+       data come from the SAME version even if a swap lands mid-call;
+       OPQ stores rotate each query with the stored reflector.
+    3. One payload scan pruned to the union of the requests' probe
+       cells (partition pruning = the FAISS inverted-list skip); a
+       condition every request shares (cells, exclusion, ``where``)
+       is pushed into it, tombstones (read from the ROOT, where they
+       span versions) are excluded scan-side.
+    4. Score and select (``_rank``).  ``refine = (k_factor, src)``
+       over-fetches ``k·k_factor`` ADC candidates and re-ranks them
+       (``_refine``) from the same store and model."""
+    n = len(qvs)
+    if not n:
+        raise ValueError("probe batch needs at least one query vector")
+    excl, whs = exclude_ids or [None] * n, wheres or [None] * n
+    for name, vals in (("radii", radii), ("exclude_ids", excl), ("wheres", whs)):
+        if vals is not None and len(vals) != n:
+            raise ValueError(f"{name} must align with query_vecs")
+    if metric not in _METRICS:
+        raise ValueError(f"unknown metric {metric!r}")
+    require_finite(qvs, op)
+    for i, r in enumerate(radii or ()):
+        if not math.isfinite(float(r)):
+            raise ValueError(f"{op}: request {i} has a non-finite radius ({r!r})")
+    store = resolve_store(out_dir)
+    lay = _layout(store, kind, metric, vec_col)
+    if refine is not None and refine[1] is None and not lay.meta.get("refine"):
+        raise ValueError(
+            f"store {store!r} has no refine sidecar — rebuild with "
+            f"write_ivfpq_index(refine='flat'|'int8') or pass "
+            f"vectors_src explicitly"
+        )
+    rot = [lay.rotate(q) for q in qvs]
+    cells = [sorted(lay.cells(q, nprobe)) for q in rot]
+    idc = sql_ident(id_col)
+    df, own = _pruned(
+        _store_scan(spark, store, lay.sub),
+        [sql_in("cell", sorted({c for cs in cells for c in cs}))],
+        [
+            [sql_in("cell", cs)]
+            + ([] if x is None else [f"{idc} <> {int(x)}"])
+            + ([] if w is None else [f"({w})"])
+            for cs, x, w in zip(cells, excl, whs)
+        ],
+    )
+    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
+    scores = [lay.sql(q) for q in rot]
+    if refine is None:
+        return _rank(
+            df, own, scores, lay.score, [id_col, "cell"], batch=batch, k=k,
+            radii=radii, prep=lay.prep,
+        )
+    k_factor, src = refine
+    cand = _rank(
+        df, own, scores, lay.score, [id_col, "cell"], batch=True,
+        k=k * k_factor,
+    )
+    # an OPQ sidecar holds ROTATED vectors; an external source does not
+    return _refine(
+        spark, store, lay.meta.get("refine"), cand,
+        rot if src is None else qvs, src, k=k, batch=batch, id_col=id_col,
+        vec_col=vec_col,
+    )
+
+
+def ivf_index_probe_topk(
+    spark: SparkSession,
+    out_dir: str,
+    qv: list[float],
+    *,
+    k: int = 10,
+    nprobe: int = 2,
+    exclude_id: int | None = None,
+    where: str | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    metric: str = "cosine",
+) -> DataFrame:
+    """Top-k neighbors from the STORED flat index: rank the probe cells
+    on the driver (quantizer-sized math), then scan ONLY those
+    ``cell=`` directories — partition pruning does the inverted-list
+    skip, no assignment recompute, no shuffle, top-k as
+    TakeOrderedAndProject.
+
+    ``where`` (FAISS IDSelector / filtered vector search) is a SQL
+    predicate over the store's ATTRIBUTE columns (any extra column of
+    the frame ``write_ivf_index`` was given rides the store rows, e.g.
+    ``"label = 2"``).  It applies BEFORE top-k, pushed into the pruned
+    FileScan, so k SURVIVORS are returned with recall intact.
+
+    ``metric`` (FAISS METRIC_INNER_PRODUCT / METRIC_L2 parity):
+    ``cosine`` (default, ``cos_sim`` DESC), ``ip`` (``dot`` DESC),
+    ``l2`` (``sq_dist`` ASC); it selects both the probe-cell ranking
+    and the score."""
+    return _probe(
+        spark, out_dir, "flat", [qv], op="ivf_index_probe_topk", batch=False,
+        nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
+        id_col=id_col, vec_col=vec_col, metric=metric,
+    )
+
+
+def ivf_index_probe_range(
+    spark: SparkSession,
+    out_dir: str,
+    qv: list[float],
+    radius: float,
+    *,
+    nprobe: int = 2,
+    exclude_id: int | None = None,
+    where: str | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    metric: str = "cosine",
+) -> DataFrame:
+    """RANGE search over the flat store (FAISS ``range_search``): every
+    stored vector in the probed cells past the radius — no k, the
+    result size is data-dependent.  Same pruned scan, tombstones and
+    pushed ``where`` as the top-k probe; the cut applies to the
+    6dp-rounded score (engine-portable boundary): ``score >= radius``
+    under ``cosine``/``ip``, ``sq_dist <= radius`` under ``l2``.
+    Ordered (score, id) for determinism — one ordering exchange."""
+    return _probe(
+        spark, out_dir, "flat", [qv], op="ivf_index_probe_range",
+        batch=False, nprobe=nprobe, radii=[radius], exclude_ids=[exclude_id],
+        wheres=[where], id_col=id_col, vec_col=vec_col, metric=metric,
+    )
+
+
+def ivf_index_probe_batch_topk(
+    spark: SparkSession,
+    out_dir: str,
+    query_vecs: list[list[float]],
+    *,
+    k: int = 10,
+    nprobe: int = 2,
+    exclude_ids: list[int | None] | None = None,
+    wheres: list[str | None] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Batch serving over the flat store: one vectors scan pruned to
+    the UNION of the requests' probe cells, per-request 6dp cosine in
+    map-side struct arms, per-request top-k via one ``request_no``
+    window — the plan's only Exchange.  ``wheres`` carries a
+    per-request attribute predicate inside its arm; a predicate shared
+    by EVERY request is pushed scan-side instead.  Each request's rows
+    hash-match its one-at-a-time ``ivf_index_probe_topk``."""
+    return _probe(
+        spark, out_dir, "flat", query_vecs, op="ivf_index_probe_batch_topk",
+        batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,
+        wheres=wheres, id_col=id_col, vec_col=vec_col,
+    )
+
+
+def ivf_index_probe_batch_range(
+    spark: SparkSession,
+    out_dir: str,
+    query_vecs: list[list[float]],
+    radii: list[float],
+    *,
+    nprobe: int = 2,
+    exclude_ids: list[int | None] | None = None,
+    wheres: list[str | None] | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Batch RANGE serving over the flat store: N (query, radius)
+    requests from ONE union-pruned vectors scan, each request's radius
+    cut map-side.  Range needs no per-request top-k, so there is NO
+    window — the only exchange is the final output ordering.  Each
+    request's rows hash-match its ``ivf_index_probe_range`` answer."""
+    return _probe(
+        spark, out_dir, "flat", query_vecs, op="ivf_index_probe_batch_range",
+        batch=True, nprobe=nprobe, radii=radii, exclude_ids=exclude_ids,
+        wheres=wheres, id_col=id_col, vec_col=vec_col,
+    )
+
+
+def ivfsq_index_probe_topk(
+    spark: SparkSession,
+    out_dir: str,
+    qv: list[float],
+    *,
+    k: int = 10,
+    nprobe: int = 2,
+    exclude_id: int | None = None,
+    where: str | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Top-k from the SQ8 store: partition pruning to the nprobe
+    ``cell=`` directories, map-side dequantize ``q·scale/127`` + 6dp
+    cosine, TakeOrderedAndProject — zero shuffles, ~4× fewer scan
+    bytes than the flat store at a small recall cost.  ``where``
+    filters on stored attribute columns
+    (``write_ivfsq_index(attrs=...)``) BEFORE top-k, in the scan."""
+    return _probe(
+        spark, out_dir, "sq", [qv], op="ivfsq_index_probe_topk", batch=False,
+        nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
+        id_col=id_col,
+    )
+
+
+def ivfsq_index_probe_range(
+    spark: SparkSession,
+    out_dir: str,
+    qv: list[float],
+    radius: float,
+    *,
+    nprobe: int = 2,
+    exclude_id: int | None = None,
+    where: str | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """RANGE search over the SQ8 store (FAISS
+    ``IndexIVFScalarQuantizer.range_search``): every stored vector in
+    the probed cells whose DEQUANTIZED 6dp cosine is ``>= radius``,
+    ordered (sim DESC, id) — one ordering exchange."""
+    return _probe(
+        spark, out_dir, "sq", [qv], op="ivfsq_index_probe_range",
+        batch=False, nprobe=nprobe, radii=[radius], exclude_ids=[exclude_id],
+        wheres=[where], id_col=id_col,
+    )
+
+
+def ivfsq_index_probe_batch_topk(
+    spark: SparkSession,
+    out_dir: str,
+    query_vecs: list[list[float]],
+    *,
+    k: int = 10,
+    nprobe: int = 2,
+    exclude_ids: list[int | None] | None = None,
+    wheres: list[str | None] | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Batch serving over the SQ8 store: one union-pruned ``sq`` scan,
+    the dequantize projected ONCE and shared by every request's arm,
+    per-request top-k via one ``request_no`` window.  Each request's
+    rows hash-match its one-at-a-time ``ivfsq_index_probe_topk``."""
+    return _probe(
+        spark, out_dir, "sq", query_vecs, op="ivfsq_index_probe_batch_topk",
+        batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,
+        wheres=wheres, id_col=id_col,
+    )
+
+
+def ivfsq_index_probe_batch_range(
+    spark: SparkSession,
+    out_dir: str,
+    query_vecs: list[list[float]],
+    radii: list[float],
+    *,
+    nprobe: int = 2,
+    exclude_ids: list[int | None] | None = None,
+    wheres: list[str | None] | None = None,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Batch RANGE serving over the SQ8 store: one union-pruned ``sq``
+    scan, per-request radius floors on the dequantized 6dp cosine, no
+    window, one output-ordering exchange.  Each request's rows
+    hash-match its one-at-a-time ``ivfsq_index_probe_range``."""
+    return _probe(
+        spark, out_dir, "sq", query_vecs, op="ivfsq_index_probe_batch_range",
+        batch=True, nprobe=nprobe, radii=radii, exclude_ids=exclude_ids,
+        wheres=wheres, id_col=id_col,
+    )
+
+
 def ivfpq_index_probe_topk(
     spark: SparkSession,
     out_dir: str,
@@ -1491,76 +1698,18 @@ def ivfpq_index_probe_topk(
     exclude_id: int | None = None,
     where: str | None = None,
     id_col: str = "vec_id",
-    _store: str | None = None,
-    _rotated: bool = False,
-    _model: tuple | None = None,
 ) -> DataFrame:
     """Top-k approximate neighbors from the PQ-coded store: rank probe
-    cells driver-side (quantizer math), scan ONLY those ``cell=``
-    directories — and the scan reads CODES, not vectors (the 16-32×
-    byte saving is the whole point; plan-asserted: ReadSchema carries
-    ``j0..``, no embedding column exists to read) — then the ADC
-    literal-table sum ranks rows map-side.  Zero shuffles,
-    TakeOrderedAndProject.  Honors tombstones like the flat probe.
-    ``where`` filters on stored attribute columns (built with
-    ``write_ivfpq_index(attrs=...)``) BEFORE top-k, pushed into the
-    pruned scan — see ``ivf_index_probe_topk``.
-
-    The CURRENT pointer resolves ONCE (``_store`` lets a composing
-    caller pin the version): model and data must come from the SAME
-    version or a concurrent pointer swap could pair v1 centroids with
-    v2 partitions — silently wrong cells.  Tombstones read from the
-    ROOT, where they span versions."""
-    out = _ivfpq_scored_frame(
-        spark, out_dir, qv, nprobe=nprobe, exclude_id=exclude_id,
-        where=where, id_col=id_col, _store=_store, _rotated=_rotated,
-        _model=_model,
-    )
-    return out.orderBy(F.col("approx_dist").asc(), F.col(id_col).asc()).limit(k)
-
-
-def _ivfpq_scored_frame(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    *,
-    nprobe: int,
-    exclude_id: int | None,
-    where: str | None,
-    id_col: str,
-    _store: str | None,
-    _rotated: bool,
-    _model: tuple | None = None,
-) -> DataFrame:
-    """Shared PQ-store probe body: pruned CODES scan → tombstone/attr
-    filters → map-side ADC distance.  The top-k and range probes both
-    rank THIS frame — one scoring path for both serving modes.
-    ``_model`` lets a composing caller that already read the pinned
-    version's model (for query rotation) hand it through instead of
-    paying a second pq.json + codebook parse per request."""
-    from ..operators.similarity import (
-        py_sqdist6,
-        residual_adc_expr,
-        residual_query_tables,
-    )
-
-    require_finite([qv], "ivfpq_index_probe")
-    store = _store or resolve_store(out_dir)
-    cents, cbooks, _meta = _model or read_ivfpq_model(store)
-    if not _rotated:
-        qv = _opq_rotate_query(_meta, qv)
-    probe = sorted(cents, key=lambda c: (py_sqdist6(qv, cents[c]), c))[:nprobe]
-    qd_sql = residual_query_tables(cents, cbooks, qv)
-    df = _store_scan(spark, store, "codes").filter(
-        F.col("cell").isin(probe)
-    )
-    if exclude_id is not None:
-        df = df.filter(F.col(id_col) != exclude_id)
-    if where is not None:
-        df = df.filter(where)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    return df.selectExpr(
-        id_col, "cell", residual_adc_expr(qd_sql) + " AS approx_dist"
+    cells driver-side, scan ONLY those ``cell=`` directories — and the
+    scan reads CODES, not vectors (the 16-32× byte saving; ReadSchema
+    carries ``j0..``) — then the ADC literal-table sum ranks rows
+    map-side.  Zero shuffles, TakeOrderedAndProject.  ``where``
+    filters on stored attribute columns
+    (``write_ivfpq_index(attrs=...)``) BEFORE top-k, in the scan."""
+    return _probe(
+        spark, out_dir, "pq", [qv], op="ivfpq_index_probe_topk", batch=False,
+        nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
+        id_col=id_col,
     )
 
 
@@ -1577,20 +1726,12 @@ def ivfpq_index_probe_range(
 ) -> DataFrame:
     """RANGE search over the PQ-coded store (FAISS
     ``IndexIVFPQ.range_search``): every probed-cell code whose ADC
-    DISTANCE is ``<= radius`` — a distance threshold, matching
-    FAISS's L2-metric range semantics on quantized indexes, where the
-    cut applies to the approximate (ADC) distance the scan can
-    compute from codes alone.  Same pruned codes-only scan (no vector
-    bytes), tombstones, and pushed ``where`` as the top-k probe via
-    one shared scored frame; ordered (dist ASC, id) for determinism.
-    OPQ-preconditioned stores rotate the query with the stored
-    reflector exactly like top-k."""
-    out = _ivfpq_scored_frame(
-        spark, out_dir, qv, nprobe=nprobe, exclude_id=exclude_id,
-        where=where, id_col=id_col, _store=None, _rotated=False,
-    )
-    return out.filter(F.col("approx_dist") <= radius).orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
+    DISTANCE is ``<= radius`` (FAISS's L2 range semantics on quantized
+    indexes), from the same codes-only scan; ordered (dist ASC, id)."""
+    return _probe(
+        spark, out_dir, "pq", [qv], op="ivfpq_index_probe_range",
+        batch=False, nprobe=nprobe, radii=[radius], exclude_ids=[exclude_id],
+        wheres=[where], id_col=id_col,
     )
 
 
@@ -1604,103 +1745,20 @@ def ivfpq_index_probe_batch_topk(
     exclude_ids: list[int | None] | None = None,
     wheres: list[str | None] | None = None,
     id_col: str = "vec_id",
-    _store: str | None = None,
-    _rotated: bool = False,
-    _model: tuple | None = None,
 ) -> DataFrame:
     """N query vectors answered in ONE job over the PQ-coded store —
-    the FAISS batched ``search()`` / cc-index-server amortization
-    (``cdx_query_batch`` applied to vector search): a serving system
-    answers request BATCHES, not one driver-scheduled job per vector.
-
-    Plan, in order:
-
-    1. ONE codes scan whose partition filter is the UNION of every
-       request's probe cells — block IO is bounded by the union, not
-       N × nprobe directory reads re-opening shared cells
-       (plan-asserted: single FileScan, ``cell`` PartitionFilters).
-    2. Per-request ADC distances from the per-query literal lookup
-       tables (the ``cdx_query_batch`` CASE-chain slot): each row
-       emits a struct per request whose probe set contains the row's
-       cell — ``inline(filter(array(...)))``, map-side, built as ONE
-       SQL string (BASELINE.md: py4j Column-building cost).
-    3. Per-request top-k via ONE window over ``request_no`` — the
-       only shuffle in the plan, carrying k-bounded candidate rows
-       per (request, cell) rather than the corpus.
-
-    Exclusions (each request hiding its own query row) ride inside
-    the per-request arm; ``wheres`` adds a per-request ATTRIBUTE
-    predicate to the same arm (round 12 filtered search — columns
-    stored via ``write_ivfpq_index(attrs=...)``; a predicate shared
-    by every request is pushed scan-side instead); tombstones apply
-    once, scan-side, shared by every request.  Returns ``request_no``
-    (the position in ``query_vecs``) + the same columns as the single
-    probe, each request's rows hash-matching its one-at-a-time twin.
-    Pointer resolution happens once (see ``ivfpq_index_probe_topk``)."""
-    from ..operators.similarity import (
-        py_sqdist6,
-        residual_adc_expr,
-        residual_query_tables,
-    )
-
-    if not query_vecs:
-        raise ValueError("probe batch needs at least one query vector")
-    require_finite(query_vecs, "ivfpq_index_probe_batch_topk")
-    excl = exclude_ids or [None] * len(query_vecs)
-    if len(excl) != len(query_vecs):
-        raise ValueError("exclude_ids must align with query_vecs")
-    whs = wheres or [None] * len(query_vecs)
-    if len(whs) != len(query_vecs):
-        raise ValueError("wheres must align with query_vecs")
-    store = _store or resolve_store(out_dir)
-    cents, cbooks, _meta = _model or read_ivfpq_model(store)
-    if not _rotated:
-        query_vecs = [_opq_rotate_query(_meta, q) for q in query_vecs]
-
-    scan_where = None
-    if whs[0] is not None and all(w == whs[0] for w in whs):
-        scan_where, whs = whs[0], [None] * len(query_vecs)
-
-    union_cells: set[int] = set()
-    arms: list[str] = []
-    for i, qv in enumerate(query_vecs):
-        probe = sorted(
-            cents, key=lambda c: (py_sqdist6(qv, cents[c]), c)
-        )[:nprobe]
-        union_cells.update(probe)
-        adc = residual_adc_expr(residual_query_tables(cents, cbooks, qv))
-        cond = f"cell IN ({','.join(str(c) for c in probe)})"
-        if excl[i] is not None:
-            cond += f" AND {id_col} <> {int(excl[i])}"
-        if whs[i] is not None:
-            cond += f" AND ({whs[i]})"
-        arms.append(
-            f"named_struct('request_no', {i}, 'approx_dist', "
-            f"CASE WHEN {cond} THEN {adc} END)"
-        )
-
-    df = _store_scan(spark, store, "codes").filter(
-        F.col("cell").isin(sorted(union_cells))
-    )
-    if scan_where is not None:
-        df = df.filter(scan_where)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    hits = df.selectExpr(
-        id_col,
-        "cell",
-        "inline(filter(array("
-        + ",".join(arms)
-        + "), s -> s.approx_dist IS NOT NULL))",
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("request_no").orderBy(
-        F.col("approx_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("request_no", id_col, "cell", "approx_dist")
+    the FAISS batched ``search()`` (``cdx_query_batch`` applied to
+    vector search): ONE codes scan pruned to the UNION of the
+    requests' probe cells, per-request ADC distances in map-side
+    struct arms (exclusions and per-request ``wheres`` ride inside the
+    arm), per-request top-k via ONE ``request_no`` window — the only
+    shuffle.  Returns ``request_no`` (the position in ``query_vecs``)
+    + the single probe's columns, each request's rows hash-matching
+    its one-at-a-time twin."""
+    return _probe(
+        spark, out_dir, "pq", query_vecs, op="ivfpq_index_probe_batch_topk",
+        batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,
+        wheres=wheres, id_col=id_col,
     )
 
 
@@ -1716,201 +1774,13 @@ def ivfpq_index_probe_batch_range(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Batch RANGE serving over the PQ-coded store: N (query, radius)
-    requests from ONE union-pruned CODES scan, per-request ADC in the
-    struct arms, each request's DISTANCE ceiling applied map-side via
-    a request_no CASE — like the flat batch range there is NO window
-    (range needs no per-request top-k), so the only exchange is the
-    final output ordering, and no vector bytes are read.  Each
-    request's rows hash-match its one-at-a-time
-    ``ivfpq_index_probe_range`` answer; OPQ stores rotate every query
-    with the stored reflector."""
-    from ..operators.similarity import (
-        py_sqdist6,
-        residual_adc_expr,
-        residual_query_tables,
-    )
-
-    if not query_vecs:
-        raise ValueError("probe batch needs at least one query vector")
-    require_finite(query_vecs, "ivfpq_index_probe_batch_range")
-    if len(radii) != len(query_vecs):
-        raise ValueError("radii must align with query_vecs")
-    excl = exclude_ids or [None] * len(query_vecs)
-    if len(excl) != len(query_vecs):
-        raise ValueError("exclude_ids must align with query_vecs")
-    whs = wheres or [None] * len(query_vecs)
-    if len(whs) != len(query_vecs):
-        raise ValueError("wheres must align with query_vecs")
-    store = resolve_store(out_dir)
-    cents, cbooks, _meta = read_ivfpq_model(store)
-    query_vecs = [_opq_rotate_query(_meta, q) for q in query_vecs]
-
-    scan_where = None
-    if whs[0] is not None and all(w == whs[0] for w in whs):
-        scan_where, whs = whs[0], [None] * len(query_vecs)
-
-    union_cells: set[int] = set()
-    arms: list[str] = []
-    for i, qv in enumerate(query_vecs):
-        probe = sorted(
-            cents, key=lambda c: (py_sqdist6(qv, cents[c]), c)
-        )[:nprobe]
-        union_cells.update(probe)
-        adc = residual_adc_expr(residual_query_tables(cents, cbooks, qv))
-        cond = f"cell IN ({','.join(str(c) for c in probe)})"
-        if excl[i] is not None:
-            cond += f" AND {id_col} <> {int(excl[i])}"
-        if whs[i] is not None:
-            cond += f" AND ({whs[i]})"
-        arms.append(
-            f"named_struct('request_no', {i}, 'approx_dist', "
-            f"CASE WHEN {cond} THEN {adc} END)"
-        )
-
-    df = _store_scan(spark, store, "codes").filter(
-        F.col("cell").isin(sorted(union_cells))
-    )
-    if scan_where is not None:
-        df = df.filter(scan_where)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    hits = df.selectExpr(
-        id_col,
-        "cell",
-        "inline(filter(array("
-        + ",".join(arms)
-        + "), s -> s.approx_dist IS NOT NULL))",
-    )
-    cut = "CASE request_no " + " ".join(
-        f"WHEN {i} THEN {float(r)!r}D" for i, r in enumerate(radii)
-    ) + " END"
-    return (
-        hits.filter(F.expr(f"approx_dist <= {cut}"))
-        .select("request_no", id_col, "cell", "approx_dist")
-        .orderBy(
-            F.col("request_no").asc(),
-            F.col("approx_dist").asc(),
-            F.col(id_col).asc(),
-        )
-    )
-
-
-def _refine_source(
-    spark: SparkSession,
-    store: str,
-    cells: list[int],
-    ids: list[int],
-    id_col: str,
-    vec_col: str,
-):
-    """The refine sidecar scan + its vector expression, shared by the
-    single and batch refine paths so the dequantize algebra and the
-    no-sidecar error can never diverge: prune to the CANDIDATES' cells
-    + a pushed-down id In filter; flat sidecars re-rank on the raw
-    vectors, int8 on the dequantized ``q·scale/127`` (exact-IEEE,
-    oracle twin).  ``store`` is an already-resolved version path."""
-    from ..operators.similarity import sql_isin
-
-    kind = read_ivfpq_model(store)[2].get("refine")
-    if not kind:
-        raise ValueError(
-            f"store {store!r} has no refine sidecar — rebuild with "
-            f"write_ivfpq_index(refine='flat'|'int8') or pass "
-            f"vectors_src explicitly"
-        )
-    side = (
-        _store_scan(spark, store, "refine")
-        .filter(F.col("cell").isin(sorted(cells)))
-        # the candidate list is k·k_factor·N ids: one parsed IN, and
-        # FALSE when the probe returned no candidate
-        .filter(sql_isin(id_col, sorted(ids)))
-    )
-    if kind == "flat":
-        vec = F.col(vec_col)
-    else:  # int8: dequantize q·scale/127 (exact-IEEE, oracle twin)
-        vec = F.transform(
-            F.col("q"),
-            lambda v: v.cast("double") * F.col("scale") / F.lit(127.0),
-        )
-    return side, vec
-
-
-def ivfpq_refined_batch_topk(
-    spark: SparkSession,
-    out_dir: str,
-    query_vecs: list[list[float]],
-    *,
-    k: int = 10,
-    k_factor: int = 4,
-    nprobe: int = 3,
-    exclude_ids: list[int | None] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Batch serving COMPOSED with the refine stage — the full
-    production request path in two jobs for N queries: (1) the batch
-    ADC probe over-fetches ``k·k_factor`` candidates per request from
-    one union-of-cells pruned codes scan; (2) ONE sidecar scan, pruned
-    to the union of candidate cells + a pushed-down union-of-ids In
-    filter, re-ranks every (request, candidate) pair exactly — each
-    row fans out to the requests it is a candidate for via a struct
-    array (NULL cos_sim = not this request's candidate, filtered), and
-    per-request top-k is one ``request_no`` window.  Per-request rows
-    hash-match the one-at-a-time ``ivfpq_refined_topk`` loop: batching
-    changes the job count (2 vs 2·N), never the answer."""
-    from ..operators.similarity import cosine, lit_double_array, sql_isin
-    from ..queries.helpers import hround
-
-    require_finite(query_vecs, "ivfpq_refined_batch_topk")
-    # resolve the CURRENT pointer ONCE: the ADC probe and the refine
-    # sidecar must read the SAME version even if a swap lands mid-way
-    store = resolve_store(out_dir)
-    model = read_ivfpq_model(store)
-    query_vecs = [_opq_rotate_query(model[2], q) for q in query_vecs]
-    cand = ivfpq_index_probe_batch_topk(
-        spark, out_dir, query_vecs, k=k * k_factor, nprobe=nprobe,
-        exclude_ids=exclude_ids, id_col=id_col, _store=store,
-        _rotated=True, _model=model,
-    )
-    rows = cand.select("request_no", id_col, "cell").collect()
-    per_req: dict[int, list[int]] = {}
-    cells: set[int] = set()
-    all_ids: set[int] = set()
-    for r in rows:
-        per_req.setdefault(int(r["request_no"]), []).append(int(r[id_col]))
-        cells.add(int(r["cell"]))
-        all_ids.add(int(r[id_col]))
-    side, vec = _refine_source(
-        spark, store, sorted(cells), sorted(all_ids), id_col, vec_col
-    )
-    entries = []
-    for i, qv in enumerate(query_vecs):
-        ids_i = sorted(per_req.get(i, []))
-        sim = hround(cosine(vec, lit_double_array(qv)), 6)
-        member = sql_isin(id_col, ids_i)
-        entries.append(
-            F.struct(
-                F.lit(i).alias("request_no"),
-                F.when(member, sim).alias("cos_sim"),
-            )
-        )
-    hits = (
-        side.select(F.col(id_col), F.explode(F.array(*entries)).alias("e"))
-        .select(
-            F.col("e.request_no").alias("request_no"),
-            F.col(id_col),
-            F.col("e.cos_sim").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("request_no").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("request_no", id_col, "cos_sim")
+    requests from ONE union-pruned CODES scan, each request's ADC
+    ceiling applied map-side, no window, one output-ordering exchange.
+    Each request's rows hash-match its ``ivfpq_index_probe_range``."""
+    return _probe(
+        spark, out_dir, "pq", query_vecs, op="ivfpq_index_probe_batch_range",
+        batch=True, nprobe=nprobe, radii=radii, exclude_ids=exclude_ids,
+        wheres=wheres, id_col=id_col,
     )
 
 
@@ -1929,411 +1799,43 @@ def ivfpq_refined_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """REFINE stage over the PQ store — the FAISS IndexRefineFlat
-    serving pattern: the quantized ADC ranking is cheap but lossy, so
-    production probes over-fetch ``k × k_factor`` candidates from the
-    codes and re-rank just those with exact (or dequantized-int8)
-    distances.
+    pattern: over-fetch ``k × k_factor`` ADC candidates (tombstones and
+    ``where`` applied there, before the over-fetch), then re-rank just
+    those by exact (or dequantized-int8) 6dp cosine.
 
     ``vectors_src=None`` reads the STORE-RESIDENT refine sidecar
-    written by ``write_ivfpq_index(refine=...)`` — the deployment
-    default: the refine source ships with the index under the same
-    ``cell=`` hive layout, so re-ranking cannot be pointed at a stale
-    or mismatched corpus, and the sidecar scan prunes to the
-    CANDIDATES' cells + a pushed-down id In filter (plan-asserted:
-    only the candidate rows' files/row groups are touched).  Passing
-    a DataFrame re-ranks against that external vector source instead
-    (the pre-round-11 shape, kept for corpora indexed elsewhere).
-
-    Cost model at 100 TB: the ADC pass reads nprobe/n_cents of the
-    CODES bytes (the PQ saving); the refine pass touches exactly
-    ``k·k_factor`` vectors via a driver-sized id list inlined as a
-    pushed-down In filter — no join, no shuffle, two jobs total.
-    Accuracy: the output is by construction the exact-cosine order of
-    the candidate set, so refined recall can only match or beat the
-    raw ADC top-k (pinned in tests/test_scale.py).  Tombstones are
-    honored upstream: the candidate list comes from the probe, which
-    excludes them — a deleted id can never reach the re-rank.
-    ``where`` (round 12 filtered search) applies at the SAME place:
-    the candidate probe's pushed-down predicate runs before the
-    over-fetch, so the re-rank only ever sees k·k_factor
-    predicate-passing candidates — filtered refined top-k with
-    recall intact."""
-    from ..operators.similarity import cosine, lit_double_array, sql_isin
-    from ..queries.helpers import hround
-
-    require_finite([qv], "ivfpq_refined_topk")
-    # one pointer resolve pins probe + sidecar to the same version
-    store = resolve_store(out_dir)
-    # an OPQ store's sidecar holds ROTATED vectors: rotate qv once
-    # here, share it with the probe (_rotated), and keep the RAW qv
-    # for an external vectors_src (which holds unrotated vectors)
-    model = read_ivfpq_model(store)
-    qv_rot = _opq_rotate_query(model[2], qv)
-    cand = ivfpq_index_probe_topk(
-        spark, out_dir, qv_rot, k=k * k_factor, nprobe=nprobe,
-        exclude_id=exclude_id, where=where, id_col=id_col, _store=store,
-        _rotated=True, _model=model,
+    written by ``write_ivfpq_index(refine=...)``, pruned to the
+    candidates' cells + a pushed-down id In filter, from the same
+    version as the codes.  A DataFrame re-ranks against that external
+    vector source instead.  Two jobs; refined recall can only match or
+    beat the raw ADC top-k (pinned in tests/test_scale.py)."""
+    return _probe(
+        spark, out_dir, "pq", [qv], op="ivfpq_refined_topk", batch=False,
+        nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
+        id_col=id_col, vec_col=vec_col, refine=(k_factor, vectors_src),
     )
-    rows = cand.select(id_col, "cell").collect()
-    ids = [r[id_col] for r in rows]
-    if vectors_src is None:
-        cells = sorted({int(r["cell"]) for r in rows})
-        side, vec = _refine_source(
-            spark, store, cells, ids, id_col, vec_col
-        )
-        out = side.select(
-            F.col(id_col),
-            hround(cosine(vec, lit_double_array(qv_rot)), 6).alias("cos_sim"),
-        )
-    else:
-        out = vectors_src.filter(sql_isin(id_col, ids)).select(
-            F.col(id_col),
-            hround(cosine(F.col(vec_col), lit_double_array(qv)), 6).alias(
-                "cos_sim"
-            ),
-        )
-    return out.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
 
-def read_ivf_centroids(out_dir: str) -> dict[int, list[float]]:
-    fs, local = _fs_for(resolve_store(out_dir))
-    with fs.open_input_stream(
-        _join(local, _CENTROIDS), compression=None
-    ) as fh:
-        raw = json.loads(fh.read().decode())
-    return {int(c): v for c, v in raw.items()}
-
-
-def ivf_index_probe_batch_topk(
+def ivfpq_refined_batch_topk(
     spark: SparkSession,
     out_dir: str,
     query_vecs: list[list[float]],
     *,
     k: int = 10,
-    nprobe: int = 2,
+    k_factor: int = 4,
+    nprobe: int = 3,
     exclude_ids: list[int | None] | None = None,
-    wheres: list[str | None] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch serving over the FLAT store — ``ivfpq_index_probe_batch_
-    topk``'s exact-cosine twin: one vectors scan pruned to the UNION
-    of the requests' probe cells, per-request 6dp cosine against the
-    inlined query literal (struct fan-out, NULL = not this request's
-    cell), per-request top-k via one ``request_no`` window.  Each
-    request's rows hash-match its one-at-a-time probe.
-
-    ``wheres`` carries a PER-REQUEST attribute predicate (round 12
-    filtered search — see ``ivf_index_probe_topk``): each request's
-    predicate rides inside its struct arm, map-side, so it filters
-    BEFORE that request's top-k while every request still shares the
-    one union-pruned scan; a predicate shared by EVERY request is
-    additionally pushed scan-side (PushedFilters), shrinking the scan
-    itself."""
-    from ..operators.similarity import (
-        cosine,
-        ivf_probe_cells,
-        lit_double_array,
+    """Batch serving COMPOSED with the refine stage: the batch ADC
+    probe over-fetches ``k·k_factor`` candidates per request, then ONE
+    sidecar scan pruned to the union of candidate cells and ids
+    re-ranks every (request, candidate) pair, with per-request top-k
+    as one ``request_no`` window.  Per-request rows hash-match the
+    one-at-a-time ``ivfpq_refined_topk`` loop."""
+    return _probe(
+        spark, out_dir, "pq", query_vecs, op="ivfpq_refined_batch_topk",
+        batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,
+        id_col=id_col, vec_col=vec_col, refine=(k_factor, None),
     )
-    from ..queries.helpers import hround
-
-    if not query_vecs:
-        raise ValueError("probe batch needs at least one query vector")
-    require_finite(query_vecs, "ivf_index_probe_batch_topk")
-    excl = exclude_ids or [None] * len(query_vecs)
-    if len(excl) != len(query_vecs):
-        raise ValueError("exclude_ids must align with query_vecs")
-    whs = wheres or [None] * len(query_vecs)
-    if len(whs) != len(query_vecs):
-        raise ValueError("wheres must align with query_vecs")
-    store = resolve_store(out_dir)
-    cents = read_ivf_centroids(store)
-    probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
-    union_cells = sorted({c for p in probes for c in p})
-
-    df = _store_scan(spark, store, "vectors").filter(
-        F.col("cell").isin(union_cells)
-    )
-    if whs[0] is not None and all(w == whs[0] for w in whs):
-        # uniform predicate: push it into the scan once and skip the
-        # per-arm copies (common serving shape — one tenant filter)
-        df = df.filter(whs[0])
-        whs = [None] * len(query_vecs)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    entries = []
-    for i, qv in enumerate(query_vecs):
-        member = F.col("cell").isin(sorted(probes[i]))
-        if excl[i] is not None:
-            member = member & (F.col(id_col) != int(excl[i]))
-        if whs[i] is not None:
-            member = member & F.expr(whs[i])
-        sim = hround(cosine(F.col(vec_col), lit_double_array(qv)), 6)
-        entries.append(
-            F.struct(
-                F.lit(i).alias("request_no"),
-                F.when(member, sim).alias("cos_sim"),
-            )
-        )
-    hits = (
-        df.select(
-            F.col(id_col),
-            F.col("cell"),
-            F.explode(F.array(*entries)).alias("e"),
-        )
-        .select(
-            F.col("e.request_no").alias("request_no"),
-            F.col(id_col),
-            F.col("cell"),
-            F.col("e.cos_sim").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("request_no").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("request_no", id_col, "cell", "cos_sim")
-    )
-
-
-def ivf_index_probe_batch_range(
-    spark: SparkSession,
-    out_dir: str,
-    query_vecs: list[list[float]],
-    radii: list[float],
-    *,
-    nprobe: int = 2,
-    exclude_ids: list[int | None] | None = None,
-    wheres: list[str | None] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Batch RANGE serving over the flat store: N (query, radius)
-    requests answered by ONE vectors scan pruned to the union of
-    their probe cells, each request's radius cut applied map-side
-    inside its struct arm.  Range needs no per-request top-k, so
-    unlike the batch top-k probes there is NO window — the plan's
-    only exchange is the final output ordering; batch range serving
-    is shuffle-free ranking at any request count.  Per-request
-    ``exclude_ids``/``wheres`` compose exactly like the top-k batch;
-    each request's rows hash-match its one-at-a-time
-    ``ivf_index_probe_range`` answer."""
-    from ..operators.similarity import (
-        cosine,
-        ivf_probe_cells,
-        lit_double_array,
-    )
-    from ..queries.helpers import hround
-
-    if not query_vecs:
-        raise ValueError("probe batch needs at least one query vector")
-    require_finite(query_vecs, "ivf_index_probe_batch_range")
-    if len(radii) != len(query_vecs):
-        raise ValueError("radii must align with query_vecs")
-    excl = exclude_ids or [None] * len(query_vecs)
-    if len(excl) != len(query_vecs):
-        raise ValueError("exclude_ids must align with query_vecs")
-    whs = wheres or [None] * len(query_vecs)
-    if len(whs) != len(query_vecs):
-        raise ValueError("wheres must align with query_vecs")
-    store = resolve_store(out_dir)
-    cents = read_ivf_centroids(store)
-    probes = [ivf_probe_cells(cents, qv, nprobe) for qv in query_vecs]
-    union_cells = sorted({c for p in probes for c in p})
-
-    df = _store_scan(spark, store, "vectors").filter(
-        F.col("cell").isin(union_cells)
-    )
-    if whs[0] is not None and all(w == whs[0] for w in whs):
-        df = df.filter(whs[0])
-        whs = [None] * len(query_vecs)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    entries = []
-    for i, qv in enumerate(query_vecs):
-        member = F.col("cell").isin(sorted(probes[i]))
-        if excl[i] is not None:
-            member = member & (F.col(id_col) != int(excl[i]))
-        if whs[i] is not None:
-            member = member & F.expr(whs[i])
-        sim = hround(cosine(F.col(vec_col), lit_double_array(qv)), 6)
-        member = member & (sim >= F.lit(float(radii[i])))
-        entries.append(
-            F.struct(
-                F.lit(i).alias("request_no"),
-                F.when(member, sim).alias("cos_sim"),
-            )
-        )
-    return (
-        df.select(
-            F.col(id_col),
-            F.col("cell"),
-            F.explode(F.array(*entries)).alias("e"),
-        )
-        .select(
-            F.col("e.request_no").alias("request_no"),
-            F.col(id_col),
-            F.col("cell"),
-            F.col("e.cos_sim").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim").isNotNull())
-        .orderBy(
-            F.col("request_no").asc(),
-            F.col("cos_sim").desc(),
-            F.col(id_col).asc(),
-        )
-    )
-
-
-def ivf_index_probe_topk(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    exclude_id: int | None = None,
-    where: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
-) -> DataFrame:
-    """Top-k neighbors from the STORED index: rank the probe cells on
-    the driver (quantizer-sized math), then scan ONLY those ``cell=``
-    directories — partition pruning does the inverted-list skip, no
-    assignment recompute, no shuffle, top-k as TakeOrderedAndProject.
-
-    ``where`` (round 12 — FAISS IDSelector / filtered vector search)
-    is a SQL predicate over the store's ATTRIBUTE columns (any extra
-    column of the frame ``write_ivf_index`` was given rides the store
-    rows, e.g. ``"label = 2"`` or ``"lang = 'en' AND quality > 0.5"``).
-    It applies BEFORE top-k, inside the same pruned scan — Catalyst
-    pushes it into the parquet FileScan (plan-asserted), so k
-    SURVIVORS are returned with recall intact, never k results
-    post-filtered down to fewer.
-
-    ``metric`` (round 12 — FAISS METRIC_INNER_PRODUCT / METRIC_L2
-    parity): ``cosine`` (default, score column ``cos_sim`` DESC),
-    ``ip`` (``dot`` DESC), ``l2`` (``sq_dist`` ASC) — see
-    ``_ivf_scored_frame`` for the one-store-many-metrics contract."""
-    out = _ivf_scored_frame(
-        spark, out_dir, qv, nprobe=nprobe, exclude_id=exclude_id,
-        where=where, id_col=id_col, vec_col=vec_col, metric=metric,
-    )
-    col, desc = _METRIC_COLS[metric]
-    order = F.col(col).desc() if desc else F.col(col).asc()
-    return out.orderBy(order, F.col(id_col).asc()).limit(k)
-
-
-#: metric → (score column name, descending?) for the flat-store
-#: probes.  FAISS METRIC_* parity on the QUERY side: cosine and inner
-#: product rank descending, squared L2 ascending.
-_METRIC_COLS = {
-    "cosine": ("cos_sim", True),
-    "ip": ("dot", True),
-    "l2": ("sq_dist", False),
-}
-
-
-def _ivf_scored_frame(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    *,
-    nprobe: int,
-    exclude_id: int | None,
-    where: str | None,
-    id_col: str,
-    vec_col: str,
-    metric: str = "cosine",
-) -> DataFrame:
-    """Shared flat-store probe body: pruned ``cell=`` scan →
-    tombstone/attr filters → exact 6dp score under ``metric``.  The
-    top-k and range probes both rank THIS frame — the two serving
-    modes share one scoring path by construction.
-
-    ``metric`` (round 12 — serving-side FAISS METRIC_* parity over
-    ONE stored index): ``cosine``/``ip``/``l2`` select both the
-    probe-cell ranking and the survivor score.  The store's coarse
-    ASSIGNMENT stays the build-time cosine argmax — the flat store
-    keeps whole vectors, so any metric can be served from the same
-    parquet without a rebuild (a flexibility FAISS, whose quantizer
-    owns one metric, does not have; recall under a non-build metric
-    degrades gracefully with nprobe exactly like any IVF probe)."""
-    from ..operators.similarity import (
-        cosine,
-        dot6,
-        ivf_probe_cells,
-        lit_double_array,
-        sqdist6,
-    )
-    from ..queries.helpers import hround
-
-    if metric not in _METRIC_COLS:
-        raise ValueError(f"unknown metric {metric!r}")
-    require_finite([qv], "ivf_index_probe")
-    store = resolve_store(out_dir)
-    cents = read_ivf_centroids(store)
-    probe = ivf_probe_cells(cents, qv, nprobe, metric=metric)
-    df = _store_scan(spark, store, "vectors").filter(
-        F.col("cell").isin(probe)
-    )
-    if exclude_id is not None:
-        df = df.filter(F.col(id_col) != exclude_id)
-    if where is not None:
-        df = df.filter(where)
-    # deleted vectors never surface at ANY nprobe: the exclusion list
-    # is metadata-sized (LSM contract), inlined as a scan filter — no
-    # join, no shuffle, plan shape unchanged (broadcast anti-join
-    # fallback past TOMBSTONE_ISIN_MAX keeps a never-compacted store
-    # correct)
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    q = lit_double_array(qv)
-    if metric == "cosine":
-        score = hround(cosine(F.col(vec_col), q), 6)
-    elif metric == "ip":
-        score = dot6(F.col(vec_col), q)
-    else:
-        score = sqdist6(F.col(vec_col), q)
-    col, _desc = _METRIC_COLS[metric]
-    return df.select(F.col(id_col), F.col("cell"), score.alias(col))
-
-
-def ivf_index_probe_range(
-    spark: SparkSession,
-    out_dir: str,
-    qv: list[float],
-    radius: float,
-    *,
-    nprobe: int = 2,
-    exclude_id: int | None = None,
-    where: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    metric: str = "cosine",
-) -> DataFrame:
-    """RANGE search over the flat store (FAISS ``range_search``
-    semantics, the serving mode ``search``/top-k cannot express):
-    every stored vector in the probed cells past the radius — no k,
-    result size is data-dependent (duplicate sweeps, recall audits,
-    similar-content takedowns all want *all* hits past a threshold,
-    not the nearest k).  Shares the scored frame with
-    ``ivf_index_probe_topk`` (same pruned scan, tombstones, pushed
-    ``where``); the cut applies to the 6dp-rounded score so the
-    boundary is engine-portable.  Under ``cosine``/``ip`` the cut is
-    ``score >= radius``; under ``l2`` it is ``sq_dist <= radius``
-    (FAISS's distance-threshold convention).  FAISS returns range
-    hits unordered; we order (score, id) for determinism.  Plan:
-    pruned FileScan → map-side score → filter → sort; zero joins, no
-    shuffle beyond the final ordering."""
-    out = _ivf_scored_frame(
-        spark, out_dir, qv, nprobe=nprobe, exclude_id=exclude_id,
-        where=where, id_col=id_col, vec_col=vec_col, metric=metric,
-    )
-    col, desc = _METRIC_COLS[metric]
-    cut = F.col(col) >= radius if desc else F.col(col) <= radius
-    order = F.col(col).desc() if desc else F.col(col).asc()
-    return out.filter(cut).orderBy(order, F.col(id_col).asc())
