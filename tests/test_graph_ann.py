@@ -631,6 +631,7 @@ def test_spark_cosine6_sql_equals_column_form(spark, sf_dir, metric):
     give its Column form's doubles exactly."""
     from webarchive_indexing_spark.operators import similarity as S
     from webarchive_indexing_spark.queries.helpers import hround
+    from webarchive_indexing_spark.sqltext import sql_double_array
 
     column, sql = {
         "cosine": (lambda a, b: hround(S.cosine(a, b), 6), S.spark_cosine6_sql),
@@ -645,6 +646,6 @@ def test_spark_cosine6_sql_equals_column_form(spark, sf_dir, metric):
     )
     got = emb.select(
         "vec_id",
-        F.expr(sql("embedding", S.sql_double_array(qv))).alias("s"),
+        F.expr(sql("embedding", sql_double_array(qv))).alias("s"),
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))

@@ -2256,9 +2256,15 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
     call runs (each request's score is parsed SQL text, not a
     ``Column`` tree of hundreds of round trips), and no more Spark jobs
     for the call plus its collect than the forms ran before they
-    shared it (batches of 4)."""
+    shared it (batches of 4).  The in-plan IVF probe and the flat
+    store's cell projection render their quantizer as parsed SQL text
+    too, so they meet the single forms' bound."""
     import tempfile
 
+    from webarchive_indexing_spark.operators.similarity import (
+        ivf_cell_sql,
+        ivf_probe_topk,
+    )
     from webarchive_indexing_spark.sinks import ann_index as A
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2276,6 +2282,7 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
         for r in emb.filter(F.col("vec_id").isin(qids)).collect()
     }
     qs = [vecs[q] for q in qids]
+    cents = A.read_ivf_centroids(flat)
     # form -> (call, py4j bound, jobs bound)
     forms = {
         "ivf_topk": (lambda: A.ivf_index_probe_topk(spark, flat, qs[0]), 180, 1),
@@ -2295,6 +2302,13 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
             lambda: A.ivfpq_index_probe_batch_range(spark, pq, qs, [1.05] * 4), 260, 3),
         "refined": (lambda: A.ivfpq_refined_topk(spark, pq, None, qs[0]), 400, 2),
         "refined_batch": (lambda: A.ivfpq_refined_batch_topk(spark, pq, qs), 600, 4),
+        # the in-plan probe over the flat store's model, and that
+        # model's cell assignment as the build and append project it
+        "in_plan_ivf_probe": (
+            lambda: ivf_probe_topk(emb, cents, qids[0], qv=qs[0]), 180, 1),
+        "flat_cell_projection": (
+            lambda: emb.withColumn("cell", F.expr(ivf_cell_sql(cents, "embedding"))),
+            180, 1),
     }
     sc = spark.sparkContext
     for name, (call, max_calls, max_jobs) in forms.items():

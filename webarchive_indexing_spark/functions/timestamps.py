@@ -2,8 +2,8 @@
 
 CDX serializes capture time as ``yyyyMMddHHmmss`` — a string whose
 lexicographic order equals chronological order, which is what makes
-key-range scans over (urlkey, timestamp) work.  Both directions are
-single built-in expressions.
+key-range scans over (urlkey, timestamp) work.  ``from_ts14`` parses
+one (or a partial prefix) back into a timestamp.
 """
 
 from __future__ import annotations
@@ -12,11 +12,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TS14_FMT = "yyyyMMddHHmmss"
-
-
-def to_ts14(ts: Column | str) -> Column:
-    """timestamp → 14-digit string."""
-    return F.date_format(ts, TS14_FMT)
 
 
 def from_ts14(s: Column | str) -> Column:

@@ -194,10 +194,6 @@ def global_cumsum(
     return parts.mapInPandas(add_cumsum, schema).drop("__pid")
 
 
-def total_count(df: DataFrame) -> int:
-    return df.count()
-
-
 def exact_ntile_expr(rank_col: str, total: int, n: int):
     """SQL-standard NTILE(n) from a precomputed 1-based total-order
     rank: the first ``total % n`` tiles get ``total // n + 1`` rows,

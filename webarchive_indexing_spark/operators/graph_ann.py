@@ -90,15 +90,13 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..queries.helpers import hround, sql_hround
+from ..sqltext import require_finite, sql_double_array, sql_isin
 from .similarity import (
     _dec_dot,
     cosine,
     cosine_from_parts,
-    require_finite,
     spark_cosine6_sql,
     sql_cosine,
-    sql_double_array,
-    sql_isin,
 )
 
 META = "_graph.json"

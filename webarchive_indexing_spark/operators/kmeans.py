@@ -42,18 +42,11 @@ any partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import nearest_sqdist6_expr, nearest_sqdist6_sql, sql_sqdist6
-
-
-def _nearest(vec_name: str, cents: dict[int, list[float]]) -> Column:
-    """struct(d, cid) of the nearest centroid — 6-dp-rounded double
-    distance, ties to the smaller cid (matches the oracle's
-    ORDER BY d, cid).  One parsed expression (py4j-cheap; see
-    similarity.nearest_sqdist6_expr)."""
-    return nearest_sqdist6_expr(vec_name, cents, id_field="cid")
+from ..sqltext import sql_ident
+from .similarity import nearest_sqdist6_sql, pq_sub_dim, sql_sqdist6
 
 
 def train_sample_mod(train_frac: float) -> int:
@@ -147,6 +140,42 @@ def lloyd_train(
             for r in upd.collect()
         }
     return cents
+
+
+def train_ivfpq(
+    embeddings: DataFrame, n_cells: int, n_sub: int, k_codes: int, iters: int,
+    dim: int, *, id_col: str = "vec_id", vec_col: str = "embedding",
+    train_frac: float | None = None,
+) -> tuple[dict[int, list[float]], list[dict[int, list[float]]]]:
+    """The IVFPQ model, trained the way FAISS trains it: Lloyd coarse
+    cells on whole vectors plus one sub-codebook per subspace on the
+    sliced sub-vectors — ``(cents, [codebook_0, …])``, shared by the
+    persisted PQ store and the in-plan IVFADC probes.
+
+    The ``1 + n_sub`` chains are INDEPENDENT, so they train from a
+    small driver thread pool: each chain's kilobyte-scale update
+    actions overlap the others' instead of paying ``1 + n_sub``
+    sequential seed-collect + update walls.  Each chain is internally
+    sequential (Lloyd is a barrier per iteration) and returns a plain
+    dict, so the model is the same whatever order the chains finish
+    in."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    w = pq_sub_dim(dim, n_sub)
+    subs = [
+        embeddings.selectExpr(
+            sql_ident(id_col), f"slice({sql_ident(vec_col)}, {m * w + 1}, {w}) AS subvec"
+        )
+        for m in range(n_sub)
+    ]
+    kw = dict(iters=iters, id_col=id_col, train_frac=train_frac)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        coarse = pool.submit(lloyd_train, embeddings, n_cells, dim=dim, vec_col=vec_col, **kw)
+        cbooks = [
+            pool.submit(lloyd_train, sub, k_codes, dim=w, vec_col="subvec", **kw)
+            for sub in subs
+        ]
+        return coarse.result(), [f.result() for f in cbooks]
 
 
 def kmeans_lloyd(

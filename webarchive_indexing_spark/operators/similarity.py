@@ -21,11 +21,12 @@ from __future__ import annotations
 
 import functools
 import hashlib
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..sqltext import sql_double_array, sql_ident, sql_in
 
 DEC = "decimal(28,14)"
 
@@ -39,39 +40,6 @@ def lit_double_array(vals: list[float]) -> Column:
     PQ query build.  ``repr(float)`` round-trips the exact double bits
     through SQL parsing, so the literal is bit-identical."""
     return F.expr(sql_double_array(vals))
-
-
-def sql_double_array(vals: list[float]) -> str:
-    """SQL text of ``lit_double_array``'s literal; ``repr(float)``
-    round-trips the exact double bits."""
-    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
-
-
-def sql_in(col: str, ids) -> str:
-    """SQL text of ``col IN (ids)`` over integer ids.  An empty list is
-    ``FALSE`` — ``IN ()`` does not parse."""
-    vals = ",".join(str(int(i)) for i in ids)
-    return f"`{col}` IN ({vals})" if vals else "FALSE"
-
-
-def sql_isin(col: str, ids) -> Column:
-    """``col IN (ids)`` as ONE parsed expression: ``Column.isin`` costs
-    one py4j round-trip per literal, and the parsed form pushes down
-    as the same ``In`` filter."""
-    return F.expr(sql_in(col, ids))
-
-
-def require_finite(query_vecs: list[list[float]], op: str) -> None:
-    """A NaN or infinite query component has no similarity or distance
-    to rank by (and no SQL literal): refuse it up front with a
-    ``ValueError`` naming the request."""
-    for n, qv in enumerate(query_vecs):
-        bad = [x for x in qv if not math.isfinite(float(x))]
-        if bad:
-            raise ValueError(
-                f"{op}: query vector {n} has a non-finite component "
-                f"({bad[0]!r})"
-            )
 
 
 def collect_seed_vectors(
@@ -358,23 +326,13 @@ def grid_blocked_pairs(
 
     nrm = F.sqrt(_dec_dot(F.col(vec_col), F.col(vec_col)).cast("double"))
 
-    def cells(v: Column, nrm_col: Column) -> list[Column]:
-        # r·v̂ with r = ±1/√dim — double math is fine here: blocking
-        # only needs the ≤1-cell-apart guarantee, and w carries slack
-        out = []
-        for s in signs:
-            lit = F.array(*[F.lit(x) for x in s])
-            p = (
-                F.aggregate(
-                    F.zip_with(v, lit, lambda x, y: x.cast("double") * y),
-                    F.lit(0.0),
-                    lambda a, b: a + b,
-                )
-                * inv
-                / nrm_col
-            )
-            out.append(F.floor(p / w).cast("long"))
-        return out
+    # r·v̂ with r = ±1/√dim, one parsed cell expression per projection
+    # — double math is fine here: blocking only needs the
+    # ≤1-cell-apart guarantee, and w carries slack
+    cells = [
+        f"CAST(FLOOR({_fast_dot('_v', s)} * {inv!r}D / _nrm / {w!r}D) AS BIGINT)"
+        for s in signs
+    ]
 
     from ..queries.helpers import widen_narrow
 
@@ -388,9 +346,8 @@ def grid_blocked_pairs(
         F.col(vec_col).alias("_v"),
         nrm.alias("_nrm"),
     )
-    base = base.select(
-        "blk", "_id", "_v", "_nrm",
-        *[c.alias(f"_c{j}") for j, c in enumerate(cells(F.col("_v"), F.col("_nrm")))],
+    base = base.selectExpr(
+        "blk", "_id", "_v", "_nrm", *[f"{c} AS _c{j}" for j, c in enumerate(cells)]
     )
 
     b = base.select(
@@ -464,15 +421,97 @@ def knn_blocked(
     )
 
 
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_cents: int = 16,
-    nprobe: int = 2,
+# ---------------------------------------------------------------------------
+# Select: the ranking step every ANN probe shares — the persisted stores'
+# kernel (sinks/ann_index.py) and the in-plan probes below
+# ---------------------------------------------------------------------------
+
+
+def _rank(
+    df: DataFrame,
+    own: list[list[str]],
+    scores: list[str],
+    score: tuple[str, bool],
+    keep: list[str],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    batch: bool,
+    k: int | None = None,
+    radii: list[float] | None = None,
+    prep: str | None = None,
+) -> DataFrame:
+    """Score each request as SQL text and select.  One request is a
+    plain projection; several fan each row out to the requests whose
+    own conditions it meets (``inline(filter(array(named_struct…)))``,
+    map-side).  Top-k is ``orderBy + limit`` (TakeOrderedAndProject)
+    for one request and one ``request_no`` ``row_number`` window for
+    several; range cuts each request at its radius and orders
+    (request_no, score, id)."""
+    name, desc = score
+    if prep is not None:
+        df = df.selectExpr("*", f"{prep} AS __v")
+    cols = [sql_ident(c) for c in keep]
+    out = (["request_no"] if batch else []) + keep + [name]
+    if len(scores) == 1:
+        hits = df.selectExpr(
+            *(["0 AS request_no"] if batch else []), *cols,
+            f"{scores[0]} AS {name}",
+        )
+    else:
+        arms = ",".join(
+            f"named_struct('request_no', {i}, '{name}', "
+            + (f"CASE WHEN {' AND '.join(c)} THEN {s} END)" if c else f"{s})")
+            for i, (c, s) in enumerate(zip(own, scores))
+        )
+        hits = df.selectExpr(
+            *cols, f"inline(filter(array({arms}), s -> s.{name} IS NOT NULL))"
+        ).select(*out)
+    order = [name, keep[0]]
+    if radii is None and len(scores) == 1:
+        return hits.orderBy(order, ascending=[not desc, True]).limit(k)
+    if radii is None:
+        rank = f"{name} {'DESC' if desc else 'ASC'}, {cols[0]}"
+        return (
+            hits.selectExpr(
+                "*",
+                f"row_number() OVER (PARTITION BY request_no ORDER BY {rank}) AS __rn",
+            )
+            .filter(f"__rn <= {int(k)}")
+            .select(*out)
+        )
+    if len(radii) == 1:
+        bound = f"{float(radii[0])!r}D"
+    else:
+        bound = "CASE request_no " + " ".join(
+            f"WHEN {i} THEN {float(r)!r}D" for i, r in enumerate(radii)
+        ) + " END"
+    order = (["request_no"] if batch else []) + order
+    return hits.filter(f"{name} {'>=' if desc else '<='} {bound}").orderBy(
+        order, ascending=[True] * (len(order) - 2) + [not desc, True]
+    )
+
+
+def _select_topk(
+    embeddings: DataFrame, query_vec_id: int, k: int, id_col: str, cols: list[str],
+    score: tuple[str, bool, str], probe: list[int] | None = None, key: str = "cell",
+) -> DataFrame:
+    """The in-plan probes' verify + select over an unpersisted frame:
+    ONE projection of the id and ``cols`` (the ``key`` column and the
+    encode columns, as SQL text; a column may name an earlier one's
+    alias), ONE parsed filter (``key IN probe`` when ``probe`` is
+    given, and never the query row), then ``_rank``'s top-k on
+    ``score = (name, descending?, SQL)`` — scan → filter →
+    TakeOrderedAndProject, zero shuffles."""
+    idc = sql_ident(id_col)
+    cond = [] if probe is None else [sql_in(key, probe)]
+    df = embeddings.selectExpr(idc, *cols).filter(
+        " AND ".join(cond + [f"{idc} <> {int(query_vec_id)}"])
+    )
+    return _rank(df, [[]], [score[2]], score[:2], [id_col, key], batch=False, k=k)
+
+
+def ivf_topk(
+    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_cents: int = 16,
+    nprobe: int = 2, *, id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize every vector to its nearest
     centroid cell, then run exact cosine top-k over only the ``nprobe``
@@ -489,22 +528,12 @@ def ivf_topk(
     shuffles, k rows to the driver — at 100 TB only the (still exact)
     in-cell rescan scales with data size.
     """
-    import math
-
-    from ..queries.helpers import hround
-
     cents, qv = collect_seeds_and_query(
         embeddings, n_cents, query_vec_id, id_col=id_col, vec_col=vec_col
     )
     return ivf_probe_topk(
-        embeddings,
-        cents,
-        query_vec_id,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
-        vec_col=vec_col,
-        qv=qv,
+        embeddings, cents, query_vec_id, k=k, nprobe=nprobe, id_col=id_col,
+        vec_col=vec_col, qv=qv,
     )
 
 
@@ -524,39 +553,30 @@ def _py_dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
-def ivf_cell_expr(cents: dict[int, list[float]], vec_col: str) -> Column:
-    """Per-row IVF cell assignment over an inlined centroid table —
-    the map-only argmax every IVF read path shares (in-query probe
-    AND persisted-index build, so the stored layout and the probe's
-    assignment can never disagree).  Cell score = dot(v,c)/‖c‖ — ‖v‖
-    is constant per row, so dropping it cannot change the argmax;
-    array_max over struct<score, -cid> reproduces the oracle's
-    (score DESC, cid ASC) ranking."""
-    from ..queries.helpers import hround
-
-    cnorm = {cid: _py_norm(cv) for cid, cv in cents.items()}
-
-    def fast_dot(v: Column, cv: list[float]) -> Column:
-        return F.aggregate(
-            F.zip_with(
-                v, lit_double_array(cv), lambda x, y: x.cast("double") * y
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    scored = F.array(
-        *[
-            F.struct(
-                hround(
-                    fast_dot(F.col(vec_col), cv) / F.lit(cnorm[cid]), 6
-                ).alias("s"),
-                F.lit(-cid).alias("negid"),
-            )
-            for cid, cv in sorted(cents.items())
-        ]
+def _fast_dot(vec: str, vals: list[float]) -> str:
+    """Spark SQL text of ``vec · vals`` over a literal array as a plain
+    double fold — the IVF cell score and the ε-grid projections."""
+    return (
+        f"aggregate(zip_with({vec}, {sql_double_array(vals)}, "
+        f"(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
     )
-    return -F.array_max(scored).getField("negid")
+
+
+def ivf_cell_sql(cents: dict[int, list[float]], vec_col: str) -> str:
+    """Per-row IVF cell assignment over an inlined centroid table, as
+    one Spark SQL expression — the map-only argmax every IVF read path
+    shares (in-query probe AND persisted-index build and append, so the
+    stored layout and the probe's assignment can never disagree).  Cell
+    score = hround6(dot(v,c)/‖c‖) — ‖v‖ is constant per row, so
+    dropping it cannot change the argmax; array_max over
+    named_struct(s, -cid) reproduces the oracle's (score DESC, cid ASC)
+    ranking."""
+    vec = sql_ident(vec_col)
+    arms = []
+    for cid, cv in sorted(cents.items()):
+        s = _spark_hround6(f"{_fast_dot(vec, cv)} / {_py_norm(cv)!r}D")
+        arms.append(f"named_struct('s', {s}, 'negid', {-cid})")
+    return f"-array_max(array({', '.join(arms)})).negid"
 
 
 def ivf_probe_cells(
@@ -588,14 +608,8 @@ def ivf_probe_cells(
 
 
 def ivf_probe_topk(
-    embeddings: DataFrame,
-    cents: dict[int, list[float]],
-    query_vec_id: int,
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, cents: dict[int, list[float]], query_vec_id: int, *,
+    k: int = 10, nprobe: int = 2, id_col: str = "vec_id", vec_col: str = "embedding",
     qv: list[float] | None = None,
 ) -> DataFrame:
     """The IVF probe scan against an ARBITRARY centroid model artifact
@@ -605,41 +619,21 @@ def ivf_probe_topk(
     argmax over inlined literals → probe filter →
     TakeOrderedAndProject.  ZERO shuffles.  Pass ``qv`` when the
     caller already fetched the query vector (one fewer collect job)."""
-    from ..queries.helpers import hround
-
     if qv is None:
-        qv = collect_query_vector(
-            embeddings, query_vec_id, id_col=id_col, vec_col=vec_col
-        )
-    cell = ivf_cell_expr(cents, vec_col).alias("cell")
-    probe = ivf_probe_cells(cents, qv, nprobe)
-
-    out = (
-        embeddings.withColumn("cell", cell)
-        .filter(F.col("cell").isin(probe) & (F.col(id_col) != query_vec_id))
-        .select(
-            F.col(id_col),
-            "cell",
-            hround(cosine(F.col(vec_col), lit_double_array(qv)), 6).alias(
-                "cos_sim"
-            ),
-        )
+        qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    vec = sql_ident(vec_col)
+    return _select_topk(
+        embeddings, query_vec_id, k, id_col,
+        [f"{ivf_cell_sql(cents, vec_col)} AS cell", vec],
+        ("cos_sim", True, spark_cosine6_sql(vec, sql_double_array(qv))),
+        ivf_probe_cells(cents, qv, nprobe),
     )
-    return out.orderBy(F.col("cos_sim").desc(), F.col(id_col).asc()).limit(k)
 
 
 def ivf_trained_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_cents: int = 8,
-    nprobe: int = 2,
-    train_iters: int = 2,
-    dim: int = 64,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_frac: float | None = None,
+    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_cents: int = 8,
+    nprobe: int = 2, train_iters: int = 2, dim: int = 64, *, id_col: str = "vec_id",
+    vec_col: str = "embedding", train_frac: float | None = None,
 ) -> DataFrame:
     """The production IVF shape: train the coarse quantizer with Lloyd
     k-means (``operators.kmeans.lloyd_train`` — ``train_iters - 1``
@@ -665,12 +659,7 @@ def ivf_trained_topk(
         id_col=id_col, vec_col=vec_col, train_frac=train_frac,
     )
     return ivf_probe_topk(
-        embeddings,
-        cents,
-        query_vec_id,
-        k=k,
-        nprobe=nprobe,
-        id_col=id_col,
+        embeddings, cents, query_vec_id, k=k, nprobe=nprobe, id_col=id_col,
         vec_col=vec_col,
     )
 
@@ -942,26 +931,24 @@ def _planes(n_planes: int, dim: int) -> list[list[int]]:
     return out
 
 
-def lsh_bucket_expr(
+def lsh_bucket_sql(
     vec_col: str = "embedding", n_planes: int = 8, dim: int = 64
-) -> Column:
-    """Sign-LSH bucket id of a vector column as a pure expression:
-    bit k = sign(v · plane_k).  Being a Column (not a join) is the
-    point — bucket assignment stays a map-side projection at any
-    scale.  DuckDB twin: ``sql_lsh_bucket_expr``."""
-    planes = _planes(n_planes, dim)
+) -> str:
+    """Sign-LSH bucket id of a vector column as one Spark SQL
+    expression: bit k = sign(v · plane_k), the dot an exact
+    DECIMAL(18,7) fold.  Being an expression (not a join) is the point
+    — bucket assignment stays a map-side projection at any scale.
+    DuckDB twin: ``sql_lsh_bucket_expr``."""
+    dec = "DECIMAL(18,7)"
     bits = []
-    for kp in range(n_planes):
-        w = F.array(*[F.lit(v) for v in planes[kp]])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col), w, lambda x, p: (x.cast("double") * p).cast("decimal(18,7)")
-            ),
-            F.lit(0).cast("decimal(18,7)"),
-            lambda acc, x: (acc + x).cast("decimal(18,7)"),
+    for kp, plane in enumerate(_planes(n_planes, dim)):
+        dot = (
+            f"aggregate(zip_with({sql_ident(vec_col)}, array({','.join(map(str, plane))}), "
+            f"(x, p) -> CAST(CAST(x AS DOUBLE) * p AS {dec})), CAST(0 AS {dec}), "
+            f"(acc, x) -> CAST(acc + x AS {dec}))"
         )
-        bits.append(F.when(dot > 0, F.lit(1 << kp)).otherwise(F.lit(0)))
-    return functools.reduce(lambda x, y: x + y, bits).cast("bigint")
+        bits.append(f"CASE WHEN {dot} > 0 THEN {1 << kp} ELSE 0 END")
+    return f"CAST(({' + '.join(bits)}) AS BIGINT)"
 
 
 def lsh_buckets(
@@ -973,10 +960,10 @@ def lsh_buckets(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, bucket) sign-LSH assignment — map-only projection of
-    ``lsh_bucket_expr``; the bucket id is the shuffle key for any
+    ``lsh_bucket_sql``; the bucket id is the shuffle key for any
     downstream pairwise stage."""
-    return embeddings.select(
-        F.col(id_col), lsh_bucket_expr(vec_col, n_planes, dim).alias("bucket")
+    return embeddings.selectExpr(
+        sql_ident(id_col), f"{lsh_bucket_sql(vec_col, n_planes, dim)} AS bucket"
     )
 
 
@@ -1118,15 +1105,48 @@ def py_sqdist6(a: list[float], b: list[float]) -> float:
     return py_hround(acc, 6)
 
 
+def pq_sub_dim(dim: int, n_sub: int) -> int:
+    """The PQ subspace width ``dim / n_sub``.  A ``ValueError`` unless
+    ``n_sub`` divides ``dim`` — input validation, so not an ``assert``,
+    which ``python -O`` removes."""
+    if n_sub <= 0 or dim % n_sub:
+        raise ValueError(f"dim {dim} must divide evenly into {n_sub} subspaces")
+    return dim // n_sub
+
+
+def _pq_adc(
+    vec_col: str, qv: list[float], cbooks: list[dict[int, list[float]]]
+) -> tuple[list[str], tuple[str, bool, str]]:
+    """Encode select-exprs ``c0..`` (per subspace, the nearest
+    sub-codeword as ``struct(d, j)``) and the ADC score over
+    ``sub_dim``-long sub-codebooks.  The query→codeword distance table
+    is literal×literal arithmetic, computed once with the Python twin
+    of ``sqdist6`` and inlined as exact DECIMAL(18,6) literals, so the
+    ``n_sub``-term sum is reduction-order-free."""
+    w = len(next(iter(cbooks[0].values())))
+    enc, adc = [], []
+    for m, cb in enumerate(cbooks):
+        enc.append(f"{nearest_sqdist6_sql(vec_col, cb, lo=m * w)} AS c{m}")
+        tab = ",".join(
+            f"CAST({py_sqdist6(qv[m * w:(m + 1) * w], cb[j])!r}D AS DECIMAL(18,6))"
+            for j in range(len(cb))
+        )
+        adc.append(f"element_at(array({tab}), c{m}.j + 1)")
+    return enc, ("approx_dist", False, f"CAST(({' + '.join(adc)}) AS DOUBLE)")
+
+
+def _pq_split(
+    vecs: dict[int, list[float]], k_codes: int, n_sub: int, dim: int
+) -> list[dict[int, list[float]]]:
+    """Stand-in sub-codebooks: the first ``k_codes`` vectors, sliced
+    into ``n_sub`` subspaces."""
+    w = pq_sub_dim(dim, n_sub)
+    return [{j: vecs[j][m * w:(m + 1) * w] for j in range(k_codes)} for m in range(n_sub)]
+
+
 def pq_adc_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_sub: int = 4,
-    k_codes: int = 8,
-    dim: int = 64,
-    *,
-    id_col: str = "vec_id",
+    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_sub: int = 4,
+    k_codes: int = 8, dim: int = 64, *, id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
@@ -1158,54 +1178,16 @@ def pq_adc_topk(
     packs the per-subspace codes little-endian (3 bits each for
     k_codes=8) — the value the oracle can recompute relationally.
     """
-    assert dim % n_sub == 0, "dim must divide evenly into subspaces"
-    sub_dim = dim // n_sub
-
-    from ..queries.helpers import hround
-
     cvecs, qv = collect_seeds_and_query(
         embeddings, k_codes, query_vec_id, id_col=id_col, vec_col=vec_col
     )
-
-    # encode: one parsed argmin expression per subspace
-    enc = embeddings.filter(F.col(id_col) != query_vec_id).select(
-        F.col(id_col),
-        *[
-            nearest_sqdist6_expr(
-                vec_col, cvecs, lo=m * sub_dim, length=sub_dim
-            ).alias(f"c{m}")
-            for m in range(n_sub)
-        ],
-    )
-    # query→sub-centroid distance table: pure model-artifact arithmetic
-    # (literal × literal), computed with the Python twin of sqdist6 and
-    # inlined as DECIMAL(18,6) literals (exact for 6-dp values) so the
-    # n_sub-term ADC sum is reduction-order-free
-    adists: list[Column] = []
-    for m in range(n_sub):
-        lo, hi = m * sub_dim, (m + 1) * sub_dim
-        tab = ",".join(
-            f"CAST({py_sqdist6(qv[lo:hi], cvecs[j][lo:hi])!r}D AS DECIMAL(18,6))"
-            for j in range(k_codes)
-        )
-        adists.append(F.expr(f"element_at(array({tab}), c{m}.j + 1)"))
-
+    enc, adc = _pq_adc(vec_col, qv, _pq_split(cvecs, k_codes, n_sub, dim))
     bits = max(1, (k_codes - 1).bit_length())
-    code_key = functools.reduce(
-        lambda x, y: x + y,
-        [
-            F.col(f"c{m}").getField("j").cast("bigint") * F.lit(1 << (bits * m))
-            for m in range(n_sub)
-        ],
-    ).alias("code_key")
-    approx = functools.reduce(lambda x, y: x + y, adists)
-
-    out = enc.select(
-        F.col(id_col),
-        code_key,
-        approx.cast("double").alias("approx_dist"),
+    key = " + ".join(f"CAST(c{m}.j AS BIGINT) * {1 << bits * m}" for m in range(n_sub))
+    return _select_topk(
+        embeddings, query_vec_id, k, id_col, [*enc, f"{key} AS code_key"], adc,
+        key="code_key",
     )
-    return out.orderBy(F.col("approx_dist").asc(), F.col(id_col).asc()).limit(k)
 
 
 def sql_pq_adc_topk(
@@ -1255,17 +1237,9 @@ def sql_pq_adc_topk(
 
 
 def ivf_pq_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_cells: int = 16,
-    nprobe: int = 4,
-    n_sub: int = 4,
-    k_codes: int = 8,
-    dim: int = 64,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_cells: int = 16,
+    nprobe: int = 4, n_sub: int = 4, k_codes: int = 8, dim: int = 64, *,
+    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF + PQ composed — the shape of FAISS's IVFADC (Jégou et al.
     2011): a coarse quantizer prunes the scan to the ``nprobe`` cells
@@ -1282,63 +1256,22 @@ def ivf_pq_topk(
     whole query still plans scan → map-side cell argmin + encode +
     probe filter → TakeOrderedAndProject with ZERO shuffles.
     """
-    assert dim % n_sub == 0
-    sub_dim = dim // n_sub
-
     vecs, qv = collect_seeds_and_query(
-        embeddings, max(n_cells, k_codes), query_vec_id,
-        id_col=id_col, vec_col=vec_col,
+        embeddings, max(n_cells, k_codes), query_vec_id, id_col=id_col, vec_col=vec_col
     )
     cents = {i: vecs[i] for i in range(n_cells)}
-    cbook = {j: vecs[j] for j in range(k_codes)}
-
-    # probe cells: driver-side twin of the engine's rounded distances
-    probe = sorted(
-        cents, key=lambda c: (py_sqdist6(qv, cents[c]), c)
-    )[:nprobe]
-
-    cell = nearest_sqdist6_expr(vec_col, cents, id_field="cid")
-    enc_cols = [
-        nearest_sqdist6_expr(
-            vec_col, cbook, lo=m * sub_dim, length=sub_dim
-        ).alias(f"c{m}")
-        for m in range(n_sub)
-    ]
-    pruned = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col), cell.getField("cid").alias("cell"), *enc_cols)
-        .filter(F.col("cell").isin(probe))
+    enc, adc = _pq_adc(vec_col, qv, _pq_split(vecs, k_codes, n_sub, dim))
+    cell = nearest_sqdist6_sql(vec_col, cents, id_field="cid")
+    return _select_topk(
+        embeddings, query_vec_id, k, id_col, [f"{cell}.cid AS cell", *enc], adc,
+        ivf_probe_cells(cents, qv, nprobe, metric="l2"),
     )
-    adists = []
-    for m in range(n_sub):
-        lo, hi = m * sub_dim, (m + 1) * sub_dim
-        tab = ",".join(
-            f"CAST({py_sqdist6(qv[lo:hi], cbook[j][lo:hi])!r}D AS DECIMAL(18,6))"
-            for j in range(k_codes)
-        )
-        adists.append(F.expr(f"element_at(array({tab}), c{m}.j + 1)"))
-    approx = functools.reduce(lambda x, y: x + y, adists)
-    out = pruned.select(
-        F.col(id_col),
-        F.col("cell"),
-        approx.cast("double").alias("approx_dist"),
-    )
-    return out.orderBy(F.col("approx_dist").asc(), F.col(id_col).asc()).limit(k)
 
 
 def ivfadc_trained_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_cells: int = 8,
-    nprobe: int = 3,
-    n_sub: int = 4,
-    k_codes: int = 8,
-    train_iters: int = 2,
-    dim: int = 64,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_cells: int = 8,
+    nprobe: int = 3, n_sub: int = 4, k_codes: int = 8, train_iters: int = 2,
+    dim: int = 64, *, id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Fully TRAINED IVFADC: Lloyd k-means trains BOTH model artifacts
     — the coarse cell quantizer on whole vectors and one PQ
@@ -1356,77 +1289,25 @@ def ivfadc_trained_topk(
     trained floats derive from exact-decimal sums, so the DuckDB
     oracle reconstructs every centroid and codebook relationally
     (``sql_lloyd_centroid_ctes`` chains, one per artifact)."""
-    import functools
+    from .kmeans import train_ivfpq
 
-    from .kmeans import lloyd_train
-
-    assert dim % n_sub == 0
-    sub_dim = dim // n_sub
-
-    cents = lloyd_train(
-        embeddings, k=n_cells, iters=train_iters, dim=dim,
-        id_col=id_col, vec_col=vec_col,
+    cents, cbooks = train_ivfpq(
+        embeddings, n_cells, n_sub, k_codes, train_iters, dim, id_col=id_col,
+        vec_col=vec_col,
     )
-    cbooks: list[dict[int, list[float]]] = []
-    for m in range(n_sub):
-        sub = embeddings.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim).alias("subvec"),
-        )
-        cbooks.append(
-            lloyd_train(
-                sub, k=k_codes, iters=train_iters, dim=sub_dim,
-                id_col=id_col, vec_col="subvec",
-            )
-        )
-    qv = collect_query_vector(
-        embeddings, query_vec_id, id_col=id_col, vec_col=vec_col
+    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    enc, adc = _pq_adc(vec_col, qv, cbooks)
+    cell = nearest_sqdist6_sql(vec_col, cents, id_field="cid")
+    return _select_topk(
+        embeddings, query_vec_id, k, id_col, [f"{cell}.cid AS cell", *enc], adc,
+        ivf_probe_cells(cents, qv, nprobe, metric="l2"),
     )
-
-    probe = sorted(cents, key=lambda c: (py_sqdist6(qv, cents[c]), c))[:nprobe]
-
-    cell = nearest_sqdist6_expr(vec_col, cents, id_field="cid")
-    # per-subspace codebooks are ALREADY sub_dim-length: slice only the
-    # data vector (lo), never the codeword (length=None)
-    enc_cols = [
-        nearest_sqdist6_expr(vec_col, cbooks[m], lo=m * sub_dim).alias(f"c{m}")
-        for m in range(n_sub)
-    ]
-    pruned = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col), cell.getField("cid").alias("cell"), *enc_cols)
-        .filter(F.col("cell").isin(probe))
-    )
-    adists = []
-    for m in range(n_sub):
-        lo, hi = m * sub_dim, (m + 1) * sub_dim
-        tab = ",".join(
-            f"CAST({py_sqdist6(qv[lo:hi], cbooks[m][j])!r}D AS DECIMAL(18,6))"
-            for j in range(k_codes)
-        )
-        adists.append(F.expr(f"element_at(array({tab}), c{m}.j + 1)"))
-    approx = functools.reduce(lambda x, y: x + y, adists)
-    out = pruned.select(
-        F.col(id_col),
-        F.col("cell"),
-        approx.cast("double").alias("approx_dist"),
-    )
-    return out.orderBy(F.col("approx_dist").asc(), F.col(id_col).asc()).limit(k)
 
 
 def ivfadc_residual_topk(
-    embeddings: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    n_cells: int = 8,
-    nprobe: int = 3,
-    n_sub: int = 4,
-    k_codes: int = 8,
-    train_iters: int = 2,
-    dim: int = 64,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, query_vec_id: int, k: int = 10, n_cells: int = 8,
+    nprobe: int = 3, n_sub: int = 4, k_codes: int = 8, train_iters: int = 2,
+    dim: int = 64, *, id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """RESIDUAL IVFADC — the exact FAISS IVFPQ serving algebra (Jégou
     et al. 2011): PQ codes quantize the residual ``x − c(cell)``, not
@@ -1447,49 +1328,21 @@ def ivfadc_residual_topk(
     residual form).  Plan: scan → cell argmin → probe filter →
     residual encode + ADC (all map-side) → TakeOrderedAndProject;
     ZERO shuffles, plan-asserted."""
-    from ..queries.helpers import py_hround
-    from .kmeans import lloyd_train
+    from .kmeans import train_ivfpq
 
-    assert dim % n_sub == 0
-    sub_dim = dim // n_sub
-
-    cents = lloyd_train(
-        embeddings, k=n_cells, iters=train_iters, dim=dim,
-        id_col=id_col, vec_col=vec_col,
+    cents, cbooks = train_ivfpq(
+        embeddings, n_cells, n_sub, k_codes, train_iters, dim, id_col=id_col,
+        vec_col=vec_col,
     )
-    cbooks: list[dict[int, list[float]]] = []
-    for m in range(n_sub):
-        sub = embeddings.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim).alias("subvec"),
-        )
-        cbooks.append(
-            lloyd_train(
-                sub, k=k_codes, iters=train_iters, dim=sub_dim,
-                id_col=id_col, vec_col="subvec",
-            )
-        )
-    qv = collect_query_vector(
-        embeddings, query_vec_id, id_col=id_col, vec_col=vec_col
+    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    cell = nearest_sqdist6_sql(vec_col, cents, id_field="cid")
+    ct = residual_codeword_tables(cents, cbooks)
+    adc = residual_adc_expr(residual_query_tables(cents, cbooks, qv))
+    return _select_topk(
+        embeddings, query_vec_id, k, id_col,
+        [f"{cell}.cid AS cell", *residual_encode_exprs(ct, vec_col, dim // n_sub)],
+        ("approx_dist", False, adc), ivf_probe_cells(cents, qv, nprobe, metric="l2"),
     )
-    probe = sorted(cents, key=lambda c: (py_sqdist6(qv, cents[c]), c))[:nprobe]
-
-    ct_sql = residual_codeword_tables(cents, cbooks)
-    qd_sql = residual_query_tables(cents, cbooks, qv)
-
-    cell = nearest_sqdist6_expr(vec_col, cents, id_field="cid")
-    pruned = (
-        embeddings.filter(F.col(id_col) != query_vec_id)
-        .select(F.col(id_col), F.col(vec_col), cell.getField("cid").alias("cell"))
-        .filter(F.col("cell").isin(probe))
-    )
-    coded = pruned.selectExpr(
-        id_col, "cell", *residual_encode_exprs(ct_sql, vec_col, sub_dim)
-    )
-    out = coded.selectExpr(
-        id_col, "cell", residual_adc_expr(qd_sql) + " AS approx_dist"
-    )
-    return out.orderBy(F.col("approx_dist").asc(), F.col(id_col).asc()).limit(k)
 
 
 def residual_codeword_tables(

@@ -972,10 +972,10 @@ def emb_lsh_join(spark, sf_dir):
     no near-identical pairs; a production dedup swaps the rank for a
     cosine threshold and unions several plane sets to recover the
     LSH recall loss."""
-    from ..operators.similarity import blocked_pairs, cosine_from_parts, lsh_bucket_expr
+    from ..operators.similarity import blocked_pairs, cosine_from_parts, lsh_bucket_sql
 
     e = widen(t(spark, sf_dir, "embeddings"))
-    withb = e.withColumn("bucket", lsh_bucket_expr("embedding"))
+    withb = e.withColumn("bucket", F.expr(lsh_bucket_sql("embedding")))
     pairs = blocked_pairs(withb, block_col="bucket", ordered=True)
     sim = hround(
         cosine_from_parts(F.col("a_v"), F.col("b_v"), F.col("a_nrm"), F.col("b_nrm")), 6
@@ -1266,7 +1266,7 @@ def emb_ivf_persisted_topk(spark, sf_dir):
     ranked driver-side, PARTITION PRUNING skips the other cells'
     files entirely (the FAISS inverted-list skip, plan-asserted), no
     assignment recompute, zero shuffles, TakeOrderedAndProject.
-    Assignment reuses the exact ``ivf_cell_expr`` the in-query probes
+    Assignment reuses the exact ``ivf_cell_sql`` the in-query probes
     use, so this hash-matches the non-persisted trained-IVF oracle:
     persistence changes the COST, never the answer."""
     import tempfile

@@ -16,7 +16,7 @@ touches the other ``n_cents − nprobe`` lists' files, the exact
 analogue of FAISS skipping inverted lists (plan-asserted in
 tests/test_plans.py: the probe scan shows ``cell`` PartitionFilters
 and no full-corpus scan).  Assignment uses the SAME
-``ivf_cell_expr`` the in-query probes use, so the stored layout and
+``ivf_cell_sql`` the in-query probes use, so the stored layout and
 any later probe's arithmetic can never disagree.
 
 At 100 TB: the build is one training pass (``train_frac`` bounds it)
@@ -37,18 +37,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.similarity import (
+    _rank,
+    ivf_cell_sql,
     ivf_probe_cells,
-    py_sqdist6,
-    require_finite,
     residual_adc_expr,
     residual_query_tables,
     spark_cosine6_sql,
     spark_dot6_sql,
     spark_sqdist6_sql,
-    sql_double_array,
-    sql_in,
 )
-from ..sqltext import sql_ident
+from ..sqltext import require_finite, sql_double_array, sql_ident, sql_in
 from .zipnum import _fs_for, _join, local_frame
 
 _CENTROIDS = "centroids.json"
@@ -328,8 +326,6 @@ def write_ivf_index(
     index rebuilds are rare, scheduled events, the same posture as any
     search-index deployment."""
     from ..operators.kmeans import lloyd_train
-    from ..operators.similarity import ivf_cell_expr
-
     from ..queries.helpers import widen_narrow
 
     cents = lloyd_train(
@@ -342,7 +338,7 @@ def write_ivf_index(
         # file count stays one per inverted list (the Iceberg
         # write.distribution-mode=hash posture)
         widen_narrow(embeddings)
-        .withColumn("cell", ivf_cell_expr(cents, vec_col))
+        .withColumn("cell", F.expr(ivf_cell_sql(cents, vec_col)))
         .repartition("cell")
         .write.partitionBy("cell")
         .mode("overwrite")
@@ -381,7 +377,6 @@ def write_ivfsq_index(
     drift.  Returns the trained centroids (persisted as
     ``centroids.json`` — same model file as the flat store)."""
     from ..operators.kmeans import lloyd_train
-    from ..operators.similarity import ivf_cell_expr
     from ..queries.helpers import widen_narrow
 
     cents = lloyd_train(
@@ -392,7 +387,7 @@ def write_ivfsq_index(
         # same widen + cell-clustered write as the flat store (file
         # count stays one per inverted list)
         _int8_frame(
-            widen_narrow(embeddings), ivf_cell_expr(cents, vec_col),
+            widen_narrow(embeddings), F.expr(ivf_cell_sql(cents, vec_col)),
             id_col, vec_col, attrs=attrs,
         )
         .repartition("cell")
@@ -439,8 +434,6 @@ def append_ivfsq_index(
     (silently wrong cell assignments).  Attribute columns are
     discovered from the EXISTING store schema (one footer read), so
     appends carry exactly the columns the build carried."""
-    from ..operators.similarity import ivf_cell_expr
-
     store = resolve_store(out_dir)
     cents = read_ivf_centroids(store)
     fixed = {id_col, "cell", "scale", "q"}
@@ -451,7 +444,7 @@ def append_ivfsq_index(
     ]
     (
         _int8_frame(
-            embeddings, ivf_cell_expr(cents, vec_col), id_col, vec_col,
+            embeddings, F.expr(ivf_cell_sql(cents, vec_col)), id_col, vec_col,
             attrs=attrs,
         )
         # cluster by cell like the build writer: one new file per
@@ -640,12 +633,10 @@ def append_ivf_index(
     longer fit) is a scheduled REBUILD, never an in-place mutation.
     One pointer resolve pins model + data to the SAME version (see
     ``append_ivfsq_index``)."""
-    from ..operators.similarity import ivf_cell_expr
-
     store = resolve_store(out_dir)
     cents = read_ivf_centroids(store)
     (
-        embeddings.withColumn("cell", ivf_cell_expr(cents, vec_col))
+        embeddings.withColumn("cell", F.expr(ivf_cell_sql(cents, vec_col)))
         # cluster by cell like the build writer: one new file per
         # touched inverted list per append (batch-sized shuffle)
         .repartition("cell")
@@ -885,8 +876,9 @@ def write_ivfpq_index(
     bytes at 100 TB of embeddings), each cell stores only the
     residual-PQ CODES ``j0..j{n_sub-1}`` per vector — ``n_sub`` bytes
     of payload against ``dim × 4`` for floats.  Train = Lloyd coarse
-    cells on whole vectors + one sub-codebook per subspace (identical
-    chains to ``operators.similarity.ivfadc_residual_topk``, so the
+    cells on whole vectors + one sub-codebook per subspace (the ONE
+    trainer ``operators.kmeans.train_ivfpq`` that
+    ``operators.similarity.ivfadc_residual_topk`` also runs, so the
     persisted answers hash-match the in-query twin), encode = the
     SHARED ``residual_encode_exprs`` algebra over combined codewords
     (one scan, map-side), layout = hive ``cell=`` partitions (the
@@ -927,15 +919,15 @@ def write_ivfpq_index(
     rotate with the stored reflector, probes rotate the query vector
     driver-side — rotation is orthogonal, so cosine/L2 semantics are
     unchanged and the refine sidecar re-ranks identically."""
-    from ..operators.kmeans import lloyd_train
+    from ..operators.kmeans import train_ivfpq
     from ..operators.similarity import (
         nearest_sqdist6_expr,
+        pq_sub_dim,
         residual_codeword_tables,
         residual_encode_exprs,
     )
 
-    assert dim % n_sub == 0
-    sub_dim = dim // n_sub
+    sub_dim = pq_sub_dim(dim, n_sub)
     # widen once up front: rotation, coarse/sub-codebook training and
     # the residual encode are all k×dim-decimal-heavy map stages that
     # would otherwise run at a narrow fixture scan's width (the
@@ -956,37 +948,10 @@ def write_ivfpq_index(
         )
         opq_u, opq_k = householder_rotation(v)
         embeddings = rotate_frame(embeddings, opq_u, opq_k, vec_col=vec_col)
-    # The coarse quantizer and the n_sub sub-codebooks are INDEPENDENT
-    # Lloyd chains over the same (rotated) frame — train them from a
-    # small driver thread pool (guide §2.6) so each training's
-    # kilobyte-scale update actions overlap instead of paying
-    # (1 + n_sub) sequential seed-collect + update walls.  Each chain
-    # is internally sequential (Lloyd is a barrier per iteration);
-    # only the chains interleave, and each returns a plain dict, so
-    # results are deterministic regardless of completion order.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _train_coarse() -> dict[int, list[float]]:
-        return lloyd_train(
-            embeddings, k=n_cells, iters=train_iters, dim=dim,
-            id_col=id_col, vec_col=vec_col, train_frac=train_frac,
-        )
-
-    def _train_sub(m: int) -> dict[int, list[float]]:
-        sub = embeddings.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim).alias("subvec"),
-        )
-        return lloyd_train(
-            sub, k=k_codes, iters=train_iters, dim=sub_dim,
-            id_col=id_col, vec_col="subvec", train_frac=train_frac,
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        coarse_fut = pool.submit(_train_coarse)
-        sub_futs = [pool.submit(_train_sub, m) for m in range(n_sub)]
-        cents = coarse_fut.result()
-        cbooks: list[dict[int, list[float]]] = [f.result() for f in sub_futs]
+    cents, cbooks = train_ivfpq(
+        embeddings, n_cells, n_sub, k_codes, train_iters, dim,
+        id_col=id_col, vec_col=vec_col, train_frac=train_frac,
+    )
     ct_sql = residual_codeword_tables(cents, cbooks)
     cell = nearest_sqdist6_expr(vec_col, cents, id_field="cid")
     extra = [F.col(a) for a in (attrs or [])]
@@ -1024,6 +989,8 @@ def write_ivfpq_index(
         # codes/ and refine/ are independent outputs — overlap the two
         # write jobs (guide §2.6) so the second's scan back-fills the
         # first's write tail
+        from concurrent.futures import ThreadPoolExecutor
+
         with ThreadPoolExecutor(max_workers=2) as pool:
             for f in [pool.submit(_write_codes), pool.submit(_write_refine)]:
                 f.result()
@@ -1257,7 +1224,7 @@ def _layout(store: str, kind: str, metric: str, vec_col: str) -> _Layout:
         return _Layout(
             "codes",
             ("approx_dist", False),
-            lambda q, n: sorted(cents, key=lambda c: (py_sqdist6(q, cents[c]), c))[:n],
+            lambda q, n: ivf_probe_cells(cents, q, n, metric="l2"),
             lambda q: residual_adc_expr(residual_query_tables(cents, cbooks, q)),
             rotate=lambda q: _opq_rotate_query(meta, q),
             meta=meta,
@@ -1292,69 +1259,6 @@ def _pruned(
     shared = [c for c in conds[0] if all(c in ci for ci in conds)]
     df = df.filter(" AND ".join(dict.fromkeys(scan + shared)))
     return df, [[c for c in ci if c not in shared] for ci in conds]
-
-
-def _rank(
-    df: DataFrame,
-    own: list[list[str]],
-    scores: list[str],
-    score: tuple[str, bool],
-    keep: list[str],
-    *,
-    batch: bool,
-    k: int | None = None,
-    radii: list[float] | None = None,
-    prep: str | None = None,
-) -> DataFrame:
-    """Score each request as SQL text and select.  One request is a
-    plain projection; several fan each row out to the requests whose
-    own conditions it meets (``inline(filter(array(named_struct…)))``,
-    map-side).  Top-k is ``orderBy + limit`` (TakeOrderedAndProject)
-    for one request and one ``request_no`` ``row_number`` window for
-    several; range cuts each request at its radius and orders
-    (request_no, score, id)."""
-    name, desc = score
-    if prep is not None:
-        df = df.selectExpr("*", f"{prep} AS __v")
-    cols = [sql_ident(c) for c in keep]
-    out = (["request_no"] if batch else []) + keep + [name]
-    if len(scores) == 1:
-        hits = df.selectExpr(
-            *(["0 AS request_no"] if batch else []), *cols,
-            f"{scores[0]} AS {name}",
-        )
-    else:
-        arms = ",".join(
-            f"named_struct('request_no', {i}, '{name}', "
-            + (f"CASE WHEN {' AND '.join(c)} THEN {s} END)" if c else f"{s})")
-            for i, (c, s) in enumerate(zip(own, scores))
-        )
-        hits = df.selectExpr(
-            *cols, f"inline(filter(array({arms}), s -> s.{name} IS NOT NULL))"
-        ).select(*out)
-    order = [name, keep[0]]
-    if radii is None and len(scores) == 1:
-        return hits.orderBy(order, ascending=[not desc, True]).limit(k)
-    if radii is None:
-        rank = f"{name} {'DESC' if desc else 'ASC'}, {cols[0]}"
-        return (
-            hits.selectExpr(
-                "*",
-                f"row_number() OVER (PARTITION BY request_no ORDER BY {rank}) AS __rn",
-            )
-            .filter(f"__rn <= {int(k)}")
-            .select(*out)
-        )
-    if len(radii) == 1:
-        bound = f"{float(radii[0])!r}D"
-    else:
-        bound = "CASE request_no " + " ".join(
-            f"WHEN {i} THEN {float(r)!r}D" for i, r in enumerate(radii)
-        ) + " END"
-    order = (["request_no"] if batch else []) + order
-    return hits.filter(f"{name} {'>=' if desc else '<='} {bound}").orderBy(
-        order, ascending=[True] * (len(order) - 2) + [not desc, True]
-    )
 
 
 def _refine(

@@ -11,10 +11,12 @@ are where Python values become Spark SQL text.
 
 from __future__ import annotations
 
+import math
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def sql_str(s: str) -> str:
@@ -45,6 +47,39 @@ def sql_ident(name: str) -> str:
     """A backquoted column identifier (reserved words such as
     ``timestamp``, ``offset`` and ``length`` are CDX field names)."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def sql_double_array(vals: list[float]) -> str:
+    """SQL text of an ``array<double>`` literal; ``repr(float)``
+    round-trips the exact double bits."""
+    return "array(" + ",".join(repr(float(v)) + "D" for v in vals) + ")"
+
+
+def sql_in(col: str, ids) -> str:
+    """SQL text of ``col IN (ids)`` over integer ids.  An empty list is
+    ``FALSE`` — ``IN ()`` does not parse."""
+    vals = ",".join(str(int(i)) for i in ids)
+    return f"`{col}` IN ({vals})" if vals else "FALSE"
+
+
+def sql_isin(col: str, ids) -> Column:
+    """``col IN (ids)`` as ONE parsed expression: ``Column.isin`` costs
+    one py4j round-trip per literal, and the parsed form pushes down
+    as the same ``In`` filter."""
+    return F.expr(sql_in(col, ids))
+
+
+def require_finite(query_vecs: list[list[float]], op: str) -> None:
+    """A NaN or infinite query component has no similarity or distance
+    to rank by (and no SQL literal): refuse it up front with a
+    ``ValueError`` naming the request."""
+    for n, qv in enumerate(query_vecs):
+        bad = [x for x in qv if not math.isfinite(float(x))]
+        if bad:
+            raise ValueError(
+                f"{op}: query vector {n} has a non-finite component "
+                f"({bad[0]!r})"
+            )
 
 
 def sql_key_range(lo: str | None, hi: str | None, col: str = "urlkey") -> str:
