@@ -96,10 +96,16 @@ def test_quantizer_sql_matches_column_form(spark):
     smaller id wins), same bucket bits."""
     from hypothesis import HealthCheck, example, given, settings
 
-    @settings(max_examples=40, deadline=None,
+    @settings(max_examples=25, deadline=None,
               suppress_health_check=[HealthCheck.too_slow])
     @given(_models())
-    @example(([[1.0, 0.0], [0.0, 1.0], [1.0, 1.0]], {0: [1.0, 0.0], 1: [1.0, 0.0], 2: [0.0, 2.0]}, 3))
+    # a tie between the duplicate centroids 0 and 1, and a zero vector
+    # whose every LSH dot is exactly 0
+    @example((
+        [[1.0, 0.0], [0.0, 1.0], [1.0, 1.0], [0.0, 0.0]],
+        {0: [1.0, 0.0], 1: [1.0, 0.0], 2: [0.0, 2.0]},
+        3,
+    ))
     def prop(model):
         vecs, cents, n_planes = model
         dim = len(vecs[0])
