@@ -565,20 +565,137 @@ def test_driver_read_walks_equal_distributed_read(
     assert not set(dead) & {r[0] for r in tombstoned[("single", 77)]}
 
 
-def test_graph_walk_runs_one_job(spark, sf_dir, store):
-    """Every hop of the walk reads its frontier on the driver and
-    scores it without a job: collecting a walk runs one Spark job, the
-    top-k over the visited set."""
+def test_graph_walk_runs_one_job(spark, sf_dir, store, py4j_calls):
+    """Every hop of a walk reads its frontier on the driver and scores
+    it there, and the ranked top-k is a local relation: collecting a
+    single or a batch walk runs no Spark job, in a bounded number of
+    py4j calls (31 each on the fixture store)."""
+    from webarchive_indexing_spark.operators.graph_ann import (
+        graph_beam_batch_topk,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings")
-    qv = collect_query_vector(emb, 77)
+    qids = [77, 321, 123, 456]
+    qvs = [collect_query_vector(emb, q) for q in qids]
+    walks = {
+        "single": lambda: graph_beam_topk(spark, store, qvs[0], k=10, exclude_id=77),
+        "batch": lambda: graph_beam_batch_topk(
+            spark, store, qvs, k=10, exclude_ids=qids
+        ),
+    }
     sc = spark.sparkContext
-    sc.setJobGroup("graph_walk_jobs", "graph_beam_topk")
-    try:
-        rows = graph_beam_topk(spark, store, qv, k=10, exclude_id=77).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(rows) == 10
-    assert len(sc.statusTracker().getJobIdsForGroup("graph_walk_jobs")) <= 1
+    for name, walk in walks.items():
+        group = f"graph_walk_jobs_{name}"
+        sc.setJobGroup(group, name)
+        try:
+            with py4j_calls() as calls:
+                rows = walk().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == (10 if name == "single" else 40), name
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+        assert calls.n <= 45, (name, calls.n)
+
+
+def test_fallback_walk_rows_equal_spark_scores(spark, sf_dir, store, monkeypatch):
+    """On the Spark-scan fallback (``_driver_read_bytes`` 0, so every
+    frontier is read by a pruned Spark scan) each walk returns the
+    driver read's rows, and every ``cos_sim`` is the score Spark's own
+    ``spark_cosine6_sql`` gives that stored vector and query."""
+    from webarchive_indexing_spark.operators import graph_ann
+    from webarchive_indexing_spark.operators.graph_ann import (
+        graph_beam_batch_topk,
+    )
+    from webarchive_indexing_spark.operators.similarity import spark_cosine6_sql
+    from webarchive_indexing_spark.sqltext import sql_double_array
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids = [77, 321]
+    qvs = [collect_query_vector(emb, q) for q in qids]
+
+    def walks():
+        return {
+            "single": graph_beam_topk(
+                spark, store, qvs[0], k=10, exclude_id=77
+            ).collect(),
+            "batch": graph_beam_batch_topk(
+                spark, store, qvs, k=10, exclude_ids=qids
+            ).collect(),
+        }
+
+    driver = walks()
+    monkeypatch.setattr(graph_ann, "_driver_read_bytes", lambda _spark: 0)
+    fallback = walks()
+    assert fallback == driver
+    vecs = spark.read.parquet(store + "/vectors")
+    spark_score = [
+        {
+            r.vec_id: r.s
+            for r in vecs.select(
+                "vec_id",
+                F.expr(spark_cosine6_sql("embedding", sql_double_array(qv))).alias("s"),
+            ).collect()
+        }
+        for qv in qvs
+    ]
+    rows = [(0, r.vec_id, r.cos_sim) for r in fallback["single"]] + [
+        tuple(r) for r in fallback["batch"]
+    ]
+    assert len(rows) == 30
+    assert all(s == spark_score[req][i] for req, i, s in rows)
+
+
+@pytest.fixture(scope="module")
+def unscorable_store(spark, tmp_path_factory):
+    """Five 3-d vectors on a prebuilt edge list: 0-2 are fine, 3 holds
+    a NaN and 4 a NULL element; every node links to 0."""
+    from pyspark.sql import types as T
+
+    out = str(tmp_path_factory.mktemp("unscorable_store"))
+    vecs = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [1.0, 1.0, 0.0],
+            [float("nan"), 1.0, 0.0], [None, 1.0, 0.0]]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)),
+        T.StructType([
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]),
+    )
+    edges = spark.createDataFrame(
+        [(0, 1, 0.0), (1, 2, 0.0), (3, 0, 0.0), (4, 0, 0.0)],
+        "src long, dst long, sim double",
+    )
+    write_knn_graph(emb, out, n_base=5, edges=edges)
+    return out
+
+
+@pytest.mark.parametrize(
+    "entry, bad, why",
+    [
+        (0, [1.0, 0.5], "the stored vector has 3 elements, the query 2"),
+        (0, [0.0, 0.0, 0.0], "the query has zero norm"),
+        (3, None, "an element or product is NULL or not finite"),
+        (4, None, "an element or product is NULL or not finite"),
+    ],
+)
+def test_walks_refuse_unscorable_pairs(spark, unscorable_store, entry, bad, why):
+    """A pair Spark could not score (a query of the wrong dimension or
+    zero norm, a NaN or NULL stored element) is a ``ValueError`` naming
+    the walk and the request, not a ``TypeError`` or a Spark error."""
+    from webarchive_indexing_spark.operators.graph_ann import (
+        graph_beam_batch_topk,
+    )
+
+    good = [1.0, 0.0, 0.0]
+    req = 0 if bad is None else 1
+    with pytest.raises(ValueError, match=f"graph_beam_topk: request 0, vec_id {entry}: {why}"):
+        graph_beam_topk(spark, unscorable_store, bad or good, entries=(entry,))
+    with pytest.raises(
+        ValueError, match=f"graph_beam_batch_topk: request {req}, vec_id {entry}: {why}"
+    ):
+        graph_beam_batch_topk(
+            spark, unscorable_store, [good, bad or good], entries=(entry,)
+        )
 
 
 def test_frontier_in_empty_buckets_reads_nothing(spark, sf_dir, tmp_path_factory):

@@ -662,7 +662,13 @@ def _embargo_pred(ts_col: str, embargo: dict, as_of: str | None) -> str:
         # day default to 01 (zero-padding would make day '00', which
         # strptime rejects), missing time to 00:00:00
         now = datetime.strptime(s + "0101000000"[len(s) - 4 :], "%Y%m%d%H%M%S")
-        return (now - duration(v)).strftime("%Y%m%d%H%M%S")
+        try:
+            t = now - duration(v)
+        except OverflowError:
+            # the duration reaches back past year 1: before every ts14
+            return "0" * 14
+        # %Y is not zero-padded below year 1000
+        return f"{t.year:04d}{t:%m%d%H%M%S}"
 
     conds = []
     if "before" in embargo:  # hide captures before the date

@@ -31,35 +31,34 @@ fully relational and oracle-checkable:
   the entry points; each round expands the current beam's
   out-neighbors MINUS the visited set, scores only those, and
   re-ranks the beam over everything visited; the answer is top-k of
-  the visited set.  Each hop PUSHES the beam ids into the edge store
-  as STATIC partition + id filters (``PartitionFilters:
-  src_bucket IN (…)``, ``PushedFilters: In(src, …)``) — the refine-
-  sidecar trick from ``sinks/ann_index.py`` — and scores fresh ids
-  against an identically pruned ``vectors/`` scan.  Neither table is
-  ever broadcast or fully scanned (round-13 verdict: broadcasting the
+  the visited set.  Each hop reads only the beam ids' bucket files of
+  the edge store and the fresh ids' bucket files of ``vectors/`` (or
+  pushes the ids into the same buckets as STATIC partition + id
+  filters, ``PartitionFilters: src_bucket IN (…)``, ``PushedFilters:
+  In(src, …)``, when the frontier is large).  Neither table is ever
+  broadcast or fully scanned (round-13 verdict: broadcasting the
   corpus-sized edge table was the one scale-killer in the module).
 
 **On the per-hop driver round-trips**: the walk state (visited id →
 score) lives DRIVER-SIDE for the whole walk — bounded by the serving
 parameters (|entries| + H·B·degree, the HNSW cost shape), never by
 the corpus; exactly the candidate set ANY graph-ANN server holds in
-memory per request.  Beams are computed in Python, and each hop makes
-two bounded frontier reads: the beam's edges (≤ B·k_neighbors rows)
-and the fresh ids' vectors.  While a frontier's bucket files total at
-most ``spark.sql.files.maxPartitionBytes``, it is read on the driver
-with ``pyarrow.dataset`` and handed to Spark as an Arrow local
-relation: the scoring projection over it is evaluated by
-``ConvertToLocalRelation`` and collects without a Spark job.  A walk
-then runs one job — its result's top-k — where it used to run two per
-hop plus the schema inference of its two store reads.  A larger
-frontier reads through the same frontier-pruned Spark scans, one job
-per read.  Either way scoring is the same Spark expression over the
-same values, so rows are bit-identical to every other path.  The
-bound caps what the driver scans per read; it is not a measured
-crossover (see ``_driver_read_bytes``).  A greedy
-graph walk is inherently sequential in hops; trading the previous
-"one static plan" unrolling for per-hop static pruning is what lets
-the scan read B buckets instead of broadcasting billions of edges.
+memory per request.  The walk generates candidates from the graph and
+verifies them on the driver: beams, scores and the final ranking are
+all computed in Python.  Each hop makes two bounded frontier reads,
+the beam's edges (≤ B·k_neighbors rows) and the fresh ids' vectors,
+and scores the fresh (request, id) pairs with ``py_cosine6``, the
+exact numpy twin of the ``hround(cosine, 6)`` Spark expression every
+other path scores with, so rows are bit-identical to the oracle's.
+While a frontier's bucket files total at most
+``spark.sql.files.maxPartitionBytes`` it is read on the driver with
+``pyarrow.dataset``; a larger frontier reads through the
+frontier-pruned Spark scans, one job per read.  The ranked top-k is
+returned as one local relation, so collecting a walk runs no Spark
+job.  A greedy graph walk is inherently sequential in hops; trading
+the previous "one static plan" unrolling for per-hop static pruning
+is what lets the scan read B buckets instead of broadcasting billions
+of edges.
 
 **LSM lifecycle** (round-14 — parity with the ZipNum / parquet-index
 / IVF stores): ``append_knn_graph`` adds vectors + their symmetrized
@@ -90,12 +89,13 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..queries.helpers import hround, sql_hround
-from ..sqltext import require_finite, sql_double_array, sql_isin
+from ..sqltext import require_finite, sql_isin
 from .similarity import (
+    PairError,
     _dec_dot,
     cosine,
     cosine_from_parts,
-    spark_cosine6_sql,
+    py_cosine6,
     sql_cosine,
 )
 
@@ -107,12 +107,12 @@ META = "_graph.json"
 #: buckets only sharpen the pruning
 N_BUCKETS = 16
 
-#: the walks' driver-held visited sets, handed to Spark for the top-k
-_VISITED = T.StructType(
-    [T.StructField("id", T.LongType()), T.StructField("s", T.DoubleType())]
+#: the walks' results, ranked on the driver
+_TOPK = T.StructType(
+    [T.StructField("vec_id", T.LongType()), T.StructField("cos_sim", T.DoubleType())]
 )
-_BATCH_VISITED = T.StructType(
-    [T.StructField("req", T.IntegerType()), *_VISITED.fields]
+_BATCH_TOPK = T.StructType(
+    [T.StructField("request_no", T.IntegerType()), *_TOPK.fields]
 )
 
 
@@ -1020,14 +1020,9 @@ def _driver_read_bytes(spark: SparkSession) -> int:
     splits a frontier this size over the cores, so the driver reads
     more than any one task would; the bound only caps that read.
 
-    It is not a time crossover.  On synthetic stores (64-dim vectors,
-    degree 12; 4-core host, 256 MB bound) the driver read was faster
-    for single and batch-of-4 walks at every size up to the bound:
-    with 16 bucket files, 0.18 s against 0.74 s at 16 MB and 0.54 s
-    against 1.25 s at 256 MB; with one file of 128 MB row groups,
-    about level for single walks at 128-256 MB.  The driver's peak
-    memory grows with the read instead: +0.37 GB at 256 MB over 16
-    files, +0.9 GB at 128 MB in one file."""
+    It is not a time crossover.  The driver's peak memory grows with
+    the read: +0.37 GB at 256 MB over 16 files and +0.9 GB at 128 MB
+    in one file (64-dim vectors, degree 12)."""
     return int(
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
@@ -1040,13 +1035,13 @@ class _Frontier:
 
     While the ids' bucket files total at most ``_driver_read_bytes``
     they are read right here with ``pyarrow.dataset``, filtered on
-    ``key``.  Edge rows go straight to Python; rows Spark must score
-    or filter reach it as an Arrow local relation, whose projection
-    ``ConvertToLocalRelation`` evaluates in the JVM — collecting it
-    runs no job.  Larger frontiers read through the frontier-pruned
-    Spark scans (``_pruned_edge_scan`` / ``_pruned_vec_scan``), whose
-    readers are created on first use.  Callers see the same rows
-    either way."""
+    ``key``.  Edge and vector rows go straight to Python; the rows a
+    ``where`` filters reach Spark as an Arrow local relation, whose
+    projection ``ConvertToLocalRelation`` evaluates in the JVM —
+    collecting it runs no job.  Larger frontiers read through the
+    frontier-pruned Spark scans (``_pruned_edge_scan`` /
+    ``_pruned_vec_scan``), whose readers are created on first use.
+    Callers see the same rows either way."""
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int | None):
         from ..sinks.zipnum import _fs_for
@@ -1156,60 +1151,6 @@ class _Frontier:
             return self._scan(sub, key, ids, columns)
         return arrow_frame(self.spark, *got)
 
-    def queried(
-        self, key: str, vec_col: str, pairs: list[tuple[int, int]],
-        queries: list[list[float]],
-    ) -> DataFrame:
-        """``(req, key, vec_col, __q)`` — one row per (request, id)
-        pair: the id's stored vector next to request ``req``'s query
-        vector, so every walk scores with one projection."""
-        import pyarrow as pa
-
-        from ..sinks.zipnum import arrow_frame
-
-        reqs_of: dict[int, list[int]] = {}
-        for req, i in pairs:
-            reqs_of.setdefault(int(i), []).append(int(req))
-        ids = sorted(reqs_of)
-        got = self._table("vectors", key, ids, (key, vec_col))
-        if got is None:
-            # per-request membership as one id → reqs map literal, the
-            # query as one array-of-arrays literal
-            fan_sql = "map(" + ",".join(
-                f"{i}L,array({','.join(str(r) for r in sorted(reqs_of[i]))})"
-                for i in ids
-            ) + ")"
-            qarr_sql = "array(" + ",".join(map(sql_double_array, queries)) + ")"
-            fanned = self._scan("vectors", key, ids, (key, vec_col)).select(
-                F.explode(F.element_at(F.expr(fan_sql), F.col(key))).alias("req"),
-                key,
-                vec_col,
-            )
-            return fanned.withColumn(
-                "__q", F.element_at(F.expr(qarr_sql), F.col("req") + 1)
-            )
-        table, schema = got
-        idx, reqs = [], []
-        for j, v in enumerate(table.column(key).to_pylist()):
-            for r in reqs_of[v]:
-                idx.append(j)
-                reqs.append(r)
-        table = table.take(pa.array(idx, pa.int64()))
-        table = table.add_column(0, "req", pa.array(reqs, pa.int32()))
-        table = table.append_column(
-            "__q",
-            pa.array([queries[r] for r in reqs], pa.list_(pa.float64())),
-        )
-        if schema is not None:
-            schema = T.StructType(
-                [
-                    T.StructField("req", T.IntegerType()),
-                    *schema.fields,
-                    T.StructField("__q", T.ArrayType(T.DoubleType())),
-                ]
-            )
-        return arrow_frame(self.spark, table, schema)
-
 
 def _beam_walk(
     spark: SparkSession,
@@ -1230,13 +1171,18 @@ def _beam_walk(
 
     The walk state lives DRIVER-SIDE for the whole walk (≤
     N·(|entries| + H·B·degree) entries — serving parameters, not
-    corpus) and beams are pure Python.  A hop is one read of the
+    corpus), and beams are pure Python.  A hop is one read of the
     UNION of every request's beam edges (per-request membership is
-    restored in Python) and one scoring of the fresh (request, id)
-    pairs; both run no Spark job while the frontier's files total at
-    most ``_driver_read_bytes`` (see ``_Frontier``).  Scoring stays IN
-    SPARK — the ``hround(cosine)`` expression every other path uses,
-    over the same values — so rows are bit-identical to the oracle's."""
+    restored in Python), one read of the fresh ids' vectors, and one
+    ``py_cosine6`` scoring of the fresh (request, id) pairs on the
+    driver: the exact twin of the ``hround(cosine, 6)`` expression
+    every other path scores with in Spark, so rows are bit-identical
+    to the oracle's.  Neither read runs a Spark job while the
+    frontier's files total at most ``_driver_read_bytes`` (see
+    ``_Frontier``).  A pair Spark could not score (a query of the wrong
+    dimension or zero norm, a NULL or non-finite stored element, a
+    decimal overflow) raises ``ValueError`` naming ``op`` and the
+    request."""
     from ..sinks.ann_index import read_ann_tombstones, resolve_store
 
     require_finite(query_vecs, op)
@@ -1245,22 +1191,20 @@ def _beam_walk(
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     tombs = read_ann_tombstones(root)
     frontier = _Frontier(spark, root, meta.get("n_buckets"))
-    # the hop-invariant scoring projection, parsed once per walk
-    score_cols = [
-        F.col("req"),
-        F.col(id_col),
-        F.expr(spark_cosine6_sql(f"`{vec_col}`", "__q")).alias("s"),
-    ]
 
     def score(pairs: list[tuple[int, int]]) -> list[tuple[int, int, float]]:
-        if not pairs:
-            return []
-        return [
-            (int(r[0]), int(r[1]), float(r[2]))
-            for r in frontier.queried(id_col, vec_col, pairs, query_vecs)
-            .select(*score_cols)
-            .collect()
-        ]
+        vec_of = dict(
+            frontier.rows("vectors", id_col, {i for _r, i in pairs}, (id_col, vec_col))
+        )
+        pairs = [(r, i) for r, i in pairs if i in vec_of]
+        try:
+            sims = py_cosine6(
+                [vec_of[i] for _r, i in pairs], [query_vecs[r] for r, _i in pairs]
+            )
+        except PairError as e:
+            r, i = pairs[e.pair]
+            raise ValueError(f"{op}: request {r}, {id_col} {i}: {e.why}") from None
+        return [(r, i, float(s)) for (r, i), s in zip(pairs, sims)]
 
     ent_ids = _resolve_entries(entries, meta, op)
     reqs = range(len(query_vecs))
@@ -1276,13 +1220,7 @@ def _beam_walk(
         )
     }
     for _ in range(hops):
-        per_req: dict[int, list[tuple[int, float]]] = {}
-        for (r, i), s in state.items():
-            per_req.setdefault(r, []).append((i, s))
-        beams = {
-            r: [i for i, _s in sorted(v, key=lambda t: (-t[1], t[0]))[:beam]]
-            for r, v in per_req.items()
-        }
+        beams = {r: [i for i, _s in b] for r, b in _best(state, beam).items()}
         if not beams:
             break  # no entry point resolved to a stored vector
         adj: dict[int, set[int]] = {}
@@ -1331,6 +1269,20 @@ def _beam_walk(
     return state
 
 
+def _best(
+    state: dict[tuple[int, int], float], n: int
+) -> dict[int, list[tuple[int, float]]]:
+    """Each request's top ``n`` visited ``(id, score)`` pairs, ranked
+    by (score desc, id asc), requests in ascending order."""
+    per_req: dict[int, list[tuple[int, float]]] = {}
+    for (r, i), s in state.items():
+        per_req.setdefault(r, []).append((i, s))
+    return {
+        r: sorted(per_req[r], key=lambda t: (-t[1], t[0]))[: max(n, 0)]
+        for r in sorted(per_req)
+    }
+
+
 def graph_beam_topk(
     spark: SparkSession,
     store: str,
@@ -1367,21 +1319,16 @@ def graph_beam_topk(
     ``hops`` to widen the visited pool in that case.
 
     The walk is ``graph_beam_batch_topk``'s with one request, so the
-    rows equal that request's batch rows."""
+    rows equal that request's batch rows.  They are ranked on the
+    driver and returned as one local relation: collecting them runs no
+    Spark job."""
     from ..sinks.zipnum import local_frame
 
     state = _beam_walk(
         spark, store, [query_vec], beam=beam, hops=hops, entries=entries,
         exclude_ids=[exclude_id], wheres=[where], op="graph_beam_topk",
     )
-    visited = local_frame(
-        spark, sorted((i, s) for (_r, i), s in state.items()), _VISITED
-    )
-    return (
-        visited.orderBy(F.col("s").desc(), F.col("id").asc())
-        .limit(k)
-        .select(F.col("id").alias("vec_id"), F.col("s").alias("cos_sim"))
-    )
+    return local_frame(spark, _best(state, k).get(0, []), _TOPK)
 
 
 def sql_graph_beam_topk(
@@ -1608,11 +1555,12 @@ def graph_beam_batch_topk(
     in ONE frontier read (the union-cells trick from the IVF batch
     probes), with per-request membership restored in Python — so
     request count changes the size of the id list, not the number of
-    reads.  Each fresh (request, id) pair's vector row carries its
-    request's query vector, so scoring is one projection (no
-    per-request expression arms).
-    Returns ``(request_no, vec_id, cos_sim)``, per-request top-k.  A
-    query vector with a NaN or infinite component raises
+    reads.  Each hop scores every fresh (request, id) pair against its
+    request's query vector in one ``py_cosine6`` call on the driver.
+    Returns ``(request_no, vec_id, cos_sim)``, per-request top-k
+    ordered by (request_no, cos_sim desc, vec_id), ranked on the
+    driver as one local relation.  A query vector with a NaN or
+    infinite component, the wrong dimension or zero norm raises
     ``ValueError`` naming its position.
 
     ``wheres`` (one SQL predicate over the store's ``attrs`` columns
@@ -1640,22 +1588,8 @@ def graph_beam_batch_topk(
         wheres=wheres or [None] * len(query_vecs),
         op="graph_beam_batch_topk",
     )
-    visited = local_frame(
-        spark,
-        [(req, i, s) for (req, i), s in sorted(state.items())],
-        _BATCH_VISITED,
-    )
-    w = Window.partitionBy("req").orderBy(F.col("s").desc(), F.col("id").asc())
-    return (
-        visited.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(
-            F.col("req").alias("request_no"),
-            F.col("id").alias("vec_id"),
-            F.col("s").alias("cos_sim"),
-        )
-        .orderBy("request_no", F.col("cos_sim").desc(), F.col("vec_id"))
-    )
+    rows = [(r, i, s) for r, top in _best(state, k).items() for i, s in top]
+    return local_frame(spark, rows, _BATCH_TOPK)
 
 
 def sql_graph_beam_batch_topk(

@@ -19,6 +19,7 @@ decimal addition is order-free).
 
 from __future__ import annotations
 
+import decimal
 import functools
 import hashlib
 
@@ -26,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..sqltext import sql_double_array, sql_ident, sql_in
+from ..sqltext import require_finite, sql_double_array, sql_ident, sql_in
 
 DEC = "decimal(28,14)"
 
@@ -531,6 +532,7 @@ def ivf_topk(
     cents, qv = collect_seeds_and_query(
         embeddings, n_cents, query_vec_id, id_col=id_col, vec_col=vec_col
     )
+    require_finite([qv], "ivf_topk")
     return ivf_probe_topk(
         embeddings, cents, query_vec_id, k=k, nprobe=nprobe, id_col=id_col,
         vec_col=vec_col, qv=qv,
@@ -621,6 +623,7 @@ def ivf_probe_topk(
     caller already fetched the query vector (one fewer collect job)."""
     if qv is None:
         qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    require_finite([qv], "ivf_probe_topk")
     vec = sql_ident(vec_col)
     return _select_topk(
         embeddings, query_vec_id, k, id_col,
@@ -654,13 +657,15 @@ def ivf_trained_topk(
     bit-for-bit relationally (``sql_lloyd_centroid_ctes``)."""
     from .kmeans import lloyd_train
 
+    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    require_finite([qv], "ivf_trained_topk")
     cents = lloyd_train(
         embeddings, k=n_cents, iters=train_iters, dim=dim,
         id_col=id_col, vec_col=vec_col, train_frac=train_frac,
     )
     return ivf_probe_topk(
         embeddings, cents, query_vec_id, k=k, nprobe=nprobe, id_col=id_col,
-        vec_col=vec_col,
+        vec_col=vec_col, qv=qv,
     )
 
 
@@ -1105,6 +1110,107 @@ def py_sqdist6(a: list[float], b: list[float]) -> float:
     return py_hround(acc, 6)
 
 
+class PairError(ValueError):
+    """Pair ``pair`` of a ``py_cosine6`` call has no score: Spark's
+    ``spark_cosine6_sql`` would give it NULL or fail on it."""
+
+    def __init__(self, pair: int, why: str):
+        super().__init__(f"pair {pair}: {why}")
+        self.pair, self.why = pair, why
+
+
+_DEC14 = decimal.Context(prec=40, rounding=decimal.ROUND_HALF_UP)
+_E14 = decimal.Decimal("1e-14")
+
+
+def _half_up14(x: float) -> int:
+    """``x`` in units of 1e-14, rounded HALF_UP from its shortest
+    decimal repr — how Spark casts a double to ``DECIMAL(28,14)``,
+    through ``Double.toString``.  Before JDK 19 that string is not
+    always the shortest; the two can round apart only when a 14-dp
+    half lies between them, which no parity test has met."""
+    return int(_DEC14.scaleb(_DEC14.quantize(decimal.Decimal(repr(x)), _E14), 14))
+
+
+def _dec_dot14(a, b, pairs: list[int]):
+    """``CAST(_dec_dot(a, b) AS DOUBLE)`` for each row pair of two
+    float64 matrices.  Each product is rounded to 1e-14 units from a
+    float estimate, and exactly (``_half_up14``) where it lies within
+    the estimate's error of a half or is too large (≥ 2^50 units) for
+    the estimate to resolve one.  The units are summed exactly, in
+    int64 while no sum can overflow it and in Python ints otherwise,
+    then divided by 10^14 with one correct rounding, as Spark's
+    decimal → double cast is."""
+    import numpy as np
+
+    with np.errstate(over="ignore", invalid="ignore"):
+        p = a * b
+    mag = np.abs(p)
+    for j in np.flatnonzero(~np.isfinite(p).all(axis=1) | (mag >= 1e14).any(axis=1)):
+        if np.isfinite(p[j]).all():
+            raise PairError(pairs[j], "a product overflows DECIMAL(28,14)")
+        raise PairError(pairs[j], "an element or product is NULL or not finite")
+    mag *= 1e14
+    whole = np.floor(mag)
+    frac = mag - whole
+    units = np.copysign(whole + (frac >= 0.5), p)
+    huge = mag >= 2.0**50
+    # |repr(p)·1e14 − mag| ≤ mag·2^-52: half an ulp of p, half of mag
+    near = ~huge & (np.abs(frac - 0.5) <= mag * 2.0**-51 + 2.0**-30)
+    units[near] = [_half_up14(float(x)) for x in p[near]]
+    out = np.empty(len(p))
+    slow = huge.any(axis=1) | (p.shape[1] >= 8192)
+    fast = np.flatnonzero(~slow)
+    tot = units[fast].astype(np.int64).sum(axis=1)
+    small = np.abs(tot) <= 2**53
+    out[fast[small]] = tot[small] / 1e14
+    exact = [(j, int(t)) for j, t in zip(fast[~small], tot[~small])]
+    for j in np.flatnonzero(slow):
+        acc = 0
+        for x, u, h in zip(p[j], units[j], huge[j]):
+            acc += _half_up14(float(x)) if h else int(u)
+            if abs(acc) >= 10**28:
+                raise PairError(pairs[j], "a partial sum overflows DECIMAL(28,14)")
+        exact.append((j, acc))
+    for j, t in exact:
+        out[j] = t / 10**14
+    return out
+
+
+def py_cosine6(vecs, queries):
+    """Exact numpy twin of ``spark_cosine6_sql(vec, query)``: a float64
+    array of ``hround(cosine, 6)``, one per (stored vector, query)
+    pair, bit-identical to Spark's.  The decimal dot products are
+    ``_dec_dot14``; then IEEE sqrt, multiply, divide and
+    ``floor(x·1e6 + 0.5) / 1e6``, the same double ops Spark runs.
+
+    A pair Spark would score NULL or fail on raises ``PairError``
+    naming the pair: unequal lengths, a NULL vector, a NULL or
+    non-finite element or product, a product or partial sum outside
+    ``DECIMAL(28,14)``, or a zero norm.  No score is NaN or inf."""
+    import numpy as np
+
+    out = np.empty(len(vecs))
+    by_dim: dict[int, list[int]] = {}
+    for j, (v, q) in enumerate(zip(vecs, queries, strict=True)):
+        if v is None:
+            raise PairError(j, "the stored vector is NULL")
+        if len(v) != len(q):
+            raise PairError(j, f"the stored vector has {len(v)} elements, the query {len(q)}")
+        by_dim.setdefault(len(q), []).append(j)
+    for d, idx in by_dim.items():
+        a = np.array([vecs[j] for j in idx], np.float64).reshape(len(idx), d)
+        b = np.array([queries[j] for j in idx], np.float64).reshape(len(idx), d)
+        na = np.sqrt(_dec_dot14(a, a, idx))
+        nb = np.sqrt(_dec_dot14(b, b, idx))
+        for j in np.flatnonzero((na == 0) | (nb == 0)):
+            whose = "stored vector" if na[j] == 0 else "query"
+            raise PairError(idx[j], f"the {whose} has zero norm")
+        cos = _dec_dot14(a, b, idx) / (na * nb)
+        out[idx] = np.floor(cos * 1e6 + 0.5) / 1e6
+    return out
+
+
 def pq_sub_dim(dim: int, n_sub: int) -> int:
     """The PQ subspace width ``dim / n_sub``.  A ``ValueError`` unless
     ``n_sub`` divides ``dim`` — input validation, so not an ``assert``,
@@ -1181,6 +1287,7 @@ def pq_adc_topk(
     cvecs, qv = collect_seeds_and_query(
         embeddings, k_codes, query_vec_id, id_col=id_col, vec_col=vec_col
     )
+    require_finite([qv], "pq_adc_topk")
     enc, adc = _pq_adc(vec_col, qv, _pq_split(cvecs, k_codes, n_sub, dim))
     bits = max(1, (k_codes - 1).bit_length())
     key = " + ".join(f"CAST(c{m}.j AS BIGINT) * {1 << bits * m}" for m in range(n_sub))
@@ -1259,6 +1366,7 @@ def ivf_pq_topk(
     vecs, qv = collect_seeds_and_query(
         embeddings, max(n_cells, k_codes), query_vec_id, id_col=id_col, vec_col=vec_col
     )
+    require_finite([qv], "ivf_pq_topk")
     cents = {i: vecs[i] for i in range(n_cells)}
     enc, adc = _pq_adc(vec_col, qv, _pq_split(vecs, k_codes, n_sub, dim))
     cell = nearest_sqdist6_sql(vec_col, cents, id_field="cid")
@@ -1291,11 +1399,12 @@ def ivfadc_trained_topk(
     (``sql_lloyd_centroid_ctes`` chains, one per artifact)."""
     from .kmeans import train_ivfpq
 
+    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    require_finite([qv], "ivfadc_trained_topk")
     cents, cbooks = train_ivfpq(
         embeddings, n_cells, n_sub, k_codes, train_iters, dim, id_col=id_col,
         vec_col=vec_col,
     )
-    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
     enc, adc = _pq_adc(vec_col, qv, cbooks)
     cell = nearest_sqdist6_sql(vec_col, cents, id_field="cid")
     return _select_topk(
@@ -1330,11 +1439,12 @@ def ivfadc_residual_topk(
     ZERO shuffles, plan-asserted."""
     from .kmeans import train_ivfpq
 
+    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
+    require_finite([qv], "ivfadc_residual_topk")
     cents, cbooks = train_ivfpq(
         embeddings, n_cells, n_sub, k_codes, train_iters, dim, id_col=id_col,
         vec_col=vec_col,
     )
-    qv = collect_query_vector(embeddings, query_vec_id, id_col=id_col, vec_col=vec_col)
     cell = nearest_sqdist6_sql(vec_col, cents, id_field="cid")
     ct = residual_codeword_tables(cents, cbooks)
     adc = residual_adc_expr(residual_query_tables(cents, cbooks, qv))
