@@ -17,6 +17,64 @@ def _plan(spark, sf_dir, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _probe_plan(spark, sf_dir, name: str, monkeypatch):
+    """A registered ANN probe query's plan on the Spark path, and what
+    its driver path read.  Every probe-kernel call runs twice over the
+    same store: first below the driver-read bound, each
+    ``_driver_read`` recorded as (table dir, files opened, columns,
+    id filter), then with ``_driver_read_bytes`` 0, whose Spark
+    DataFrame the query returns."""
+    from webarchive_indexing_spark.sinks import ann_index
+
+    reads = []
+    read, probe = ann_index._driver_read, ann_index._probe
+
+    def spy(fs, table_dir, files, columns=None, **kw):
+        scanner, schema = read(fs, table_dir, files, columns, **kw)
+        reads.append((
+            table_dir, [f.path for f in files], scanner.projected_schema.names,
+            kw.get("isin"),
+        ))
+        return scanner, schema
+
+    def both(*args, **kwargs):
+        probe(*args, **kwargs).collect()
+        with monkeypatch.context() as m:
+            m.setattr(ann_index, "_driver_read_bytes", lambda _spark: 0)
+            return probe(*args, **kwargs)
+
+    monkeypatch.setattr(ann_index, "_driver_read", spy)
+    monkeypatch.setattr(ann_index, "_probe", both)
+    return _plan(spark, sf_dir, name), reads
+
+
+def _assert_driver_reads(plan: str, reads, *, has=(), lacks=(), by_id=False):
+    """The driver twin of a probe plan's scan assertions: the driver
+    read the table the plan's first FileScan reads, and opened only
+    files of the cells its PartitionFilters keep; its columns include
+    ``has`` and none of ``lacks``; ``by_id``: it kept rows by an id
+    filter, as the scan's pushed ``In`` does."""
+    import re
+
+    scan = plan.split("FileScan parquet", 1)[1]
+    table = scan.split("Location:", 1)[1].split("[", 1)[1].split("]", 1)[0]
+    table = table.removeprefix("file:")
+    part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    m = re.search(r"cell#\d+ IN \(([\d,]+)\)", part) or re.search(
+        r"cell#\d+ = (\d+)", part
+    )
+    cells = {int(c) for c in m.group(1).split(",")}
+    mine = [r for r in reads if r[0] == table]
+    assert mine, (table, [r[0] for r in reads])
+    for _dir, files, cols, isin in mine:
+        assert files, table
+        opened = {int(f[len(table):].split("/")[1].removeprefix("cell=")) for f in files}
+        assert opened <= cells, (opened, cells)
+        assert all(c in cols for c in has), cols
+        assert not any(c in cols for c in lacks), cols
+        assert (isin is not None) == by_id, isin
+
+
 def test_filter_pushed_to_scan(spark, sf_dir):
     plan = _plan(spark, sf_dir, "filter_status")
     assert "PushedFilters: [" in plan
@@ -571,28 +629,29 @@ def test_training_shuffle_is_two_pass_range_rank(spark, sf_dir):
     assert "Exchange" not in rank_down[:cache_pos], rank_down[:cache_pos]
 
 
-def test_persisted_ivf_probe_prunes_inverted_lists(spark, sf_dir):
+def test_persisted_ivf_probe_prunes_inverted_lists(spark, sf_dir, monkeypatch):
     """The stored-index probe must do the inverted-list skip as
     PARTITION pruning: the vectors scan carries a cell PartitionFilter
     (only nprobe directories listed/read) and plans zero exchanges —
     a probe that re-scans or re-shuffles the whole corpus would erase
     the entire point of persisting the index."""
-    plan = _plan(spark, sf_dir, "emb_ivf_persisted_topk")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivf_persisted_topk", monkeypatch)
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cell" in part, part
     assert "Exchange" not in plan.split("FileScan parquet", 1)[0]
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("embedding",))
 
 
-def test_persisted_ivfpq_probe_reads_codes_not_vectors(spark, sf_dir):
+def test_persisted_ivfpq_probe_reads_codes_not_vectors(spark, sf_dir, monkeypatch):
     """The PQ-coded store's probe must (a) prune to the nprobe cell
     partitions like the flat store, and (b) READ CODES — the ReadSchema
     of the probe scan carries the j0.. code columns and no float-array
     column at all.  Scanning vectors would forfeit the 16-32× byte
     saving that justifies the PQ layout; re-shuffling would erase the
     serving-cost model."""
-    plan = _plan(spark, sf_dir, "emb_ivfadc_persisted_topk")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfadc_persisted_topk", monkeypatch)
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cell" in part, part
@@ -601,14 +660,15 @@ def test_persisted_ivfpq_probe_reads_codes_not_vectors(spark, sf_dir):
     assert "array" not in schema, f"probe scan reads float vectors: {schema}"
     assert "Exchange" not in plan.split("FileScan parquet", 1)[0]
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("j0",), lacks=("embedding",))
 
 
-def test_ann_delete_probe_keeps_pruned_plan(spark, sf_dir):
+def test_ann_delete_probe_keeps_pruned_plan(spark, sf_dir, monkeypatch):
     """Tombstone exclusion must stay a scan-side filter: the deleted-id
     predicate appears in PushedFilters (no join, no extra exchange) and
     the cell partition pruning is unchanged — deletes cost metadata,
     not plan shape."""
-    plan = _plan(spark, sf_dir, "emb_ivf_delete_probe")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivf_delete_probe", monkeypatch)
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cell" in part, part
@@ -616,6 +676,7 @@ def test_ann_delete_probe_keeps_pruned_plan(spark, sf_dir):
     assert "vec_id" in pushed, pushed
     assert "Exchange" not in plan.split("FileScan parquet", 1)[0]
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("embedding",))
 
 
 def test_batch_parquet_pushes_range_union_to_scan(spark, sf_dir):
@@ -676,14 +737,14 @@ def test_semantic_decontamination_is_map_only(spark, sf_dir):
     assert "Join" not in plan, plan[:600]
 
 
-def test_ann_batch_probe_single_scan_one_window_shuffle(spark, sf_dir):
+def test_ann_batch_probe_single_scan_one_window_shuffle(spark, sf_dir, monkeypatch):
     """Batch ANN serving (round 11): N requests must share ONE codes
     scan whose partition filter is the UNION of their probe cells
     (shared cells read once, codes-only ReadSchema), with per-request
     ADC map-side and exactly one Exchange — the request_no window.  A
     second scan, a vector-column read, or a pre-window shuffle would
     erase the amortization."""
-    plan = _plan(spark, sf_dir, "emb_ann_query_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ann_query_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -695,15 +756,16 @@ def test_ann_batch_probe_single_scan_one_window_shuffle(spark, sf_dir):
     assert plan.count("Exchange") == 1, plan[:1200]
     assert "request_no" in plan.split("Exchange", 1)[1].splitlines()[0]
     assert "Window" in plan
+    _assert_driver_reads(plan, reads, has=("j0",), lacks=("embedding",))
 
 
-def test_refine_store_scan_prunes_to_candidates(spark, sf_dir):
+def test_refine_store_scan_prunes_to_candidates(spark, sf_dir, monkeypatch):
     """The store-resident refine must touch only the CANDIDATE rows:
     its sidecar scan carries a cell PartitionFilter (candidate cells
     only) AND a pushed-down vec_id In filter, plans no Exchange and no
     join — re-ranking k·k_factor rows costs k·k_factor rows, not a
     corpus pass."""
-    plan = _plan(spark, sf_dir, "emb_ivfpq_refined_store")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfpq_refined_store", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -713,16 +775,17 @@ def test_refine_store_scan_prunes_to_candidates(spark, sf_dir):
     assert "Exchange" not in plan.split("FileScan parquet", 1)[0]
     assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("embedding",), by_id=True)
 
 
-def test_filtered_ann_probe_pushes_predicate(spark, sf_dir):
+def test_filtered_ann_probe_pushes_predicate(spark, sf_dir, monkeypatch):
     """Filtered vector search (round 12): the attribute predicate must
     ride INSIDE the same cell-pruned scan — PushedFilters carries the
     label equality next to the pruned PartitionFilters, the plan adds
     zero exchanges and no join, and top-k stays TakeOrderedAndProject.
     A post-top-k filter (the no-recall-guarantee shape) would show a
     Filter above the sort instead."""
-    plan = _plan(spark, sf_dir, "emb_ann_filtered_topk")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ann_filtered_topk", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -732,14 +795,15 @@ def test_filtered_ann_probe_pushes_predicate(spark, sf_dir):
     assert "Exchange" not in plan, plan[:900]
     assert "Join" not in plan
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("label",))
 
 
-def test_filtered_ann_pq_probe_pushes_predicate_codes_only(spark, sf_dir):
+def test_filtered_ann_pq_probe_pushes_predicate_codes_only(spark, sf_dir, monkeypatch):
     """The PQ store's filtered probe: predicate pushed into the pruned
     CODES scan (attrs ride the code rows), ReadSchema still carries
     codes + the attribute and NO vector column — filtering must not
     cost the 16-32x byte saving."""
-    plan = _plan(spark, sf_dir, "emb_ivfpq_filtered_topk")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfpq_filtered_topk", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -750,14 +814,15 @@ def test_filtered_ann_pq_probe_pushes_predicate_codes_only(spark, sf_dir):
     assert "j0" in schema and "label" in schema, schema
     assert "array" not in schema, f"filtered PQ probe reads vectors: {schema}"
     assert "Exchange" not in plan, plan[:900]
+    _assert_driver_reads(plan, reads, has=("j0", "label"), lacks=("embedding",))
 
 
-def test_filtered_ann_batch_single_scan_one_window(spark, sf_dir):
+def test_filtered_ann_batch_single_scan_one_window(spark, sf_dir, monkeypatch):
     """Filtered BATCH serving: per-request predicates ride the struct
     arms map-side — the plan keeps the batch contract (one scan pruned
     to the union of probe cells, exactly one Exchange = the request_no
     window) with heterogeneous filters in play."""
-    plan = _plan(spark, sf_dir, "emb_ann_filtered_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ann_filtered_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -765,14 +830,15 @@ def test_filtered_ann_batch_single_scan_one_window(spark, sf_dir):
     assert plan.count("Exchange") == 1, plan[:1200]
     assert "request_no" in plan.split("Exchange", 1)[1].splitlines()[0]
     assert "Window" in plan
+    _assert_driver_reads(plan, reads, has=("label",))
 
 
-def test_sq_batch_single_scan_one_window(spark, sf_dir):
+def test_sq_batch_single_scan_one_window(spark, sf_dir, monkeypatch):
     """SQ8 batch serving: one union-pruned sq scan (quantized payload
     ReadSchema — tinyint codes + scale, no float vector column), the
     shared dequantize feeding every request's arm map-side, exactly
     one Exchange (the request_no window)."""
-    plan = _plan(spark, sf_dir, "emb_ivfsq_query_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfsq_query_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -781,14 +847,15 @@ def test_sq_batch_single_scan_one_window(spark, sf_dir):
     assert "tinyint" in schema and "scale" in schema, schema
     assert plan.count("Exchange") == 1, plan[:1200]
     assert "request_no" in plan.split("Exchange", 1)[1].splitlines()[0]
+    _assert_driver_reads(plan, reads, has=("q", "scale"), lacks=("embedding",))
 
 
-def test_opq_probe_same_plan_as_plain_pq(spark, sf_dir):
+def test_opq_probe_same_plan_as_plain_pq(spark, sf_dir, monkeypatch):
     """The OPQ store's probe must keep the PQ serving contract: one
     codes-only pruned scan (rotation happened at BUILD; the query
     vector rotates driver-side, costing the plan nothing), zero
     exchanges, TakeOrderedAndProject."""
-    plan = _plan(spark, sf_dir, "emb_ivfpq_opq_topk")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfpq_opq_topk", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -797,6 +864,7 @@ def test_opq_probe_same_plan_as_plain_pq(spark, sf_dir):
     assert "j0" in schema and "array" not in schema, schema
     assert "Exchange" not in plan, plan[:900]
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("j0",), lacks=("embedding",))
 
 
 def test_video_meta_single_pass_no_shuffle(spark, sf_dir):
@@ -808,12 +876,12 @@ def test_video_meta_single_pass_no_shuffle(spark, sf_dir):
     assert plan.count("MapInPandas") == 2, plan[:600]
 
 
-def test_ann_refined_batch_single_sidecar_scan(spark, sf_dir):
+def test_ann_refined_batch_single_sidecar_scan(spark, sf_dir, monkeypatch):
     """Batch+refine: the refine stage is ONE sidecar scan pruned to
     the candidates' cells with a pushed-down id In filter, the
     per-request fan-out is a map-side generate, and the only Exchange
     is the request_no window — N requests re-rank in one pass."""
-    plan = _plan(spark, sf_dir, "emb_ann_refined_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ann_refined_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -823,13 +891,14 @@ def test_ann_refined_batch_single_sidecar_scan(spark, sf_dir):
     assert plan.count("Exchange") == 1, plan[:1200]
     assert "request_no" in plan.split("Exchange", 1)[1].splitlines()[0]
     assert "Join" not in plan
+    _assert_driver_reads(plan, reads, has=("embedding",), by_id=True)
 
 
-def test_ivfsq_probe_prunes_and_reads_quantized(spark, sf_dir):
+def test_ivfsq_probe_prunes_and_reads_quantized(spark, sf_dir, monkeypatch):
     """The SQ8 store probe: cell partition pruning like its siblings,
     and the scan reads the quantized payload (scale + tinyint codes),
     never a float embedding column; zero pre-top-k exchanges."""
-    plan = _plan(spark, sf_dir, "emb_ivfsq_persisted_topk")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfsq_persisted_topk", monkeypatch)
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "cell" in part, part
@@ -838,15 +907,16 @@ def test_ivfsq_probe_prunes_and_reads_quantized(spark, sf_dir):
     assert "embedding" not in schema, schema
     assert "Exchange" not in plan.split("FileScan parquet", 1)[0]
     assert "TakeOrderedAndProject" in plan
+    _assert_driver_reads(plan, reads, has=("q", "scale"), lacks=("embedding",))
 
 
-def test_range_probe_prunes_and_sorts_once(spark, sf_dir):
+def test_range_probe_prunes_and_sorts_once(spark, sf_dir, monkeypatch):
     """Range search over the flat store: the radius cut must not
     change the scan story — one cell-pruned FileScan, no join, the
     similarity filter map-side above it, and (with no LIMIT to turn
     the sort into TakeOrderedAndProject) exactly ONE exchange: the
     final range-partitioned ordering of the data-dependent result."""
-    plan = _plan(spark, sf_dir, "emb_ann_range_search")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ann_range_search", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -854,14 +924,15 @@ def test_range_probe_prunes_and_sorts_once(spark, sf_dir):
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan[:900]
     assert "rangepartitioning" in plan, plan[:900]
+    _assert_driver_reads(plan, reads, has=("embedding",))
 
 
-def test_sq_range_probe_pushes_predicate_reads_quantized(spark, sf_dir):
+def test_sq_range_probe_pushes_predicate_reads_quantized(spark, sf_dir, monkeypatch):
     """The composed SQ8 range probe: attribute predicate in
     PushedFilters beside the cell PartitionFilters, quantized-only
     ReadSchema (scale + codes + the attribute, never a float
     embedding), no join, one ordering exchange."""
-    plan = _plan(spark, sf_dir, "emb_ivfsq_range_search")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfsq_range_search", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -873,6 +944,7 @@ def test_sq_range_probe_pushes_predicate_reads_quantized(spark, sf_dir):
     assert "embedding" not in schema, schema
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan[:900]
+    _assert_driver_reads(plan, reads, has=("q", "scale", "label"), lacks=("embedding",))
 
 
 def test_web_image_dims_single_pass_no_shuffle(spark, sf_dir):
@@ -885,13 +957,13 @@ def test_web_image_dims_single_pass_no_shuffle(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_batch_range_no_window_one_exchange(spark, sf_dir):
+def test_batch_range_no_window_one_exchange(spark, sf_dir, monkeypatch):
     """Batch RANGE serving: one union-pruned scan, per-request radius
     cuts map-side, and — unlike every batch top-k plan — NO window at
     all; the only exchange is the final output ordering.  This is the
     shape that makes batch range the cheapest serving mode at any
     request count."""
-    plan = _plan(spark, sf_dir, "emb_ann_range_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ann_range_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -900,13 +972,14 @@ def test_batch_range_no_window_one_exchange(spark, sf_dir):
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan[:900]
     assert "rangepartitioning" in plan, plan[:900]
+    _assert_driver_reads(plan, reads, has=("embedding",))
 
 
-def test_pq_range_probe_codes_only_no_join(spark, sf_dir):
+def test_pq_range_probe_codes_only_no_join(spark, sf_dir, monkeypatch):
     """The PQ store's range probe keeps the codes-only scan contract:
     pruned cells, ReadSchema carries code columns and no vector
     array, ADC cut map-side, no join, one ordering exchange."""
-    plan = _plan(spark, sf_dir, "emb_ivfpq_range_search")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfpq_range_search", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -916,6 +989,7 @@ def test_pq_range_probe_codes_only_no_join(spark, sf_dir):
     assert "array" not in schema, f"PQ range probe reads vectors: {schema}"
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan[:900]
+    _assert_driver_reads(plan, reads, has=("j0",), lacks=("embedding",))
 
 
 def test_zorder_box_pushes_both_predicates(spark, sf_dir):
@@ -933,11 +1007,11 @@ def test_zorder_box_pushes_both_predicates(spark, sf_dir):
     assert "Join" not in plan
 
 
-def test_pq_batch_range_no_window_codes_only(spark, sf_dir):
+def test_pq_batch_range_no_window_codes_only(spark, sf_dir, monkeypatch):
     """PQ batch range: one union-pruned codes-only scan (no vector
     array in ReadSchema), per-request ADC + ceilings map-side, NO
     window, one output-ordering exchange."""
-    plan = _plan(spark, sf_dir, "emb_ivfpq_range_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfpq_range_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -947,13 +1021,14 @@ def test_pq_batch_range_no_window_codes_only(spark, sf_dir):
     assert "Window" not in plan, plan[:900]
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan[:900]
+    _assert_driver_reads(plan, reads, has=("j0",), lacks=("embedding",))
 
 
-def test_sq_batch_range_no_window_quantized_only(spark, sf_dir):
+def test_sq_batch_range_no_window_quantized_only(spark, sf_dir, monkeypatch):
     """SQ8 batch range: one union-pruned quantized scan (scale +
     codes, no float embedding), per-request radius floors map-side,
     NO window, one output-ordering exchange."""
-    plan = _plan(spark, sf_dir, "emb_ivfsq_range_batch")
+    plan, reads = _probe_plan(spark, sf_dir, "emb_ivfsq_range_batch", monkeypatch)
     assert plan.count("FileScan parquet") == 1, plan[:800]
     scan = plan.split("FileScan parquet", 1)[1]
     part = scan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
@@ -963,6 +1038,7 @@ def test_sq_batch_range_no_window_quantized_only(spark, sf_dir):
     assert "Window" not in plan, plan[:900]
     assert "Join" not in plan
     assert plan.count("Exchange") == 1, plan[:900]
+    _assert_driver_reads(plan, reads, has=("q", "scale"), lacks=("embedding",))
 
 
 def test_zorder_box_pushes_both_dimensions(spark, sf_dir):

@@ -993,7 +993,9 @@ def test_ann_tombstone_guard_switches_to_anti_join(
     compact-first warning) — the compaction contract made
     self-enforcing: a caller who never compacts gets a slower but
     still-correct plan instead of a mega-literal predicate.  Answers
-    must be identical on both sides of the threshold."""
+    must be identical on both sides of the threshold.  The plans are
+    the Spark path's (driver-read bound 0); the driver read, which
+    drops tombstones in Python, gives the same rows on both sides."""
     import tempfile
     import warnings
 
@@ -1016,9 +1018,18 @@ def test_ann_tombstone_guard_switches_to_anti_join(
         out, victims + list(range(10_000_000, 10_000_004))
     )
 
-    below = ann_index.ivf_index_probe_topk(
-        spark, out, qv, k=10, nprobe=3, exclude_id=123
-    )
+    def spark_path(call):
+        with monkeypatch.context() as m:
+            m.setattr(ann_index, "_driver_read_bytes", lambda _spark: 0)
+            return call()
+
+    def probe():
+        return ann_index.ivf_index_probe_topk(
+            spark, out, qv, k=10, nprobe=3, exclude_id=123
+        )
+
+    below = spark_path(probe)
+    assert probe().collect() == below.collect()
     assert "isin" in below._jdf.queryExecution().executedPlan().toString().lower() or (
         "IN (" in below._jdf.queryExecution().executedPlan().toString()
     )
@@ -1026,15 +1037,14 @@ def test_ann_tombstone_guard_switches_to_anti_join(
     monkeypatch.setattr(ann_index, "TOMBSTONE_ISIN_MAX", 3)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        above = ann_index.ivf_index_probe_topk(
-            spark, out, qv, k=10, nprobe=3, exclude_id=123
-        )
+        above = spark_path(probe)
         plan = above._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
         rows_above = above.collect()
     assert any("compact_ivf_index" in str(w.message) for w in caught)
     assert [tuple(r) for r in rows_above] == [tuple(r) for r in below.collect()]
     assert {r.vec_id for r in rows_above}.isdisjoint(set(victims))
+    assert probe().collect() == rows_above
 
     # the PQ probe shares the guard
     out2 = tempfile.mkdtemp(prefix="ivfpq_guard_")
@@ -1051,12 +1061,17 @@ def test_ann_tombstone_guard_switches_to_anti_join(
     monkeypatch.setattr(ann_index, "TOMBSTONE_ISIN_MAX", 2)
     with warnings.catch_warnings(record=True):
         warnings.simplefilter("always")
-        got = ann_index.ivfpq_index_probe_topk(
-            spark, out2, qv2, k=10, nprobe=3, exclude_id=77
-        )
+        def probe2():
+            return ann_index.ivfpq_index_probe_topk(
+                spark, out2, qv2, k=10, nprobe=3, exclude_id=77
+            )
+
+        got = spark_path(probe2)
         plan2 = got._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan2 and "LeftAnti" in plan2
-        assert tgt not in {r.vec_id for r in got.collect()}
+        rows2 = got.collect()
+        assert tgt not in {r.vec_id for r in rows2}
+        assert probe2().collect() == rows2
 
 
 def test_ann_batch_probe_equals_per_request_loop(spark, sf_dir):
@@ -2250,15 +2265,39 @@ def test_pq_probes_refuse_non_finite_query(spark, tmp_path, bad, part):
             batch(spark, store, [qv, qv], [0.5, bad])
 
 
-def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
-    """Every public probe form over the flat, SQ8 and PQ stores plans
-    through the one kernel: a bounded number of py4j calls while the
-    call runs (each request's score is parsed SQL text, not a
-    ``Column`` tree of hundreds of round trips), and no more Spark jobs
-    for the call plus its collect than the forms ran before they
-    shared it (batches of 4).  The in-plan IVF probe and the flat
-    store's cell projection render their quantizer as parsed SQL text
-    too, so they meet the single forms' bound."""
+def _by_request(rows: list) -> list:
+    """Probe rows with a batch's requests in ``request_no`` order, each
+    request's rows kept in rank order: a Spark window emits requests in
+    partition order."""
+    if rows and "request_no" in rows[0].__fields__:
+        return sorted(rows, key=lambda r: r.request_no)
+    return rows
+
+
+def _spark_path(monkeypatch, call):
+    """``call``'s probe frame and rows on the Spark path: the
+    driver-read bound 0, as for probed cells too large to read on the
+    driver."""
+    from webarchive_indexing_spark.sinks import ann_index
+
+    with monkeypatch.context() as m:
+        m.setattr(ann_index, "_driver_read_bytes", lambda _spark: 0)
+        df = call()
+        return df, df.collect()
+
+
+def test_probe_forms_bounded_py4j_calls_and_jobs(
+    spark, sf_dir, py4j_calls, monkeypatch
+):
+    """Every public probe form over the flat, SQ8 and PQ stores runs
+    through the one kernel.  Below the driver-read bound the call reads
+    the probed cells on the driver and scores them with exact twins:
+    no Spark job for the call plus its collect, a bounded number of
+    py4j calls while the call runs, and the same rows, schema and
+    order as the Spark path (bound 0) gives.  The in-plan IVF probe
+    and the flat store's cell projection render their quantizer as
+    parsed SQL text, so they meet the single forms' former bound of
+    180 calls and one job."""
     import tempfile
 
     from webarchive_indexing_spark.operators.similarity import (
@@ -2283,25 +2322,26 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
     }
     qs = [vecs[q] for q in qids]
     cents = A.read_ivf_centroids(flat)
-    # form -> (call, py4j bound, jobs bound)
+    # form -> (call, py4j bound, jobs bound); the driver-read forms'
+    # bounds are their measured counts (24, and 27 with the refine)
     forms = {
-        "ivf_topk": (lambda: A.ivf_index_probe_topk(spark, flat, qs[0]), 180, 1),
-        "ivf_range": (lambda: A.ivf_index_probe_range(spark, flat, qs[0], 0.15), 180, 3),
-        "ivf_batch_topk": (lambda: A.ivf_index_probe_batch_topk(spark, flat, qs), 260, 2),
+        "ivf_topk": (lambda: A.ivf_index_probe_topk(spark, flat, qs[0]), 24, 0),
+        "ivf_range": (lambda: A.ivf_index_probe_range(spark, flat, qs[0], 0.15), 24, 0),
+        "ivf_batch_topk": (lambda: A.ivf_index_probe_batch_topk(spark, flat, qs), 24, 0),
         "ivf_batch_range": (
-            lambda: A.ivf_index_probe_batch_range(spark, flat, qs, [0.15] * 4), 260, 3),
-        "sq_topk": (lambda: A.ivfsq_index_probe_topk(spark, sq, qs[0]), 180, 1),
-        "sq_range": (lambda: A.ivfsq_index_probe_range(spark, sq, qs[0], 0.15), 180, 3),
-        "sq_batch_topk": (lambda: A.ivfsq_index_probe_batch_topk(spark, sq, qs), 260, 2),
+            lambda: A.ivf_index_probe_batch_range(spark, flat, qs, [0.15] * 4), 24, 0),
+        "sq_topk": (lambda: A.ivfsq_index_probe_topk(spark, sq, qs[0]), 24, 0),
+        "sq_range": (lambda: A.ivfsq_index_probe_range(spark, sq, qs[0], 0.15), 24, 0),
+        "sq_batch_topk": (lambda: A.ivfsq_index_probe_batch_topk(spark, sq, qs), 24, 0),
         "sq_batch_range": (
-            lambda: A.ivfsq_index_probe_batch_range(spark, sq, qs, [0.15] * 4), 260, 3),
-        "pq_topk": (lambda: A.ivfpq_index_probe_topk(spark, pq, qs[0]), 180, 1),
-        "pq_range": (lambda: A.ivfpq_index_probe_range(spark, pq, qs[0], 1.05), 180, 3),
-        "pq_batch_topk": (lambda: A.ivfpq_index_probe_batch_topk(spark, pq, qs), 260, 2),
+            lambda: A.ivfsq_index_probe_batch_range(spark, sq, qs, [0.15] * 4), 24, 0),
+        "pq_topk": (lambda: A.ivfpq_index_probe_topk(spark, pq, qs[0]), 24, 0),
+        "pq_range": (lambda: A.ivfpq_index_probe_range(spark, pq, qs[0], 1.05), 24, 0),
+        "pq_batch_topk": (lambda: A.ivfpq_index_probe_batch_topk(spark, pq, qs), 24, 0),
         "pq_batch_range": (
-            lambda: A.ivfpq_index_probe_batch_range(spark, pq, qs, [1.05] * 4), 260, 3),
-        "refined": (lambda: A.ivfpq_refined_topk(spark, pq, None, qs[0]), 400, 2),
-        "refined_batch": (lambda: A.ivfpq_refined_batch_topk(spark, pq, qs), 600, 4),
+            lambda: A.ivfpq_index_probe_batch_range(spark, pq, qs, [1.05] * 4), 24, 0),
+        "refined": (lambda: A.ivfpq_refined_topk(spark, pq, None, qs[0]), 27, 0),
+        "refined_batch": (lambda: A.ivfpq_refined_batch_topk(spark, pq, qs), 27, 0),
         # the in-plan probe over the flat store's model, and that
         # model's cell assignment as the build and append project it
         "in_plan_ivf_probe": (
@@ -2324,3 +2364,115 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(spark, sf_dir, py4j_calls):
         assert calls.n <= max_calls, (name, calls.n)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) <= max_jobs, (name, jobs)
+        if max_jobs == 0:
+            spark_df, spark_rows = _spark_path(monkeypatch, call)
+            assert df.schema == spark_df.schema, name
+            assert _by_request(rows) == _by_request(spark_rows), name
+
+
+def test_driver_probe_rows_equal_spark_path(spark, sf_dir, monkeypatch, tmp_path):
+    """Below the driver-read bound a probe returns the Spark path's
+    rows, schema and order (bound 0): with ``where`` and ``exclude_id``,
+    on the flat store under every metric, on a PQ store with an int8
+    refine sidecar, an OPQ store and a versioned store after
+    ``append_ivfpq_index``; with tombstones on the ``isin`` path and on
+    the anti-join path above ``TOMBSTONE_ISIN_MAX``.  Edge cases give
+    the same defined result on both paths: a ``where`` that matches
+    nothing, k larger than the candidates, a missing cell directory,
+    every probed cell tombstoned.  An ADC table entry outside
+    DECIMAL(18,6) is a ``ValueError`` naming the request."""
+    import shutil
+    import warnings
+
+    from webarchive_indexing_spark.sinks import ann_index as A
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    qids = [77, 321]
+    vecs = {
+        int(r.vec_id): [float(x) for x in r.embedding]
+        for r in emb.filter(F.col("vec_id").isin(qids)).collect()
+    }
+    qs = [vecs[q] for q in qids]
+    label = emb.filter(F.col("vec_id") == 321).first().label
+    flat, pq, opq, ver = (str(tmp_path / d) for d in ("flat", "pq", "opq", "ver"))
+    A.write_ivf_index(emb, flat, n_cents=8, train_iters=2)
+    A.write_ivfpq_index(
+        emb, pq, n_cells=8, n_sub=4, k_codes=8, train_iters=2, attrs=["label"],
+        refine="int8",
+    )
+    A.write_ivfpq_index(
+        emb, opq, n_cells=8, n_sub=4, k_codes=8, train_iters=2, opq_iters=2,
+        refine="flat",
+    )
+    A.write_ivfpq_index_versioned(
+        emb.filter(F.col("vec_id") < 300), ver, n_cells=8, n_sub=4, k_codes=8,
+        train_iters=2, refine="flat",
+    )
+    A.append_ivfpq_index(emb.filter(F.col("vec_id") >= 300), ver)
+
+    def same(call) -> list:
+        df = call()
+        rows = df.collect()
+        spark_df, spark_rows = _spark_path(monkeypatch, call)
+        assert df.schema == spark_df.schema
+        assert _by_request(rows) == _by_request(spark_rows)
+        return rows
+
+    def pq_forms(store, where=None, k=10):
+        return {
+            "topk": lambda: A.ivfpq_index_probe_topk(
+                spark, store, qs[0], k=k, exclude_id=77, where=where),
+            "range": lambda: A.ivfpq_index_probe_range(
+                spark, store, qs[0], 1.1, exclude_id=77, where=where),
+            "batch": lambda: A.ivfpq_index_probe_batch_topk(
+                spark, store, qs, k=k, exclude_ids=qids, wheres=[where, None]),
+            "batch_range": lambda: A.ivfpq_index_probe_batch_range(
+                spark, store, qs, [1.1, 1.0], exclude_ids=qids, wheres=[None, where]),
+            "refined": lambda: A.ivfpq_refined_topk(
+                spark, store, None, qs[0], k=k, exclude_id=77, where=where),
+            "refined_batch": lambda: A.ivfpq_refined_batch_topk(
+                spark, store, qs, k=k, exclude_ids=qids),
+        }
+
+    def check(store, **kw) -> dict:
+        return {name: same(call) for name, call in pq_forms(store, **kw).items()}
+
+    for store in (opq, ver):
+        assert all(check(store).values()), store
+    for metric in ("cosine", "ip", "l2"):
+        assert same(lambda: A.ivf_index_probe_topk(
+            spark, flat, qs[1], k=10, exclude_id=321, metric=metric,
+            where=f"label = {label}"))
+        assert same(lambda: A.ivf_index_probe_range(
+            spark, flat, qs[1], {"l2": 1.2}.get(metric, 0.2), metric=metric))
+    assert all(check(pq, where=f"label = {label}").values())
+    # a where that matches nothing; k past every candidate
+    assert not any(check(pq, where="label < 0")[n] for n in ("topk", "range", "refined"))
+    wide = check(pq, k=10_000)
+    assert 0 < len(wide["topk"]) < 10_000
+    # tombstones: the isin scan filter, then the broadcast anti-join
+    base = wide["topk"]
+    A.delete_from_ann_index(pq, [r.vec_id for r in base[:3]])
+    assert check(pq)["topk"][0].vec_id == base[3].vec_id
+    monkeypatch.setattr(A, "TOMBSTONE_ISIN_MAX", 2)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        assert check(pq)["topk"][0].vec_id == base[3].vec_id
+    monkeypatch.setattr(A, "TOMBSTONE_ISIN_MAX", 10_000)
+    # a probed cell's directory gone: the others still answer
+    gone = base[3].cell
+    shutil.rmtree(f"{pq}/codes/cell={gone}")
+    left = check(pq)
+    assert left["topk"] and gone not in {r.cell for r in left["topk"]}
+    # every probed cell of request 0 tombstoned
+    probed = {r.cell for r in base}
+    A.delete_from_ann_index(pq, [
+        int(r.vec_id)
+        for r in spark.read.parquet(f"{pq}/codes").filter(F.col("cell").isin(probed)).collect()
+    ])
+    dead = check(pq)
+    assert dead["topk"] == dead["range"] == dead["refined"] == []
+    assert {r.request_no for r in dead["batch"]} <= {1}
+    # a query whose ADC table overflows DECIMAL(18,6)
+    with pytest.raises(ValueError, match=r"request 0, vec_id \d+: an ADC table entry"):
+        A.ivfpq_index_probe_topk(spark, ver, [3e5] * 64).collect()

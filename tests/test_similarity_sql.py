@@ -1,13 +1,17 @@
 """The in-plan quantizer literals are parsed Spark SQL text: the IVF
 cell argmax (``ivf_cell_sql``) and the sign-LSH bucket
 (``lsh_bucket_sql``) must give exactly the rows of the ``Column``
-trees they replaced, which live here as the reference.  Also: a PQ
-subspace count that does not divide the dimension is a ``ValueError``
-on every PQ entry point."""
+trees they replaced, which live here as the reference.  The driver
+twins of the Spark scores (6-dp cosine, dot and squared L2, the
+dequantized SQ8 cosine and the integer PQ ADC sum) give Spark's
+doubles bit for bit, and refuse with ``PairError`` what Spark cannot
+score.  Also: a PQ subspace count that does not divide the dimension
+is a ``ValueError`` on every PQ entry point."""
 
 from __future__ import annotations
 
 import functools
+import math
 
 import pytest
 from pyspark.sql import Column
@@ -288,3 +292,210 @@ def test_in_plan_probes_refuse_non_finite_query(spark, sf_dir, probe):
         call = lambda: getattr(S, probe)(poisoned, 77)  # noqa: E731
     with pytest.raises(ValueError, match=f"{probe}: query vector 0 has a non-finite"):
         call()
+
+
+def _adc_cases():
+    """Hypothesis strategy: (table, rows) for ``residual_adc_expr``.
+    The table is [cell, subspace, code]; entries are on the 6-dp grid
+    (``py_sqdist6`` values, halves like 2.5e-06 among them), drawn
+    doubles off the grid, exact halves of a 1e-6 unit, or large
+    magnitudes up to 9e11 whose sums pass 2^53 units.  Rows are
+    (cell, codes)."""
+    from hypothesis import strategies as st
+
+    grid = st.integers(-(10**7), 10**8).map(lambda n: n / 1e6)
+    half = st.integers(0, 10**6).map(lambda n: (n + 0.5) / 1e6)
+    large = st.floats(1e9, 9e11) | st.integers(10**15, 9 * 10**17).map(lambda n: n / 1e6)
+    entry = grid | half | large | st.floats(0, 50, allow_nan=False)
+
+    @st.composite
+    def draw(d):
+        n_cells, n_sub, k = d(st.integers(1, 3)), d(st.integers(1, 5)), d(st.integers(1, 4))
+        flat = d(st.lists(entry, min_size=n_cells * n_sub * k, max_size=n_cells * n_sub * k))
+        code = st.integers(0, k - 1)
+        rows = d(st.lists(
+            st.tuples(st.integers(0, n_cells - 1), st.lists(code, min_size=n_sub, max_size=n_sub)),
+            min_size=1, max_size=10,
+        ))
+        return flat, (n_cells, n_sub, k), rows
+
+    return draw()
+
+
+def _adc_rows(spark, rows):
+    n_sub = len(rows[0][1])
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("cell", T.IntegerType())]
+        + [T.StructField(f"j{m}", T.IntegerType()) for m in range(n_sub)]
+    )
+    return spark.createDataFrame([(i, c, *js) for i, (c, js) in enumerate(rows)], schema)
+
+
+def test_py_adc6_matches_spark(spark):
+    """``py_adc6`` over ``adc_units`` gives ``residual_adc_expr``'s
+    doubles bit for bit: Spark casts each entry to DECIMAL(18,6) HALF_UP
+    from its shortest repr, sums exactly and casts the sum to double
+    with one correct rounding — also for sums past 2^53 units."""
+    import numpy as np
+    from hypothesis import HealthCheck, example, given, settings
+
+    @settings(max_examples=25, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(_adc_cases())
+    # exact unit halves round away from zero; four 9e11 entries sum
+    # to 3.6e18 units
+    @example(([2.5e-6, 5e-7, 1.5e-6, 0.1234565], (1, 4, 1), [(0, [0, 0, 0, 0])]))
+    @example(([899999999999.9999, 899999999999.999, 123456789012.34567, 9e11],
+              (1, 4, 1), [(0, [0, 0, 0, 0])]))
+    def prop(case):
+        flat, shape, rows = case
+        tab = np.array(flat, np.float64).reshape(shape)
+        want = [
+            r.d
+            for r in _adc_rows(spark, rows).orderBy("id")
+            .selectExpr(f"{S.residual_adc_expr(S.adc_table_sql(tab))} AS d")
+            .collect()
+        ]
+        units, ok = S.adc_units(tab)
+        got = S.py_adc6(
+            units, ok, np.array([c for c, _ in rows]), np.array([js for _, js in rows]),
+            list(range(len(rows))),
+        )
+        assert [float(x) for x in got] == want
+
+    prop()
+
+
+@pytest.mark.parametrize(
+    "bad", [1e12, 3.5e15, float("nan"), float("inf"), float("-inf")]
+)
+def test_py_adc6_refuses_what_spark_cannot_cast(spark, bad):
+    """A table entry that ``CAST(… AS DECIMAL(18,6))`` overflows, or a
+    NaN/inf one, makes Spark fail on the row that looks it up; the twin
+    raises ``PairError`` for that row (never NaN) and scores the rows
+    that do not touch it.  A code outside the codebook likewise."""
+    import numpy as np
+
+    tab = np.array([[[0.25, bad]]])
+    units, ok = S.adc_units(tab)
+    cell, codes = np.array([0, 0]), np.array([[0], [1]])
+    assert list(S.py_adc6(units, ok, cell[:1], codes[:1], [0])) == [0.25]
+    with pytest.raises(S.PairError, match="not finite or overflows") as err:
+        S.py_adc6(units, ok, cell, codes, [7, 9])
+    assert err.value.pair == 9
+    with pytest.raises(S.PairError, match="outside 0..1"):
+        S.py_adc6(units, ok, cell[:1], np.array([[2]]), [0])
+    if math.isfinite(bad):
+        with pytest.raises(Exception, match="DECIMAL|Decimal|decimal"):
+            _adc_rows(spark, [(0, [1])]).selectExpr(
+                f"{S.residual_adc_expr(S.adc_table_sql(tab))} AS d"
+            ).collect()
+
+
+def test_residual_query_table_matches_py_sqdist6():
+    """The vectorised ADC table equals ``py_sqdist6`` of each query
+    subvector and combined codeword, entry by entry, for all cells and
+    for a subset of cell positions."""
+    import random
+
+    rng = random.Random(5)
+    dim, n_sub, k = 12, 3, 5
+    w = dim // n_sub
+    cents = {c: [rng.gauss(0, 1) for _ in range(dim)] for c in range(4)}
+    cbooks = [{j: [rng.gauss(0, 0.3) for _ in range(w)] for j in range(k)}
+              for _ in range(n_sub)]
+    for q in ([rng.gauss(0, 1) for _ in range(dim)], [rng.gauss(0, 40) for _ in range(dim)]):
+        for cells in (None, [1, 3]):
+            tab = S.residual_query_table(cents, cbooks, q, cells)
+            for p, c in enumerate(cells or range(4)):
+                for m in range(n_sub):
+                    for j in range(k):
+                        cw = [cents[c][m * w + i] + cbooks[m][j][i] for i in range(w)]
+                        assert tab[p, m, j] == S.py_sqdist6(q[m * w:(m + 1) * w], cw)
+
+
+def test_py_dot6_and_l2_twins_match_spark(spark):
+    """``py_dot6`` gives ``spark_dot6_sql``'s doubles and
+    ``py_sqdist6_rows`` gives ``spark_sqdist6_sql``'s, bit for bit, on
+    the cosine twin's drawn, near-duplicate and rescaled pairs."""
+    import numpy as np
+    from hypothesis import HealthCheck, given, settings
+
+    @settings(max_examples=25, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(_cosine_pairs())
+    def prop(pairs):
+        df = spark.createDataFrame([(i, v, q) for i, (v, q) in enumerate(pairs)], _PAIRS)
+        want = df.orderBy("id").select(
+            F.expr(S.spark_dot6_sql("v", "q")).alias("dot"),
+            F.expr(S.spark_sqdist6_sql("v", "q")).alias("l2"),
+        ).collect()
+        a = np.array([v for v, _q in pairs], np.float64)
+        b = np.array([q for _v, q in pairs], np.float64)
+        idx = list(range(len(pairs)))
+        assert [float(x) for x in S.py_dot6(a, b, idx)] == [r.dot for r in want]
+        assert [float(x) for x in S.py_sqdist6_rows(a, b, idx)] == [r.l2 for r in want]
+
+    prop()
+
+
+def test_sq_dequantized_cosine_matches_spark(spark):
+    """The SQ8 payload's driver twin — ``v·scale/127`` in IEEE order,
+    then ``_cosine6`` — gives the Spark ``_DEQ`` projection's 6-dp
+    cosine bit for bit, rows with a NULL scale or code refused."""
+    import numpy as np
+    import pyarrow as pa
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from webarchive_indexing_spark.sinks import ann_index as A
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("scale", T.DoubleType()),
+        T.StructField("q", T.ArrayType(T.ByteType())),
+    ])
+
+    @st.composite
+    def case(d):
+        dim = d(st.integers(1, 8))
+        code = st.lists(st.integers(-127, 127), min_size=dim, max_size=dim).filter(any)
+        rows = d(st.lists(st.tuples(st.floats(1e-3, 10), code), min_size=1, max_size=8))
+        qv = d(st.lists(st.floats(-4, 4), min_size=dim, max_size=dim).filter(
+            lambda v: max(map(abs, v)) >= 0.01))
+        return rows, qv
+
+    @settings(max_examples=25, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    @given(case())
+    def prop(c):
+        rows, qv = c
+        df = spark.createDataFrame([(i, s, q) for i, (s, q) in enumerate(rows)], schema)
+        want = [
+            r.s
+            for r in df.orderBy("id").selectExpr(f"{A._DEQ} AS __v").selectExpr(
+                f"{S.spark_cosine6_sql('__v', S.sql_double_array(qv))} AS s"
+            ).collect()
+        ]
+        batch = pa.RecordBatch.from_pydict({
+            "id": list(range(len(rows))),
+            "scale": [s for s, _q in rows],
+            "q": pa.array([q for _s, q in rows], pa.list_(pa.int8())),
+        })
+        score = A._vector_twin("q", "scale", S._cosine6)(qv, [])
+        got = score(A._Chunk(batch, "id"), np.arange(len(rows)))
+        assert [float(x) for x in got] == want
+
+    prop()
+    batch = pa.RecordBatch.from_pydict({
+        "id": [0, 1, 2],
+        "scale": [1.0, None, 1.0],
+        "q": pa.array([[1, 2], [1, 2], [1, None]], pa.list_(pa.int8())),
+    })
+    score = A._vector_twin("q", "scale", S._cosine6)([1.0, 0.5], [])
+    chunk = A._Chunk(batch, "id")
+    assert list(score(chunk, np.array([0]))) == [0.8]
+    for row, why in ((1, "scale is NULL"), (2, "NULL or not finite")):
+        with pytest.raises(S.PairError, match=why) as err:
+            score(chunk, np.array([0, row]))
+        assert err.value.pair == row

@@ -89,6 +89,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..queries.helpers import hround, sql_hround
+from ..sinks.zipnum import _driver_read_bytes
 from ..sqltext import require_finite, sql_isin
 from .similarity import (
     PairError,
@@ -1013,21 +1014,6 @@ def _pruned_vec_scan(
 _BUCKET_COL = {"vectors": "id_bucket", "graph": "src_bucket"}
 
 
-def _driver_read_bytes(spark: SparkSession) -> int:
-    """Largest pruned frontier, in parquet file bytes, that a walk
-    reads on the driver: ``spark.sql.files.maxPartitionBytes``, the
-    most the session ever gives one scan task.  The distributed read
-    splits a frontier this size over the cores, so the driver reads
-    more than any one task would; the bound only caps that read.
-
-    It is not a time crossover.  The driver's peak memory grows with
-    the read: +0.37 GB at 256 MB over 16 files and +0.9 GB at 128 MB
-    in one file (64-dim vectors, degree 12)."""
-    return int(
-        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    )
-
-
 class _Frontier:
     """One walk's reads of frontier rows: the rows of store table
     ``sub`` (``"vectors"`` or ``"graph"``) whose ``key`` is in a
@@ -1053,8 +1039,7 @@ class _Frontier:
         self._scans: dict[str, DataFrame] = {}
 
     def _files(self, sub: str, ids: list[int]) -> list:
-        from pyarrow import fs as pafs
-
+        from ..sinks.ann_index import _data_files
         from ..sinks.zipnum import _join
 
         table_dir = _join(self.local, sub)
@@ -1067,56 +1052,29 @@ class _Frontier:
             ]
         for d in dirs:
             if d not in self._listed:
-                sel = pafs.FileSelector(
-                    d, allow_not_found=True, recursive=self.n_buckets is None
+                self._listed[d] = _data_files(
+                    self.fs, d, recursive=self.n_buckets is None
                 )
-                self._listed[d] = [
-                    i
-                    for i in self.fs.get_file_info(sel)
-                    if i.type == pafs.FileType.File
-                    and not posixpath.basename(i.path).startswith(("_", "."))
-                ]
         return [f for d in dirs for f in self._listed[d]]
 
     def _table(self, sub: str, key: str, ids: list[int], columns: tuple):
         """(Arrow table, Spark schema or None) of the matching rows read
-        on the driver, or None when the frontier's files exceed the
-        bound.  Bucket directories without files give an empty table,
-        typed from the footer of the table's first data file."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
-
-        from ..sinks.ann_index import _first_data_file, _spark_schema
+        on the driver (``ann_index._driver_read``), or None when the
+        frontier's files exceed the bound.  Bucket directories without
+        files give an empty table, typed from the footer of the
+        table's first data file."""
+        from ..sinks.ann_index import _driver_read
         from ..sinks.zipnum import _join
 
         files = self._files(sub, ids)
         if sum(f.size for f in files) > self.bound:
             return None
-        if files:
-            data = ds.dataset(
-                [f.path for f in files], format="parquet", filesystem=self.fs
-            )
-            schema = data.schema
-            table = data.to_table(
-                columns=list(columns),
-                filter=pc.field(key).isin(
-                    pa.array(ids).cast(schema.field(key).type)
-                ),
-            )
-        else:
-            first = _first_data_file(self.fs, _join(self.local, sub))
-            if first is None:
-                raise FileNotFoundError(
-                    f"no data file under {sub}/ of {self.root}"
-                )
-            schema = pq.read_schema(first, filesystem=self.fs)
-            table = schema.empty_table().select(list(columns))
-        spark_schema = _spark_schema(schema.metadata)
-        if spark_schema is None:
-            return table, None
-        return table, T.StructType([spark_schema[c] for c in columns])
+        scanner, spark_schema = _driver_read(
+            self.fs, _join(self.local, sub), files, list(columns), isin=(key, ids)
+        )
+        table = scanner.to_table()
+        # an empty scan's table has no chunk, which createDataFrame refuses
+        return (table if table.num_rows else table.schema.empty_table()), spark_schema
 
     def _scan(self, sub: str, key: str, ids: list[int], columns: tuple) -> DataFrame:
         from ..sinks.ann_index import _store_scan

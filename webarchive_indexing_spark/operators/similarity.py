@@ -1177,6 +1177,21 @@ def _dec_dot14(a, b, pairs: list[int]):
     return out
 
 
+def _cosine6(a, b, pairs: list[int]):
+    """``spark_cosine6_sql`` of each row of float64 matrix ``a`` against
+    the same row of ``b`` (or its one row, broadcast), as in
+    ``py_cosine6``; ``pairs`` names the rows in a ``PairError``."""
+    import numpy as np
+
+    na = np.sqrt(_dec_dot14(a, a, pairs))
+    nb = np.sqrt(_dec_dot14(b, b, pairs))
+    for j in np.flatnonzero((na == 0) | (nb == 0)):
+        whose = "stored vector" if na[j] == 0 else "query"
+        raise PairError(pairs[j], f"the {whose} has zero norm")
+    cos = _dec_dot14(a, b, pairs) / (na * nb)
+    return np.floor(cos * 1e6 + 0.5) / 1e6
+
+
 def py_cosine6(vecs, queries):
     """Exact numpy twin of ``spark_cosine6_sql(vec, query)``: a float64
     array of ``hround(cosine, 6)``, one per (stored vector, query)
@@ -1201,14 +1216,34 @@ def py_cosine6(vecs, queries):
     for d, idx in by_dim.items():
         a = np.array([vecs[j] for j in idx], np.float64).reshape(len(idx), d)
         b = np.array([queries[j] for j in idx], np.float64).reshape(len(idx), d)
-        na = np.sqrt(_dec_dot14(a, a, idx))
-        nb = np.sqrt(_dec_dot14(b, b, idx))
-        for j in np.flatnonzero((na == 0) | (nb == 0)):
-            whose = "stored vector" if na[j] == 0 else "query"
-            raise PairError(idx[j], f"the {whose} has zero norm")
-        cos = _dec_dot14(a, b, idx) / (na * nb)
-        out[idx] = np.floor(cos * 1e6 + 0.5) / 1e6
+        out[idx] = _cosine6(a, b, idx)
     return out
+
+
+def py_dot6(a, b, pairs: list[int]):
+    """Exact numpy twin of ``spark_dot6_sql``: ``hround(dot, 6)`` of
+    each row of ``a`` against ``b`` (rows or one broadcast row), the
+    dot a ``_dec_dot14``.  ``PairError`` as ``_dec_dot14`` raises it."""
+    import numpy as np
+
+    return np.floor(_dec_dot14(a, b, pairs) * 1e6 + 0.5) / 1e6
+
+
+def py_sqdist6_rows(a, b, pairs: list[int]):
+    """Exact numpy twin of ``spark_sqdist6_sql(a, b)``, row by row:
+    ``(a_i − b_i)²`` summed in element order by sequential IEEE adds
+    (not numpy's pairwise ``sum``), then ``floor(x·1e6 + 0.5) / 1e6``.
+    A non-finite distance raises ``PairError``: Spark's NaN or inf
+    score has no place in a ranking."""
+    import numpy as np
+
+    acc = np.zeros(len(a))
+    for i in range(a.shape[1]):
+        d = a[:, i] - b[:, i]
+        acc = acc + d * d
+    for j in np.flatnonzero(~np.isfinite(acc)):
+        raise PairError(pairs[j], "the squared distance is not finite")
+    return np.floor(acc * 1e6 + 0.5) / 1e6
 
 
 def pq_sub_dim(dim: int, n_sub: int) -> int:
@@ -1488,35 +1523,127 @@ def residual_codeword_tables(
     return ct_sql
 
 
+def residual_query_table(
+    cents: dict[int, list[float]],
+    cbooks: list[dict[int, list[float]]],
+    qv: list[float],
+    cells: list[int] | None = None,
+):
+    """The query's ADC lookup table as a float64 array indexed
+    [cell, subspace, code]: ``py_sqdist6`` of the query's subvector to
+    each combined codeword ``c_sub + b_j``, for ``cells`` (positions in
+    ``sorted(cents)``, as ``element_at(…, cell + 1)`` looks them up;
+    all cells by default).  Vectorised with the same IEEE ops in the
+    same order: the codeword add, the squared differences summed
+    sequentially, then ``floor(x·1e6 + 0.5) / 1e6``."""
+    import numpy as np
+
+    keys = sorted(cents)
+    cells = range(len(keys)) if cells is None else cells
+    dim = len(qv)
+    c = np.array([cents[keys[p]] for p in cells], np.float64).reshape(-1, dim)
+    b = np.array([[cb[j] for j in sorted(cb)] for cb in cbooks], np.float64)
+    q = np.asarray(qv, np.float64)
+    w = b.shape[2]
+    acc = np.zeros((len(c), len(cbooks), b.shape[1]))
+    with np.errstate(over="ignore", invalid="ignore"):
+        for m in range(len(cbooks)):
+            cw = c[:, None, m * w:(m + 1) * w] + b[m][None]
+            for i in range(w):
+                d = q[m * w + i] - cw[:, :, i]
+                acc[:, m] = acc[:, m] + d * d
+        return np.floor(acc * 1e6 + 0.5) / 1e6
+
+
+def adc_table_sql(tab) -> list[str]:
+    """Per-subspace SQL literal tables, ``[cell][code]``, of an ADC
+    table indexed [cell, subspace, code] — ``residual_adc_expr``'s
+    input.  A non-finite entry has no double literal: ``ValueError``."""
+    import numpy as np
+
+    if not np.isfinite(tab).all():
+        raise ValueError("ADC table holds a non-finite query distance")
+    return [
+        "array("
+        + ",".join(
+            "array(" + ",".join(f"{float(x)!r}D" for x in tab[c, m]) + ")"
+            for c in range(len(tab))
+        )
+        + ")"
+        for m in range(tab.shape[1])
+    ]
+
+
 def residual_query_tables(
     cents: dict[int, list[float]],
     cbooks: list[dict[int, list[float]]],
     qv: list[float],
 ) -> list[str]:
-    """Per-subspace SQL literal tables of the query's squared distance
-    to every (cell, code) combined codeword — the ADC lookup table,
-    computed per query on the driver (model-sized math)."""
-    n_sub = len(cbooks)
-    sub_dim = len(next(iter(cbooks[0].values())))
+    """``adc_table_sql`` of ``residual_query_table`` over every cell —
+    the ADC lookup table, computed per query on the driver
+    (model-sized math)."""
+    return adc_table_sql(residual_query_table(cents, cbooks, qv))
 
-    def d_lit(x: float) -> str:
-        return f"{float(x)!r}D"
 
-    qd_sql: list[str] = []
-    for m in range(n_sub):
-        lo = m * sub_dim
-        cells_qd = []
-        for cell in sorted(cents):
-            qds = []
-            for j in sorted(cbooks[m]):
-                cw = [
-                    cents[cell][lo + i] + cbooks[m][j][i]
-                    for i in range(sub_dim)
-                ]
-                qds.append(d_lit(py_sqdist6(qv[lo : lo + sub_dim], cw)))
-            cells_qd.append("array(" + ",".join(qds) + ")")
-        qd_sql.append("array(" + ",".join(cells_qd) + ")")
-    return qd_sql
+_E6 = decimal.Decimal("1e-6")
+
+
+def adc_units(table):
+    """``CAST(t AS DECIMAL(18,6))`` of each ADC table entry as an int64
+    count of 1e-6 units, rounded HALF_UP from the shortest repr as
+    Spark casts a double, plus a mask of the entries Spark cannot cast
+    (NaN, inf, or 10^12 and beyond), whose units are 0.  Entries below
+    2^30 that lie within 0.25 units of an integer round from their
+    float product (``py_sqdist6`` values all do); the rest go through
+    ``Decimal``."""
+    import numpy as np
+
+    t = np.asarray(table, np.float64)
+    ok = np.isfinite(t) & (np.abs(t) < 1e13)
+    with np.errstate(over="ignore", invalid="ignore"):
+        scaled = np.where(ok, t, 0.0) * 1e6
+    near = np.rint(scaled)
+    fast = ok & (np.abs(t) < 2.0**30) & (np.abs(scaled - near) < 0.25)
+    units = np.where(fast, near, 0.0).astype(np.int64)
+    for i in zip(*np.nonzero(ok & ~fast)):
+        u = int(_DEC14.quantize(decimal.Decimal(repr(float(t[i]))), _E6).scaleb(6))
+        if abs(u) < 10**18:
+            units[i] = u
+        else:
+            ok[i] = False
+    return units, ok
+
+
+def py_adc6(units, ok, pos, codes, pairs: list[int]):
+    """Exact numpy twin of ``residual_adc_expr``: row i's distance is
+    the sum over subspaces m of ``units[pos[i], m, codes[i, m]]``
+    (``adc_units`` of the table), an exact integer count of 1e-6
+    units, divided by 10^6 with one correct rounding as Spark's
+    decimal → double cast is.  A row whose code is out of range or
+    whose entry Spark cannot cast raises ``PairError`` naming its
+    pair: Spark would fail or give NULL."""
+    import numpy as np
+
+    n_sub, k_codes = units.shape[1:]
+    for j in np.flatnonzero(((codes < 0) | (codes >= k_codes)).any(axis=1)):
+        raise PairError(pairs[j], f"a code is outside 0..{k_codes - 1}")
+    at = (pos[:, None] * n_sub + np.arange(n_sub)) * k_codes + codes
+    if not ok.all():
+        for j in np.flatnonzero(~ok.ravel()[at].all(axis=1)):
+            raise PairError(
+                pairs[j], "an ADC table entry is not finite or overflows DECIMAL(18,6)"
+            )
+    u = units.ravel()[at]
+    if n_sub * 10**18 < 2**63:
+        tot = u.sum(axis=1)
+    else:
+        tot = np.array([sum(int(x) for x in row) for row in u], object)
+    out = np.empty(len(u))
+    small = np.abs(tot) <= 2**53
+    out[small] = tot[small].astype(np.int64) / 1e6
+    for j in np.flatnonzero(~small):
+        out[j] = int(tot[j]) / 10**6
+    return out
 
 
 def residual_encode_exprs(

@@ -10,14 +10,17 @@ stored artifact.  The store is two pieces:
 * ``vectors/`` — the corpus hive-partitioned by ``cell=`` (the IVF
   inverted lists AS directory layout).
 
-The payoff is that a probe becomes PARTITION PRUNING: reading
-``nprobe`` cells lists and scans only those directories — Spark never
-touches the other ``n_cents − nprobe`` lists' files, the exact
-analogue of FAISS skipping inverted lists (plan-asserted in
-tests/test_plans.py: the probe scan shows ``cell`` PartitionFilters
-and no full-corpus scan).  Assignment uses the SAME
-``ivf_cell_sql`` the in-query probes use, so the stored layout and
-any later probe's arithmetic can never disagree.
+The payoff is that a probe reads only its ``nprobe`` cells'
+directories — the other ``n_cents − nprobe`` lists' files are never
+opened, the exact analogue of FAISS skipping inverted lists.  While
+those files total at most ``_driver_read_bytes`` the probe reads them
+on the driver with pyarrow and scores them with exact numpy twins of
+its SQL scores (the way FAISS serves IVFPQ on one node), so it runs no
+Spark job; above that, the same cells are a Spark scan's PartitionFilters
+(plan-asserted in tests/test_plans.py, with the driver twin of each
+assertion beside it).  Assignment uses the SAME ``ivf_cell_sql`` the
+in-query probes use, so the stored layout and any later probe's
+arithmetic can never disagree.
 
 At 100 TB: the build is one training pass (``train_frac`` bounds it)
 plus one assignment scan + hive write; each query then costs
@@ -37,17 +40,24 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.similarity import (
+    PairError,
+    _cosine6,
     _rank,
+    adc_units,
     ivf_cell_sql,
     ivf_probe_cells,
+    py_adc6,
+    py_dot6,
+    py_sqdist6_rows,
     residual_adc_expr,
+    residual_query_table,
     residual_query_tables,
     spark_cosine6_sql,
     spark_dot6_sql,
     spark_sqdist6_sql,
 )
 from ..sqltext import require_finite, sql_double_array, sql_ident, sql_in
-from .zipnum import _fs_for, _join, local_frame
+from .zipnum import _driver_read_bytes, _fs_for, _join, arrow_frame, local_frame
 
 _CENTROIDS = "centroids.json"
 _PQ_MODEL = "pq.json"
@@ -280,6 +290,81 @@ def _first_data_file(fs, d: str) -> str | None:
             if found is not None:
                 return found
     return None
+
+
+def _data_files(fs, d: str, *, recursive: bool = False) -> list:
+    """The data files under directory ``d`` as pyarrow ``FileInfo``s,
+    listed as Spark lists them: names starting with ``_`` or ``.`` are
+    skipped, and a missing directory has none."""
+    from pyarrow import fs as pafs
+
+    sel = pafs.FileSelector(d, allow_not_found=True, recursive=recursive)
+    return [
+        i
+        for i in fs.get_file_info(sel)
+        if i.type == pafs.FileType.File
+        and not posixpath.basename(i.path).startswith(("_", "."))
+    ]
+
+
+def _driver_read(
+    fs,
+    table_dir: str,
+    files: list,
+    columns: list[str] | None = None,
+    *,
+    isin: tuple[str, list[int]] | None = None,
+    cell: bool = False,
+    batch_rows: int | None = None,
+):
+    """The one driver read of a store table's parquet ``files``
+    (``FileInfo``s under ``table_dir``), shared by graph-walk frontiers
+    and probe cells: a ``pyarrow.dataset`` scanner over ``columns``
+    (all of them by default), keeping the rows whose ``isin[0]`` is in
+    ``isin[1]``, with the hive ``cell`` column from the paths when
+    ``cell`` is set.  No files give an empty scan typed from the
+    footer of the table's first data file.  Returns the scanner and
+    the Spark schema of its columns, from the footer Spark wrote
+    (None for a file Spark did not write)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    if files:
+        part = (
+            ds.partitioning(pa.schema([("cell", pa.int32())]), flavor="hive")
+            if cell
+            else None
+        )
+        data = ds.dataset(
+            [f.path for f in files], format="parquet", filesystem=fs,
+            partitioning=part, partition_base_dir=table_dir if cell else None,
+        )
+    else:
+        first = _first_data_file(fs, table_dir)
+        if first is None:
+            raise FileNotFoundError(f"no data file under {table_dir}")
+        schema = pq.read_schema(first, filesystem=fs)
+        if cell:
+            schema = schema.append(pa.field("cell", pa.int32()))
+        data = ds.InMemoryDataset(schema.empty_table())
+    columns = list(data.schema.names if columns is None else columns)
+    pred = None
+    if isin is not None:
+        key, ids = isin
+        pred = pc.field(key).isin(pa.array(ids).cast(data.schema.field(key).type))
+    kw = {} if batch_rows is None else {
+        # chunked reads keep one chunk in flight, not the readahead
+        "batch_size": batch_rows, "batch_readahead": 1, "fragment_readahead": 1,
+    }
+    scanner = data.scanner(columns=columns, filter=pred, **kw)
+    spark_schema = _spark_schema(data.schema.metadata)
+    if spark_schema is not None:
+        by_name = {f.name: f for f in spark_schema.fields}
+        by_name["cell"] = T.StructField("cell", T.IntegerType())
+        spark_schema = T.StructType([by_name[c] for c in columns])
+    return scanner, spark_schema
 
 
 def _store_scan(spark: SparkSession, store: str, sub: str) -> DataFrame:
@@ -1191,14 +1276,127 @@ def read_ivf_centroids(out_dir: str) -> dict[int, list[float]]:
 #: sidecar store the same ``_int8_frame`` form
 _DEQ = "transform(q, v -> CAST(v AS DOUBLE) * scale / 127.0D)"
 
-#: flat-store metric → (score column, descending?, score SQL).  FAISS
-#: METRIC_* parity on the query side: cosine and inner product rank
-#: descending, squared L2 ascending.
+#: flat-store metric → (score column, descending?, score SQL, its exact
+#: driver twin).  FAISS METRIC_* parity on the query side: cosine and
+#: inner product rank descending, squared L2 ascending.
 _METRICS = {
-    "cosine": ("cos_sim", True, spark_cosine6_sql),
-    "ip": ("dot", True, spark_dot6_sql),
-    "l2": ("sq_dist", False, spark_sqdist6_sql),
+    "cosine": ("cos_sim", True, spark_cosine6_sql, _cosine6),
+    "ip": ("dot", True, spark_dot6_sql, py_dot6),
+    "l2": ("sq_dist", False, spark_sqdist6_sql, py_sqdist6_rows),
 }
+
+#: float64 payload bytes a driver-read probe decodes per chunk: 8192
+#: rows of 64-dim vectors, 131072 rows of 4 PQ codes
+_CHUNK_BYTES = 1 << 22
+
+
+class _Chunk:
+    """One record batch of a driver read: ids (and cells) as numpy, the
+    payload decoded once per shape for the score twins."""
+
+    def __init__(self, batch, id_col: str):
+        self.batch = batch
+        self.ids = batch.column(id_col).to_numpy(zero_copy_only=False)
+        if "cell" in batch.schema.names:
+            self.cell = batch.column("cell").to_numpy(zero_copy_only=False)
+        self._memo: dict = {}
+
+    def codes(self, n_sub: int):
+        """The ``j0..`` code matrix, NULL as -1 (out of range)."""
+        import numpy as np
+
+        if "codes" not in self._memo:
+            self._memo["codes"] = np.column_stack(
+                [
+                    self.batch.column(f"j{m}").fill_null(-1).to_numpy(
+                        zero_copy_only=False
+                    )
+                    for m in range(n_sub)
+                ]
+            ).astype(np.int64)
+        return self._memo["codes"]
+
+    def vectors(self, col: str, dim: int, scale: str | None = None):
+        """List column ``col`` as a rows × ``dim`` float64 matrix
+        (dequantized ``v·scale/127`` when ``scale`` names the SQ scale
+        column), and {row: why} of the rows Spark could not score
+        against a ``dim``-long query."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        key = (col, dim)
+        if key in self._memo:
+            return self._memo[key]
+        vals = self.batch.column(col)
+        flat = vals.flatten()
+        bad: dict[int, str] = {}
+        if (
+            vals.null_count == 0
+            and flat.null_count == 0
+            and pc.all(pc.equal(pc.list_value_length(vals), dim)).as_py() is not False
+        ):
+            mat = flat.to_numpy(zero_copy_only=False).astype(np.float64)
+            mat = mat.reshape(len(vals), dim)
+        else:
+            mat = np.zeros((len(vals), dim))
+            for i, v in enumerate(vals.to_pylist()):
+                if v is None:
+                    bad[i] = "the stored vector is NULL"
+                elif len(v) != dim:
+                    bad[i] = f"the stored vector has {len(v)} elements, the query {dim}"
+                elif None in v:
+                    bad[i] = "an element or product is NULL or not finite"
+                else:
+                    mat[i] = v
+        if scale is not None:
+            s = self.batch.column(scale)
+            for i in np.flatnonzero(s.is_null().to_numpy(zero_copy_only=False)):
+                bad.setdefault(int(i), "the scale is NULL")
+            mat = mat * s.to_numpy(zero_copy_only=False)[:, None] / 127.0
+        self._memo[key] = mat, bad
+        return mat, bad
+
+
+def _vector_twin(col: str, scale: str | None, fn: Callable) -> Callable:
+    """The driver twin of a whole-vector score: ``fn`` (``_cosine6``,
+    ``py_dot6`` or ``py_sqdist6_rows``) of payload column ``col``
+    against the query."""
+
+    def twin(q: list[float], _cells: list[int]) -> Callable:
+        import numpy as np
+
+        qa = np.asarray(q, np.float64)[None]
+
+        def score(chunk: _Chunk, rows):
+            mat, bad = chunk.vectors(col, qa.shape[1], scale)
+            if bad:
+                for i in rows[np.isin(rows, list(bad))][:1]:
+                    raise PairError(int(i), bad[int(i)])
+            return fn(mat[rows], qa, rows)
+
+        return score
+
+    return twin
+
+
+def _adc_twin(cents: dict[int, list[float]], cbooks: list[dict[int, list[float]]]):
+    """The driver twin of ``residual_adc_expr``: the query's ADC table
+    for its probed cells only (``residual_query_table``), cast to exact
+    1e-6 units once (``adc_units``), summed per row (``py_adc6``)."""
+
+    def twin(q: list[float], cells: list[int]) -> Callable:
+        import numpy as np
+
+        units, ok = adc_units(residual_query_table(cents, cbooks, q, cells))
+        at = np.asarray(cells)
+
+        def score(chunk: _Chunk, rows):
+            pos = np.searchsorted(at, chunk.cell[rows])
+            return py_adc6(units, ok, pos, chunk.codes(len(cbooks))[rows], rows)
+
+        return score
+
+    return twin
 
 
 class _Layout(NamedTuple):
@@ -1209,6 +1407,8 @@ class _Layout(NamedTuple):
     score: tuple[str, bool]  # score column, descending?
     cells: Callable[[list[float], int], list[int]]  # driver-side ranking
     sql: Callable[[list[float]], str]  # a query's score as SQL text
+    payload: tuple[str, ...]  # the columns a score reads, besides id and cell
+    twin: Callable  # (query, its cells) → exact score of chunk rows
     rotate: Callable[[list[float]], list[float]] = lambda q: q
     prep: str | None = None  # payload vector, projected once as __v
     meta: dict | None = None  # pq.json
@@ -1226,6 +1426,8 @@ def _layout(store: str, kind: str, metric: str, vec_col: str) -> _Layout:
             ("approx_dist", False),
             lambda q, n: ivf_probe_cells(cents, q, n, metric="l2"),
             lambda q: residual_adc_expr(residual_query_tables(cents, cbooks, q)),
+            tuple(f"j{m}" for m in range(len(cbooks))),
+            _adc_twin(cents, cbooks),
             rotate=lambda q: _opq_rotate_query(meta, q),
             meta=meta,
         )
@@ -1240,13 +1442,16 @@ def _layout(store: str, kind: str, metric: str, vec_col: str) -> _Layout:
             ("cos_sim", True),
             cells,
             lambda q: spark_cosine6_sql("__v", sql_double_array(q)),
+            ("scale", "q"),
+            _vector_twin("q", "scale", _cosine6),
             prep=_DEQ,
         )
-    name, desc, score = _METRICS[metric]
+    name, desc, score, twin = _METRICS[metric]
     vec = sql_ident(vec_col)
     return _Layout(
         "vectors", (name, desc), cells,
         lambda q: score(vec, sql_double_array(q)),
+        (vec_col,), _vector_twin(vec_col, None, twin),
     )
 
 
@@ -1261,11 +1466,241 @@ def _pruned(
     return df, [[c for c in ci if c not in shared] for ci in conds]
 
 
+def _top(parts: list[tuple], desc: bool, k: int | None = None) -> tuple:
+    """``parts`` — (ids, …, scores) array tuples — concatenated and
+    ordered by (score, id), score descending if ``desc``; the first
+    ``k`` when ``k`` is given.  The select of ``_rank``, on the
+    driver."""
+    import numpy as np
+
+    cols = [np.concatenate(c) for c in zip(*parts)]
+    key = -cols[-1] if desc else cols[-1]
+    if k is not None and 0 < k < len(key):
+        # only rows scoring at least the k-th best (ties included) can rank
+        keep = np.flatnonzero(key <= np.partition(key, k - 1)[k - 1])
+        cols, key = [c[keep] for c in cols], key[keep]
+    order = np.lexsort((cols[0], key))
+    if k is not None:
+        order = order[: max(int(k), 0)]
+    return tuple(c[order] for c in cols)
+
+
+def _local_frame_of(
+    spark: SparkSession, hits: list[tuple | None], fields: list, batch: bool
+) -> DataFrame:
+    """Each request's ranked (id, …, score) arrays as one local relation
+    (``request_no`` first for a batch), rows in request then rank
+    order: collecting it runs no job."""
+    rows = [
+        ((r,) if batch else ()) + tuple(v.item() for v in vals)
+        for r, h in enumerate(hits)
+        if h is not None
+        for vals in zip(*h)
+    ]
+    head = [T.StructField("request_no", T.IntegerType(), False)] if batch else []
+    return local_frame(spark, rows, T.StructType(head + fields))
+
+
+def _id_field(scanner, schema, id_col: str):
+    """The output field of ``id_col``: its Spark type from the store's
+    footer schema, or the one its Arrow type maps to."""
+    if schema is not None:
+        return T.StructField(id_col, schema[id_col].dataType)
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    return T.StructField(
+        id_col, from_arrow_type(scanner.projected_schema.field(id_col).type)
+    )
+
+
+def _where_masks(spark: SparkSession, table, conds: list[str], schema) -> dict:
+    """Each distinct ``where`` over the rows of Arrow ``table``, as the
+    Spark scan's filter keeps them: a projection over an Arrow local
+    relation of every column that scan exposes, so any ``where`` that
+    parses there parses here; ``ConvertToLocalRelation`` evaluates it
+    in the JVM, so collecting it runs no job.  {where: bool mask}."""
+    import numpy as np
+
+    got = (
+        arrow_frame(spark, table, schema)
+        .selectExpr(
+            *[
+                f"CASE WHEN ({w}) THEN true ELSE false END AS __w{j}"
+                for j, w in enumerate(conds)
+            ]
+        )
+        .collect()
+    )
+    return {
+        w: np.array([r[j] for r in got], bool).reshape(len(got))
+        for j, w in enumerate(conds)
+    }
+
+
+def _chunks(scanner, rows: int):
+    """The scanner's non-empty rows as record batches of about ``rows``
+    rows: per-file batches are combined first, so a per-chunk step
+    (a ``where`` projection) runs once per chunk, not once per file."""
+    import pyarrow as pa
+
+    buf, n = [], 0
+    for b in scanner.to_batches():
+        if b.num_rows:
+            buf.append(b)
+            n += b.num_rows
+        if n >= rows:
+            yield from pa.Table.from_batches(buf).combine_chunks().to_batches()
+            buf, n = [], 0
+    if buf:
+        yield from pa.Table.from_batches(buf).combine_chunks().to_batches()
+
+
+def _local_probe(
+    spark: SparkSession,
+    store: str,
+    lay: _Layout,
+    rot: list[list[float]],
+    cells: list[list[int]],
+    excl: list[int | None],
+    whs: list[str | None],
+    tombs: set[int],
+    *,
+    k: int | None,
+    radii: list[float] | None,
+    id_col: str,
+    op: str,
+    bound: int,
+):
+    """Generate and verify on the driver: the probed cells' payload
+    files read with ``_driver_read`` in fixed-size chunks, each
+    request's rows (its cells, not tombstoned, not its ``exclude_id``,
+    passing its ``where``) scored by the layout's exact twin and kept
+    as a running top-k or cut at the radius — the driver holds one
+    chunk plus k rows per request, not the cells.  Returns each
+    request's ranked (ids, cells, scores) (None for no row) and the id
+    field, or None when the files total more than ``bound`` bytes."""
+    import numpy as np
+
+    fs, local = _fs_for(store)
+    table_dir = _join(local, lay.sub)
+    files = [
+        f
+        for c in sorted({c for cs in cells for c in cs})
+        for f in _data_files(fs, _join(table_dir, f"cell={c}"))
+    ]
+    if sum(f.size for f in files) > bound:
+        return None
+    conds = sorted({w for w in whs if w is not None})
+    width = len(lay.payload) if lay.meta else len(rot[0])
+    chunk_rows = max(1024, _CHUNK_BYTES // (8 * width))
+    scanner, schema = _driver_read(
+        fs, table_dir, files, None if conds else [id_col, *lay.payload, "cell"],
+        cell=True, batch_rows=chunk_rows,
+    )
+    desc = lay.score[1]
+    twins = [lay.twin(q, cs) for q, cs in zip(rot, cells)]
+    tomb = np.fromiter(tombs, np.int64, len(tombs))
+    hits: list[list[tuple]] = [[] for _ in rot]
+    evaluated = False
+    for batch in _chunks(scanner, chunk_rows):
+        chunk = _Chunk(batch, id_col)
+        if conds:
+            import pyarrow as pa
+
+            passing = _where_masks(spark, pa.Table.from_batches([batch]), conds, schema)
+            evaluated = True
+        live = ~np.isin(chunk.ids, tomb)
+        for r, (cs, x, w) in enumerate(zip(cells, excl, whs)):
+            m = live & np.isin(chunk.cell, cs)
+            if x is not None:
+                m &= chunk.ids != int(x)
+            if w is not None:
+                m &= passing[w]
+            rows = np.flatnonzero(m)
+            if not len(rows):
+                continue
+            try:
+                s = twins[r](chunk, rows)
+            except PairError as e:
+                raise ValueError(
+                    f"{op}: request {r}, {id_col} {chunk.ids[e.pair]}: {e.why}"
+                ) from None
+            if radii is not None:
+                cut = s >= radii[r] if desc else s <= radii[r]
+                rows, s = rows[cut], s[cut]
+            hits[r].append((chunk.ids[rows], chunk.cell[rows], s))
+            if radii is None:
+                hits[r] = [_top(hits[r], desc, k)]
+    if conds and not evaluated:
+        # no row to filter, but the where must parse as the scan's does
+        _where_masks(spark, scanner.projected_schema.empty_table(), conds, schema)
+    ranked = [_top(h, desc, k if radii is None else None) if h else None for h in hits]
+    return ranked, _id_field(scanner, schema, id_col)
+
+
+def _local_refine(
+    spark: SparkSession,
+    store: str,
+    kind: str | None,
+    per: list[list[int]],
+    cells: set[int],
+    qvs: list[list[float]],
+    *,
+    k: int,
+    batch: bool,
+    id_col: str,
+    vec_col: str,
+    op: str,
+) -> DataFrame | None:
+    """The refine step on the driver: the candidates' rows of the
+    sidecar's candidate cells read with ``_driver_read`` (an id
+    filter), re-ranked by the exact ``_cosine6`` twin; None when those
+    cells' files total more than ``_driver_read_bytes``."""
+    import numpy as np
+
+    fs, local = _fs_for(store)
+    table_dir = _join(local, "refine")
+    files = [
+        f for c in sorted(cells) for f in _data_files(fs, _join(table_dir, f"cell={c}"))
+    ]
+    if sum(f.size for f in files) > _driver_read_bytes(spark):
+        return None
+    payload = ("scale", "q") if kind == "int8" else (vec_col,)
+    chunk_rows = max(1024, _CHUNK_BYTES // (8 * len(qvs[0])))
+    scanner, schema = _driver_read(
+        fs, table_dir, files, [id_col, *payload],
+        isin=(id_col, sorted({i for p in per for i in p})), batch_rows=chunk_rows,
+    )
+    twin = _vector_twin(*(("q", "scale") if kind == "int8" else (vec_col, None)), _cosine6)
+    scores = [twin(q, []) for q in qvs]
+    hits: list[list[tuple]] = [[] for _ in qvs]
+    for b in _chunks(scanner, chunk_rows):
+        chunk = _Chunk(b, id_col)
+        for r, p in enumerate(per):
+            rows = np.flatnonzero(np.isin(chunk.ids, p))
+            if not len(rows):
+                continue
+            try:
+                s = scores[r](chunk, rows)
+            except PairError as e:
+                raise ValueError(
+                    f"{op}: request {r}, {id_col} {chunk.ids[e.pair]}: {e.why}"
+                ) from None
+            hits[r] = [_top([*hits[r], (chunk.ids[rows], s)], True, k)]
+    return _local_frame_of(
+        spark,
+        [h[0] if h else None for h in hits],
+        [_id_field(scanner, schema, id_col), T.StructField("cos_sim", T.DoubleType())],
+        batch,
+    )
+
+
 def _refine(
     spark: SparkSession,
     store: str,
     kind: str | None,
-    cand: DataFrame,
+    per: list[list[int]],
+    cells: set[int],
     qvs: list[list[float]],
     src: DataFrame | None,
     *,
@@ -1273,18 +1708,23 @@ def _refine(
     batch: bool,
     id_col: str,
     vec_col: str,
+    op: str,
 ) -> DataFrame:
-    """The refine step over collected ADC candidates: ONE scan of the
-    store's refine sidecar pruned to the candidates' cells plus a
-    pushed-down id ``IN`` (or of ``src``, an external vector frame, by
-    id), re-ranked by exact 6dp cosine — on the raw vectors for a flat
-    sidecar, on ``q·scale/127`` for int8 — through the kernel's
-    select."""
-    per: list[list[int]] = [[] for _ in qvs]
-    cells: set[int] = set()
-    for r in cand.collect():
-        per[r["request_no"]].append(int(r[id_col]))
-        cells.add(int(r["cell"]))
+    """The refine step over each request's ADC candidate ids ``per``
+    (from ``cells``): re-ranked by exact 6dp cosine — on the raw
+    vectors for a flat sidecar, on ``q·scale/127`` for int8.  The
+    store's sidecar is read on the driver while the candidate cells'
+    files fit ``_driver_read_bytes`` (``_local_refine``); otherwise,
+    and for ``src`` (an external vector frame), ONE scan of it pruned
+    to the candidates' cells plus a pushed-down id ``IN`` (``src`` by
+    id alone) goes through the kernel's select."""
+    if src is None:
+        got = _local_refine(
+            spark, store, kind, per, cells, qvs, k=k, batch=batch,
+            id_col=id_col, vec_col=vec_col, op=op,
+        )
+        if got is not None:
+            return got
     scan = [sql_in(id_col, sorted({i for p in per for i in p}))]
     prep = None
     if src is None:
@@ -1326,15 +1766,23 @@ def _probe(
        request).
     2. Resolve ``CURRENT`` once and read the model once, so model and
        data come from the SAME version even if a swap lands mid-call;
-       OPQ stores rotate each query with the stored reflector.
-    3. One payload scan pruned to the union of the requests' probe
-       cells (partition pruning = the FAISS inverted-list skip); a
-       condition every request shares (cells, exclusion, ``where``)
-       is pushed into it, tombstones (read from the ROOT, where they
-       span versions) are excluded scan-side.
-    4. Score and select (``_rank``).  ``refine = (k_factor, src)``
-       over-fetches ``k·k_factor`` ADC candidates and re-ranks them
-       (``_refine``) from the same store and model."""
+       OPQ stores rotate each query with the stored reflector.  Rank
+       each request's probe cells (the FAISS inverted-list skip).
+    3. While the probed cells' payload files total at most
+       ``_driver_read_bytes``, read them on the driver and score each
+       request's rows with the layout's exact twin of its SQL score
+       (``_local_probe``), tombstones (read from the ROOT, where they
+       span versions), exclusions and ``where`` applied first; the
+       ranked rows are one local relation, so collecting them runs no
+       Spark job.
+    4. Otherwise one payload scan pruned to the union of the requests'
+       probe cells (partition pruning); a condition every request
+       shares (cells, exclusion, ``where``) is pushed into it,
+       tombstones are excluded scan-side, and ``_rank`` scores and
+       selects.
+    5. ``refine = (k_factor, src)`` over-fetches ``k·k_factor`` ADC
+       candidates and re-ranks them (``_refine``) from the same store
+       and model; an external ``src`` frame takes step 4."""
     n = len(qvs)
     if not n:
         raise ValueError("probe batch needs at least one query vector")
@@ -1358,34 +1806,57 @@ def _probe(
         )
     rot = [lay.rotate(q) for q in qvs]
     cells = [sorted(lay.cells(q, nprobe)) for q in rot]
-    idc = sql_ident(id_col)
-    df, own = _pruned(
-        _store_scan(spark, store, lay.sub),
-        [sql_in("cell", sorted({c for cs in cells for c in cs}))],
-        [
-            [sql_in("cell", cs)]
-            + ([] if x is None else [f"{idc} <> {int(x)}"])
-            + ([] if w is None else [f"({w})"])
-            for cs, x, w in zip(cells, excl, whs)
-        ],
-    )
-    df = _exclude_ids(spark, df, read_ann_tombstones(out_dir), id_col)
-    scores = [lay.sql(q) for q in rot]
-    if refine is None:
-        return _rank(
-            df, own, scores, lay.score, [id_col, "cell"], batch=batch, k=k,
-            radii=radii, prep=lay.prep,
+    tombs = read_ann_tombstones(out_dir)
+    fetch = k if refine is None else k * refine[0]
+    got = None
+    if refine is None or refine[1] is None:
+        got = _local_probe(
+            spark, store, lay, rot, cells, excl, whs, tombs, k=fetch,
+            radii=radii, id_col=id_col, op=op, bound=_driver_read_bytes(spark),
         )
-    k_factor, src = refine
-    cand = _rank(
-        df, own, scores, lay.score, [id_col, "cell"], batch=True,
-        k=k * k_factor,
-    )
+    if got is not None and refine is None:
+        ranked, id_field = got
+        name = lay.score[0]
+        return _local_frame_of(
+            spark, ranked,
+            [id_field, T.StructField("cell", T.IntegerType()),
+             T.StructField(name, T.DoubleType())],
+            batch,
+        )
+    if got is not None:
+        per = [[] if h is None else h[0].tolist() for h in got[0]]
+        cand = {int(c) for h in got[0] if h is not None for c in h[1]}
+    else:
+        idc = sql_ident(id_col)
+        df, own = _pruned(
+            _store_scan(spark, store, lay.sub),
+            [sql_in("cell", sorted({c for cs in cells for c in cs}))],
+            [
+                [sql_in("cell", cs)]
+                + ([] if x is None else [f"{idc} <> {int(x)}"])
+                + ([] if w is None else [f"({w})"])
+                for cs, x, w in zip(cells, excl, whs)
+            ],
+        )
+        df = _exclude_ids(spark, df, tombs, id_col)
+        scores = [lay.sql(q) for q in rot]
+        if refine is None:
+            return _rank(
+                df, own, scores, lay.score, [id_col, "cell"], batch=batch, k=k,
+                radii=radii, prep=lay.prep,
+            )
+        per, cand = [[] for _ in qvs], set()
+        for r in _rank(
+            df, own, scores, lay.score, [id_col, "cell"], batch=True, k=fetch,
+        ).collect():
+            per[r["request_no"]].append(int(r[id_col]))
+            cand.add(int(r["cell"]))
+    src = refine[1]
     # an OPQ sidecar holds ROTATED vectors; an external source does not
     return _refine(
-        spark, store, lay.meta.get("refine"), cand,
+        spark, store, lay.meta.get("refine"), per, cand,
         rot if src is None else qvs, src, k=k, batch=batch, id_col=id_col,
-        vec_col=vec_col,
+        vec_col=vec_col, op=op,
     )
 
 
@@ -1403,16 +1874,17 @@ def ivf_index_probe_topk(
     metric: str = "cosine",
 ) -> DataFrame:
     """Top-k neighbors from the STORED flat index: rank the probe cells
-    on the driver (quantizer-sized math), then scan ONLY those
-    ``cell=`` directories — partition pruning does the inverted-list
-    skip, no assignment recompute, no shuffle, top-k as
-    TakeOrderedAndProject.
+    on the driver (quantizer-sized math), then read ONLY those
+    ``cell=`` directories — the inverted-list skip, no assignment
+    recompute — and rank (score desc, id).  Below the driver-read
+    bound that is no Spark job (``_probe``); above it, partition
+    pruning and TakeOrderedAndProject, no shuffle.
 
     ``where`` (FAISS IDSelector / filtered vector search) is a SQL
     predicate over the store's ATTRIBUTE columns (any extra column of
     the frame ``write_ivf_index`` was given rides the store rows, e.g.
     ``"label = 2"``).  It applies BEFORE top-k, pushed into the pruned
-    FileScan, so k SURVIVORS are returned with recall intact.
+    scan, so k SURVIVORS are returned with recall intact.
 
     ``metric`` (FAISS METRIC_INNER_PRODUCT / METRIC_L2 parity):
     ``cosine`` (default, ``cos_sim`` DESC), ``ip`` (``dot`` DESC),
@@ -1440,11 +1912,12 @@ def ivf_index_probe_range(
 ) -> DataFrame:
     """RANGE search over the flat store (FAISS ``range_search``): every
     stored vector in the probed cells past the radius — no k, the
-    result size is data-dependent.  Same pruned scan, tombstones and
-    pushed ``where`` as the top-k probe; the cut applies to the
-    6dp-rounded score (engine-portable boundary): ``score >= radius``
-    under ``cosine``/``ip``, ``sq_dist <= radius`` under ``l2``.
-    Ordered (score, id) for determinism — one ordering exchange."""
+    result size is data-dependent.  Same pruned read, tombstones and
+    ``where`` as the top-k probe; the cut applies to the 6dp-rounded
+    score (engine-portable boundary): ``score >= radius`` under
+    ``cosine``/``ip``, ``sq_dist <= radius`` under ``l2``.  Ordered
+    (score, id) for determinism (on the Spark path, one ordering
+    exchange)."""
     return _probe(
         spark, out_dir, "flat", [qv], op="ivf_index_probe_range",
         batch=False, nprobe=nprobe, radii=[radius], exclude_ids=[exclude_id],
@@ -1464,12 +1937,12 @@ def ivf_index_probe_batch_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch serving over the flat store: one vectors scan pruned to
-    the UNION of the requests' probe cells, per-request 6dp cosine in
-    map-side struct arms, per-request top-k via one ``request_no``
-    window — the plan's only Exchange.  ``wheres`` carries a
-    per-request attribute predicate inside its arm; a predicate shared
-    by EVERY request is pushed scan-side instead.  Each request's rows
+    """Batch serving over the flat store: one read of the UNION of the
+    requests' probe cells, each request scored only on its own cells,
+    per-request top-k, rows in (request_no, rank) order.  On the Spark
+    path the scores ride map-side struct arms and the top-k is one
+    ``request_no`` window — the plan's only Exchange; a predicate
+    shared by EVERY request is pushed scan-side.  Each request's rows
     hash-match its one-at-a-time ``ivf_index_probe_topk``."""
     return _probe(
         spark, out_dir, "flat", query_vecs, op="ivf_index_probe_batch_topk",
@@ -1491,9 +1964,9 @@ def ivf_index_probe_batch_range(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Batch RANGE serving over the flat store: N (query, radius)
-    requests from ONE union-pruned vectors scan, each request's radius
-    cut map-side.  Range needs no per-request top-k, so there is NO
-    window — the only exchange is the final output ordering.  Each
+    requests from ONE union-pruned read, each request cut at its
+    radius.  Range needs no per-request top-k, so the Spark path has
+    NO window — its only exchange is the output ordering.  Each
     request's rows hash-match its ``ivf_index_probe_range`` answer."""
     return _probe(
         spark, out_dir, "flat", query_vecs, op="ivf_index_probe_batch_range",
@@ -1513,12 +1986,12 @@ def ivfsq_index_probe_topk(
     where: str | None = None,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Top-k from the SQ8 store: partition pruning to the nprobe
-    ``cell=`` directories, map-side dequantize ``q·scale/127`` + 6dp
-    cosine, TakeOrderedAndProject — zero shuffles, ~4× fewer scan
-    bytes than the flat store at a small recall cost.  ``where``
-    filters on stored attribute columns
-    (``write_ivfsq_index(attrs=...)``) BEFORE top-k, in the scan."""
+    """Top-k from the SQ8 store: a read of the nprobe ``cell=``
+    directories, dequantize ``q·scale/127`` + 6dp cosine, top-k — ~4×
+    fewer bytes than the flat store at a small recall cost; no Spark
+    job below the driver-read bound, TakeOrderedAndProject with zero
+    shuffles above it.  ``where`` filters on stored attribute columns
+    (``write_ivfsq_index(attrs=...)``) BEFORE top-k."""
     return _probe(
         spark, out_dir, "sq", [qv], op="ivfsq_index_probe_topk", batch=False,
         nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
@@ -1540,7 +2013,7 @@ def ivfsq_index_probe_range(
     """RANGE search over the SQ8 store (FAISS
     ``IndexIVFScalarQuantizer.range_search``): every stored vector in
     the probed cells whose DEQUANTIZED 6dp cosine is ``>= radius``,
-    ordered (sim DESC, id) — one ordering exchange."""
+    ordered (sim DESC, id)."""
     return _probe(
         spark, out_dir, "sq", [qv], op="ivfsq_index_probe_range",
         batch=False, nprobe=nprobe, radii=[radius], exclude_ids=[exclude_id],
@@ -1559,10 +2032,11 @@ def ivfsq_index_probe_batch_topk(
     wheres: list[str | None] | None = None,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Batch serving over the SQ8 store: one union-pruned ``sq`` scan,
-    the dequantize projected ONCE and shared by every request's arm,
-    per-request top-k via one ``request_no`` window.  Each request's
-    rows hash-match its one-at-a-time ``ivfsq_index_probe_topk``."""
+    """Batch serving over the SQ8 store: one union-pruned ``sq`` read,
+    the dequantize done ONCE per row and shared by every request,
+    per-request top-k (one ``request_no`` window on the Spark path).
+    Each request's rows hash-match its one-at-a-time
+    ``ivfsq_index_probe_topk``."""
     return _probe(
         spark, out_dir, "sq", query_vecs, op="ivfsq_index_probe_batch_topk",
         batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,
@@ -1582,9 +2056,9 @@ def ivfsq_index_probe_batch_range(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Batch RANGE serving over the SQ8 store: one union-pruned ``sq``
-    scan, per-request radius floors on the dequantized 6dp cosine, no
-    window, one output-ordering exchange.  Each request's rows
-    hash-match its one-at-a-time ``ivfsq_index_probe_range``."""
+    read, per-request radius floors on the dequantized 6dp cosine, no
+    window.  Each request's rows hash-match its one-at-a-time
+    ``ivfsq_index_probe_range``."""
     return _probe(
         spark, out_dir, "sq", query_vecs, op="ivfsq_index_probe_batch_range",
         batch=True, nprobe=nprobe, radii=radii, exclude_ids=exclude_ids,
@@ -1604,12 +2078,14 @@ def ivfpq_index_probe_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Top-k approximate neighbors from the PQ-coded store: rank probe
-    cells driver-side, scan ONLY those ``cell=`` directories — and the
-    scan reads CODES, not vectors (the 16-32× byte saving; ReadSchema
-    carries ``j0..``) — then the ADC literal-table sum ranks rows
-    map-side.  Zero shuffles, TakeOrderedAndProject.  ``where``
-    filters on stored attribute columns
-    (``write_ivfpq_index(attrs=...)``) BEFORE top-k, in the scan."""
+    cells driver-side, read ONLY those ``cell=`` directories — and read
+    CODES, not vectors (the 16-32× byte saving) — then rank rows by the
+    ADC table sum.  Below the driver-read bound the table covers the
+    probed cells only and the exact integer twin scores on the driver
+    (no Spark job); above it, a codes-only pruned scan,
+    TakeOrderedAndProject, zero shuffles.  ``where`` filters on stored
+    attribute columns (``write_ivfpq_index(attrs=...)``) BEFORE
+    top-k."""
     return _probe(
         spark, out_dir, "pq", [qv], op="ivfpq_index_probe_topk", batch=False,
         nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
@@ -1631,7 +2107,7 @@ def ivfpq_index_probe_range(
     """RANGE search over the PQ-coded store (FAISS
     ``IndexIVFPQ.range_search``): every probed-cell code whose ADC
     DISTANCE is ``<= radius`` (FAISS's L2 range semantics on quantized
-    indexes), from the same codes-only scan; ordered (dist ASC, id)."""
+    indexes), from the same codes-only read; ordered (dist ASC, id)."""
     return _probe(
         spark, out_dir, "pq", [qv], op="ivfpq_index_probe_range",
         batch=False, nprobe=nprobe, radii=[radius], exclude_ids=[exclude_id],
@@ -1650,15 +2126,16 @@ def ivfpq_index_probe_batch_topk(
     wheres: list[str | None] | None = None,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """N query vectors answered in ONE job over the PQ-coded store —
+    """N query vectors answered from ONE read over the PQ-coded store —
     the FAISS batched ``search()`` (``cdx_query_batch`` applied to
-    vector search): ONE codes scan pruned to the UNION of the
-    requests' probe cells, per-request ADC distances in map-side
-    struct arms (exclusions and per-request ``wheres`` ride inside the
-    arm), per-request top-k via ONE ``request_no`` window — the only
-    shuffle.  Returns ``request_no`` (the position in ``query_vecs``)
-    + the single probe's columns, each request's rows hash-matching
-    its one-at-a-time twin."""
+    vector search): the codes of the UNION of the requests' probe
+    cells, per-request ADC distances (exclusions and per-request
+    ``wheres`` applied per request), per-request top-k.  No Spark job
+    below the driver-read bound; above it, map-side struct arms and
+    ONE ``request_no`` window — the only shuffle.  Returns
+    ``request_no`` (the position in ``query_vecs``) + the single
+    probe's columns, in (request_no, rank) order, each request's rows
+    hash-matching its one-at-a-time twin."""
     return _probe(
         spark, out_dir, "pq", query_vecs, op="ivfpq_index_probe_batch_topk",
         batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,
@@ -1678,9 +2155,9 @@ def ivfpq_index_probe_batch_range(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Batch RANGE serving over the PQ-coded store: N (query, radius)
-    requests from ONE union-pruned CODES scan, each request's ADC
-    ceiling applied map-side, no window, one output-ordering exchange.
-    Each request's rows hash-match its ``ivfpq_index_probe_range``."""
+    requests from ONE union-pruned CODES read, each request's ADC
+    ceiling applied per request, no window.  Each request's rows
+    hash-match its ``ivfpq_index_probe_range``."""
     return _probe(
         spark, out_dir, "pq", query_vecs, op="ivfpq_index_probe_batch_range",
         batch=True, nprobe=nprobe, radii=radii, exclude_ids=exclude_ids,
@@ -1708,11 +2185,13 @@ def ivfpq_refined_topk(
     those by exact (or dequantized-int8) 6dp cosine.
 
     ``vectors_src=None`` reads the STORE-RESIDENT refine sidecar
-    written by ``write_ivfpq_index(refine=...)``, pruned to the
-    candidates' cells + a pushed-down id In filter, from the same
-    version as the codes.  A DataFrame re-ranks against that external
-    vector source instead.  Two jobs; refined recall can only match or
-    beat the raw ADC top-k (pinned in tests/test_scale.py)."""
+    written by ``write_ivfpq_index(refine=...)``, only the candidates'
+    cells and ids, from the same version as the codes; below the
+    driver-read bound both stages run on the driver, no Spark job.  A
+    DataFrame re-ranks against that external vector source instead, on
+    the Spark path: one job to collect the candidates, one to re-rank.
+    Refined recall can only match or beat the raw ADC top-k (pinned in
+    tests/test_scale.py)."""
     return _probe(
         spark, out_dir, "pq", [qv], op="ivfpq_refined_topk", batch=False,
         nprobe=nprobe, k=k, exclude_ids=[exclude_id], wheres=[where],
@@ -1734,10 +2213,10 @@ def ivfpq_refined_batch_topk(
 ) -> DataFrame:
     """Batch serving COMPOSED with the refine stage: the batch ADC
     probe over-fetches ``k·k_factor`` candidates per request, then ONE
-    sidecar scan pruned to the union of candidate cells and ids
-    re-ranks every (request, candidate) pair, with per-request top-k
-    as one ``request_no`` window.  Per-request rows hash-match the
-    one-at-a-time ``ivfpq_refined_topk`` loop."""
+    sidecar read of the union of candidate cells and ids re-ranks
+    every (request, candidate) pair, with per-request top-k (one
+    ``request_no`` window on the Spark path).  Per-request rows
+    hash-match the one-at-a-time ``ivfpq_refined_topk`` loop."""
     return _probe(
         spark, out_dir, "pq", query_vecs, op="ivfpq_refined_batch_topk",
         batch=True, nprobe=nprobe, k=k, exclude_ids=exclude_ids,

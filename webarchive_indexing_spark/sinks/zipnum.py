@@ -408,6 +408,29 @@ def arrow_frame(spark: SparkSession, table, schema: T.StructType | None = None) 
     return spark.createDataFrame(table.combine_chunks(), schema)
 
 
+def _driver_read_bytes(spark: SparkSession) -> int:
+    """Largest read, in parquet file bytes, that a graph walk's
+    frontier or an ANN probe's cells take on the driver:
+    ``spark.sql.files.maxPartitionBytes``, the most the session ever
+    gives one scan task.  The distributed read splits a read this size
+    over the cores, so the driver reads more than any one task would;
+    the bound only caps that read.
+
+    It is not a time crossover.  The driver's peak memory grows with
+    the read: for a walk, +0.37 GB at 256 MB over 16 files and +0.9 GB
+    at 128 MB in one file (64-dim vectors, degree 12).  A probe scores
+    in fixed-size chunks with a running top-k, so its scoring holds one
+    chunk plus k rows per request, whatever the read; what remains is
+    pyarrow decoding one row group at a time.  Measured on a 4-core
+    host at ~245 MB of probed cells: +0.30 GB and 8.6 s for a PQ probe
+    over 45 M code rows (1 M-row row groups), +0.40 GB and 5.3 s for a
+    flat cosine probe over 0.9 M unit 64-dim vectors (0.1 M-row row
+    groups)."""
+    return int(
+        spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    )
+
+
 def _block_lines(items):
     """The one block reader: work items ``(paths, offset, length[,
     tag...])`` → ``(tag..., line)`` rows, one per decompressed line.
