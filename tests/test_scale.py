@@ -2323,7 +2323,7 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(
     qs = [vecs[q] for q in qids]
     cents = A.read_ivf_centroids(flat)
     # form -> (call, py4j bound, jobs bound); the driver-read forms'
-    # bounds are their measured counts (24, and 27 with the refine)
+    # bounds are their measured count, 24 each
     forms = {
         "ivf_topk": (lambda: A.ivf_index_probe_topk(spark, flat, qs[0]), 24, 0),
         "ivf_range": (lambda: A.ivf_index_probe_range(spark, flat, qs[0], 0.15), 24, 0),
@@ -2340,8 +2340,8 @@ def test_probe_forms_bounded_py4j_calls_and_jobs(
         "pq_batch_topk": (lambda: A.ivfpq_index_probe_batch_topk(spark, pq, qs), 24, 0),
         "pq_batch_range": (
             lambda: A.ivfpq_index_probe_batch_range(spark, pq, qs, [1.05] * 4), 24, 0),
-        "refined": (lambda: A.ivfpq_refined_topk(spark, pq, None, qs[0]), 27, 0),
-        "refined_batch": (lambda: A.ivfpq_refined_batch_topk(spark, pq, qs), 27, 0),
+        "refined": (lambda: A.ivfpq_refined_topk(spark, pq, None, qs[0]), 24, 0),
+        "refined_batch": (lambda: A.ivfpq_refined_batch_topk(spark, pq, qs), 24, 0),
         # the in-plan probe over the flat store's model, and that
         # model's cell assignment as the build and append project it
         "in_plan_ivf_probe": (

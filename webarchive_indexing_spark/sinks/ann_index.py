@@ -1555,6 +1555,18 @@ def _chunks(scanner, rows: int):
         yield from pa.Table.from_batches(buf).combine_chunks().to_batches()
 
 
+def _score(twin: Callable, chunk: _Chunk, rows, r: int, op: str, id_col: str):
+    """``twin``'s scores of ``rows`` of ``chunk`` for request ``r``; a row
+    Spark could not score is a ``ValueError`` naming op, request and
+    id."""
+    try:
+        return twin(chunk, rows)
+    except PairError as e:
+        raise ValueError(
+            f"{op}: request {r}, {id_col} {chunk.ids[e.pair]}: {e.why}"
+        ) from None
+
+
 def _local_probe(
     spark: SparkSession,
     store: str,
@@ -1619,12 +1631,7 @@ def _local_probe(
             rows = np.flatnonzero(m)
             if not len(rows):
                 continue
-            try:
-                s = twins[r](chunk, rows)
-            except PairError as e:
-                raise ValueError(
-                    f"{op}: request {r}, {id_col} {chunk.ids[e.pair]}: {e.why}"
-                ) from None
+            s = _score(twins[r], chunk, rows, r, op, id_col)
             if radii is not None:
                 cut = s >= radii[r] if desc else s <= radii[r]
                 rows, s = rows[cut], s[cut]
@@ -1651,11 +1658,12 @@ def _local_refine(
     id_col: str,
     vec_col: str,
     op: str,
+    bound: int,
 ) -> DataFrame | None:
     """The refine step on the driver: the candidates' rows of the
     sidecar's candidate cells read with ``_driver_read`` (an id
     filter), re-ranked by the exact ``_cosine6`` twin; None when those
-    cells' files total more than ``_driver_read_bytes``."""
+    cells' files total more than ``bound`` bytes."""
     import numpy as np
 
     fs, local = _fs_for(store)
@@ -1663,7 +1671,7 @@ def _local_refine(
     files = [
         f for c in sorted(cells) for f in _data_files(fs, _join(table_dir, f"cell={c}"))
     ]
-    if sum(f.size for f in files) > _driver_read_bytes(spark):
+    if sum(f.size for f in files) > bound:
         return None
     payload = ("scale", "q") if kind == "int8" else (vec_col,)
     chunk_rows = max(1024, _CHUNK_BYTES // (8 * len(qvs[0])))
@@ -1680,12 +1688,7 @@ def _local_refine(
             rows = np.flatnonzero(np.isin(chunk.ids, p))
             if not len(rows):
                 continue
-            try:
-                s = scores[r](chunk, rows)
-            except PairError as e:
-                raise ValueError(
-                    f"{op}: request {r}, {id_col} {chunk.ids[e.pair]}: {e.why}"
-                ) from None
+            s = _score(scores[r], chunk, rows, r, op, id_col)
             hits[r] = [_top([*hits[r], (chunk.ids[rows], s)], True, k)]
     return _local_frame_of(
         spark,
@@ -1709,19 +1712,20 @@ def _refine(
     id_col: str,
     vec_col: str,
     op: str,
+    bound: int,
 ) -> DataFrame:
     """The refine step over each request's ADC candidate ids ``per``
     (from ``cells``): re-ranked by exact 6dp cosine — on the raw
     vectors for a flat sidecar, on ``q·scale/127`` for int8.  The
     store's sidecar is read on the driver while the candidate cells'
-    files fit ``_driver_read_bytes`` (``_local_refine``); otherwise,
+    files fit ``bound`` (``_local_refine``); otherwise,
     and for ``src`` (an external vector frame), ONE scan of it pruned
     to the candidates' cells plus a pushed-down id ``IN`` (``src`` by
     id alone) goes through the kernel's select."""
     if src is None:
         got = _local_refine(
             spark, store, kind, per, cells, qvs, k=k, batch=batch,
-            id_col=id_col, vec_col=vec_col, op=op,
+            id_col=id_col, vec_col=vec_col, op=op, bound=bound,
         )
         if got is not None:
             return got
@@ -1810,9 +1814,10 @@ def _probe(
     fetch = k if refine is None else k * refine[0]
     got = None
     if refine is None or refine[1] is None:
+        bound = _driver_read_bytes(spark)
         got = _local_probe(
             spark, store, lay, rot, cells, excl, whs, tombs, k=fetch,
-            radii=radii, id_col=id_col, op=op, bound=_driver_read_bytes(spark),
+            radii=radii, id_col=id_col, op=op, bound=bound,
         )
     if got is not None and refine is None:
         ranked, id_field = got
@@ -1845,7 +1850,7 @@ def _probe(
                 df, own, scores, lay.score, [id_col, "cell"], batch=batch, k=k,
                 radii=radii, prep=lay.prep,
             )
-        per, cand = [[] for _ in qvs], set()
+        per, cand, bound = [[] for _ in qvs], set(), 0
         for r in _rank(
             df, own, scores, lay.score, [id_col, "cell"], batch=True, k=fetch,
         ).collect():
@@ -1856,7 +1861,7 @@ def _probe(
     return _refine(
         spark, store, lay.meta.get("refine"), per, cand,
         rot if src is None else qvs, src, k=k, batch=batch, id_col=id_col,
-        vec_col=vec_col, op=op,
+        vec_col=vec_col, op=op, bound=bound,
     )
 
 
