@@ -2476,3 +2476,43 @@ def test_driver_probe_rows_equal_spark_path(spark, sf_dir, monkeypatch, tmp_path
     # a query whose ADC table overflows DECIMAL(18,6)
     with pytest.raises(ValueError, match=r"request 0, vec_id \d+: an ADC table entry"):
         A.ivfpq_index_probe_topk(spark, ver, [3e5] * 64).collect()
+
+
+def test_pq_where_probe_reads_on_driver_only_below_cutoff(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """A PQ probe with a ``where`` reads its cells on the driver only up
+    to ``_PQ_WHERE_BYTES``, since each chunk's mask is a round trip
+    through the JVM that costs more than the scan's own filter past
+    that size; above it the same probe runs the Spark scan and returns
+    the same rows, while the probe without a ``where`` still reads on
+    the driver."""
+    import itertools
+
+    from webarchive_indexing_spark.sinks import ann_index as A
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    store = str(tmp_path / "pq")
+    A.write_ivfpq_index(
+        emb, store, n_cells=8, n_sub=4, k_codes=8, train_iters=2, attrs=["label"]
+    )
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 77).first().embedding]
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs_and_rows(where):
+        group = f"where_cutoff_{next(groups)}"
+        sc.setJobGroup(group, "where cutoff")
+        try:
+            rows = A.ivfpq_index_probe_topk(spark, store, qv, k=10, where=where).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    jobs, below = jobs_and_rows("label >= 1")
+    assert jobs == 0 and below
+    monkeypatch.setattr(A, "_PQ_WHERE_BYTES", 0)
+    jobs, above = jobs_and_rows("label >= 1")
+    assert jobs >= 1 and above == below
+    jobs, plain = jobs_and_rows(None)
+    assert jobs == 0 and plain

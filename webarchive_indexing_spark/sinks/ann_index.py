@@ -13,10 +13,11 @@ stored artifact.  The store is two pieces:
 The payoff is that a probe reads only its ``nprobe`` cells'
 directories — the other ``n_cents − nprobe`` lists' files are never
 opened, the exact analogue of FAISS skipping inverted lists.  While
-those files total at most ``_driver_read_bytes`` the probe reads them
-on the driver with pyarrow and scores them with exact numpy twins of
-its SQL scores (the way FAISS serves IVFPQ on one node), so it runs no
-Spark job; above that, the same cells are a Spark scan's PartitionFilters
+those files total at most ``_driver_read_bytes`` (``_PQ_WHERE_BYTES``
+for a PQ probe with a ``where``) the probe reads them on the driver with
+pyarrow and scores them with exact numpy twins of its SQL scores (the
+way FAISS serves IVFPQ on one node), so it runs no Spark job; above
+that, the same cells are a Spark scan's PartitionFilters
 (plan-asserted in tests/test_plans.py, with the driver twin of each
 assertion beside it).  Assignment uses the SAME ``ivf_cell_sql`` the
 in-query probes use, so the stored layout and any later probe's
@@ -1289,6 +1290,21 @@ _METRICS = {
 #: rows of 64-dim vectors, 131072 rows of 4 PQ codes
 _CHUNK_BYTES = 1 << 22
 
+#: the most probed-cell bytes a PQ probe with a ``where`` reads on the
+#: driver, below ``_driver_read_bytes``.  The driver evaluates a
+#: ``where`` as a projection over each chunk's Arrow local relation,
+#: ~8 µs a row (the collected mask dominates), where the Spark scan
+#: filters inside its tasks, and a PQ row is cheap for the scan to
+#: score.  ann_serve-shaped PQ stores (6.3 bytes a code row), single
+#: top-k with ``label = x``, median ms driver vs scan on a 4-core host:
+#: 17 KB 90 vs 179, 57 KB 123 vs 155, 105 KB 170 vs 178, 225 KB 329 vs
+#: 173, 837 KB 991 vs 325; at ~245 MB 310 s vs 14 s.  The flat and SQ8
+#: scans score a row in decimal cosine, which costs more than the
+#: mask, so their ``where`` probes read on the driver up to the bound:
+#: ~6 MB of flat vectors 316 vs 640 ms, ~1.8 MB of SQ8 rows 322 vs
+#: 739 ms, ~245 MB of flat vectors 16.6 vs 40 s.
+_PQ_WHERE_BYTES = 64 << 10
+
 
 class _Chunk:
     """One record batch of a driver read: ids (and cells) as numpy, the
@@ -1410,6 +1426,7 @@ class _Layout(NamedTuple):
     payload: tuple[str, ...]  # the columns a score reads, besides id and cell
     twin: Callable  # (query, its cells) → exact score of chunk rows
     rotate: Callable[[list[float]], list[float]] = lambda q: q
+    where_bytes: float = math.inf  # driver-read cap for a probe with a where
     prep: str | None = None  # payload vector, projected once as __v
     meta: dict | None = None  # pq.json
 
@@ -1430,26 +1447,35 @@ def _layout(store: str, kind: str, metric: str, vec_col: str) -> _Layout:
             _adc_twin(cents, cbooks),
             rotate=lambda q: _opq_rotate_query(meta, q),
             meta=meta,
+            where_bytes=_PQ_WHERE_BYTES,
         )
     cents = read_ivf_centroids(store)
 
     def cells(q: list[float], n: int) -> list[int]:
         return ivf_probe_cells(cents, q, n, metric=metric)
 
-    if kind == "sq":
+    sq = kind == "sq"
+    return _vector_layout("sq" if sq else "vectors", cells, metric, vec_col, int8=sq)
+
+
+def _vector_layout(
+    sub: str, cells: Callable | None, metric: str, vec_col: str, *, int8: bool
+) -> _Layout:
+    """A layout scoring whole vectors in ``sub``: ``metric`` over
+    ``vec_col``, or, for ``int8`` rows, 6dp cosine over the dequantized
+    ``q·scale/127`` (projected once as ``__v``).  The flat and SQ
+    stores, and the refine sidecar (``cells`` None: refine reads the
+    candidates' cells)."""
+    if int8:
         return _Layout(
-            "sq",
-            ("cos_sim", True),
-            cells,
+            sub, ("cos_sim", True), cells,
             lambda q: spark_cosine6_sql("__v", sql_double_array(q)),
-            ("scale", "q"),
-            _vector_twin("q", "scale", _cosine6),
-            prep=_DEQ,
+            ("scale", "q"), _vector_twin("q", "scale", _cosine6), prep=_DEQ,
         )
     name, desc, score, twin = _METRICS[metric]
     vec = sql_ident(vec_col)
     return _Layout(
-        "vectors", (name, desc), cells,
+        sub, (name, desc), cells,
         lambda q: score(vec, sql_double_array(q)),
         (vec_col,), _vector_twin(vec_col, None, twin),
     )
@@ -1486,19 +1512,26 @@ def _top(parts: list[tuple], desc: bool, k: int | None = None) -> tuple:
 
 
 def _local_frame_of(
-    spark: SparkSession, hits: list[tuple | None], fields: list, batch: bool
+    spark: SparkSession, got: tuple, score: str, batch: bool, *, cell: bool
 ) -> DataFrame:
-    """Each request's ranked (id, …, score) arrays as one local relation
-    (``request_no`` first for a batch), rows in request then rank
-    order: collecting it runs no job."""
+    """``_local_probe``'s ranked (ids, cells, scores) per request as one
+    local relation of the Spark select's columns — ``request_no`` for
+    a batch, id, ``cell`` when ``cell``, ``score`` — rows in request
+    then rank order: collecting it runs no job."""
+    ranked, id_field = got
+    cols = (0, 1, 2) if cell else (0, 2)
     rows = [
-        ((r,) if batch else ()) + tuple(v.item() for v in vals)
-        for r, h in enumerate(hits)
+        ((r,) if batch else ()) + tuple(h[c][i].item() for c in cols)
+        for r, h in enumerate(ranked)
         if h is not None
-        for vals in zip(*h)
+        for i in range(len(h[0]))
     ]
-    head = [T.StructField("request_no", T.IntegerType(), False)] if batch else []
-    return local_frame(spark, rows, T.StructType(head + fields))
+    fields = [T.StructField("request_no", T.IntegerType(), False)] if batch else []
+    fields.append(id_field)
+    if cell:
+        fields.append(T.StructField("cell", T.IntegerType()))
+    fields.append(T.StructField(score, T.DoubleType()))
+    return local_frame(spark, rows, T.StructType(fields))
 
 
 def _id_field(scanner, schema, id_col: str):
@@ -1582,15 +1615,18 @@ def _local_probe(
     id_col: str,
     op: str,
     bound: int,
+    ids: list[list[int]] | None = None,
 ):
     """Generate and verify on the driver: the probed cells' payload
     files read with ``_driver_read`` in fixed-size chunks, each
-    request's rows (its cells, not tombstoned, not its ``exclude_id``,
-    passing its ``where``) scored by the layout's exact twin and kept
-    as a running top-k or cut at the radius — the driver holds one
-    chunk plus k rows per request, not the cells.  Returns each
-    request's ranked (ids, cells, scores) (None for no row) and the id
-    field, or None when the files total more than ``bound`` bytes."""
+    request's rows (its cells, among its ``ids`` when given, not
+    tombstoned, not its ``exclude_id``, passing its ``where``) scored
+    by the layout's exact twin and kept as a running top-k or cut at
+    the radius — the driver holds one chunk plus k rows per request,
+    not the cells.  Returns each request's ranked (ids, cells, scores)
+    (None for no row) and the id field, or None when the files total
+    more than ``bound`` bytes (the layout's ``where_bytes`` with a
+    ``where``)."""
     import numpy as np
 
     fs, local = _fs_for(store)
@@ -1600,13 +1636,15 @@ def _local_probe(
         for c in sorted({c for cs in cells for c in cs})
         for f in _data_files(fs, _join(table_dir, f"cell={c}"))
     ]
-    if sum(f.size for f in files) > bound:
-        return None
     conds = sorted({w for w in whs if w is not None})
+    limit = min(bound, lay.where_bytes) if conds else bound
+    if sum(f.size for f in files) > limit:
+        return None
     width = len(lay.payload) if lay.meta else len(rot[0])
     chunk_rows = max(1024, _CHUNK_BYTES // (8 * width))
     scanner, schema = _driver_read(
         fs, table_dir, files, None if conds else [id_col, *lay.payload, "cell"],
+        isin=None if ids is None else (id_col, sorted({i for p in ids for i in p})),
         cell=True, batch_rows=chunk_rows,
     )
     desc = lay.score[1]
@@ -1624,6 +1662,8 @@ def _local_probe(
         live = ~np.isin(chunk.ids, tomb)
         for r, (cs, x, w) in enumerate(zip(cells, excl, whs)):
             m = live & np.isin(chunk.cell, cs)
+            if ids is not None:
+                m &= np.isin(chunk.ids, ids[r])
             if x is not None:
                 m &= chunk.ids != int(x)
             if w is not None:
@@ -1645,63 +1685,10 @@ def _local_probe(
     return ranked, _id_field(scanner, schema, id_col)
 
 
-def _local_refine(
-    spark: SparkSession,
-    store: str,
-    kind: str | None,
-    per: list[list[int]],
-    cells: set[int],
-    qvs: list[list[float]],
-    *,
-    k: int,
-    batch: bool,
-    id_col: str,
-    vec_col: str,
-    op: str,
-    bound: int,
-) -> DataFrame | None:
-    """The refine step on the driver: the candidates' rows of the
-    sidecar's candidate cells read with ``_driver_read`` (an id
-    filter), re-ranked by the exact ``_cosine6`` twin; None when those
-    cells' files total more than ``bound`` bytes."""
-    import numpy as np
-
-    fs, local = _fs_for(store)
-    table_dir = _join(local, "refine")
-    files = [
-        f for c in sorted(cells) for f in _data_files(fs, _join(table_dir, f"cell={c}"))
-    ]
-    if sum(f.size for f in files) > bound:
-        return None
-    payload = ("scale", "q") if kind == "int8" else (vec_col,)
-    chunk_rows = max(1024, _CHUNK_BYTES // (8 * len(qvs[0])))
-    scanner, schema = _driver_read(
-        fs, table_dir, files, [id_col, *payload],
-        isin=(id_col, sorted({i for p in per for i in p})), batch_rows=chunk_rows,
-    )
-    twin = _vector_twin(*(("q", "scale") if kind == "int8" else (vec_col, None)), _cosine6)
-    scores = [twin(q, []) for q in qvs]
-    hits: list[list[tuple]] = [[] for _ in qvs]
-    for b in _chunks(scanner, chunk_rows):
-        chunk = _Chunk(b, id_col)
-        for r, p in enumerate(per):
-            rows = np.flatnonzero(np.isin(chunk.ids, p))
-            if not len(rows):
-                continue
-            s = _score(scores[r], chunk, rows, r, op, id_col)
-            hits[r] = [_top([*hits[r], (chunk.ids[rows], s)], True, k)]
-    return _local_frame_of(
-        spark,
-        [h[0] if h else None for h in hits],
-        [_id_field(scanner, schema, id_col), T.StructField("cos_sim", T.DoubleType())],
-        batch,
-    )
-
-
 def _refine(
     spark: SparkSession,
     store: str,
-    kind: str | None,
+    lay: _Layout,
     per: list[list[int]],
     cells: set[int],
     qvs: list[list[float]],
@@ -1710,36 +1697,33 @@ def _refine(
     k: int,
     batch: bool,
     id_col: str,
-    vec_col: str,
     op: str,
     bound: int,
 ) -> DataFrame:
     """The refine step over each request's ADC candidate ids ``per``
-    (from ``cells``): re-ranked by exact 6dp cosine — on the raw
-    vectors for a flat sidecar, on ``q·scale/127`` for int8.  The
-    store's sidecar is read on the driver while the candidate cells'
-    files fit ``bound`` (``_local_refine``); otherwise,
-    and for ``src`` (an external vector frame), ONE scan of it pruned
-    to the candidates' cells plus a pushed-down id ``IN`` (``src`` by
-    id alone) goes through the kernel's select."""
+    (from ``cells``), re-ranked by the refine layout ``lay``.  The
+    store's sidecar is a driver probe of the candidate cells limited
+    to each request's ids (``_local_probe``) while those cells' files
+    fit ``bound``; otherwise, and for ``src`` (an external vector
+    frame), ONE scan of it pruned to the candidates' cells plus a
+    pushed-down id ``IN`` (``src`` by id alone) goes through the
+    kernel's select."""
+    n = len(qvs)
     if src is None:
-        got = _local_refine(
-            spark, store, kind, per, cells, qvs, k=k, batch=batch,
-            id_col=id_col, vec_col=vec_col, op=op, bound=bound,
+        got = _local_probe(
+            spark, store, lay, qvs, [sorted(cells)] * n, [None] * n, [None] * n,
+            set(), k=k, radii=None, id_col=id_col, op=op, bound=bound, ids=per,
         )
         if got is not None:
-            return got
+            return _local_frame_of(spark, got, lay.score[0], batch, cell=False)
     scan = [sql_in(id_col, sorted({i for p in per for i in p}))]
-    prep = None
     if src is None:
-        src = _store_scan(spark, store, "refine")
+        src = _store_scan(spark, store, lay.sub)
         scan.insert(0, sql_in("cell", sorted(cells)))
-        prep = _DEQ if kind == "int8" else None
-    vec = "__v" if prep else sql_ident(vec_col)
     df, own = _pruned(src, scan, [[sql_in(id_col, sorted(p))] for p in per])
     return _rank(
-        df, own, [spark_cosine6_sql(vec, sql_double_array(q)) for q in qvs],
-        ("cos_sim", True), [id_col], batch=batch, k=k, prep=prep,
+        df, own, [lay.sql(q) for q in qvs], lay.score, [id_col], batch=batch, k=k,
+        prep=lay.prep,
     )
 
 
@@ -1773,7 +1757,8 @@ def _probe(
        OPQ stores rotate each query with the stored reflector.  Rank
        each request's probe cells (the FAISS inverted-list skip).
     3. While the probed cells' payload files total at most
-       ``_driver_read_bytes``, read them on the driver and score each
+       ``_driver_read_bytes`` (``_PQ_WHERE_BYTES`` for a PQ probe with
+       a ``where``), read them on the driver and score each
        request's rows with the layout's exact twin of its SQL score
        (``_local_probe``), tombstones (read from the ROOT, where they
        span versions), exclusions and ``where`` applied first; the
@@ -1820,14 +1805,7 @@ def _probe(
             radii=radii, id_col=id_col, op=op, bound=bound,
         )
     if got is not None and refine is None:
-        ranked, id_field = got
-        name = lay.score[0]
-        return _local_frame_of(
-            spark, ranked,
-            [id_field, T.StructField("cell", T.IntegerType()),
-             T.StructField(name, T.DoubleType())],
-            batch,
-        )
+        return _local_frame_of(spark, got, lay.score[0], batch, cell=True)
     if got is not None:
         per = [[] if h is None else h[0].tolist() for h in got[0]]
         cand = {int(c) for h in got[0] if h is not None for c in h[1]}
@@ -1857,11 +1835,12 @@ def _probe(
             per[r["request_no"]].append(int(r[id_col]))
             cand.add(int(r["cell"]))
     src = refine[1]
+    int8 = src is None and lay.meta.get("refine") == "int8"
     # an OPQ sidecar holds ROTATED vectors; an external source does not
     return _refine(
-        spark, store, lay.meta.get("refine"), per, cand,
-        rot if src is None else qvs, src, k=k, batch=batch, id_col=id_col,
-        vec_col=vec_col, op=op, bound=bound,
+        spark, store, _vector_layout("refine", None, "cosine", vec_col, int8=int8),
+        per, cand, rot if src is None else qvs, src, k=k, batch=batch,
+        id_col=id_col, op=op, bound=bound,
     )
 
 
